@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.aria.Aria
 import graft.model.AriaConfig
@@ -19,15 +18,7 @@ object AriaMain {
     val tableKeys = args.lift(1).map(_.toInt).getOrElse(199999)
     val keysMax = args.lift(2).map(_.toInt).getOrElse(20000)
     val reorder = args.lift(3).exists(_.toBoolean)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-aria")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-aria")
 
     val cfg = AriaConfig(nTxns = nTxns, tableKeys = tableKeys,
       keysMax = keysMax, reorder = reorder)

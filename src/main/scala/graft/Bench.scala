@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, forcing full execution through the noop sink
   * (count() would let Catalyst prune the compute), and prints one JSON
@@ -12,10 +10,11 @@ import org.apache.spark.sql.SparkSession
   * this host swing 90–180 s run-to-run from contention, and the best-of
   * passes is the stable signal (adjacent-run totals within a few
   * percent). `value` is the best-of total; `cold_total` preserves the
-  * pass-1 single-shot total comparable to rounds ≤5. The aria drain
-  * cache is evicted between passes so every pass re-pays the real epoch
-  * loop; src_* queries time the READ path in all passes (fixtures are
-  * pre-written during warmup and writes are memoized per JVM).
+  * pass-1 single-shot total comparable to rounds ≤5. Every session memo
+  * ([[Memo]]: aria drains, trained models, built graphs, staged corpora)
+  * is evicted between passes so every pass re-pays each build; src_*
+  * queries time the READ path in all passes (fixtures are pre-written
+  * during warmup and writes are memoized per JVM).
   *
   * Regression gate: bench_floor.json (committed, previous round's
   * best-of map at sf0.1) feeds a self-reported "regressions" object —
@@ -65,20 +64,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPEATS", "2").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // reuse-barrier mechanism (graft.Cache): checkpoint (default) or
-      // persist (the RAPIDS-ready columnar-cache form)
-      .config(graft.Cache.ConfKey,
-        sys.env.getOrElse("SPARK_GRAFT_CACHE", "checkpoint"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-bench")
     // SPARK_GRAFT_ONLY=q1,q2 restricts the run (iteration aid)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -109,17 +96,8 @@ object Bench {
         catch { case _: Throwable => () }
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     val perPass: Seq[Seq[(String, Double)]] = (1 to passes).map { p =>
-      // every pass must re-pay the real drain, not a memo hit
-      if (p > 1) { graft.aria.AriaQueries.evictDrains(spark)
-        graft.sim.Clustering.evictTrained(spark)
-        graft.sim.Pq.evictTrained(spark)
-        graft.sim.NnDescent.evictBuilt(spark)
-        graft.sim.GraphOps.evictShared(spark)
-        graft.sim.ExactPanels.evict(spark)
-        graft.operators.Analytics4.evictBfs(spark)
-        graft.sim.Pca.evictShared(spark)
-        graft.dedup.Dedup.evictPairs(spark)
-        graft.text.TrainMemo.evict(spark)
+      // every pass must re-pay every memoized build, not a memo hit
+      if (p > 1) { Memo.evictAll(spark)
         // persist mode: cached plans are keyed on the ANALYZED PLAN, so
         // pass 2 rebuilding the same query would silently hit pass 1's
         // cache — clear so every pass re-pays materialization, matching

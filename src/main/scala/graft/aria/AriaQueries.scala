@@ -36,40 +36,22 @@ object AriaQueries {
   // the drains are independent latency-bound job chains, so the sibling
   // overlaps this one's scheduler gaps and the family pays ~max, not
   // sum. Each future also forces the final table's checkpoint chain, so
-  // the table-summary query reads a materialized snapshot. NOTE weak
-  // keys alone would be useless here — RunResult holds DataFrames,
-  // which strongly reference their SparkSession, pinning the entry — so
-  // the real leak control is purging entries whose context is stopped
-  // on every access.
+  // the table-summary query reads a materialized snapshot.
   private val drainPool = java.util.concurrent.Executors.newFixedThreadPool(2,
     (r: Runnable) => { val t = new Thread(r, "aria-drain"); t.setDaemon(true); t })
   private implicit val drainEc: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutor(drainPool)
-  private val cache =
-    new java.util.HashMap[SparkSession, Map[Boolean, scala.concurrent.Future[Aria.RunResult]]]
-  /** Drop this session's memoized drains — Bench calls it between timing
-    * passes so every pass re-measures the real epoch loop. */
-  private[graft] def evictDrains(spark: SparkSession): Unit =
-    cache.synchronized { cache.remove(spark); () }
+
+  private def drain(spark: SparkSession, reorder: Boolean) =
+    graft.Memo(spark, ("aria.drain", reorder))(scala.concurrent.Future {
+      val r = Aria.run(spark.newSession(), cfg.copy(reorder = reorder))
+      r.table.count() // materialize the checkpoint chain eagerly
+      r
+    })
 
   private def cachedRun(spark: SparkSession, reorder: Boolean): Aria.RunResult = {
-    val fut = cache.synchronized {
-      cache.keySet.removeIf(s => s.sparkContext.isStopped)
-      val perSession = cache.getOrDefault(spark, Map.empty)
-      perSession.get(reorder) match {
-        case Some(f) => f
-        case None =>
-          val launched = Seq(reorder, !reorder).map { m =>
-            m -> perSession.getOrElse(m, scala.concurrent.Future {
-              val r = Aria.run(spark.newSession(), cfg.copy(reorder = m))
-              r.table.count() // materialize the checkpoint chain eagerly
-              r
-            })
-          }.toMap
-          cache.put(spark, perSession ++ launched)
-          launched(reorder)
-      }
-    }
+    val fut = drain(spark, reorder)
+    drain(spark, !reorder)
     scala.concurrent.Await.result(fut, scala.concurrent.duration.Duration.Inf)
   }
 

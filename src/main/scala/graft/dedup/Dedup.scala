@@ -53,38 +53,18 @@ object Dedup {
       |                        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
       |    ELSE [array_to_string(toks, ' ')] END)""".stripMargin
 
-  /** Session-scoped memo of the family's shared input frames (the
-    * staged token corpus and its CJK variant), keyed `"<dir>|<form>"`
-    * — optimization r16: a dozen dedup queries each re-paid the scan +
-    * tokenize + exchange + materialization of the SAME (doc_id, toks)
-    * frame per query (the stage the 12s-vs-1s note below pins as the
-    * family's critical path). Same memo shape as [[rareCache]]; Bench
-    * evicts via [[evictPairs]] between passes. */
-  private val frameCache =
-    new java.util.HashMap[SparkSession, Map[String, DataFrame]]
-
-  private def memoFrame(spark: SparkSession, key: String)
-                       (build: => DataFrame): DataFrame =
-    frameCache.synchronized {
-      frameCache.keySet.removeIf(s => s.sparkContext.isStopped)
-      val per = frameCache.getOrDefault(spark, Map.empty)
-      per.get(key) match {
-        case Some(df) => df
-        case None =>
-          val df = build
-          frameCache.put(spark, per + (key -> df))
-          df
-      }
-    }
-
   /** Tokenized corpus (doc_id, toks), staged — the shared prefix of
     * every shingle/gram consumer and the hard projection barrier every
     * position-exploding consumer needs. Repartition first: the harness
     * tables are single parquet files (one scan partition), which would
     * serialize the tokenize map stage; at production scale the source
-    * has natural splits and this is a no-op-equivalent. */
+    * has natural splits and this is a no-op-equivalent. Memoized
+    * ([[graft.Memo]]): a dozen dedup queries each re-paid the scan +
+    * tokenize + exchange + materialization of this SAME frame per query
+    * (the stage the 12s-vs-1s note below pins as the family's critical
+    * path). */
   private def tokensFrame(spark: SparkSession, dir: String): DataFrame =
-    memoFrame(spark, s"$dir|toks") {
+    graft.Memo(spark, ("dedup.toks", graft.Memo.input(dir))) {
       t(spark, dir, "documents")
         .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
         // parallelize off the single-file scan…
@@ -362,9 +342,10 @@ object Dedup {
   /** Script-aware shingle table: char n-grams for space-free-script
     * docs (the fixture's `lang` column stands in for script detection —
     * production keys this off a whitespace-ratio or Unicode-block test,
-    * the same per-row decision), word 3-grams otherwise. */
+    * the same per-row decision), word 3-grams otherwise. Memoized like
+    * [[tokensFrame]]. */
   private def cjkShingleTable(spark: SparkSession, dir: String): DataFrame =
-    memoFrame(spark, s"$dir|cjk") {
+    graft.Memo(spark, ("dedup.cjk", graft.Memo.input(dir))) {
       t(spark, dir, "documents")
         .select(col("doc_id"), col("lang"),
           TextAnalysis.tokens(col("text")).as("toks"),
@@ -772,64 +753,30 @@ object Dedup {
     * consistently on both engines. */
   val maxShingleDf = 20
 
-  /** jaccardPairs is MEMOIZED per (session, dir, threshold): both the
-    * pairs query and the edit-distance verify stage consume the same
-    * candidate set in one harness session, and re-deriving the
-    * tokenize→shingle→inverted-index pipeline is the dominant cost.
-    * Same pattern as the aria drain / k-means training memos; Bench
-    * evicts between passes so each pass re-pays the pipeline. */
-  private val pairsCache =
-    new java.util.HashMap[SparkSession, Map[(String, Double), DataFrame]]
-
-  /** The df-capped rare-shingle inverted index, memoized per
-    * (session, dir): shared by [[jaccardPairs]] and
-    * [[containmentPairs]], which differ only in how they score the
-    * joined index against itself. */
-  private val rareCache =
-    new java.util.HashMap[SparkSession, Map[String, DataFrame]]
-
-  private[graft] def evictPairs(spark: SparkSession): Unit =
-    pairsCache.synchronized {
-      pairsCache.remove(spark); rareCache.remove(spark)
-      frameCache.synchronized { frameCache.remove(spark) }
-      ()
-    }
-
+  /** The df-capped rare-shingle inverted index, memoized: shared by
+    * [[jaccardPairs]] and [[containmentPairs]], which differ only in how
+    * they score the joined index against itself. */
   private def rareIndex(spark: SparkSession, dir: String): DataFrame =
-    pairsCache.synchronized {
-      rareCache.keySet.removeIf(s => s.sparkContext.isStopped)
-      val perSession = rareCache.getOrDefault(spark, Map.empty)
-      perSession.get(dir) match {
-        case Some(df) => df
-        case None =>
-          val st = shingleTable(spark, dir)
-          // materialize the exploded index once (lazy checkpoint): it is
-          // read for df counts and both join sides, and re-deriving the
-          // tokenize→shingle pipeline each time dominates otherwise
-          val inv = st.select(col("doc_id"), explode(col("sh")).as("shingle"))
-            .staged
-          val rare = inv.join(
-            inv.groupBy("shingle").agg(count(lit(1)).as("df"))
-              .filter(col("df") <= maxShingleDf).select("shingle"),
-            Seq("shingle"))
-            .staged
-          rareCache.put(spark, perSession + (dir -> rare))
-          rare
-      }
+    graft.Memo(spark, ("dedup.rare", graft.Memo.input(dir))) {
+      val st = shingleTable(spark, dir)
+      // materialize the exploded index once (lazy checkpoint): it is
+      // read for df counts and both join sides, and re-deriving the
+      // tokenize→shingle pipeline each time dominates otherwise
+      val inv = st.select(col("doc_id"), explode(col("sh")).as("shingle"))
+        .staged
+      inv.join(
+        inv.groupBy("shingle").agg(count(lit(1)).as("df"))
+          .filter(col("df") <= maxShingleDf).select("shingle"),
+        Seq("shingle"))
+        .staged
     }
 
+  /** Memoized per threshold: both the pairs query and the edit-distance
+    * verify stage consume the same candidate set, and re-deriving the
+    * tokenize→shingle→inverted-index pipeline is the dominant cost. */
   def jaccardPairs(spark: SparkSession, dir: String, threshold: Double = 0.2): DataFrame =
-    pairsCache.synchronized {
-      pairsCache.keySet.removeIf(s => s.sparkContext.isStopped)
-      val perSession = pairsCache.getOrDefault(spark, Map.empty)
-      perSession.get((dir, threshold)) match {
-        case Some(df) => df
-        case None =>
-          val df = jaccardPairsUncached(spark, dir, threshold).staged
-          pairsCache.put(spark, perSession + ((dir, threshold) -> df))
-          df
-      }
-    }
+    graft.Memo(spark, ("dedup.jaccard", graft.Memo.input(dir), threshold))(
+      jaccardPairsUncached(spark, dir, threshold).staged)
 
   private def jaccardPairsUncached(spark: SparkSession, dir: String, threshold: Double): DataFrame = {
     val rare = rareIndex(spark, dir)

@@ -936,11 +936,13 @@ object Analytics4 {
   // ---------------------------------------------------------------------
 
   private val closenessLandmarks = 8
-  private val closenessRounds = 4
+  /** BFS depth of the landmark panel; closeness and betweenness read the
+    * same memoized [[landmarkBfs]], so they share this one constant. */
+  private val landmarkRounds = 4
 
   /** Landmark closeness centrality (Eppstein–Wang style fixed panel):
     * exact distances from the [[closenessLandmarks]] smallest supplier
-    * nodes to every node within [[closenessRounds]] hops of the
+    * nodes to every node within [[landmarkRounds]] hops of the
     * bipartite part↔supplier graph, reported per landmark as reach,
     * distance sum, and harmonic-closeness (Σ 1000 DIV d, the
     * disconnection-robust variant) — the "how central are my anchor
@@ -970,8 +972,6 @@ object Analytics4 {
     // r), so the settled set serves both queries — closeness no longer
     // re-pays a full k·2E BFS when betweenness has run (optimization
     // r16; per-query oracles unchanged at both SFs are the proof).
-    require(closenessRounds == betweennessRounds,
-      "closeness shares the landmark BFS with betweenness")
     landmarkBfs(spark, dir)
       .filter(col("dist") > 0L)
       .groupBy("lm")
@@ -983,7 +983,7 @@ object Analytics4 {
   }
 
   def closenessSql: String = {
-    val iters = (1 to closenessRounds).map { i =>
+    val iters = (1 to landmarkRounds).map { i =>
       s"""d$i AS (
          |  SELECT lm, node, CAST(min(dist) AS BIGINT) AS dist FROM (
          |    SELECT lm, node, dist FROM d${i - 1}
@@ -1004,15 +1004,13 @@ object Analytics4 {
        |SELECT (lm - 1) // 2 AS suppkey, count(*) AS n_reached,
        |       CAST(sum(dist) AS BIGINT) AS sum_dist,
        |       CAST(sum(1000 // dist) AS BIGINT) AS harmonic_milli
-       |FROM d$closenessRounds WHERE dist > 0
+       |FROM d$landmarkRounds WHERE dist > 0
        |GROUP BY 1 ORDER BY suppkey""".stripMargin
   }
 
   // ---------------------------------------------------------------------
   // Landmark betweenness centrality (Brandes on the fixed panel)
   // ---------------------------------------------------------------------
-
-  private val betweennessRounds = 4
 
   /** Landmark betweenness centrality — Brandes' dependency accumulation
     * (Brandes 2001) restricted to the same fixed 8-landmark panel as
@@ -1042,53 +1040,38 @@ object Analytics4 {
     * landmarks route through it.
     */
   /** The Brandes forward pass — the landmark delta-BFS carrying σ —
-    * memoized per (session, dir): its settled set (lm, node, dist,
-    * sigma) is ALSO exactly [[closeness]]'s BFS state, so the two
-    * queries share one k·2E forward pass per session (the
-    * GraphOps.shared memo shape). Bench evicts between passes. */
-  private val bfsCache =
-    new java.util.HashMap[SparkSession, Map[String, DataFrame]]
-
-  private[graft] def evictBfs(spark: SparkSession): Unit =
-    bfsCache.synchronized { bfsCache.remove(spark); () }
-
+    * memoized ([[graft.Memo]]): its settled set (lm, node, dist, sigma)
+    * is ALSO exactly [[closeness]]'s BFS state, so the two queries share
+    * one k·2E forward pass. */
   private def landmarkBfs(spark: SparkSession, dir: String): DataFrame =
-    bfsCache.synchronized {
-      bfsCache.keySet.removeIf(s => s.sparkContext.isStopped)
-      bfsCache.getOrDefault(spark, Map.empty).get(dir) match {
-        case Some(v) => v
-        case None =>
-          val e = graft.sim.GraphOps.edgesStaged(spark, dir)
-          val landmarks = graft.sim.GraphOps.degrees(spark, dir)
-            .select(col("src").as("node"))
-            .filter(col("node") % 2 === 1) // suppliers are odd-encoded
-            .orderBy("node").limit(closenessLandmarks)
-            .select(col("node").as("lm"))
-          val d0 = landmarks.select(col("lm"), col("lm").as("node"),
-            lit(0L).as("dist"), lit(1L).as("sigma")).staged
-          var settled = Seq(d0)
-          var frontier = d0
-          for (r <- 1 to betweennessRounds) {
-            val prop = e.join(frontier, e("src") === frontier("node"))
-              .select(col("lm"), col("dst").as("node"), col("sigma"))
-              .groupBy("lm", "node").agg(sum("sigma").as("sigma"))
-            val fresh = prop
-              .join(settled.reduce(_ unionAll _), Seq("lm", "node"), "left_anti")
-              .select(col("lm"), col("node"), lit(r.toLong).as("dist"), col("sigma"))
-              .staged // per-round barrier; .staged (not .cutRound) so
-              // the persist-mode plan stays an InMemoryRelation and
-              // closeness keeps its no-rdd-segment classification — K
-              // is small and fixed, so the nested-lineage hazard the
-              // cutRound rule targets does not apply (the original
-              // closeness BFS used .staged for the same reason)
-            settled :+= fresh
-            frontier = fresh
-          }
-          val sAll = settled.reduce(_ unionAll _).staged // 2K level reads
-          bfsCache.put(spark,
-            bfsCache.getOrDefault(spark, Map.empty) + (dir -> sAll))
-          sAll
+    graft.Memo(spark, ("graph.landmark_bfs", graft.Memo.input(dir))) {
+      val e = graft.sim.GraphOps.edgesStaged(spark, dir)
+      val landmarks = graft.sim.GraphOps.degrees(spark, dir)
+        .select(col("src").as("node"))
+        .filter(col("node") % 2 === 1) // suppliers are odd-encoded
+        .orderBy("node").limit(closenessLandmarks)
+        .select(col("node").as("lm"))
+      val d0 = landmarks.select(col("lm"), col("lm").as("node"),
+        lit(0L).as("dist"), lit(1L).as("sigma")).staged
+      var settled = Seq(d0)
+      var frontier = d0
+      for (r <- 1 to landmarkRounds) {
+        val prop = e.join(frontier, e("src") === frontier("node"))
+          .select(col("lm"), col("dst").as("node"), col("sigma"))
+          .groupBy("lm", "node").agg(sum("sigma").as("sigma"))
+        val fresh = prop
+          .join(settled.reduce(_ unionAll _), Seq("lm", "node"), "left_anti")
+          .select(col("lm"), col("node"), lit(r.toLong).as("dist"), col("sigma"))
+          .staged // per-round barrier; .staged (not .cutRound) so
+          // the persist-mode plan stays an InMemoryRelation and
+          // closeness keeps its no-rdd-segment classification — K
+          // is small and fixed, so the nested-lineage hazard the
+          // cutRound rule targets does not apply (the original
+          // closeness BFS used .staged for the same reason)
+        settled :+= fresh
+        frontier = fresh
       }
+      settled.reduce(_ unionAll _).staged // 2K level reads
     }
 
   def betweenness(spark: SparkSession, dir: String): DataFrame = {
@@ -1097,7 +1080,7 @@ object Analytics4 {
     def level(r: Int) = sAll.filter(col("dist") === r.toLong)
     var deltas = Seq.empty[DataFrame]
     var deltaNext: Option[DataFrame] = None
-    for (r <- (betweennessRounds - 1) to 1 by -1) {
+    for (r <- (landmarkRounds - 1) to 1 by -1) {
       val w0 = level(r + 1).select(col("lm").as("wlm"),
         col("node").as("wnode"), col("sigma").as("wsigma"))
       val w = deltaNext match {
@@ -1132,7 +1115,7 @@ object Analytics4 {
   }
 
   def betweennessSql: String = {
-    val fwd = (1 to betweennessRounds).map { r =>
+    val fwd = (1 to landmarkRounds).map { r =>
       s"""p$r AS (
          |  SELECT d.lm, e.dst AS node, CAST(sum(d.sigma) AS BIGINT) AS sigma
          |  FROM edges e JOIN s${r - 1} d ON e.src = d.node AND d.dist = ${r - 1}
@@ -1145,10 +1128,10 @@ object Analytics4 {
          |                    WHERE s.lm = p.lm AND s.node = p.node)
          |)"""
     }.mkString(",\n")
-    val sK = s"s$betweennessRounds"
-    val bwd = ((betweennessRounds - 1) to 1 by -1).map { r =>
+    val sK = s"s$landmarkRounds"
+    val bwd = ((landmarkRounds - 1) to 1 by -1).map { r =>
       val wSrc =
-        if (r == betweennessRounds - 1)
+        if (r == landmarkRounds - 1)
           s"SELECT lm, node, sigma, CAST(0 AS BIGINT) AS delta FROM $sK WHERE dist = ${r + 1}"
         else
           s"""SELECT s.lm, s.node, s.sigma, coalesce(d.delta, 0) AS delta
@@ -1164,7 +1147,7 @@ object Analytics4 {
          |  WHERE v.dist = $r GROUP BY 1, 2
          |)"""
     }.mkString(",\n")
-    val unionDeltas = ((betweennessRounds - 1) to 1 by -1)
+    val unionDeltas = ((landmarkRounds - 1) to 1 by -1)
       .map(r => s"SELECT * FROM d$r").mkString(" UNION ALL ")
     s"""WITH ${graft.sim.GraphOps.edgesSql},
        |lms AS (

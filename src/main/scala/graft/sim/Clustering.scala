@@ -107,36 +107,19 @@ object Clustering {
     * each centroid model is K rows — checkpointed so iteration N+1's plan
     * doesn't re-nest iteration N's.
     *
-    * The trained model is MEMOIZED per (session, dir): the harness
-    * queries in this family (kmeans, semdedup, trained IVF, incremental
-    * assignment, cluster quality, balanced sampling) share one training
-    * run (train once, apply many — the real pipeline shape), mirroring
-    * the aria drain memo.
-    * Bench evicts between timing passes so each pass re-pays training. */
-  private val cache =
-    new java.util.HashMap[SparkSession, Map[String, (DataFrame, DataFrame)]]
-
-  /** Drop this session's memoized trainings (Bench, between passes). */
-  private[graft] def evictTrained(spark: SparkSession): Unit =
-    cache.synchronized { cache.remove(spark); () }
-
+    * Memoized ([[graft.Memo]]): the harness queries in this family
+    * (kmeans, semdedup, trained IVF, incremental assignment, cluster
+    * quality, balanced sampling) share one training run. */
   private[graft] def train(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    cache.synchronized {
-      cache.keySet.removeIf(s => s.sparkContext.isStopped)
-      val perSession = cache.getOrDefault(spark, Map.empty)
-      perSession.get(dir) match {
-        case Some(t) => t
-        case None =>
-          val corpus = qn(spark, dir).staged
-          var cent = initCentroids(corpus)
-          for (_ <- 1 to iters)
-            // Lloyd loop state: the lineage CUT is the point (round k's
-            // plan must not nest all rounds < k), so this stays
-            // localCheckpoint under every Cache mode — see graft.Cache.
-            cent = recompute(assign(corpus, cent)).localCheckpoint(false)
-          cache.put(spark, perSession + (dir -> ((corpus, cent))))
-          (corpus, cent)
-      }
+    graft.Memo(spark, ("clustering.train", graft.Memo.input(dir))) {
+      val corpus = qn(spark, dir).staged
+      var cent = initCentroids(corpus)
+      for (_ <- 1 to iters)
+        // Lloyd loop state: the lineage CUT is the point (round k's
+        // plan must not nest all rounds < k), so this stays
+        // localCheckpoint under every Cache mode — see graft.Cache.
+        cent = recompute(assign(corpus, cent)).localCheckpoint(false)
+      (corpus, cent)
     }
 
   /** Per-cluster training report: size, exact integer inertia

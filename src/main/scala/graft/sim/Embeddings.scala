@@ -178,45 +178,27 @@ object GraphOps {
       |)""".stripMargin
 
   // ---------------------------------------------------------------------
-  // Shared graph surface, memoized per (session, dir) — optimization r16
+  // Shared graph surface, memoized per (session, input) — optimization r16
   // ---------------------------------------------------------------------
 
-  /** (pairs, edges, degrees), all lazily staged, built once per
-    * (session, dir): ~20 graph-family queries derive from the SAME
+  /** (pairs, edges, degrees), all lazily staged, memoized
+    * ([[graft.Memo]]): ~20 graph-family queries derive from the SAME
     * distinct part↔supplier projection of lineitem and re-paid its scan
     * + DISTINCT exchange + materialization per query (~0.2–0.4 s each
-    * at sf0.1). Build-once/read-many is the established
-    * [[graft.sim.Clustering]]/[[graft.sim.Pq]]/[[NnDescent]]/TrainMemo
-    * memo shape; Bench evicts between passes so every timed pass
-    * re-pays exactly one build (charged to the alphabetically first
-    * graph consumer, like the NN-Descent build on beam_curve). All
-    * three frames are lazy until the first consumer materializes them. */
-  private val sharedMemo =
-    new java.util.HashMap[SparkSession, Map[String, (DataFrame, DataFrame, DataFrame)]]
-
-  /** Drop this session's memoized graph frames (Bench, between passes). */
-  private[graft] def evictShared(spark: SparkSession): Unit =
-    sharedMemo.synchronized { sharedMemo.remove(spark); triMemo.remove(spark); () }
-
+    * at sf0.1). All three frames are lazy until the first consumer
+    * materializes them. */
   private def shared(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
-    sharedMemo.synchronized {
-      sharedMemo.keySet.removeIf(s => s.sparkContext.isStopped)
-      sharedMemo.getOrDefault(spark, Map.empty).get(dir) match {
-        case Some(v) => v
-        case None =>
-          val pairs = t(spark, dir, "lineitem")
-            .select(col("l_partkey").as("part"), col("l_suppkey").as("supp"))
-            .distinct().staged
-          val enc = pairs.select((col("part") * 2).as("p"),
-            (col("supp") * 2 + 1).as("s"))
-          val e = enc.select(col("p").as("src"), col("s").as("dst"))
-            .unionAll(enc.select(col("s").as("src"), col("p").as("dst")))
-            .staged
-          val deg = e.groupBy("src").agg(count(lit(1)).as("deg")).staged
-          val v = (pairs, e, deg)
-          sharedMemo.put(spark, sharedMemo.getOrDefault(spark, Map.empty) + (dir -> v))
-          v
-      }
+    graft.Memo(spark, ("graph.shared", graft.Memo.input(dir))) {
+      val pairs = t(spark, dir, "lineitem")
+        .select(col("l_partkey").as("part"), col("l_suppkey").as("supp"))
+        .distinct().staged
+      val enc = pairs.select((col("part") * 2).as("p"),
+        (col("supp") * 2 + 1).as("s"))
+      val e = enc.select(col("p").as("src"), col("s").as("dst"))
+        .unionAll(enc.select(col("s").as("src"), col("p").as("dst")))
+        .staged
+      val deg = e.groupBy("src").agg(count(lit(1)).as("deg")).staged
+      (pairs, e, deg)
     }
 
   /** The distinct (part, supp) membership projection, staged. */
@@ -232,16 +214,6 @@ object GraphOps {
     * node identities project it instead of re-paying a DISTINCT. */
   private[graft] def degrees(spark: SparkSession, dir: String): DataFrame =
     shared(spark, dir)._3
-
-  /** (und, triPerNode) of the degree-capped supplier co-purchase
-    * projection — `graph_triangles` and `graph_clustering_coeff`
-    * recomputed the identical projection + degree orientation + wedge
-    * close per query (the two halves differ only in the final
-    * aggregation). Memoized per (session, dir, cap) beside [[shared]];
-    * the un-memoized core stays visible via [[triCore]] for the plan
-    * test. */
-  private val triMemo =
-    new java.util.HashMap[SparkSession, Map[String, (DataFrame, DataFrame)]]
 
   /** Un-memoized core: the capped undirected co-purchase edge list and
     * the per-node triangle-end counts (n, tri), full lineage. */
@@ -265,19 +237,16 @@ object GraphOps {
     (und, tri)
   }
 
+  /** (und, triPerNode) of the degree-capped supplier co-purchase
+    * projection, memoized per cap beside [[shared]]: `graph_triangles`
+    * and `graph_clustering_coeff` recomputed the identical projection +
+    * degree orientation + wedge close per query (the two halves differ
+    * only in the final aggregation). */
   private[graft] def triShared(spark: SparkSession, dir: String,
                                maxPartDegree: Int): (DataFrame, DataFrame) =
-    triMemo.synchronized {
-      triMemo.keySet.removeIf(s => s.sparkContext.isStopped)
-      val key = s"$dir#$maxPartDegree"
-      triMemo.getOrDefault(spark, Map.empty).get(key) match {
-        case Some(v) => v
-        case None =>
-          val (und, tri) = triCore(spark, dir, maxPartDegree)
-          val v = (und, tri.staged)
-          triMemo.put(spark, triMemo.getOrDefault(spark, Map.empty) + (key -> v))
-          v
-      }
+    graft.Memo(spark, ("graph.tri", graft.Memo.input(dir), maxPartDegree)) {
+      val (und, tri) = triCore(spark, dir, maxPartDegree)
+      (und, tri.staged)
     }
 
   /** 3 rounds of scaled-integer PageRank (d=0.85), top-20 nodes.

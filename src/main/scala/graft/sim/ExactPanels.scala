@@ -3,8 +3,8 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-scoped memo of the exact ground-truth (query_id, cand_id)
-  * panels the ANN recall gates compare against, keyed
-  * `"<dir>|<metric>|<k>"`.
+  * panels the ANN recall gates compare against ([[graft.Memo]], keyed
+  * by input, metric and k).
   *
   * Every recall gate re-paid the identical brute-force exact side per
   * query — one full corpus scan + quantize + broadcast panel join +
@@ -13,7 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * real evaluation pipeline and reused across every index variant
   * under test, so the memo is the honest shape, not a shortcut: the
   * first gate to run pays the full exact compute inside its own timed
-  * region; Bench evicts between passes.
+  * region.
   *
   * The collected panel is 8·k BIGINT id pairs (model-sized — the same
   * literal-panel device as Clustering's least-chain query vector), so
@@ -23,39 +23,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * PlanShapeSpec and stays the RAPIDS-clean form).
   */
 private[graft] object ExactPanels {
-  private val cache =
-    new java.util.HashMap[SparkSession, Map[String, Seq[(Long, Long)]]]
-
-  /** Drop this session's memoized panels (Bench, between passes). */
-  private[graft] def evict(spark: SparkSession): Unit =
-    cache.synchronized { cache.remove(spark); () }
-
   /** Exact-cosine panel ([[Similarity.cosineTopK]] ground truth). */
   private[sim] def cosine(spark: SparkSession, dir: String, k: Int): DataFrame =
-    panel(spark, s"$dir|cos|$k")(
+    panel(spark, ("exact.cosine", graft.Memo.input(dir), k))(
       Similarity.cosineTopK(spark, dir, k).select("query_id", "cand_id"))
 
   /** Exact-L2 panel ([[Pq.exactL2TopK]] ground truth). */
   private[sim] def l2(spark: SparkSession, dir: String, k: Int): DataFrame =
-    panel(spark, s"$dir|l2|$k")(Pq.exactL2TopK(spark, dir, k))
+    panel(spark, ("exact.l2", graft.Memo.input(dir), k))(Pq.exactL2TopK(spark, dir, k))
 
   /** The memoized exact panel for `key`, built by `build` (a frame
     * whose first two columns are BIGINT query_id, cand_id) on first
     * use, returned as a LocalRelation DataFrame. */
-  private[sim] def panel(spark: SparkSession, key: String)
+  private[sim] def panel(spark: SparkSession, key: Product)
                         (build: => DataFrame): DataFrame = {
-    val rows = cache.synchronized {
-      cache.keySet.removeIf(s => s.sparkContext.isStopped)
-      val per = cache.getOrDefault(spark, Map.empty)
-      per.get(key) match {
-        case Some(v) => v
-        case None =>
-          val v = build.collect()
-            .map(r => (r.getLong(0), r.getLong(1))).toSeq
-          cache.put(spark, cache.getOrDefault(spark, Map.empty) + (key -> v))
-          v
-      }
-    }
+    val rows = graft.Memo(spark, key)(
+      build.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
     spark.createDataFrame(rows).toDF("query_id", "cand_id")
   }
 }

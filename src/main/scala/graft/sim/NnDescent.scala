@@ -57,8 +57,7 @@ import graft.Cache.CacheOps
   * what this dataflow degrades to when the panel is one query.
   *
   * Build-once-search-many is the real pipeline shape, so the built
-  * graph is memoized per (session, dir) like Clustering.train /
-  * Pq.codebooks; Bench evicts between passes.
+  * graph is memoized ([[graft.Memo]]).
   */
 object NnDescent {
 
@@ -150,69 +149,28 @@ object NnDescent {
     keepBest(scorePairs(cand.union(g.select("src", "dst")).distinct(), qn))
   }
 
-  private val cache =
-    new java.util.HashMap[SparkSession, Map[String, (DataFrame, DataFrame, DataFrame)]]
-
-  /** Memoized SEARCH states (final beam frames), beside the build memo:
-    * `sim_nndescent_recall` re-paid `nnDescentTopK`'s whole beam loop
-    * (already run for `sim_nndescent_topk`) and
-    * `sim_nndescent_insert_recall` re-paid the full 5-round insert
-    * search (already run for `sim_nndescent_insert`) — search-once,
-    * gate-many, the same shape as the build memo. Keys:
-    * `"<dir>|beams|<widths>|<rounds>"`, `"<dir>|insert"`. */
-  private val searchCache =
-    new java.util.HashMap[SparkSession, Map[String, DataFrame]]
-
-  private def memoSearch(spark: SparkSession, key: String)
-                        (build: => DataFrame): DataFrame =
-    searchCache.synchronized {
-      searchCache.keySet.removeIf(s => s.sparkContext.isStopped)
-      searchCache.getOrDefault(spark, Map.empty).get(key) match {
-        case Some(v) => v
-        case None =>
-          val v = build
-          searchCache.put(spark,
-            searchCache.getOrDefault(spark, Map.empty) + (key -> v))
-          v
-      }
-    }
-
-  /** Drop this session's memoized graphs + search states (Bench,
-    * between passes). */
-  private[graft] def evictBuilt(spark: SparkSession): Unit = {
-    cache.synchronized { cache.remove(spark); () }
-    searchCache.synchronized { searchCache.remove(spark); () }
-  }
-
-  /** (qn, graph, undirected graph), built once per (session, dir). */
+  /** (qn, graph, undirected graph), built once per input. */
   private def built(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
-    cache.synchronized {
-      cache.keySet.removeIf(s => s.sparkContext.isStopped)
-      cache.getOrDefault(spark, Map.empty).get(dir) match {
-        case Some(g) => g
-        case None =>
-          val qn = quantizedPlan(spark, dir)
-          val nF = qn.agg(count(lit(1)).as("n"))
-          val init = qn.select(col("vec_id").as("src"))
-            .crossJoin(broadcast(nF))
-            .select(col("src"), col("n"),
-              explode(array((0 until degree).map(j => lit(j)): _*)).as("j"))
-            .select(col("src"),
-              pmod(col("src") + lit(1L) +
-                pmod(Portable.hash60(concat(lit("nnd_"), col("src"), lit("_"), col("j"))),
-                  col("n") - lit(1L)), col("n")).as("dst"))
-            .distinct()
-          var g = keepBest(scorePairs(init, qn)).cutRound
-          for (_ <- 1 to buildRounds)
-            // per-round lineage cut — iterative-drain rule (Cache.cut)
-            g = round(g, qn).cutRound
-          val und = g.select("src", "dst")
-            .union(g.select(col("dst").as("src"), col("src").as("dst")))
-            .distinct().staged
-          val result = (qn, g, und)
-          cache.put(spark, cache.getOrDefault(spark, Map.empty) + (dir -> result))
-          result
-      }
+    graft.Memo(spark, ("nnd.built", graft.Memo.input(dir))) {
+      val qn = quantizedPlan(spark, dir)
+      val nF = qn.agg(count(lit(1)).as("n"))
+      val init = qn.select(col("vec_id").as("src"))
+        .crossJoin(broadcast(nF))
+        .select(col("src"), col("n"),
+          explode(array((0 until degree).map(j => lit(j)): _*)).as("j"))
+        .select(col("src"),
+          pmod(col("src") + lit(1L) +
+            pmod(Portable.hash60(concat(lit("nnd_"), col("src"), lit("_"), col("j"))),
+              col("n") - lit(1L)), col("n")).as("dst"))
+        .distinct()
+      var g = keepBest(scorePairs(init, qn)).cutRound
+      for (_ <- 1 to buildRounds)
+        // per-round lineage cut — iterative-drain rule (Cache.cut)
+        g = round(g, qn).cutRound
+      val und = g.select("src", "dst")
+        .union(g.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct().staged
+      (qn, g, und)
     }
 
   /** The built k-NN graph itself — `degree` best-found neighbors per
@@ -227,10 +185,12 @@ object NnDescent {
   // --------------------------------------------------------------- search
 
   /** Beam search over the built graph, one beam per (budget, query).
-    * Returns the final beams (beam, query_id, cand_id, cosine). */
+    * Returns the final beams (beam, query_id, cand_id, cosine), memoized
+    * beside the build: `sim_nndescent_recall` re-paid the whole beam loop
+    * `sim_nndescent_topk` had already run (search once, gate many). */
   private def beams(spark: SparkSession, dir: String, widths: Seq[Long],
                     rounds: Int): DataFrame =
-      memoSearch(spark, s"$dir|beams|${widths.mkString(",")}|$rounds") {
+      graft.Memo(spark, ("nnd.beams", graft.Memo.input(dir), widths, rounds)) {
     val (qn, g, und) = built(spark, dir)
     val panel = qn.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("q").as("qa"), col("nsq").as("na"))
@@ -345,7 +305,7 @@ object NnDescent {
   /** The insert search's final beam state, memoized (search-once,
     * gate-many: the insert query and its recall gate share it). */
   private def insertBeams(spark: SparkSession, dir: String): DataFrame =
-      memoSearch(spark, s"$dir|insert") {
+      graft.Memo(spark, ("nnd.insert", graft.Memo.input(dir))) {
     val (qn, g, _) = built(spark, dir)
     val bg = g.filter(splitH(col("src")) < 90 && splitH(col("dst")) < 90)
     val ubi = bg.select("src", "dst")

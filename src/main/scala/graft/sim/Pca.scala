@@ -78,38 +78,15 @@ object Pca {
         (expr(s"((CAST(c0 AS DECIMAL(38,0)) + m) * $S) DIV m") - S).as("c"))
   }
 
-  /** Session memo of the staged covariance model and the power-iterate
-    * (optimization r16): pcaPower, pcaExplained and anisotropyReport
-    * each re-paid the corpus moment pass + the 3-round iteration per
-    * query — train-once/apply-many like the Clustering/Pq memos. Bench
-    * evicts between passes. */
-  private val cache =
-    new java.util.HashMap[SparkSession, Map[String, DataFrame]]
-
-  private[graft] def evictShared(spark: SparkSession): Unit =
-    cache.synchronized { cache.remove(spark); () }
-
-  private def memo(spark: SparkSession, key: String)
-                  (build: => DataFrame): DataFrame =
-    cache.synchronized {
-      cache.keySet.removeIf(s => s.sparkContext.isStopped)
-      val per = cache.getOrDefault(spark, Map.empty)
-      per.get(key) match {
-        case Some(df) => df
-        case None =>
-          val df = build
-          cache.put(spark, per + (key -> df))
-          df
-      }
-    }
-
-  /** The staged 4096-cell covariance model, memoized per (session, dir). */
+  /** The staged 4096-cell covariance model, memoized ([[graft.Memo]]):
+    * pcaPower, pcaExplained and anisotropyReport each re-paid the corpus
+    * moment pass + the 3-round iteration per query. */
   private[graft] def covStaged(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"$dir|cov")(scaledCov(spark, dir).staged)
+    graft.Memo(spark, ("pca.cov", graft.Memo.input(dir)))(scaledCov(spark, dir).staged)
 
   /** The final power-iterate over [[covStaged]], memoized. */
   private[graft] def leadVec(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"$dir|v")(iterate(covStaged(spark, dir)))
+    graft.Memo(spark, ("pca.lead", graft.Memo.input(dir)))(iterate(covStaged(spark, dir)))
 
   /** Three power-iteration rounds; returns the (dim, v) iterate at
     * scale S. Every join is model-cardinality. */

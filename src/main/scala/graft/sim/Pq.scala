@@ -100,29 +100,7 @@ object Pq {
   /** Train the M codebooks; returns one broadcastable row with columns
     * cents0..cents{M-1}, each an array<struct<cid,c,csq>> SORTED by cid —
     * a struct's packed POSITION in that array is the stored code.
-    * Memoized per (session, dir) like Clustering.train (train once,
-    * encode/search many); Bench evicts between passes. */
-  private val cache =
-    new java.util.HashMap[SparkSession, Map[String, DataFrame]]
-
-  private[graft] def evictTrained(spark: SparkSession): Unit =
-    cache.synchronized { cache.remove(spark); () }
-
-  private def memoCodebooks(spark: SparkSession, key: String)
-                           (build: => DataFrame): DataFrame =
-    cache.synchronized {
-      cache.keySet.removeIf(s => s.sparkContext.isStopped)
-      val perSession = cache.getOrDefault(spark, Map.empty)
-      perSession.get(key) match {
-        case Some(cb) => cb
-        case None =>
-          val packed = build
-          cache.put(spark, cache.getOrDefault(spark, Map.empty) + (key -> packed))
-          packed
-      }
-    }
-
-  /** The shared training kernel over any (vec_id, q) corpus — the raw
+    * The shared training kernel over any (vec_id, q) corpus — the raw
     * corpus for plain PQ, the cell-residual corpus for IVFADC. */
   private def trainCodebooks(corpus: DataFrame): DataFrame = {
     import graft.Cache.CacheOps
@@ -151,8 +129,10 @@ object Pq {
       .reduce(_ crossJoin _).localCheckpoint(false)
   }
 
+  /** The raw-corpus codebooks, memoized ([[graft.Memo]]): train once,
+    * encode/search many. */
   private[graft] def codebooks(spark: SparkSession, dir: String): DataFrame =
-    memoCodebooks(spark, dir)(trainCodebooks(qn(spark, dir)))
+    graft.Memo(spark, ("pq.codebooks", graft.Memo.input(dir)))(trainCodebooks(qn(spark, dir)))
 
   /** Residual corpus for IVFADC: each vector re-expressed as its offset
     * from its IVF cell centroid (Jégou et al. 2011 §IV: IVFADC encodes
@@ -170,10 +150,10 @@ object Pq {
       .withColumn("nsq", Portable.normSqQ(col("q")))
   }
 
-  /** Codebooks trained on cell residuals — the IVFADC model. Memoized
-    * beside the raw model under a variant key; Bench's evict drops both. */
+  /** Codebooks trained on cell residuals — the IVFADC model, memoized
+    * beside the raw model. */
   private[graft] def residCodebooks(spark: SparkSession, dir: String): DataFrame =
-    memoCodebooks(spark, dir + "#res")(
+    graft.Memo(spark, ("pq.resid_codebooks", graft.Memo.input(dir)))(
       trainCodebooks(residualCorpus(spark, dir).select("vec_id", "q")))
 
   /** The exact subspace distance of slice m (as column `qm`/`nm`) to the
@@ -406,7 +386,8 @@ object Pq {
         transform(col("perm"), d => element_at(col("q"), d)).as("q"))
 
   private[graft] def opqCodebooks(spark: SparkSession, dir: String): DataFrame =
-    memoCodebooks(spark, dir + "#opq")(trainCodebooks(permutedCorpus(spark, dir)))
+    graft.Memo(spark, ("pq.opq_codebooks", graft.Memo.input(dir)))(
+      trainCodebooks(permutedCorpus(spark, dir)))
 
   /** PQ-ADC top-k over any (vec_id, q) corpus with its codebooks — the
     * kernel [[pqTopK]] and [[opqTopK]] share. */

@@ -69,7 +69,8 @@ object Bpe {
     * rows — is kept in SQL and the correctness gate proves the
     * equivalence every round). */
   def bpeCounts(spark: SparkSession, dir: String): DataFrame =
-    bpeCountsFrom(t(spark, dir, "documents"), Some(s"$dir|bpe|full"))
+    bpeCountsFrom(t(spark, dir, "documents"),
+      Some(("text.bpe", graft.Memo.input(dir), "full")))
 
   /** One round's count-weighted adjacent-pair statistics over a form
     * table (w, wcnt, syms): the ONLY per-round shuffle, keyed on the
@@ -132,23 +133,23 @@ object Bpe {
     (forms, merges.result())
   }
 
-  /** [[trainForms]] memoized under `memoKey` via [[TrainMemo]] (None =
+  /** [[trainForms]] memoized under `memoKey` via [[graft.Memo]] (None =
     * direct call, unmemoized — the spec hand-corpus path). Memoized
-    * trainings always record merges so ONE cache entry serves every
+    * trainings always record merges so ONE memo entry serves every
     * consumer in the family (counts need only forms; encode needs the
     * merge table; recording adds six 1-row staged frames and changes no
     * result — trainForms' scaladoc pins the equivalence). */
-  private def trainedForms(forms0: DataFrame, memoKey: Option[String],
+  private def trainedForms(forms0: DataFrame, memoKey: Option[Product],
                            recordMerges: Boolean): (DataFrame, Seq[DataFrame]) =
     memoKey match {
       case None => trainForms(forms0, recordMerges)
-      case k => TrainMemo.memo(forms0.sparkSession, k)(
+      case Some(k) => graft.Memo(forms0.sparkSession, k)(
         trainForms(forms0, recordMerges = true))
     }
 
   /** Core on any (doc_id, text) frame — see [[bpeCounts]]. */
   private[graft] def bpeCountsFrom(docs: DataFrame,
-                                   memoKey: Option[String] = None): DataFrame = {
+                                   memoKey: Option[Product] = None): DataFrame = {
     // occurrences folded to (doc_id, w, occ): one corpus shuffle, read
     // twice (form derivation + final application join)
     val occ = docs
@@ -199,10 +200,11 @@ object Bpe {
     * family rests on (the token-count queries prove it only indirectly
     * through downstream totals). */
   def bpeMerges(spark: SparkSession, dir: String): DataFrame =
-    bpeMergesFrom(t(spark, dir, "documents"), Some(s"$dir|bpe|full"))
+    bpeMergesFrom(t(spark, dir, "documents"),
+      Some(("text.bpe", graft.Memo.input(dir), "full")))
 
   private[graft] def bpeMergesFrom(docs: DataFrame,
-                                   memoKey: Option[String] = None): DataFrame = {
+                                   memoKey: Option[Product] = None): DataFrame = {
     val (_, merges) = trainedForms(formTable(docs), memoKey, recordMerges = true)
     merges.reduce(_ unionAll _).orderBy("rank")
   }
@@ -214,10 +216,11 @@ object Bpe {
     * Zipf-small state, never the corpus) + one token-keyed agg; top-k
     * plans as TakeOrderedAndProject. */
   def bpeVocab(spark: SparkSession, dir: String, topK: Int = 30): DataFrame =
-    bpeVocabFrom(t(spark, dir, "documents"), topK, Some(s"$dir|bpe|full"))
+    bpeVocabFrom(t(spark, dir, "documents"), topK,
+      Some(("text.bpe", graft.Memo.input(dir), "full")))
 
   private[graft] def bpeVocabFrom(docs: DataFrame, topK: Int = 30,
-                                  memoKey: Option[String] = None): DataFrame = {
+                                  memoKey: Option[Product] = None): DataFrame = {
     val (forms, _) = trainedForms(formTable(docs), memoKey, recordMerges = false)
     forms.select(explode(col("syms")).as("token"), col("wcnt"))
       .groupBy("token").agg(sum("wcnt").as("occurrences"))
@@ -262,7 +265,7 @@ object Bpe {
     * occ ⋈ form-stats broadcast join — same shape as [[bpeCounts]]. */
   def bpeEncode(spark: SparkSession, dir: String): DataFrame =
     bpeEncodeFrom(t(spark, dir, "documents"),
-      memoKey = Some(s"$dir|bpe|full"))
+      memoKey = Some(("text.bpe", graft.Memo.input(dir), "full")))
 
   /** Replay a recorded merge table (the `merges` frames of
     * [[trainForms]]) in rank order over a form table — the shipped-
@@ -316,7 +319,7 @@ object Bpe {
 
   private[graft] def bpeEncodeFrom(docs: DataFrame,
                                    vocabK: Int = releasedVocabK,
-                                   memoKey: Option[String] = None): DataFrame = {
+                                   memoKey: Option[Product] = None): DataFrame = {
     val occ = docs
       .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("w"))
       .groupBy("doc_id", "w").agg(count(lit(1)).as("occ"))
@@ -359,12 +362,12 @@ object Bpe {
     val docs = t(spark, dir, "documents")
     val h = TextAnalysis.splitHash(col("doc_id"))
     bpeEncodeAcross(docs.filter(h < 80), docs.filter(h >= 80 && h < 90),
-      heldoutVocabK, Some(s"$dir|bpe|train80"))
+      heldoutVocabK, Some(("text.bpe", graft.Memo.input(dir), "train80")))
   }
 
   private[graft] def bpeEncodeAcross(trainDocs: DataFrame, evalDocs: DataFrame,
                                      vocabK: Int = releasedVocabK,
-                                     memoKey: Option[String] = None): DataFrame = {
+                                     memoKey: Option[Product] = None): DataFrame = {
     // artifacts from the TRAIN corpus: merge table + released vocab
     // (vocab from the trained state — identical to replaying the merges
     // over the train forms, which trainForms' loop just did)
@@ -540,7 +543,7 @@ object Bpe {
     * language aggregate. */
   def tokenFertility(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
-    bpeCountsFrom(docs, Some(s"$dir|bpe|full"))
+    bpeCountsFrom(docs, Some(("text.bpe", graft.Memo.input(dir), "full")))
       .join(docs.select(col("doc_id"), col("lang")), "doc_id")
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),

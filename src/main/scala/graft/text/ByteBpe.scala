@@ -67,16 +67,17 @@ object ByteBpe {
     * (doc_id, n_pretokens, n_bytes, n_bytebpe_tokens, n_unk_tokens=0)
     * plus the corpus ROLLUP row (doc_id = −1) the bake-off reads. */
   def byteBpeEncode(spark: SparkSession, dir: String): DataFrame =
-    byteBpeEncodeFrom(t(spark, dir, "documents"), Some(s"$dir|bytebpe|full"))
+    byteBpeEncodeFrom(t(spark, dir, "documents"),
+      Some(("text.bytebpe", graft.Memo.input(dir), "full")))
 
   private[graft] def byteBpeEncodeFrom(docs: DataFrame,
-                                       memoKey: Option[String] = None): DataFrame = {
+                                       memoKey: Option[Product] = None): DataFrame = {
     val occ = docs
       .select(col("doc_id"), explode(preTokens(col("text"))).as("w"))
       .groupBy("doc_id", "w").agg(count(lit(1)).as("occ"))
       .staged // two consumers: form derivation + the final apply join
-    val (forms, _) = TrainMemo.memo(docs.sparkSession, memoKey)(
-      Bpe.trainForms(byteForms(occ), recordMerges = true))
+    def train = Bpe.trainForms(byteForms(occ), recordMerges = true)
+    val (forms, _) = memoKey.fold(train)(graft.Memo(docs.sparkSession, _)(train))
     occ
       .join(broadcast(forms.select(col("w"),
         size(col("syms")).cast("long").as("w_tokens"),

@@ -42,16 +42,17 @@ object TokenizerCompare {
         sum(length(col("w")).cast("long")).as("n_chars"))
       .staged // feeds the chars row and every fertility denominator
     val armRows = Seq(
-      ("bpe", Bpe.bpeEncodeFrom(docs, memoKey = Some(s"$dir|bpe|full")),
+      ("bpe",
+        Bpe.bpeEncodeFrom(docs, memoKey = Some(("text.bpe", graft.Memo.input(dir), "full"))),
         "n_final_tokens", "n_oov_tokens"),
       ("bytebpe",
-        ByteBpe.byteBpeEncodeFrom(docs, Some(s"$dir|bytebpe|full")),
+        ByteBpe.byteBpeEncodeFrom(docs, Some(("text.bytebpe", graft.Memo.input(dir), "full"))),
         "n_bytebpe_tokens", "n_unk_tokens"),
       ("unigram",
-        Unigram.encodeAcross(docs, docs, Some(s"$dir|unigram|full")),
+        Unigram.encodeAcross(docs, docs, Some(("text.unigram", graft.Memo.input(dir), "full"))),
         "n_unigram_tokens", "n_unk_tokens"),
       ("wordpiece",
-        WordPiece.encodeAcross(docs, docs, Some(s"$dir|wordpiece|full")),
+        WordPiece.encodeAcross(docs, docs, Some(("text.wordpiece", graft.Memo.input(dir), "full"))),
         "n_wordpiece_tokens", "n_unk_words"))
       .map { case (name, df, tokCol, unkCol) =>
         df.filter(col("doc_id") === -1L)

@@ -172,7 +172,8 @@ object Unigram {
     * [[Bpe.bpeMerges]]' merges.txt. Integer columns only, so the oracle
     * comparison is exact without any float column. */
   def unigramTrain(spark: SparkSession, dir: String): DataFrame =
-    trainedModel(t(spark, dir, "documents"), Some(s"$dir|unigram|full"))
+    trainedModel(t(spark, dir, "documents"),
+      Some(("text.unigram", graft.Memo.input(dir), "full")))
       .orderBy(desc("cnt"), col("piece"))
 
   /** Encode the corpus under the learned model — per-doc token
@@ -182,7 +183,7 @@ object Unigram {
     * structural zero. */
   def unigramEncode(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
-    encodeAcross(docs, docs, Some(s"$dir|unigram|full"))
+    encodeAcross(docs, docs, Some(("text.unigram", graft.Memo.input(dir), "full")))
   }
 
   /** Held-out encode — model learned on the canonical TRAIN split
@@ -193,7 +194,7 @@ object Unigram {
     val docs = t(spark, dir, "documents")
     val h = TextAnalysis.splitHash(col("doc_id"))
     encodeAcross(docs.filter(h < 80), docs.filter(h >= 80 && h < 90),
-      Some(s"$dir|unigram|train80"))
+      Some(("text.unigram", graft.Memo.input(dir), "train80")))
   }
 
   /** Train on `trainDocs`, Viterbi-encode `evalDocs`, account per doc.
@@ -201,13 +202,14 @@ object Unigram {
     * form-level work under broadcast models. */
   /** [[trainModel]] memoized under `memoKey` (None = direct). */
   private[graft] def trainedModel(trainDocs: DataFrame,
-                                  memoKey: Option[String]): DataFrame =
-    TrainMemo.memo(trainDocs.sparkSession, memoKey)(
-      trainModel(Bpe.formTable(trainDocs)))
+                                  memoKey: Option[Product]): DataFrame = {
+    def train = trainModel(Bpe.formTable(trainDocs))
+    memoKey.fold(train)(graft.Memo(trainDocs.sparkSession, _)(train))
+  }
 
   private[graft] def encodeAcross(trainDocs: DataFrame,
                                   evalDocs: DataFrame,
-                                  memoKey: Option[String] = None): DataFrame = {
+                                  memoKey: Option[Product] = None): DataFrame = {
     val model = trainedModel(trainDocs, memoKey)
     val occ = evalDocs
       .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("w"))

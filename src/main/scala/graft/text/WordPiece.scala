@@ -114,7 +114,8 @@ object WordPiece {
   /** The vocab as a query artifact — (piece, cnt), integer columns
     * only, the WordPiece analog of [[Bpe.bpeVocab]]. */
   def wordpieceVocab(spark: SparkSession, dir: String): DataFrame =
-    trainedVocab(t(spark, dir, "documents"), Some(s"$dir|wordpiece|full"))
+    trainedVocab(t(spark, dir, "documents"),
+      Some(("text.wordpiece", graft.Memo.input(dir), "full")))
       .orderBy(desc("cnt"), col("piece"))
 
   /** Encode the corpus under its own vocab — per-doc accounting plus a
@@ -123,7 +124,7 @@ object WordPiece {
     * (no char floor in the vocab). */
   def wordpieceEncode(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
-    encodeAcross(docs, docs, Some(s"$dir|wordpiece|full"))
+    encodeAcross(docs, docs, Some(("text.wordpiece", graft.Memo.input(dir), "full")))
   }
 
   /** Held-out encode — vocab from the canonical TRAIN split
@@ -134,7 +135,7 @@ object WordPiece {
     val docs = t(spark, dir, "documents")
     val h = TextAnalysis.splitHash(col("doc_id"))
     encodeAcross(docs.filter(h < 80), docs.filter(h >= 80 && h < 90),
-      Some(s"$dir|wordpiece|train80"))
+      Some(("text.wordpiece", graft.Memo.input(dir), "train80")))
   }
 
   /** Vocab from `trainDocs`, greedy-encode `evalDocs`, account per
@@ -142,13 +143,14 @@ object WordPiece {
     * form-level under the broadcast vocab map. */
   /** [[vocabOf]] memoized under `memoKey` (None = direct). */
   private[graft] def trainedVocab(trainDocs: DataFrame,
-                                  memoKey: Option[String]): DataFrame =
-    TrainMemo.memo(trainDocs.sparkSession, memoKey)(
-      vocabOf(Bpe.formTable(trainDocs)))
+                                  memoKey: Option[Product]): DataFrame = {
+    def train = vocabOf(Bpe.formTable(trainDocs))
+    memoKey.fold(train)(graft.Memo(trainDocs.sparkSession, _)(train))
+  }
 
   private[graft] def encodeAcross(trainDocs: DataFrame,
                                   evalDocs: DataFrame,
-                                  memoKey: Option[String] = None): DataFrame = {
+                                  memoKey: Option[Product] = None): DataFrame = {
     val vocab = trainedVocab(trainDocs, memoKey)
     val occ = evalDocs
       .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("w"))

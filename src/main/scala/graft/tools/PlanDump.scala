@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 
@@ -8,23 +7,13 @@ import java.nio.file.{Files, Paths}
   * the plan evidence for optimization rounds (plans/r16/<q>_before.txt /
   * _after.txt). Usage:
   *   sbt "runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>"
-  * Writes <outDir>/<query>_<suffix>.txt. Session config mirrors Bench
+  * Writes <outDir>/<query>_<suffix>.txt. The session is Bench's ([[graft.Session]])
   * so the captured plan is the plan the bench actually runs.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, names) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.Cache.ConfKey,
-        sys.env.getOrElse("SPARK_GRAFT_CACHE", "checkpoint"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("graft-plandump")
     Files.createDirectories(Paths.get(outDir))
     for (n <- names.split(",").map(_.trim).filter(_.nonEmpty)) {
       graft.SparkEntry.queries.get(n) match {

@@ -122,14 +122,7 @@ object SkewFixture {
     val Array(src, out, factorS) = args.take(3)
     val factor = factorS.toInt
     val mode = args.lift(3).getOrElse("hotkey")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-skew-fixture")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("graft-skew-fixture")
 
     val frame = mode match {
       case "hotkey" => skewedLineitem(spark, src, factor)

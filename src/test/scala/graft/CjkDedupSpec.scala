@@ -17,10 +17,6 @@ class CjkDedupSpec extends SparkSpec {
       .withColumn("source", lit("spec"))
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    // the dedup input frames are memoized per (session, dir); this
-    // helper REWRITES one dir per test, so drop the memo (production
-    // input partitions are immutable — only rewriting specs must evict)
-    graft.dedup.Dedup.evictPairs(spark)
     dir
   }
 

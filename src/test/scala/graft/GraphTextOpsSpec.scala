@@ -298,7 +298,6 @@ class GraphTextOpsSpec extends SparkSpec {
       (2L, other, "en", "t", other.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    graft.dedup.Dedup.evictPairs(spark) // fresh index for the temp dir
     val rows = graft.dedup.Dedup.containmentPairs(spark, tmp, tau = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(4))).toList
     assert(rows.map(t => (t._1, t._2)) == List((1L, 0L)), rows.toString)
@@ -307,7 +306,7 @@ class GraphTextOpsSpec extends SparkSpec {
     val jac = graft.dedup.Dedup.jaccardPairs(spark, tmp)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(!jac.contains((0L, 1L)), jac.toString)
-    graft.dedup.Dedup.evictPairs(spark) // don't leak the temp index
+    graft.Memo.evictAll(spark) // don't leak the temp index
   }
 
   test("winnowing: a planted >=10-token shared run is ALWAYS detected; unrelated docs are not") {

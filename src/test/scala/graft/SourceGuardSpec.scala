@@ -1,0 +1,43 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source-scan guard: session-keyed memo maps live only in graft.Memo
+  * and SparkSession builders only in graft.Session, so a per-object
+  * copy of either mechanism cannot creep back in. Comment lines are
+  * skipped (the GraftExtensions scaladoc shows a builder by example). */
+class SourceGuardSpec extends AnyFunSuite {
+
+  private val sources: Seq[Path] = {
+    val walk = Files.walk(Paths.get("src"))
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  /** (file:line, text) of every non-comment line matching `pattern`
+    * outside `home`. */
+  private def hits(pattern: String, home: String): Seq[String] = {
+    val re = pattern.r
+    for {
+      p <- sources if !p.endsWith(home)
+      (line, n) <- Files.readAllLines(p).asScala.zipWithIndex
+      code = line.trim if !code.startsWith("*") && !code.startsWith("//")
+      if re.findFirstIn(code).isDefined
+    } yield s"$p:${n + 1}: $code"
+  }
+
+  test("the scan sees the source tree") {
+    assert(sources.exists(_.endsWith("graft/Memo.scala")))
+    assert(sources.exists(_.endsWith("graft/MemoSpec.scala")))
+  }
+
+  test("no SparkSession-keyed map outside graft/Memo.scala") {
+    assert(hits("""Map\s*\[\s*SparkSession\b""", "graft/Memo.scala").isEmpty)
+  }
+
+  test("no SparkSession builder outside graft/Session.scala") {
+    assert(hits("""SparkSession\s*\.\s*builder\b""", "graft/Session.scala").isEmpty)
+  }
+}

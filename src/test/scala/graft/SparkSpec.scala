@@ -11,18 +11,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  // SPARK_GRAFT_CACHE=persist runs the whole suite in the RAPIDS-ready
+  // columnar-cache mode (graft.Cache)
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // SPARK_GRAFT_CACHE=persist runs the whole suite in the
-      // RAPIDS-ready columnar-cache mode (graft.Cache)
-      .config(graft.Cache.ConfKey,
-        sys.env.getOrElse("SPARK_GRAFT_CACHE", "checkpoint"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session.local("graft-test", cpus = 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
