@@ -15,7 +15,8 @@ import graft.model.{AriaConfig, EpochStats}
   *
   *   Execute/reserve  = ops ⋈ table (snapshot) + groupBy(key).agg(min(tid))
   *   Commit(analyze)  = ops ⋈ reservations + per-txn max(hazard flags)
-  *   Install          = decision `when()` + left-join merge write-back
+  *   Install          = committed write sets, merged into the table once
+  *                      per drain (max(epoch, tid, opIdx) per key)
   *   Collect          = filter aborted + row_number renumber
   *
   * The CAS-min races of the reference (metadatahelper.cuh:36-90) are a
@@ -76,70 +77,59 @@ object Aria {
     verdicts.withColumn("abort", abortCol)
   }
 
-  /** T7 Install: merge committed writes back into the table snapshot.
+  /** T7 Install: merge a drain's committed writes into the table, once.
     *
-    * Within a txn, the last op on a key wins (ops applied in op order,
-    * TrancM_func.cuh:213-224 ≙ T10's per-key op chains). Across txns, at
-    * most one committed writer per key exists — any non-min-Tid writer
-    * carries WAW and aborted — so the per-key winner is unique; we assert
-    * this in tests rather than tie-breaking (SURVEY.md §7.4.4).
+    * The reference's Install copies each committed txn's write set back
+    * into its table slots (TrancM_func.cuh:188-197,213-224): an epoch of
+    * 150 txns touches at most ~900 of the 199,999 keys. So epochs only
+    * emit their write sets ([[committedWrites]]) and the drain merges
+    * them here at its end — one aggregation and one merge join, instead
+    * of a rebuilt table per epoch.
     *
-    * The merge is a left join table⋈winners on key + coalesce per field:
-    * one shuffle of the (small) winner set against the table; with AQE the
-    * winner side broadcasts when small.
+    * One winner rule covers every epoch: the write with the greatest
+    * (epoch, tid, opIdx) per key. A later epoch overwrites an earlier
+    * one. Within a normal epoch at most one committed tid writes a key
+    * (any non-min-Tid writer carries WAW and aborts — asserted in tests,
+    * SURVEY.md §7.4.4), so the last op of that txn wins (ops apply in
+    * op order). Within the serial fallback epoch every residual txn
+    * commits in Tid order, then op order, so the greatest (tid, opIdx)
+    * is the serial outcome. (Writes are pure functions of (seed, epoch,
+    * tid, opIdx), so last-writer-wins IS the serial outcome; a
+    * read-dependent payload would need T10's per-key op chains.)
+    * max(struct) is a commutative agg → partial+final aggregation, one
+    * shuffle, no single-partition window.
     */
-  def install(table: DataFrame, ops: DataFrame, decisions: DataFrame, seed: Long,
+  def install(table: DataFrame, writes: DataFrame, seed: Long,
               keyCols: Seq[String] = Seq("key")): DataFrame = {
-    val committedWrites = ops
-      .join(decisions.filter(!col("abort")).select("tid"), Seq("tid"))
-      .filter(col("isUpdate"))
-    // Last op per key among committed writers. The committed tid is unique
-    // per key (non-min writers abort on WAW), so ordering by opIdx alone is
-    // total; max(struct) is a commutative agg → partial+final aggregation,
-    // one shuffle, no single-partition window.
-    val winners = committedWrites
+    val winners = writes
       .groupBy(keyCols.map(col): _*)
-      .agg(max(struct(col("opIdx"), col("tid"), col("epoch"))).as("w"))
-      .select(keyCols.map(col) ++ Seq(col("w.tid").as("tid"),
-        col("w.epoch").as("epoch"), col("w.opIdx").as("opIdx")): _*)
-    mergeWinners(table, winners, seed, keyCols)
-  }
-
-  /** Shared write-back tail of [[install]] and [[fallbackApply]]: value
-    * each per-key winning (epoch, tid, opIdx) op and left-join-merge it
-    * into the table snapshot. Writes to absent keys drop here (the left
-    * join keeps only table keys), matching the reference's skip of ops
-    * on missing keys. */
-  private def mergeWinners(table: DataFrame, winners: DataFrame, seed: Long,
-                           keyCols: Seq[String]): DataFrame = {
+      .agg(max(struct(col("epoch"), col("tid"), col("opIdx"))).as("w"))
+      .select(keyCols.map(col) ++ Seq(col("w.epoch").as("epoch"),
+        col("w.tid").as("tid"), col("w.opIdx").as("opIdx")): _*)
+    // value each winning op and left-join-merge it into the table.
+    // Writes to absent keys drop here (the left join keeps only table
+    // keys), matching the reference's skip of ops on missing keys.
     val valued = (0 until 10).foldLeft(winners) { (df, i) =>
       df.withColumn(s"nf$i", Workload.writePayload(seed, i))
     }.select(keyCols.map(col) ++ (0 until 10).map(i => col(s"nf$i")): _*)
-
     table.join(valued, keyCols, "left").select(
       keyCols.map(col) ++ (0 until 10).map(i =>
         coalesce(col(s"nf$i"), col(s"f$i")).as(s"f$i")): _*)
   }
 
-  /** Aria-paper fallback: apply a residual batch as one deterministic
-    * serial pass in Tid order — the relational image of "process the
-    * deferred transactions with deterministic (ordered-lock) execution,
-    * which commits every one of them". Serial execution txn-by-txn in
-    * Tid order, ops in op order, means the per-key winning write is
-    * simply max(tid, opIdx) over the batch's update ops — one
-    * partial+final agg shuffle plus the same merge join as [[install]];
-    * no per-txn iteration, no window, nothing batch-length-dependent.
-    * (Writes here are pure functions of (seed, epoch, tid, opIdx), so
-    * last-writer-wins IS the serial outcome; a read-dependent payload
-    * would need T10's per-key op-chain machinery instead.) */
-  def fallbackApply(table: DataFrame, ops: DataFrame, seed: Long,
-                    keyCols: Seq[String] = Seq("key")): DataFrame = {
-    val winners = ops.filter(col("isUpdate"))
-      .groupBy(keyCols.map(col): _*)
-      .agg(max(struct(col("tid"), col("opIdx"), col("epoch"))).as("w"))
-      .select(keyCols.map(col) ++ Seq(col("w.tid").as("tid"),
-        col("w.epoch").as("epoch"), col("w.opIdx").as("opIdx")): _*)
-    mergeWinners(table, winners, seed, keyCols)
+  /** One epoch's write set, the input of [[install]]: the update ops of
+    * every txn not in `abortedTids`, as keyCols ++ (epoch, tid, opIdx).
+    * A map-only filter over the epoch's ops — the abort set is already
+    * on the driver, so no join with the decisions re-runs the reserve
+    * and analyze shuffles. With no aborts (the serial fallback epoch)
+    * every update op is a committed write. */
+  def committedWrites(ops: DataFrame, abortedTids: Array[Int],
+                      keyCols: Seq[String] = Seq("key")): DataFrame = {
+    val updates = ops.filter(col("isUpdate"))
+    val committed =
+      if (abortedTids.isEmpty) updates
+      else updates.filter(!col("tid").isInCollection(abortedTids))
+    committed.select(keyCols.map(col) ++ Seq(col("epoch"), col("tid"), col("opIdx")): _*)
   }
 
   /** T8 Collect: keep aborted txns' ops, renumber Tids 1..m preserving
@@ -167,12 +157,14 @@ object Aria {
     }
   }
 
-  final case class EpochResult(table: DataFrame, retryOps: DataFrame,
-                               stats: EpochStats, abortedTids: Array[Int])
+  final case class EpochResult(writes: DataFrame, retryOps: DataFrame, stats: EpochStats)
 
   /** T11: one epoch — Execute(restrict to present keys) → Reserve → Analyze
-    * → Decide → Install → Collect. Returns the new table snapshot and the
-    * renumbered retry batch.
+    * → Decide → Collect. Returns the epoch's committed write set (see
+    * [[committedWrites]]; [[runFrom]] installs all epochs' sets at the
+    * end of the drain) and the renumbered retry batch. `table` is read
+    * only for key presence, and only when the generator's keyspace can
+    * exceed the table's.
     *
     * `nTxnsInBatch` is the batch size INCLUDING txns whose exploded op set
     * is empty (zero generated ops, or every op on an absent key): those
@@ -189,46 +181,103 @@ object Aria {
     // (keys 1..keysMax ⊆ 1..tableKeys, both dense), the presence filter
     // is statically a no-op — skip the per-epoch semi-join shuffle.
     val shape = Seq("tid", "epoch", "opIdx") ++ keyCols :+ "isUpdate"
+    val shaped = opsIn.select(shape.head, shape.tail: _*)
     val ops =
-      if (cfg.keysMax <= cfg.tableKeys)
-        opsIn.select(shape.head, shape.tail: _*)
-      else opsIn.join(table.select(keyCols.map(col): _*), keyCols, "leftsemi")
+      if (cfg.keysMax <= cfg.tableKeys) shaped
+      else shaped.join(table.select(keyCols.map(col): _*), keyCols, "leftsemi")
         .select(shape.head, shape.tail: _*)
 
     val res = reserve(ops, keyCols)
     val verdicts = decide(analyze(ops, res, keyCols), cfg.reorder)
-    val decisions = verdicts.select("tid", "abort")
 
     // the only driver action of the epoch: the loop needs the abort set
     // anyway (loop condition + Tid renumbering); bounded by batch size.
-    val abortedTids = decisions.filter(col("abort")).select("tid")
+    val abortedTids = verdicts.filter(col("abort")).select("tid")
       .collect().map(_.getInt(0)).sorted
 
-    val newTable = install(table, ops, decisions, cfg.seed, keyCols)
+    // the write set reads the ops before the presence semi-join, so the
+    // final merge does not re-run it: writes to absent keys drop at
+    // [[install]]'s left join, and a txn with no present op never aborts
+    val writes = committedWrites(shaped, abortedTids, keyCols)
     val retry = collect(ops, abortedTids, keyCols)
     val nAborted = abortedTids.length.toLong
-    EpochResult(newTable, retry,
-      EpochStats(epoch, nTxnsInBatch, nTxnsInBatch - nAborted, nAborted), abortedTids)
+    EpochResult(writes, retry,
+      EpochStats(epoch, nTxnsInBatch, nTxnsInBatch - nAborted, nAborted))
   }
 
   final case class RunResult(table: DataFrame, stats: Seq[EpochStats])
 
-  /** The full drain-to-empty loop (db.h:104-109): run epochs until no txns
-    * remain. `localCheckpoint` per epoch truncates lineage so plans don't
-    * snowball across iterations (SURVEY.md §7.4.1) — on a cluster this is
-    * the standard iterative-algorithm pattern (cf. GraphX/ALS).
-    */
+  /** The full drain-to-empty loop (db.h:104-109) from the generated
+    * epoch-0 state: [[runFrom]] over a checkpointed `kvTable` and
+    * `txnOps` batch. */
   def run(spark: SparkSession, cfg: AriaConfig): RunResult = {
+    // lazy localCheckpoints: lineage is truncated identically, but the
+    // materialization folds into the first job that reads each frame
+    // instead of costing a dedicated job per checkpoint.
+    val table = Workload.kvTable(spark, cfg.tableKeys, cfg.seed)
+      .localCheckpoint(eager = eagerHygiene(cfg))
+    val ops = Workload.txnOps(spark, cfg.nTxns, cfg.maxOps, cfg.writePct,
+      cfg.keysMax, cfg.seed).localCheckpoint(eager = eagerHygiene(cfg))
+    runFrom(spark, cfg, table, ops, startEpoch = 0, remaining0 = cfg.nTxns.toLong)
+  }
+
+  /** Table keys one shuffle task can hold without thrashing the heap —
+    * the partition-scaling constant for [[runFrom]]'s clamp (sized from
+    * the 10,000×-drain spill failure: tens of millions of rows in one
+    * task died; one task per ~10M keys recovered it). */
+  private val KeysPerShuffleTask = 10000000L
+
+  /** Table size from which a drain frees each superseded retry batch
+    * eagerly — derived from (half of) [[KeysPerShuffleTask]]: decade-
+    * scale configs grow the batch with the table, and well before a
+    * table needs more shuffle tasks, holding every epoch's retry batch
+    * until the final merge already matters. Configs in
+    * between (≥ this, < KeysPerShuffleTask) get eager hygiene while
+    * still fitting one task — that ordering is deliberate: hygiene must
+    * engage BEFORE partition scaling, never after. */
+  private val EagerHygieneKeys = KeysPerShuffleTask / 2
+
+  /** Decade-scale configs checkpoint each epoch's write set and retry
+    * batch eagerly and free the superseded retry batch's blocks (see
+    * [[runFrom]]). The reference-size drain keeps its lazy checkpoints:
+    * it holds one retry-batch block set per epoch, each at most the
+    * 150-txn batch (≤4,500 ops), beside the base table's checkpoint
+    * (about 120 MB at 199,999 keys), which every drain holds until its
+    * final merge. */
+  private def eagerHygiene(cfg: AriaConfig): Boolean =
+    cfg.forceEagerHygiene || cfg.tableKeys >= EagerHygieneKeys
+
+  /** Resume (or start) the drain from EXPLICIT state. The durability
+    * boundary is the (table, retry batch) pair at an epoch boundary:
+    * epochs are deterministic functions of it, so persisting the two
+    * frames to parquet and calling this on the read-back resumes the
+    * drain to a bit-identical final table, even in a fresh session after
+    * driver loss. Inside one call the table is NOT rewritten per epoch —
+    * epochs emit write sets and the table is merged once at the end — so
+    * a caller that wants a mid-drain boundary builds the table from an
+    * epoch's writes with [[install]] (as the restart specs do). Spark's
+    * own resilience covers task/executor failure WITHIN the drain.
+    * `remaining0` = txns in `ops0`'s batch (its distinct-tid count;
+    * passed in because the caller always knows it and the loop must not
+    * pay a count job to rediscover it). `keyCols` = the reservation key
+    * (see [[reserve]]); (tbl, key) drains a multi-table state.
+    *
+    * The returned table is a lazy localCheckpoint of the one merge: it
+    * materializes in the first job that reads it, planned here with the
+    * drain's confs below.
+    */
+  def runFrom(spark: SparkSession, cfg: AriaConfig, table0: DataFrame,
+              ops0: DataFrame, startEpoch: Int, remaining0: Long,
+              keyCols: Seq[String] = Seq("key")): RunResult = {
     // Size the engine's shuffles to its (small-batch) workload: the
     // reference batch is ≤200 txns over ≤200k keys — dozens of shuffle
     // partitions only add scheduling latency per epoch, and AQE's
-    // per-stage re-optimization is pure overhead at this size. Two
-    // tasks per stage covers a ≤6k-op batch; the drain is a latency-
-    // bound chain of ~7 tiny jobs, so every task saved is wall time.
-    // Restored after the loop; results are partitioning-independent
-    // (asserted in AriaSpec), so this is a latency knob, not a
-    // semantics knob. On a real cluster with large batches, keep AQE
-    // on and partitions high.
+    // per-stage re-optimization is pure overhead at this size. The
+    // drain is a latency-bound chain of tiny jobs, so every task saved
+    // is wall time. Restored after the loop; results are
+    // partitioning-independent (asserted in AriaSpec), so this is a
+    // latency knob, not a semantics knob. On a real cluster with large
+    // batches, keep AQE on and partitions high.
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     // ... but the clamp must SCALE WITH THE TABLE: at reference size two
@@ -241,98 +290,51 @@ object Aria {
       math.min(prevParts.toLong, cfg.tableKeys.toLong / KeysPerShuffleTask + 1L))
     spark.conf.set("spark.sql.shuffle.partitions", scaledParts.toString)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try runLoop(spark, cfg)
-    finally {
+    try {
+      val (writes, stats) = drainWrites(cfg, table0, ops0, startEpoch, remaining0, keyCols)
+      val table =
+        if (writes.isEmpty) table0
+        else install(table0, writes.reduce(_ unionByName _), cfg.seed, keyCols)
+          .localCheckpoint(eager = false)
+      RunResult(table, stats)
+    } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
   }
 
-  /** Table keys one shuffle task can hold without thrashing the heap —
-    * the partition-scaling constant for [[run]]'s clamp (sized from the
-    * 10,000×-drain spill failure: tens of millions of rows in one task
-    * died; one task per ~10M keys recovered it). */
-  private val KeysPerShuffleTask = 10000000L
-
-  /** Tables whose per-generation checkpoint blocks are big enough that
-    * leaking one set per epoch matters — derived from (half of)
-    * [[KeysPerShuffleTask]]: well before a table needs more shuffle
-    * tasks, its generations already need eager reclamation. Configs in
-    * between (≥ this, < KeysPerShuffleTask) get eager hygiene while
-    * still fitting one task — that ordering is deliberate: hygiene must
-    * engage BEFORE partition scaling, never after. */
-  private val EagerHygieneKeys = KeysPerShuffleTask / 2
-
-  /** Decade-scale configs take the eager cascade-and-free path below;
-    * the reference-size drain keeps its measured lazy-checkpoint
-    * latency profile (the block sets it leaks are kilobytes). */
-  private def eagerHygiene(cfg: AriaConfig): Boolean =
-    cfg.forceEagerHygiene || cfg.tableKeys >= EagerHygieneKeys
-
-  private def runLoop(spark: SparkSession, cfg: AriaConfig): RunResult = {
-    // lazy localCheckpoints: lineage is truncated identically, but the
-    // materialization folds into the next epoch's first job instead of
-    // costing a dedicated job per checkpoint (2 fewer jobs/epoch).
-    val table = Workload.kvTable(spark, cfg.tableKeys, cfg.seed)
-      .localCheckpoint(eager = eagerHygiene(cfg))
-    val ops = Workload.txnOps(spark, cfg.nTxns, cfg.maxOps, cfg.writePct,
-      cfg.keysMax, cfg.seed).localCheckpoint(eager = eagerHygiene(cfg))
-    runFrom(spark, cfg, table, ops, startEpoch = 0, remaining0 = cfg.nTxns.toLong)
-  }
-
-  /** Resume (or start) the drain from EXPLICIT state — the durability
-    * boundary a production drain needs: every epoch's (table, retry
-    * batch) pair is a complete, self-contained snapshot of the machine
-    * (epochs are deterministic functions of it), so persisting the two
-    * frames to parquet at any epoch boundary and calling this on the
-    * read-back resumes the drain to a bit-identical final table even in
-    * a fresh session after driver loss. Spark's own resilience covers
-    * task/executor failure WITHIN an epoch; this covers everything
-    * above it. [[run]] is exactly this from the generated epoch-0
-    * state. `remaining0` = txns in `ops0`'s batch (its distinct-tid
-    * count; passed in because the caller always knows it and the loop
-    * must not pay a count job to rediscover it). */
-  def runFrom(spark: SparkSession, cfg: AriaConfig, table0: DataFrame,
-              ops0: DataFrame, startEpoch: Int, remaining0: Long): RunResult = {
-    var table = table0
+  /** The epoch loop of [[runFrom]]: every epoch's committed write set
+    * (the fallback epoch's included) and the stats trajectory. */
+  private def drainWrites(cfg: AriaConfig, table0: DataFrame, ops0: DataFrame,
+                          startEpoch: Int, remaining0: Long,
+                          keyCols: Seq[String]): (Seq[DataFrame], Seq[EpochStats]) = {
     var ops = ops0
-    // Frames the loop checkpointed ITSELF are provably droppable
-    // checkpoint roots; the caller's generation-0 frames may be anything
-    // (runLoop hands in checkpoints, a resume hands in parquet reads
-    // with no blocks to free) — probe those instead of asserting.
+    // A retry batch the loop checkpointed ITSELF is a provably droppable
+    // checkpoint root; the caller's generation-0 batch may be anything
+    // ([[run]] hands in a checkpoint, a resume hands in a parquet read
+    // with no blocks to free) — probe that one instead of asserting.
     var loopOwned = false
+    val writes = Seq.newBuilder[DataFrame]
     val stats = Seq.newBuilder[EpochStats]
+    // Decade-scale batches: checkpoint the write set EAGERLY (it reads
+    // the ops blocks about to be dropped), then free the superseded
+    // retry batch at once. A local checkpoint is non-reliable, so blocks
+    // must never be dropped while a lazy plan could still read them.
+    def keepWrites(w: DataFrame): Unit =
+      writes += (if (eagerHygiene(cfg)) w.localCheckpoint(eager = true) else w)
+    def dropOps(): Unit =
+      if (eagerHygiene(cfg) && (loopOwned || GraftBridge.isCheckpointRoot(ops)))
+        GraftBridge.dropCheckpointBlocks(ops)
     var epoch = startEpoch
     var remaining = remaining0
     while (remaining > 0 && epoch < cfg.maxEpochs) {
-      val r = runEpoch(table, ops, epoch, remaining, cfg)
-      if (eagerHygiene(cfg)) {
-        // decade-scale tables: cascade EAGERLY and free the superseded
-        // generation at once. Lazy checkpoints defer every install to
-        // whatever job finally reads the table — the whole epoch chain
-        // then materializes inside one job with every generation's
-        // blocks pinned (the 10,000×-batch attempt accumulated 78 GB of
-        // spill and died). Eager per-epoch materialization bounds live
-        // storage at two generations; the two extra jobs per epoch are
-        // noise against a decade-scale epoch. Dropping is safe ONLY
-        // because the new checkpoint has just materialized — a local
-        // checkpoint is non-reliable, so blocks must never be dropped
-        // while a lazy plan could still read them.
-        val nt = r.table.localCheckpoint(eager = true)
-        val no = r.retryOps.localCheckpoint(eager = true)
-        Seq(table, ops).foreach { f =>
-          if (loopOwned || GraftBridge.isCheckpointRoot(f))
-            GraftBridge.dropCheckpointBlocks(f)
-        }
-        table = nt
-        ops = no
-      } else {
-        // reference-size batches: lazy checkpoints fold materialization
-        // into the next epoch's first job (2 fewer jobs/epoch, measured)
-        // and the handful of tiny block sets is not worth reclaiming.
-        table = r.table.localCheckpoint(false)
-        ops = r.retryOps.localCheckpoint(false)
-      }
+      val r = runEpoch(table0, ops, epoch, remaining, cfg, keyCols)
+      keepWrites(r.writes)
+      // reference-size batches: the lazy checkpoint folds
+      // materialization into the next epoch's collect job
+      val next = r.retryOps.localCheckpoint(eager = eagerHygiene(cfg))
+      dropOps()
+      ops = next
       loopOwned = true
       stats += r.stats
       remaining = r.stats.aborted
@@ -342,24 +344,22 @@ object Aria {
       // near-constant handful of txns — O(batch) epochs to drain (the
       // reference avoids the regime only by its 150/20k operating
       // point). When an epoch's commit rate drops below the threshold,
-      // apply the whole residual as ONE deterministic serial pass. The
-      // retry batch already carries the next epoch number and renumbered
-      // Tids, so the fallback epoch's stats row and payload keys line up
-      // with what [[collect]] produced.
+      // the Aria paper's deterministic fallback applies the whole
+      // residual as ONE serial pass in Tid order, ops in op order, which
+      // commits every txn: its write set is every update op of the
+      // retry batch, and [[install]]'s winner rule is the serial
+      // outcome. The retry batch already carries the next epoch number
+      // and renumbered Tids, so the fallback epoch's stats row and
+      // payload keys line up with what [[collect]] produced.
       if (remaining > 0 && cfg.fallbackCommitRate > 0 &&
           r.stats.committed < cfg.fallbackCommitRate * r.stats.txns) {
-        val ft = fallbackApply(table, ops, cfg.seed)
-          .localCheckpoint(eager = eagerHygiene(cfg))
-        if (eagerHygiene(cfg))
-          Seq(table, ops).foreach { f =>
-            if (GraftBridge.isCheckpointRoot(f)) GraftBridge.dropCheckpointBlocks(f)
-          }
-        table = ft
+        keepWrites(committedWrites(ops, Array.empty, keyCols))
+        dropOps()
         stats += EpochStats(epoch, remaining, remaining, 0)
         remaining = 0
         epoch += 1
       }
     }
-    RunResult(table, stats.result())
+    (writes.result(), stats.result())
   }
 }

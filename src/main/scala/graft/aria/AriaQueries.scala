@@ -35,8 +35,8 @@ object AriaQueries {
   // small-batch conf tuning in Aria.run cannot race on a shared conf):
   // the drains are independent latency-bound job chains, so the sibling
   // overlaps this one's scheduler gaps and the family pays ~max, not
-  // sum. Each future also forces the final table's checkpoint chain, so
-  // the table-summary query reads a materialized snapshot.
+  // sum. Each future also materializes the final table (the drain's one
+  // install merge), so the table-summary query reads a stored snapshot.
   private val drainPool = java.util.concurrent.Executors.newFixedThreadPool(2,
     (r: Runnable) => { val t = new Thread(r, "aria-drain"); t.setDaemon(true); t })
   private implicit val drainEc: scala.concurrent.ExecutionContext =
@@ -45,7 +45,7 @@ object AriaQueries {
   private def drain(spark: SparkSession, reorder: Boolean) =
     graft.Memo(spark, ("aria.drain", reorder))(scala.concurrent.Future {
       val r = Aria.run(spark.newSession(), cfg.copy(reorder = reorder))
-      r.table.count() // materialize the checkpoint chain eagerly
+      r.table.count() // materialize the install merge eagerly
       r
     })
 
@@ -209,9 +209,9 @@ object AriaQueries {
 
   /** Final-table oracle: the per-key winning write is the committed
     * update op with the greatest (epoch, opIdx) across the whole drain
-    * (install applies epochs sequentially; within an epoch the committed
-    * writer per key is unique). Payload fields are the same md5 strings
-    * Workload.writePayload/kvTable produce. */
+    * (install's max(epoch, tid, opIdx) rule; within an epoch the
+    * committed writer per key is unique). Payload fields are the same
+    * md5 strings Workload.writePayload/kvTable produce. */
   val finalTableSql: String = {
     def payload(i: Int): String =
       s"""CASE WHEN w.key IS NULL THEN substr(md5('${cfg.seed}_load_' || k.key || '_$i'), 1, 10)
@@ -248,8 +248,9 @@ object AriaQueries {
   // near-constant handful (BASELINE.md "contention collapse"; the
   // reference only avoids it by its 150-txn/20k-key operating point,
   // Transction.h:24-33). Aria's paper answer is a deterministic
-  // fallback; here it is one per-key-ordered serial pass (max(tid,
-  // opIdx) winner + the install merge). The harness config drains
+  // fallback; here it is one serial pass whose write set (every update
+  // op of the residual) joins the drain's one install merge, under the
+  // same max(epoch, tid, opIdx) winner rule. The harness config drains
   // 100 txns over 250 hot keys: epochs 0–2 run normal Aria (commit
   // rates 30% → 12.9% → 8.2%), epoch 2 dips under the 10% threshold,
   // and epoch 3 serially applies the 56-txn residual. The oracle
@@ -348,9 +349,9 @@ object AriaQueries {
   // the reference never exercises with more than one table. Here txns
   // genuinely span tables: every phase keys on (tbl, key) through the
   // SAME generalized Aria phases (keyCols = tbl::key — a wider grouping
-  // key, not a second engine), and install merges each table's rows
-  // independently. The query reports per-table final checksums plus the
-  // drain length; the oracle unrolls the whole multi-table drain as
+  // key, not a second engine, and the same drain loop), and install
+  // merges each table's rows independently. The query reports
+  // per-table final checksums plus the drain length; the oracle unrolls the whole multi-table drain as
   // per-epoch CTEs over the persisted epoch-0 batch, recomputing every
   // winning payload.
 
@@ -359,24 +360,19 @@ object AriaQueries {
     keysMax = 800, tableKeys = 1000, seed = 42L, maxEpochs = 16)
   private val mtKeyCols = Seq("tbl", "key")
 
+  /** The multi-table drain: [[Aria.runFrom]] keyed on (tbl, key) from
+    * the generated epoch-0 state, in a child session (the drain tunes
+    * session confs). */
   private[graft] def runMulti(spark: SparkSession, cfg: AriaConfig = mtCfg,
       nTables: Int = mtTables): (DataFrame, Seq[graft.model.EpochStats]) = {
-    var table = Workload.kvTables(spark, nTables, cfg.tableKeys, cfg.seed)
+    val s = spark.newSession()
+    val table = Workload.kvTables(s, nTables, cfg.tableKeys, cfg.seed)
       .localCheckpoint(false)
-    var ops = Workload.txnOpsMulti(spark, cfg.nTxns, cfg.maxOps,
+    val ops = Workload.txnOpsMulti(s, cfg.nTxns, cfg.maxOps,
       cfg.writePct, cfg.keysMax, nTables, cfg.seed).localCheckpoint(false)
-    var remaining = cfg.nTxns.toLong
-    var epoch = 0
-    val stats = Seq.newBuilder[graft.model.EpochStats]
-    while (remaining > 0 && epoch < cfg.maxEpochs) {
-      val r = Aria.runEpoch(table, ops, epoch, remaining, cfg, mtKeyCols)
-      table = r.table.localCheckpoint(false)
-      ops = r.retryOps.localCheckpoint(false)
-      stats += r.stats
-      remaining = r.stats.aborted
-      epoch += 1
-    }
-    (table, stats.result())
+    val r = Aria.runFrom(s, cfg, table, ops, startEpoch = 0,
+      remaining0 = cfg.nTxns.toLong, keyCols = mtKeyCols)
+    (r.table, r.stats)
   }
 
   /** Per-table summary of the drained multi-table state: row count,

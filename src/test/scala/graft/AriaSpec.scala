@@ -27,15 +27,18 @@ class AriaSpec extends SparkSpec {
     d.map(b => f"$b%02x").mkString.substring(0, 10)
   }
 
+  /** `writeEpochs`: per key, the epochs whose committed writes (or
+    * serial fallback writes) hit it, in order. */
   case class SimResult(table: Map[Int, IndexedSeq[String]],
-                       epochStats: Seq[(Int, Long, Long)]) // (epoch, committed, aborted)
+                       epochStats: Seq[(Int, Long, Long)], // (epoch, committed, aborted)
+                       writeEpochs: Map[Int, Seq[Int]])
 
   /** Plain-Scala Aria simulator. `ops0` = epoch-0 batch (tid asc, opIdx asc).
     * `fallbackCommitRate` > 0 enables the contention-collapse fallback:
     * when an epoch's commit rate dips under it, the residual is replayed
     * SERIALLY (renumbered tid order, op order) at the next epoch — the
-    * ground truth Aria.fallbackApply must reproduce. `nTxns0` = the full
-    * epoch-0 batch size including op-less txns (the engine's txns
+    * ground truth the fallback epoch's write set must reproduce.
+    * `nTxns0` = the full epoch-0 batch size including op-less txns (the engine's txns
     * denominator); later epochs' denominators are the abort counts, where
     * the two conventions already agree (aborted txns always carry ops). */
   def simulate(table0: Map[Int, IndexedSeq[String]], ops0: Seq[Op],
@@ -43,6 +46,11 @@ class AriaSpec extends SparkSpec {
                fallbackCommitRate: Double = 0.0,
                nTxns0: Option[Int] = None): SimResult = {
     val table = mutable.Map[Int, IndexedSeq[String]]() ++= table0
+    val written = mutable.Map[Int, Vector[Int]]().withDefaultValue(Vector.empty)
+    def write(key: Int, epoch: Int, tid: Int, opIdx: Int): Unit = {
+      table(key) = (0 until 10).map(i => md5_10(seed, "write", epoch, tid, opIdx, i))
+      if (written(key).lastOption != Some(epoch)) written(key) = written(key) :+ epoch
+    }
     var batch: Seq[Seq[Op]] = ops0.groupBy(_.tid).toSeq.sortBy(_._1).map(_._2.sortBy(_.opIdx))
     var txnsThisEpoch = nTxns0.getOrElse(batch.size)
     val stats = Seq.newBuilder[(Int, Long, Long)]
@@ -69,7 +77,7 @@ class AriaSpec extends SparkSpec {
       }.toSet
       // Install: committed txns in tid order, ops in op order (serial replay)
       for ((tid, ops) <- present if !aborted.contains(tid); o <- ops if o.isUpdate)
-        table(o.key) = (0 until 10).map(i => md5_10(seed, "write", epoch, tid, o.opIdx, i))
+        write(o.key, epoch, tid, o.opIdx)
       stats += ((epoch, (txnsThisEpoch - aborted.size).toLong, aborted.size.toLong))
       // Collect: keep aborted txns' FULL op lists, renumber 1..m in order
       batch = present.filter(p => aborted.contains(p._1)).sortBy(_._1)
@@ -83,15 +91,14 @@ class AriaSpec extends SparkSpec {
         // txns in (new) tid order, ops in op order — at the next epoch
         epoch += 1
         for (ops <- batch; o <- ops if o.isUpdate && table.contains(o.key))
-          table(o.key) = (0 until 10).map(i =>
-            md5_10(seed, "write", epoch, ops.head.tid, o.opIdx, i))
+          write(o.key, epoch, ops.head.tid, o.opIdx)
         stats += ((epoch, batch.size.toLong, 0L))
         batch = Seq.empty
       }
       txnsThisEpoch = batch.size
       epoch += 1
     }
-    SimResult(table.toMap, stats.result())
+    SimResult(table.toMap, stats.result(), written.toMap)
   }
 
   def collectTable(df: org.apache.spark.sql.DataFrame): Map[Int, IndexedSeq[String]] =
@@ -109,6 +116,10 @@ class AriaSpec extends SparkSpec {
       .collect().map(r => Op(r.getInt(0), r.getInt(2), r.getInt(3), r.getBoolean(4))).toSeq
 
     val sim = simulate(table0, ops0, c.seed, reorder)
+    // the install merge's cross-epoch winner rule must be exercised: some
+    // key is written by committed txns of two or more epochs
+    assert(sim.writeEpochs.values.exists(_.size >= 2),
+      s"no key is committed in two epochs — fixture degenerate: ${sim.epochStats}")
     val run = Aria.run(spark, c)
     val sparkTable = collectTable(run.table)
 
@@ -136,7 +147,7 @@ class AriaSpec extends SparkSpec {
     val r0 = Aria.runEpoch(table0, ops0, 0, c.nTxns, c)
     assert(r0.stats.aborted > 0, "fixture must abort in epoch 0 for the test to mean anything")
     val dir = s"${sys.props("java.io.tmpdir")}/graft_aria_restart"
-    r0.table.write.mode("overwrite").parquet(s"$dir/table")
+    Aria.install(table0, r0.writes, c.seed).write.mode("overwrite").parquet(s"$dir/table")
     r0.retryOps.write.mode("overwrite").parquet(s"$dir/ops")
     val resumed = Aria.runFrom(spark, c,
       spark.read.parquet(s"$dir/table"),
@@ -160,7 +171,7 @@ class AriaSpec extends SparkSpec {
     val r0 = Aria.runEpoch(table0, ops0, 0, c.nTxns, c)
     assert(r0.stats.aborted > 0, "fixture must abort in epoch 0 for the test to mean anything")
     val dir = s"${sys.props("java.io.tmpdir")}/graft_aria_restart_eager"
-    r0.table.write.mode("overwrite").parquet(s"$dir/table")
+    Aria.install(table0, r0.writes, c.seed).write.mode("overwrite").parquet(s"$dir/table")
     r0.retryOps.write.mode("overwrite").parquet(s"$dir/ops")
     val resumed = Aria.runFrom(spark, c,
       spark.read.parquet(s"$dir/table"),
@@ -285,6 +296,11 @@ class AriaSpec extends SparkSpec {
       "the fallback epoch commits its whole residual")
     assert(run.stats.map(s => (s.epoch, s.committed, s.aborted)) === sim.epochStats,
       s"trajectory diverges: ${run.stats} vs ${sim.epochStats}")
+    // the fallback epoch's writes must beat an earlier epoch's committed
+    // write on some key, or the winner rule's epoch order goes unchecked
+    val fbEpoch = sim.epochStats.last._1
+    assert(sim.writeEpochs.values.exists(es => es.last == fbEpoch && es.size >= 2),
+      "the fallback epoch overwrites no earlier epoch's write — fixture degenerate")
     val sparkTable = collectTable(run.table)
     assert(sparkTable.size === sim.table.size)
     val diffs = sparkTable.keySet.filter(k => sparkTable(k) != sim.table(k))
@@ -315,6 +331,34 @@ class AriaSpec extends SparkSpec {
     assert(trigger.committed < thr * trigger.txns, s"penultimate epoch must trip the threshold: ${run.stats}")
     assert(run.stats.head.committed >= thr * run.stats.head.txns,
       s"epoch 0 must NOT trip the threshold: ${run.stats}")
+  }
+
+  test("deferred install: a drain submits at most 2 jobs per epoch plus 2") {
+    // epochs emit write sets and the table is merged once at the end, so
+    // no per-epoch install job or table checkpoint remains. Counts every
+    // job of the drain and of reading its final table.
+    val sc = spark.sparkContext
+    val group = s"aria-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val run = try {
+      sc.setJobGroup(group, "aria drain")
+      val r = Aria.run(spark, cfg)
+      collectTable(r.table)
+      org.apache.spark.ListenerFlush(sc)
+      r
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val epochs = run.stats.length
+    assert(epochs >= 3, s"fixture must drain in 3+ epochs: ${run.stats}")
+    assert(jobs.get <= 2 * epochs + 2, s"${jobs.get} jobs for $epochs epochs")
   }
 
   test("epoch loop drains: committed+aborted = batch size each epoch, ends at 0") {

@@ -252,6 +252,23 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       p.take(1500))
     assert(p.contains("LeftSemi"), p.take(1500))
+    // ... and on the memoized frame triShared returns, the one
+    // graph_triangles reads: a persist-mode child session stages it as
+    // an InMemoryRelation whose cached plan stays visible (a checkpoint
+    // hides it), and has its own memo entry
+    val ps = spark.newSession()
+    ps.conf.set(graft.Cache.ConfKey, "persist")
+    try {
+      val (_, shared) = graft.sim.GraphOps.triShared(ps, sf("sf0.001"), 16)
+      val sp = planString(shared)
+      assert(sp.contains("InMemoryRelation"), sp.take(1500))
+      assert(!sp.contains("CartesianProduct") && !sp.contains("BroadcastNestedLoopJoin"),
+        sp.take(1500))
+      assert(sp.contains("LeftSemi"), sp.take(1500))
+    } finally {
+      graft.Memo.evictAll(ps)
+      ps.sharedState.cacheManager.clearCache()
+    }
   }
 
   test("perplexity joins on term only; the sole nested loop is the 1-row total") {
