@@ -97,13 +97,7 @@ object Bench {
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     val perPass: Seq[Seq[(String, Double)]] = (1 to passes).map { p =>
       // every pass must re-pay every memoized build, not a memo hit
-      if (p > 1) { Memo.evictAll(spark)
-        // persist mode: cached plans are keyed on the ANALYZED PLAN, so
-        // pass 2 rebuilding the same query would silently hit pass 1's
-        // cache — clear so every pass re-pays materialization, matching
-        // checkpoint-mode semantics (where blocks die with their DF)
-        if (graft.Cache.mode(spark) == "persist")
-          spark.sharedState.cacheManager.clearCache() }
+      if (p > 1) Memo.evictAll(spark)
       selected.map { case (name, fn) =>
         // label the jobs (guide §1.5) so event-log/UI stage metrics
         // attribute to the query being timed
@@ -115,15 +109,6 @@ object Bench {
           System.err.println(s"[bench] $name failed (pass $p): ${e.getMessage}")
         }
         finally spark.sparkContext.setJobDescription(null)
-        // NOT cleared per query in persist mode: the memoized family
-        // state (dedup pairs index, trained quantizers) is INTENDED
-        // cross-query sharing — train once, apply many — and lives in
-        // the cache manager under persist mode; clearing per query was
-        // measured to make the sharing families re-pay their index per
-        // query (jaccard 2.9→16 s), which checkpoint mode's
-        // localCheckpoint memos never do. The residual effect — two
-        // queries with an IDENTICAL analyzed staged plan crossing hits —
-        // is the same sharing pattern and is documented in `note`.
         name -> (System.nanoTime() - t0) / 1e9
       }
     }
@@ -188,19 +173,10 @@ object Bench {
       .mkString("[", ",", "]")
     val total = best.map(_._2).sum
     val coldTotal = cold.map(_._2).sum
-    val cacheMode = graft.Cache.mode(spark)
-    val note =
-      if (cacheMode == "persist")
-        "src_* time the read path; floors/contention are CHECKPOINT-mode references (persist-run regressions are cross-mode comparisons, not flags); per-query times include cross-query cached-plan sharing, like the checkpoint memos"
-      else "src_* time the read path (fixtures pre-written, writes memoized per JVM)"
-    // The canonical detail record is the CHECKPOINT-mode board (the CPU
-    // deploy default, and what bench_floor.json's floors were set
-    // under); a persist-mode board is a different measurement and gets
-    // its own file rather than clobbering the committed record.
-    val detailName =
-      if (cacheMode == "persist") "bench_detail_persist.json" else "bench_detail.json"
+    val note = "src_* time the read path (fixtures pre-written, writes memoized per JVM)"
+    val detailName = "bench_detail.json"
     val fullLine =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","passes":$passes,"cold_total":$coldTotal%.3f,"contention_index":$contentionIdx%.3f,"cache":"$cacheMode","queries":${entriesJson(best)},"queries_cold":${entriesJson(cold)},"failed":$failedJson,"regressions":$regJson,"note":"$note","sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","passes":$passes,"cold_total":$coldTotal%.3f,"contention_index":$contentionIdx%.3f,"queries":${entriesJson(best)},"queries_cold":${entriesJson(cold)},"failed":$failedJson,"regressions":$regJson,"note":"$note","sf":"$sfDir"}"""
     // Full detail: one stdout line (may be truncated by the tail
     // capture — that's fine) plus a file the judge can read whole.
     // Contention guard: a contended run (median ratio > 1.3) must not
@@ -237,11 +213,7 @@ object Bench {
           // total — divert it regardless of the total comparison
           (failures.nonEmpty || oldTotal.exists(_ < total))
       }
-    // per-mode contended file: a diverted persist run must not clobber
-    // a checkpoint run's preserved evidence (and vice versa)
-    val contendedName =
-      if (cacheMode == "persist") "bench_detail_persist_contended.json"
-      else "bench_detail_contended.json"
+    val contendedName = "bench_detail_contended.json"
     if (keepExisting) {
       System.err.println(f"[bench] contended run (contention_index=$contentionIdx%.2f > 1.3) slower than existing $detailName — keeping the cleaner file; new run preserved in $contendedName")
       try {
@@ -274,7 +246,7 @@ object Bench {
       used += k.length + 10; used <= budget
     }
     val omitted = best.size - kept.size
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${best.size},"passes":$passes,"cold_total":$coldTotal%.3f,"contention_index":$contentionIdx%.3f,"queries":${entriesJson(kept.sortBy(_._1))},"omitted":$omitted,"failed":$failedJson,"regressions":$regJson,"cache":"$cacheMode","detail":"$detailName","sf":"$sfDir"}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${best.size},"passes":$passes,"cold_total":$coldTotal%.3f,"contention_index":$contentionIdx%.3f,"queries":${entriesJson(kept.sortBy(_._1))},"omitted":$omitted,"failed":$failedJson,"regressions":$regJson,"detail":"$detailName","sf":"$sfDir"}""")
     spark.stop()
     if (failures.nonEmpty) sys.exit(1)
   }

@@ -1,64 +1,27 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.SparkSession
 
-/** Reuse-barrier materialization with a deploy-time mode switch.
+/** The engine's one reuse barrier is `df.localCheckpoint(false)`, written
+  * at each call site: a frame read by two or more consumers, or a
+  * per-round frontier reassigned in a driver loop, is materialized once
+  * as row-based RDD blocks on first use.
   *
-  * Queries that read an intermediate frame from two or more downstream
-  * consumers materialize it once instead of recomputing. Two mechanisms
-  * exist, selected per session by `spark.graft.cache`:
+  * Every barrier cuts lineage, because a loop's round k must not plan
+  * over all rounds < k: a nested plan makes analysis cost and stack depth
+  * grow with the round count (measured 16× on the anisotropy report and
+  * 5–6× on k-core and doubling CC before those loops cut per round).
   *
-  *  - `checkpoint` (default): `localCheckpoint(false)` — cuts lineage and
-  *    stores row-based RDD blocks. On CPU clusters this is the cheap
-  *    form (no columnar round-trip), but the resulting `LogicalRDD` scan
-  *    is a row-based segment boundary: under the RAPIDS plugin the plan
-  *    is at best segmented into GPU islands (`RapidsAudit` classifies it
-  *    `rdd-segment`), and the segment hides its upstream plan from any
-  *    plan-level audit.
-  *  - `persist`: `persist(MEMORY_AND_DISK)` — keeps the full logical
-  *    plan (`InMemoryRelation`), the RAPIDS-ready form: with the
-  *    plugin's ParquetCachedBatchSerializer the cached batches stay
-  *    columnar on the GPU, and the cached subtree remains visible to
-  *    plan audits. The cache-manager entry lives until unpersist/clear —
-  *    long-lived sessions running many boards should clear between
-  *    boards (Bench does, between passes).
+  * A second, `persist(MEMORY_AND_DISK)` mode kept the upstream plan
+  * visible for a GPU plugin the engine never shipped, and was retired:
+  * on CPU the round-10 board ran 10.7% slower under it, its partial board
+  * totalled 351 s against 270 s on the same 306 queries, and
+  * `sim_mmr_rerank` took 13.1 s against 1.7 s.
   *
-  * ITERATIVE drains (the aria epoch loop, k-means Lloyd rounds, BPE
-  * merge rounds) do NOT route through this switch: there the lineage CUT
-  * is the point — under `persist` the logical plan of round k nests all
-  * rounds < k, so analysis cost and stack depth grow with the iteration
-  * count while the driver loop's intent is a flat per-round frontier.
-  * Those sites call `localCheckpoint` directly with a comment saying so.
-  */
+  * Only the conf key and a constant mode remain: the benchmark harness
+  * under `sparkbench/` still sets the one and stamps the other. */
 object Cache {
-  /** Session conf key; values `checkpoint` (default) | `persist`. */
   val ConfKey = "spark.graft.cache"
 
-  def mode(spark: org.apache.spark.sql.SparkSession): String =
-    spark.conf.getOption(ConfKey).getOrElse("checkpoint")
-
-  def stage(df: DataFrame): DataFrame = mode(df.sparkSession) match {
-    case "persist" => df.persist(StorageLevel.MEMORY_AND_DISK)
-    case "checkpoint" => df.localCheckpoint(eager = false)
-    case other => throw new IllegalArgumentException(
-      s"$ConfKey=$other; expected checkpoint|persist")
-  }
-
-  /** Iterative-drain per-round lineage cut — ALWAYS `localCheckpoint`,
-    * in BOTH modes (the scaladoc's iterative-drain rule): a per-round
-    * frame reassigned in a driver loop nests every prior round's plan,
-    * so under `persist` analysis cost grows with the round count (and
-    * quadratically where a round self-joins, e.g. label doubling) —
-    * measured 16× on the anisotropy report, 5–6× on k-core / doubling
-    * CC before these call sites switched from `.staged` to `.cutRound`.
-    * Identical to `.staged` under the default `checkpoint` mode. */
-  def cut(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
-
-  /** Postfix form so call sites chain like the builder API they sit in:
-    * `df.select(...).staged`. */
-  implicit final class CacheOps(private val df: DataFrame) extends AnyVal {
-    def staged: DataFrame = stage(df)
-    def cutRound: DataFrame = cut(df)
-  }
+  def mode(spark: SparkSession): String = "checkpoint"
 }

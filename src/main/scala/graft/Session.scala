@@ -4,9 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** The engine's local SparkSession, shared by every main and the specs:
   * `local[cpus]` with one shuffle partition per core, UTC session time,
-  * the [[Cache]] reuse-barrier mode from SPARK_GRAFT_CACHE (default
-  * `checkpoint`; `persist` is the RAPIDS-ready columnar-cache form), no
-  * UI, WARN logging. `cpus` defaults to SPARK_GRAFT_CPUS, else every
+  * no UI, WARN logging. `cpus` defaults to SPARK_GRAFT_CPUS, else every
   * available core. */
 object Session {
   def local(app: String,
@@ -17,7 +15,6 @@ object Session {
       .appName(app)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config(Cache.ConfKey, sys.env.getOrElse("SPARK_GRAFT_CACHE", "checkpoint"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -18,12 +18,6 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // persist mode: staged frames live in the cache manager and are
-      // never unpersisted by the queries — clear per query (untimed
-      // dump, order-independence is free) so a full board doesn't
-      // accumulate every stage as a live MEMORY_AND_DISK entry
-      if (graft.Cache.mode(spark) == "persist")
-        spark.sharedState.cacheManager.clearCache()
     }
     // epoch-0 workload dump: lets DuckDB recompute the aria verdicts
     // (oracle SQL references these files via __ARIA_DIR__). Written to a

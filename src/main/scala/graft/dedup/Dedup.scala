@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import graft.operators.Tables.t
 import graft.functions.Portable
 import graft.text.TextAnalysis
-import graft.Cache.CacheOps
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard.
@@ -73,7 +72,7 @@ object Dedup {
         // not a projection barrier (the optimizer pushes the tokenize
         // past it), and an inlined tokenizer re-runs per element_at
         // inside the shingle lambda — measured 12s vs 1s on sf0.1
-        .staged
+        .localCheckpoint(false)
     }
 
   /** doc_id → distinct shingles (shared sub-plan of the near-dup ops);
@@ -197,7 +196,7 @@ object Dedup {
 
   /** Per-ROW minhash band buckets from a materialized token-array
     * column — the no-shuffle form of the signature pipeline, built for
-    * STREAMING ingest (a streaming plan cannot `.staged`-materialize,
+    * STREAMING ingest (a streaming plan cannot be checkpointed,
     * and the batch form's per-doc groupBy would be a per-batch shuffle
     * the map-only form doesn't need).
     *
@@ -297,7 +296,7 @@ object Dedup {
     * comparison set — the 100 TB-safe near-dup path. */
   def minhashCandidates(spark: SparkSession, dir: String): DataFrame = {
     // one materialization of the signature pipeline for both join sides
-    val b = minhashBands(spark, dir).staged
+    val b = minhashBands(spark, dir).localCheckpoint(false)
     val l = b.select(col("doc_id").as("a"), col("band"), col("bucket"))
     val r = b.select(col("doc_id").as("b"), col("band"), col("bucket"))
     l.join(r, Seq("band", "bucket"))
@@ -351,7 +350,7 @@ object Dedup {
           TextAnalysis.tokens(col("text")).as("toks"),
           regexp_replace(lower(col("text")), "\\s+", "").as("cs"))
         .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-        .staged
+        .localCheckpoint(false)
     }
       .select(col("doc_id"),
         when(col("lang") === "zh", charShingles(col("cs")))
@@ -378,7 +377,7 @@ object Dedup {
     * table. Cross-script pairs are structurally possible but collide
     * only if their shingle STRINGS genuinely overlap. */
   def minhashCandidatesCjk(spark: SparkSession, dir: String): DataFrame = {
-    val b = bandFold(signaturesOf(cjkShingleTable(spark, dir), 16), 16, 4).staged
+    val b = bandFold(signaturesOf(cjkShingleTable(spark, dir), 16), 16, 4).localCheckpoint(false)
     val l = b.select(col("doc_id").as("a"), col("band"), col("bucket"))
     val r = b.select(col("doc_id").as("b"), col("band"), col("bucket"))
     l.join(r, Seq("band", "bucket"))
@@ -429,7 +428,7 @@ object Dedup {
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
       // hard projection barrier, cf. tokensFrame (an inlined strip would
       // re-run per extracted char)
-      .staged
+      .localCheckpoint(false)
       .select(col("doc_id"),
         when(col("lang") === "zh",
           transform(sequence(lit(1), greatest(lit(1), length(col("cs")))),
@@ -468,7 +467,7 @@ object Dedup {
     * |delta| lookups against a persisted index. Emitted pairs are
     * normalized (a < b) so delta↔delta pairs count once. */
   def incrementalCandidates(spark: SparkSession, dir: String): DataFrame = {
-    val bands = minhashBands(spark, dir).staged
+    val bands = minhashBands(spark, dir).localCheckpoint(false)
     val deltaSide = bands
       .filter(TextAnalysis.splitHash(col("doc_id")) >= 90)
       .select(col("doc_id").as("d"), col("band"), col("bucket"))
@@ -508,7 +507,7 @@ object Dedup {
     * all pairs. At 100 TB every stage is an equi-join or partial+final
     * agg on keys that grow with the data. */
   def minhashEstimates(spark: SparkSession, dir: String, k: Int = 16): DataFrame = {
-    val sig = minhashSignatures(spark, dir, k).staged
+    val sig = minhashSignatures(spark, dir, k).localCheckpoint(false)
     val cand = {
       val b = bandFold(sig, k, 4)
       b.select(col("doc_id").as("a"), col("band"), col("bucket"))
@@ -526,7 +525,7 @@ object Dedup {
       (0 until k).map(i => col(s"mh$i").as(s"b_mh$i")): _*)
     val est = cand.join(sigA, "a").join(sigB, "b")
       .select(col("a"), col("b"), (agree.cast("double") / k).as("est_jaccard"))
-    val st = shingleTable(spark, dir).staged
+    val st = shingleTable(spark, dir).localCheckpoint(false)
     val sizes = st.select(col("doc_id"), size(col("sh")).cast("long").as("n"))
     val inter = cand
       .join(st.select(col("doc_id").as("a"), explode(col("sh")).as("shingle")), Seq("a"))
@@ -653,7 +652,7 @@ object Dedup {
       explode(sequence(lit(0), lit(simhashPieces - 1))).as("p"))
       .withColumn("piece",
         expr(s"shiftright(simhash, p * $simhashPieceBits) % ${1 << simhashPieceBits}"))
-      .staged // read twice (both join sides)
+      .localCheckpoint(false) // read twice (both join sides)
     val l = pieces.select(col("doc_id").as("a"), col("simhash").as("sig_a"),
       col("p"), col("piece"))
     val r = pieces.select(col("doc_id").as("b"), col("simhash").as("sig_b"),
@@ -701,7 +700,7 @@ object Dedup {
       explode(sequence(lit(0), lit(simhashPieces - 1))).as("p"))
       .withColumn("piece",
         expr(s"shiftright(simhash, p * $simhashPieceBits) % ${1 << simhashPieceBits}"))
-      .staged // read twice (delta slice + index side)
+      .localCheckpoint(false) // read twice (delta slice + index side)
     val delta = pieces
       .filter(TextAnalysis.splitHash(col("doc_id")) >= 90)
       .select(col("doc_id").as("d"), col("simhash").as("sig_d"),
@@ -763,12 +762,12 @@ object Dedup {
       // read for df counts and both join sides, and re-deriving the
       // tokenize→shingle pipeline each time dominates otherwise
       val inv = st.select(col("doc_id"), explode(col("sh")).as("shingle"))
-        .staged
+        .localCheckpoint(false)
       inv.join(
         inv.groupBy("shingle").agg(count(lit(1)).as("df"))
           .filter(col("df") <= maxShingleDf).select("shingle"),
         Seq("shingle"))
-        .staged
+        .localCheckpoint(false)
     }
 
   /** Memoized per threshold: both the pairs query and the edit-distance
@@ -776,7 +775,7 @@ object Dedup {
     * tokenize→shingle→inverted-index pipeline is the dominant cost. */
   def jaccardPairs(spark: SparkSession, dir: String, threshold: Double = 0.2): DataFrame =
     graft.Memo(spark, ("dedup.jaccard", graft.Memo.input(dir), threshold))(
-      jaccardPairsUncached(spark, dir, threshold).staged)
+      jaccardPairsUncached(spark, dir, threshold).localCheckpoint(false))
 
   private def jaccardPairsUncached(spark: SparkSession, dir: String, threshold: Double): DataFrame = {
     val rare = rareIndex(spark, dir)
@@ -940,7 +939,7 @@ object Dedup {
       .select(col("a"), col("b"), col("jaccard"),
         explode(array(curveTaus.map(lit(_)): _*)).as("tau_permille"))
       .filter(col("jaccard") >= col("tau_permille").cast("double") / lit(1000.0d))
-      .staged // consumers: the pair count and the distinct-doc count
+      .localCheckpoint(false) // consumers: the pair count and the distinct-doc count
     val nPairs = p.groupBy("tau_permille").agg(count(lit(1)).as("n_pairs"))
     val nDocs = p
       .select(col("tau_permille"), explode(array(col("a"), col("b"))).as("d"))
@@ -984,7 +983,7 @@ object Dedup {
     val pairs = minhashCandidates(spark, dir).select("a", "b")
     val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(pairs.select(col("b").as("src"), col("a").as("dst")))
-      .staged
+      .localCheckpoint(false)
     var labels = t(spark, dir, "documents")
       .select(col("doc_id"), col("doc_id").as("label"))
     var converged = false
@@ -998,7 +997,7 @@ object Dedup {
         .select(col("doc_id"), col("old_label"),
           least(col("old_label"), coalesce(col("min_neighbor"), col("old_label")))
             .as("label"))
-        .staged
+        .localCheckpoint(false)
       // fixpoint early-exit: a round that lowers no label ends the
       // propagation (remaining rounds would be identity — the bounded
       // ROUNDS contract and the fixed-round oracle are unchanged).
@@ -1053,7 +1052,7 @@ object Dedup {
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
       // hard projection barrier — see shingleTable (inlined tokenizer
       // would re-run per slice() call inside the lambda)
-      .staged
+      .localCheckpoint(false)
       .filter(size(col("toks")) >= k)
       .select(col("doc_id"),
         explode(array_distinct(transform(sequence(lit(1), size(col("toks")) - (k - 1)),
@@ -1150,7 +1149,7 @@ object Dedup {
     * 1-based token positions, unordered (callers sort). */
   private[graft] def substringSpansFrom(toks: DataFrame, k: Int): DataFrame = {
     val grams = gramOccurrences(toks, k)
-      .staged // two consumers: the occurrence count and the join-back
+      .localCheckpoint(false) // two consumers: the occurrence count and the join-back
     val dup = grams.groupBy("gram").agg(count(lit(1)).as("n_occ"))
       .filter(col("n_occ") >= 2)
       .select("gram")
@@ -1463,14 +1462,14 @@ object Dedup {
     val tk = t(spark, dir, "documents")
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-      .staged
+      .localCheckpoint(false)
     val grams = tk.select(col("doc_id"),
       when(size(col("toks")) >= 3,
         transform(sequence(lit(1), size(col("toks")) - 2),
           i => Portable.hash60(concat_ws(" ", element_at(col("toks"), i),
             element_at(col("toks"), i + 1), element_at(col("toks"), i + 2)))))
         .otherwise(array(Portable.hash60(concat_ws(" ", col("toks"))))).as("hs"))
-      .staged
+      .localCheckpoint(false)
     val fps = grams.select(col("doc_id"),
       explode(array_distinct(
         transform(sequence(lit(1), greatest(size(col("hs")) - (w - 1), lit(1))),
@@ -1542,7 +1541,7 @@ object Dedup {
       .select(col("doc_id"),
         (0 until k).map(i => shiftleft(pmod(col(s"mh$i"), lit(2L)), i))
           .reduce(_ + _).as("word"))
-    val pw = words.filter(col("doc_id") < panel).staged
+    val pw = words.filter(col("doc_id") < panel).localCheckpoint(false)
     val pairs = pw.select(col("doc_id").as("a"), col("word").as("wa"))
       .join(broadcast(pw.select(col("doc_id").as("b"), col("word").as("wb"))),
         col("a") < col("b"))
@@ -1552,7 +1551,7 @@ object Dedup {
       .withColumn("est_permille",
         greatest(lit(0L), expr(s"(1000 * (2 * m_bits - $k)) DIV $k")))
     val psh = shingleTable(spark, dir).filter(col("doc_id") < panel)
-      .select(col("doc_id"), explode(col("sh")).as("shingle")).staged
+      .select(col("doc_id"), explode(col("sh")).as("shingle")).localCheckpoint(false)
     val sizes = psh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val inter = psh.select(col("doc_id").as("a"), col("shingle"))
       .join(psh.select(col("doc_id").as("b"), col("shingle")), Seq("shingle"))
@@ -1639,7 +1638,7 @@ object Dedup {
       .agg(count(lit(1)).as("n_tok"),
         (sum((col("pos") + 1L) * pmod(col("h"), lit(1000003L)))
           - min("pos") * sum(pmod(col("h"), lit(1000003L)))).as("sig"))
-      .staged
+      .localCheckpoint(false)
     val dupSigs = chunks.groupBy("n_tok", "sig")
       .agg(countDistinct("doc_id").as("n_docs"))
       .filter(col("n_docs") >= 2)

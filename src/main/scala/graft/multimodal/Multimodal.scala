@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Tables.t
 import graft.functions.Portable
-import graft.Cache.CacheOps
 
 /** Multimodal-column handling for training-data pipelines.
   *
@@ -265,7 +264,7 @@ object Multimodal {
 
   /** Near-dup media pairs within Hamming ≤ 3 of the 60-bit dHash. */
   def mediaNearDupPairs(spark: SparkSession, dir: String): DataFrame = {
-    val sig = mediaSignatures(spark, dir).staged // both join sides
+    val sig = mediaSignatures(spark, dir).localCheckpoint(false) // both join sides
     val pieceNames = (0 until dhashPieces).map(k => s"p$k")
     val exploded = sig.select(col("media_id") +: pieceNames.map(col) :+
       explode(array((0 until dhashPieces).map(k =>
@@ -809,7 +808,7 @@ object Multimodal {
   def realNearDupPairs(spark: SparkSession, dir: String): DataFrame = {
     val sig = pooled(spark).toDF()
       .select(col("media_id") +: (0 until ndPieces).map(ndPiece): _*)
-      .staged // both join sides
+      .localCheckpoint(false) // both join sides
     val pieceNames = (0 until ndPieces).map(k => s"p$k")
     val exploded = sig.select(col("media_id") +: pieceNames.map(col) :+
       explode(array((0 until ndPieces).map(k =>

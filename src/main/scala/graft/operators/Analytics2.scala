@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.operators.Tables.t
-import graft.Cache.CacheOps
 
 /** Second analytics batch: CUSUM changepoint detection, lag-1
   * autocorrelation, and market-basket co-occurrence mining.
@@ -310,7 +309,7 @@ object Analytics2 {
     val li = t(spark, dir, "lineitem")
       .select(col("l_orderkey").as("okey"), col("l_partkey").as("p"))
       .distinct()
-      .staged // feeds the total, the item counts and the pair join
+      .localCheckpoint(false) // feeds the total, the item counts and the pair join
     val total = li.select("okey").distinct().agg(count(lit(1)).as("n_orders_total"))
     val items = li.groupBy("p").agg(count(lit(1)).as("n_item"))
     val pairs = li.as("a").join(li.as("b"), Seq("okey"))
@@ -406,7 +405,7 @@ object Analytics2 {
     val cells = t(spark, dir, "events")
       .select(col("event_type"), centi("value").as("qv"))
       .groupBy("event_type", "qv").agg(count(lit(1)).as("c"))
-      .staged // grid base: feeds the value grid, totals, and both CDFs
+      .localCheckpoint(false) // grid base: feeds the value grid, totals, and both CDFs
     val grid = cells.select("qv").distinct()
     val types = cells.groupBy("event_type").agg(sum("c").as("n_t"))
     val tot = types.agg(sum("n_t").as("nn"))

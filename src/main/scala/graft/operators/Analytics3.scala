@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.operators.Tables.t
-import graft.Cache.CacheOps
 
 /** Third analytics batch: Benford first-digit conformance, activity
   * streaks (gaps-and-islands), deterministic epoch reshuffling for
@@ -388,7 +387,7 @@ object Analytics3 {
       .select(col("event_type"),
         graft.functions.Portable.hash60(
           concat_ws("_", lit("kmv"), col("user_id"))).as("uh"))
-      .distinct().staged // feeds sketches, per-type totals, and the exact gate
+      .distinct().localCheckpoint(false) // feeds sketches, per-type totals, and the exact gate
     val wr = Window.partitionBy("event_type").orderBy("uh")
     val sk = tu.withColumn("rk", row_number().over(wr))
       .filter(col("rk") <= k).select("event_type", "uh")
@@ -511,7 +510,7 @@ object Analytics3 {
     }
     val rmat: IndexedSeq[Seq[Long]] =
       (1 to outDims).map(j => (1 to inDims).map(i => rij(j, i)))
-    // .staged is load-bearing TWICE over: (1) base feeds both join sides;
+    // the barrier is load-bearing TWICE over: (1) base feeds both join sides;
     // (2) without the barrier CollapseProject re-inlines the q/y
     // projections into the pair stage's zip_with args, recomputing the
     // full 16×64 projection PER PAIR — 8× redundant work that the 64×
@@ -523,7 +522,7 @@ object Analytics3 {
       .withColumn("y", array(rmat.map(rj =>
         aggregate(zip_with(col("q"), typedLit(rj), (a, r) => a * r),
           lit(0L), (acc, x) => acc + x)): _*))
-      .staged
+      .localCheckpoint(false)
     val panel = base.filter(col("vec_id") < 8)
       .select(col("vec_id").as("pid"), col("q").as("pq"), col("y").as("py"))
     base.crossJoin(broadcast(panel))
@@ -750,7 +749,7 @@ object Analytics3 {
     val d = DecimalType(38, 0)
     val cells = t(spark, dir, "orders")
       .groupBy(col("o_orderpriority"), col("o_orderstatus"))
-      .agg(count(lit(1)).cast(d).as("n_ij")).staged
+      .agg(count(lit(1)).cast(d).as("n_ij")).localCheckpoint(false)
     val rowTot = cells.groupBy("o_orderpriority").agg(sum("n_ij").as("r_i"))
     val colTot = cells.groupBy("o_orderstatus").agg(sum("n_ij").as("c_j"))
     val nTot = cells.agg(sum("n_ij").as("n_tot"))
@@ -852,7 +851,7 @@ object Analytics3 {
   def backtestSnaive(spark: SparkSession, dir: String): DataFrame = {
     val hourly = t(spark, dir, "events")
       .select(col("event_type"), expr(s"ts div $hourNs").as("h"), centi("value").as("v"))
-      .groupBy("event_type", "h").agg(sum("v").as("sv")).staged
+      .groupBy("event_type", "h").agg(sum("v").as("sv")).localCheckpoint(false)
     val prev = hourly.select(col("event_type"), (col("h") + 24L).as("h"),
       col("sv").as("sv_pred"))
     hourly.join(prev, Seq("event_type", "h"))
@@ -992,7 +991,7 @@ object Analytics3 {
   def growthAccounting(spark: SparkSession, dir: String): DataFrame = {
     val days = t(spark, dir, "events")
       .select(col("user_id"), expr(s"ts DIV ${dayNs}L").as("day"))
-      .distinct().staged
+      .distinct().localCheckpoint(false)
     val w = Window.partitionBy("user_id").orderBy("day")
     val classified = days
       .withColumn("prev", lag("day", 1).over(w))
@@ -1118,7 +1117,7 @@ object Analytics3 {
   def vocabCoverage(spark: SparkSession, dir: String, k: Int = 1000): DataFrame = {
     val toks = t(spark, dir, "documents")
       .select(col("lang"), explode(graft.text.TextAnalysis.tokens(col("text"))).as("tok"))
-      .staged
+      .localCheckpoint(false)
     val vocab = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("tok")).limit(k).select("tok")
     val covered = toks.join(broadcast(vocab), Seq("tok"), "left_semi")
@@ -1358,7 +1357,7 @@ object Analytics3 {
   def mannKendall(spark: SparkSession, dir: String): DataFrame = {
     val hourly = t(spark, dir, "events")
       .select(col("event_type"), expr(s"ts div $hourNs").as("h"), centi("value").as("v"))
-      .groupBy("event_type", "h").agg(sum("v").as("sv")).staged
+      .groupBy("event_type", "h").agg(sum("v").as("sv")).localCheckpoint(false)
     val pairs = hourly.alias("a")
       .join(hourly.alias("b"),
         col("a.event_type") === col("b.event_type") && col("a.h") < col("b.h"))

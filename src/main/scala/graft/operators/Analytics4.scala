@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.operators.Tables.t
-import graft.Cache.CacheOps
 
 /** Fourth analytics batch: the 2-D skyline (Pareto front), graph
   * centralities (local clustering coefficient, HITS, landmark
@@ -230,7 +229,7 @@ object Analytics4 {
     // normalizer and the join-back: the barrier keeps the two consumers
     // from re-deriving the edge join once per half-step compounding.
     def normalize(raw0: DataFrame): DataFrame = {
-      val raw = raw0.staged
+      val raw = raw0.localCheckpoint(false)
       val tot = raw.agg(sum("raw").as("tot"))
       raw.crossJoin(broadcast(tot))
         .select(col("node"),
@@ -329,7 +328,7 @@ object Analytics4 {
       .groupBy("user_id")
       .agg(sum(when(col("day") < cupedSplitDay, 1L).otherwise(0L)).cast(D).as("x"),
         sum(when(col("day") >= cupedSplitDay, 1L).otherwise(0L)).cast(D).as("y"))
-      .withColumn("arm", expr("user_id % 2")).staged
+      .withColumn("arm", expr("user_id % 2")).localCheckpoint(false)
     val pooled = users.agg(count(lit(1)).cast(D).as("pn"),
       sum("x").as("psx"), sum("y").as("psy"),
       sum(col("x") * col("x")).as("psxx"), sum(col("x") * col("y")).as("psxy"))
@@ -496,7 +495,7 @@ object Analytics4 {
       .groupBy("hour")
       .agg(count(lit(1)).as("n"), sum("err").as("e"))
       .withColumn("short_ppm", expr("(1000000 * e) DIV n"))
-      .withColumn("win", expr(s"hour DIV ${longWinHours}L")).staged
+      .withColumn("win", expr(s"hour DIV ${longWinHours}L")).localCheckpoint(false)
     val longW = hourly.groupBy("win")
       .agg(sum("n").as("n_events"), sum("e").as("n_errors"))
       .withColumn("long_ppm", expr("(1000000 * n_errors) DIV n_events"))
@@ -1052,7 +1051,7 @@ object Analytics4 {
         .orderBy("node").limit(closenessLandmarks)
         .select(col("node").as("lm"))
       val d0 = landmarks.select(col("lm"), col("lm").as("node"),
-        lit(0L).as("dist"), lit(1L).as("sigma")).staged
+        lit(0L).as("dist"), lit(1L).as("sigma")).localCheckpoint(false)
       var settled = Seq(d0)
       var frontier = d0
       for (r <- 1 to landmarkRounds) {
@@ -1062,16 +1061,12 @@ object Analytics4 {
         val fresh = prop
           .join(settled.reduce(_ unionAll _), Seq("lm", "node"), "left_anti")
           .select(col("lm"), col("node"), lit(r.toLong).as("dist"), col("sigma"))
-          .staged // per-round barrier; .staged (not .cutRound) so
-          // the persist-mode plan stays an InMemoryRelation and
-          // closeness keeps its no-rdd-segment classification — K
-          // is small and fixed, so the nested-lineage hazard the
-          // cutRound rule targets does not apply (the original
-          // closeness BFS used .staged for the same reason)
+          .localCheckpoint(false) // per-round barrier: read by the next
+          // round's anti-join and frontier join and by the final union
         settled :+= fresh
         frontier = fresh
       }
-      settled.reduce(_ unionAll _).staged // 2K level reads
+      settled.reduce(_ unionAll _).localCheckpoint(false) // 2K level reads
     }
 
   def betweenness(spark: SparkSession, dir: String): DataFrame = {
@@ -1093,15 +1088,15 @@ object Analytics4 {
       }
       val v = level(r).select(col("lm").as("vlm"),
         col("node").as("vnode"), col("sigma").as("vsigma"))
-      // renamed edge columns: under persist mode the staged frames keep
-      // lineage, so e("dst") would be ambiguous against w's ancestry
+      // prefixed edge columns, like w's and v's, keep the three-way
+      // join's column names unique
       val eb = e.select(col("src").as("esrc"), col("dst").as("edst"))
       val dr = v.join(eb, col("esrc") === col("vnode"))
         .join(w, col("wlm") === col("vlm") && col("wnode") === col("edst"))
         .select(col("vlm").as("lm"), col("vnode").as("node"),
           expr("(vsigma * (1000 + wdelta)) DIV wsigma").as("term"))
         .groupBy("lm", "node").agg(sum("term").as("delta"))
-        .cutRound // next round's w-join + the final union; drain cut
+        .localCheckpoint(false) // next round's w-join + the final union; drain cut
       deltas :+= dr
       deltaNext = Some(dr)
     }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Cache.CacheOps
 import graft.sim.GraphOps
 
 /** Round-12 analytics additions — community detection over the shared
@@ -47,7 +46,7 @@ object Analytics5 {
     * edge⋈labels equi-join, a (node, label) count agg, and a per-node
     * max — all partial-aggregable BIGINT shuffles keyed on node; no
     * per-round frame ever exceeds |E|. Lineage is cut per round
-    * ([[graft.Cache.CacheOps.cutRound]]) like the CC iterations.
+    * (`localCheckpoint`, see [[graft.Cache]]) like the CC iterations.
     * Output is the community-size histogram (label identities are
     * fixture node ids — sizes are the portable signal). */
   def labelPropagation(spark: SparkSession, dir: String,
@@ -67,7 +66,7 @@ object Analytics5 {
         .groupBy("node").agg(max("score").as("m"))
         .select(col("node"),
           expr(s"((m + ${ScoreK - 1}L) DIV ${ScoreK}L) * ${ScoreK}L - m").as("label"))
-        .cutRound // per-round drain cut
+        .localCheckpoint(false) // per-round drain cut
     }
     labels.groupBy("label").agg(count(lit(1)).as("csize"))
       .groupBy("csize").agg(count(lit(1)).as("n_communities"))

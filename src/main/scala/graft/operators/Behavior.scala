@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Tables.t
-import graft.Cache.CacheOps
 
 /** Behavioral analytics over the event stream: cohort retention and the
   * next-event transition matrix — the two standard product-analytics
@@ -178,7 +177,7 @@ object Behavior {
     val userDays = t(spark, dir, "events")
       .select(col("user_id"), expr(s"ts div $dayNs").as("day"))
       .distinct()
-      .staged // feeds DAU, the coverage explode, and the frontier
+      .localCheckpoint(false) // feeds DAU, the coverage explode, and the frontier
     val frontier = userDays.agg(max("day").as("last_day"))
     val dau = userDays.groupBy("day").agg(countDistinct("user_id").as("dau"))
     val wau = userDays

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Tables.t
-import graft.Cache.CacheOps
 
 /** Data-layout operators: Z-order (Morton-curve) clustering — the
   * multi-dimensional sort that makes file/row-group statistics
@@ -162,7 +161,7 @@ object Layout {
         .select(lit(layout).as("layout"), col("min_u"), col("max_u"),
           col("min_t"), col("max_t"))
     val files = boxes("linear", Seq(col("ux"), col("th"), col("event_id")))
-      .unionAll(boxes("zorder", Seq(col("z"), col("event_id")))).staged
+      .unionAll(boxes("zorder", Seq(col("z"), col("event_id")))).localCheckpoint(false)
     val preds = skipPreds.map { case (p, lu, hu, lt, ht) =>
       s"SELECT '$p' AS pred, ${lu}L AS lo_u, ${hu}L AS hi_u, ${lt}L AS lo_t, ${ht}L AS hi_t"
     }.reduce(_ + " UNION ALL " + _)

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.Cache.CacheOps
 
 /** Third tranche: subqueries (scalar-correlated and IN — exercising
   * Catalyst's decorrelation), pivot, exact percentiles, regexp/string
@@ -112,11 +111,11 @@ object Relational3 {
       .withColumn("bucket",
         least(greatest(floor((col("v") - lo) / (hi - lo) * B), lit(0d)), lit(B - 1d))
           .cast("long"))
-      .staged
+      .localCheckpoint(false)
     // pass 1: (group, bucket) histogram cells with per-cell extent
     val cells = base.groupBy("g", "bucket")
       .agg(count(lit(1)).as("cnt"), min("v").as("bmin"), max("v").as("bmax"))
-      .staged
+      .localCheckpoint(false)
     // group stats roll up from the tiny cell frame (G rows)
     val stats = cells.groupBy("g")
       .agg(sum(col("cnt")).as("n"), min("bmin").as("vmin"), max("bmax").as("vmax"))
@@ -141,7 +140,7 @@ object Relational3 {
       .select(col("rk.g").as("g"), col("rk.rank").as("rank"),
         col("cm.bucket").as("bucket"),
         (col("rk.rank") - col("cm.cum_before")).as("local_rank"))
-      .staged
+      .localCheckpoint(false)
     // pass 2: rows of located buckets only; per-(g, rank) state = one bucket
     val kth = base
       .join(broadcast(needed), Seq("g", "bucket"))
@@ -276,7 +275,7 @@ object Relational3 {
       .groupBy(col("l_suppkey").as("supplier_no"))
       .agg(sum(dec2(col("l_extendedprice")) * (lit(1).cast(DecimalType(18, 2)) - dec2(col("l_discount"))))
         .cast("double").as("total_revenue"))
-      .staged
+      .localCheckpoint(false)
     val maxRev = revenue.agg(max("total_revenue").as("m"))
     revenue.join(broadcast(maxRev), col("total_revenue") === col("m"))
       .select(col("supplier_no"), col("total_revenue"))

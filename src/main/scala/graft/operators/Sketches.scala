@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Tables.t
 import graft.functions.Portable
-import graft.Cache.CacheOps
 
 /** Distributed sketches and sampling operators — the approximate-query
   * toolkit a 100 TB pipeline leans on when exact answers are too
@@ -46,7 +45,7 @@ object Sketches {
     val m = 1 << p // 256
     val toks = t(spark, dir, "lineitem")
       .select(col("l_orderkey").cast("string").as("tok"))
-      .staged // feeds registers + exact count
+      .localCheckpoint(false) // feeds registers + exact count
     val h = Portable.hash60(col("tok"))
     val w = expr(s"h DIV $m")
     val regs = toks
@@ -85,7 +84,7 @@ object Sketches {
     val dayNs = 86400L * 1000 * 1000 * 1000
     val toks = t(spark, dir, "events")
       .select(expr(s"ts DIV ${dayNs}L").as("day"),
-        col("event_id").cast("string").as("tok")).staged
+        col("event_id").cast("string").as("tok")).localCheckpoint(false)
     val h = Portable.hash60(col("tok"))
     val w = expr(s"h DIV $m")
     val dayRegs = toks
@@ -219,7 +218,7 @@ object Sketches {
     val toks = t(spark, dir, "orders")
       .select(col("o_orderpriority").as("g"),
         col("o_custkey").cast("string").as("tok"))
-      .staged // feeds registers + exact counts
+      .localCheckpoint(false) // feeds registers + exact counts
     val h = Portable.hash60(col("tok"))
     val w = expr(s"h DIV $m")
     val regs = toks
@@ -291,7 +290,7 @@ object Sketches {
         pmod(Portable.hash60(concat_ws("_", lit(s"bf$i"), key)), lit(m.toLong))): _*)
     val build = t(spark, dir, "customer")
       .filter(col("c_mktsegment") === segment)
-      .select(col("c_custkey")).staged // build side reused 3×
+      .select(col("c_custkey")).localCheckpoint(false) // build side reused 3×
     val bits = build
       .select(explode(positions(col("c_custkey"))).as("pos")).distinct()
     val probe = t(spark, dir, "orders")
@@ -302,7 +301,7 @@ object Sketches {
       .join(broadcast(bits), "pos")
       .groupBy("o_orderkey", "o_custkey").agg(count(lit(1)).as("hits"))
       .filter(col("hits") === k)
-      .staged // reused by pass-count and true-match join
+      .localCheckpoint(false) // reused by pass-count and true-match join
     val trueMatch = passed.join(build, passed("o_custkey") === build("c_custkey"))
     val counts = Seq(
       build.agg(count(lit(1)).as("n_build")),
@@ -507,7 +506,7 @@ object Sketches {
     val width = sketchWidth
     val qs = Seq(0.5 -> "p50", 0.9 -> "p90")
     val cells = priceCells(spark, dir)
-      .staged // the sketch: ≤ B×G cells, feeds ranks and the cum scan
+      .localCheckpoint(false) // the sketch: ≤ B×G cells, feeds ranks and the cum scan
     val approx = locate(cells, qs.map(_._1))
       .select(col("g"), col("q"),
         (lit(lo) + (col("bucket").cast("double") + 0.5d) * width).as("approx_value"))
@@ -572,7 +571,7 @@ object Sketches {
     * partial+final agg — two corpus passes, no sort, no value map. */
   def winsorizedStats(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val cells = priceCells(spark, dir).staged
+    val cells = priceCells(spark, dir).localCheckpoint(false)
     val bounds = locate(cells, Seq(0.05, 0.95))
       .groupBy("g").agg(
         min(when(col("q") === 0.05, col("bucket"))).as("b05"),

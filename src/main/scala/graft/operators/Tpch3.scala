@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.operators.Tables.t
-import graft.Cache.CacheOps
 
 /** The remainder of the TPC-H decision-support suite, adapted to the
   * harness schema (TESTDATA.md). The harness tables have no partsupp,
@@ -318,7 +317,7 @@ object Tpch3 {
         col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
       .groupBy("l_suppkey")
       .agg(sum(revenue).as("total_revenue"))
-      .staged
+      .localCheckpoint(false)
     val maxRev = rev.agg(max(col("total_revenue")).as("max_rev"))
     rev.crossJoin(broadcast(maxRev))
       .filter(col("total_revenue") === col("max_rev"))
@@ -482,7 +481,7 @@ object Tpch3 {
     val perOrderSupp = t(spark, dir, "lineitem")
       .groupBy("l_orderkey", "l_suppkey")
       .agg(max(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("has_r"))
-      .staged
+      .localCheckpoint(false)
     val perOrder = perOrderSupp.groupBy(col("l_orderkey").as("ok"))
       .agg(count(lit(1)).as("n_supp"), sum(col("has_r")).as("n_r_supp"))
       .filter(col("n_supp") >= 2 && col("n_r_supp") === 1)

@@ -3,9 +3,6 @@ package graft.plans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Expression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 
 /** RAPIDS-readiness classification (north-star alignment: the driver
   * baseline names "Spark SQL with GPU-accelerated execution (RAPIDS)").
@@ -73,33 +70,6 @@ object RapidsAudit {
         case "MapPartitions" | "MapElements" | "MapGroups" |
              "FlatMapGroupsWithState" | "TypedFilter" |
              "AppendColumns" | "CoGroup" => out += "object-node"
-        case _ => ()
-      }
-      node match {
-        // persist-mode barrier (spark.graft.cache=persist): the cached
-        // subtree is an InMemoryRelation — GPU-supported via
-        // ParquetCachedBatchSerializer, so the cache itself is NOT a
-        // fallback, and unlike a LogicalRDD it keeps the upstream plan
-        // auditable: walk the cached PHYSICAL plan for the same triggers
-        // (the checkpoint-mode rdd-segment hides them by construction).
-        case r: InMemoryRelation => walkPhysical(r.cachedPlan)
-        case _ => ()
-      }
-      node.expressions.foreach(walkExpr)
-    }
-    def walkPhysical(p: SparkPlan): Unit = p.foreach { node =>
-      node.getClass.getSimpleName match {
-        case "RDDScanExec" | "ExternalRDDScanExec" => out += "rdd-segment"
-        case "MapPartitionsExec" | "MapElementsExec" | "MapGroupsExec" |
-             "FlatMapGroupsWithStateExec" | "AppendColumnsExec" |
-             "CoGroupExec" => out += "object-node"
-        case _ => ()
-      }
-      node match {
-        // Spark 4 compiles cached plans under AQE; the wrapper holds its
-        // input plan as a FIELD, not a child, so foreach stops at it
-        case a: AdaptiveSparkPlanExec => walkPhysical(a.inputPlan)
-        case s: InMemoryTableScanExec => walkPhysical(s.relation.cachedPlan)
         case _ => ()
       }
       node.expressions.foreach(walkExpr)

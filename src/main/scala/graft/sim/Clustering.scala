@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Tables.t
 import graft.functions.Portable
-import graft.Cache.CacheOps
 
 /** K-means clustering over the embedding column, and the curation
   * operators built on it (SemDeDup-style semantic dedup, cluster-balanced
@@ -112,12 +111,10 @@ object Clustering {
     * quality, balanced sampling) share one training run. */
   private[graft] def train(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
     graft.Memo(spark, ("clustering.train", graft.Memo.input(dir))) {
-      val corpus = qn(spark, dir).staged
+      val corpus = qn(spark, dir).localCheckpoint(false)
       var cent = initCentroids(corpus)
       for (_ <- 1 to iters)
-        // Lloyd loop state: the lineage CUT is the point (round k's
-        // plan must not nest all rounds < k), so this stays
-        // localCheckpoint under every Cache mode — see graft.Cache.
+        // Lloyd loop state: lineage cut per round (graft.Cache)
         cent = recompute(assign(corpus, cent)).localCheckpoint(false)
       (corpus, cent)
     }
@@ -171,10 +168,10 @@ object Clustering {
           (x, i) => x + when(i === 0, 1L).otherwise(0L)).as("q"))
       .withColumn("nsq", Portable.normSqQ(col("q")))
     // corpus + plants, assigned and signed once; feeds both join sides
-    val withPlants = corpus.unionByName(planted).staged
+    val withPlants = corpus.unionByName(planted).localCheckpoint(false)
     val all = assign(withPlants, cent)
       .join(Similarity.lshSignaturesFrom(withPlants), "vec_id")
-      .staged
+      .localCheckpoint(false)
     val buckets = all
       .select(col("vec_id"), col("cid"), col("q"), col("nsq"), col("signature"),
         explode(sequence(lit(0), lit(nBands - 1))).as("band"))
@@ -287,7 +284,7 @@ object Clustering {
     val cells = assign(corpus, cent)
       .select(col("vec_id").as("cand_id"), col("q").as("qb"),
         col("nsq").as("nb"), col("cid"))
-      .staged
+      .localCheckpoint(false)
     val packed = cent.agg(collect_list(struct(col("cid"), col("c"), col("csq"))).as("cents"))
     val probes = corpus.filter(col("vec_id") < 8)
       .crossJoin(broadcast(packed))
@@ -325,7 +322,7 @@ object Clustering {
     val cells = assign(corpus, cent)
       .select(col("vec_id").as("cand_id"), col("q").as("qb"),
         col("nsq").as("nb"), col("cid"))
-      .staged
+      .localCheckpoint(false)
     val packed = cent.agg(collect_list(struct(col("cid"), col("c"), col("csq"))).as("cents"))
     val maxP = budgets.max
     val probes = corpus.filter(col("vec_id") < 8)
@@ -593,7 +590,7 @@ object Clustering {
     * TakeOrdered(1) — partial top-1 per partition, never a global
     * sort. k−1 corpus scans total; no shuffle anywhere. */
   def kCenterSample(spark: SparkSession, dir: String): DataFrame = {
-    val corpus = qn(spark, dir).staged
+    val corpus = qn(spark, dir).localCheckpoint(false)
     def row3(r: org.apache.spark.sql.Row): (Long, Seq[Long], Long) =
       (r.getAs[Long]("vec_id"), r.getSeq[Long](1).toSeq, r.getAs[Long]("nsq"))
     val seed = row3(corpus.filter(col("vec_id") === 0L)

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.operators.Tables.t
 import graft.functions.Portable
-import graft.Cache.CacheOps
 
 /** Embedding-column maintenance operators: int8 quantization (the
   * storage/serving format for billion-vector ANN indexes) — plus, in
@@ -83,7 +82,7 @@ object Embeddings {
       .select(col("label").cast("long").as("label"),
         posexplode(Portable.quantize(col("embedding"))).as(Seq("i", "qi")))
       .groupBy("label", "i").agg(sum("qi").as("s"), count(lit(1)).as("n"))
-      .staged // label-cardinality model; feeds norms and the pair join
+      .localCheckpoint(false) // label-cardinality model; feeds norms and the pair join
     val norms = cells.groupBy("label")
       .agg(sum(col("s") * col("s")).as("nsq"), max("n").as("n_vecs"))
     val pairs = cells.select(col("label").as("la"), col("i"), col("s").as("sa"))
@@ -191,13 +190,13 @@ object GraphOps {
     graft.Memo(spark, ("graph.shared", graft.Memo.input(dir))) {
       val pairs = t(spark, dir, "lineitem")
         .select(col("l_partkey").as("part"), col("l_suppkey").as("supp"))
-        .distinct().staged
+        .distinct().localCheckpoint(false)
       val enc = pairs.select((col("part") * 2).as("p"),
         (col("supp") * 2 + 1).as("s"))
       val e = enc.select(col("p").as("src"), col("s").as("dst"))
         .unionAll(enc.select(col("s").as("src"), col("p").as("dst")))
-        .staged
-      val deg = e.groupBy("src").agg(count(lit(1)).as("deg")).staged
+        .localCheckpoint(false)
+      val deg = e.groupBy("src").agg(count(lit(1)).as("deg")).localCheckpoint(false)
       (pairs, e, deg)
     }
 
@@ -226,8 +225,8 @@ object GraphOps {
     val und = p2.select(col("part"), col("supp").as("u"))
       .join(p2.select(col("part"), col("supp").as("v")), "part")
       .filter(col("u") < col("v"))
-      .select("u", "v").distinct().staged
-    val edges = orientByDegree(und).staged
+      .select("u", "v").distinct().localCheckpoint(false)
+    val edges = orientByDegree(und).localCheckpoint(false)
     val wedges = edges.select(col("u").as("a"), col("v").as("b"))
       .join(edges.select(col("u").as("b"), col("v").as("c")), "b")
     val tri = wedges.join(edges,
@@ -246,7 +245,7 @@ object GraphOps {
                                maxPartDegree: Int): (DataFrame, DataFrame) =
     graft.Memo(spark, ("graph.tri", graft.Memo.input(dir), maxPartDegree)) {
       val (und, tri) = triCore(spark, dir, maxPartDegree)
-      (und, tri.staged)
+      (und, tri.localCheckpoint(false))
     }
 
   /** 3 rounds of scaled-integer PageRank (d=0.85), top-20 nodes.
@@ -353,7 +352,7 @@ object GraphOps {
   private[graft] def trianglesFrom(pairs0: DataFrame,
                                    maxPartDegree: Int, topN: Int): DataFrame = {
     // feeds the degree filter AND the projection join — materialize once
-    val pairs = pairs0.staged
+    val pairs = pairs0.localCheckpoint(false)
     val eligible = pairs.groupBy("part").agg(count(lit(1)).as("deg"))
       .filter(col("deg") <= maxPartDegree).select("part")
     val p2 = pairs.join(eligible, "part")
@@ -362,7 +361,7 @@ object GraphOps {
       .filter(col("u") < col("v"))
       .select("u", "v").distinct()
     val edges = orientByDegree(und)
-      .staged // feeds wedges AND the closing semi-join
+      .localCheckpoint(false) // feeds wedges AND the closing semi-join
     val wedges = edges.select(col("u").as("a"), col("v").as("b"))
       .join(edges.select(col("u").as("b"), col("v").as("c")), "b")
     val tri = wedges.join(edges,
@@ -411,7 +410,7 @@ object GraphOps {
       // drain cut at the top of each round (Cache scaladoc): plans nest
       // otherwise; cutting the PREVIOUS round keeps the last round's
       // semi-join shape visible in the final plan (PlanShapeSpec)
-      if (r > 1) e = e.cutRound
+      if (r > 1) e = e.localCheckpoint(false)
       val keep = e.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select("src")
       // the edge list is symmetric, so one degree table serves both
@@ -590,7 +589,7 @@ object GraphOps {
         .select(col("dst").as("node"), (col("dist") + 1L).as("dist"))
       dist = dist.select("node", "dist").unionAll(prop)
         .groupBy("node").agg(min("dist").as("dist"))
-        .cutRound // per-round drain cut
+        .localCheckpoint(false) // per-round drain cut
     }
     nodes.join(dist, Seq("node"), "left")
       .select(coalesce(col("dist"), lit(-1L)).as("dist"))
@@ -646,7 +645,7 @@ object GraphOps {
         .select(col("dst").as("node"), col("label"))
       labels = labels.select("node", "label").unionAll(prop)
         .groupBy("node").agg(min("label").as("label"))
-        .cutRound // per-round drain cut
+        .localCheckpoint(false) // per-round drain cut
     }
     labels.groupBy("label").agg(count(lit(1)).as("csize"))
       .groupBy("csize").agg(count(lit(1)).as("n_components"))
@@ -699,7 +698,7 @@ object GraphOps {
         .join(merged.select(col("node").as("ln"), col("label").as("l2")).alias("j"),
           col("m.label") === col("j.ln"))
         .select(col("m.node").as("node"), col("j.l2").as("label"))
-        .cutRound // per-round drain cut — the label self-join SQUARES the tree
+        .localCheckpoint(false) // per-round drain cut — the label self-join SQUARES the tree
     }
     labels.groupBy("label").agg(count(lit(1)).as("csize"))
       .groupBy("csize").agg(count(lit(1)).as("n_components"))
@@ -749,14 +748,14 @@ object GraphOps {
     val e = edgesStaged(spark, dir)
     val deg = degrees(spark, dir)
     val d = DecimalType(38, 0)
-    val mRow = e.agg(count(lit(1)).cast(d).as("m_dir")).staged
+    val mRow = e.agg(count(lit(1)).cast(d).as("m_dir")).localCheckpoint(false)
     var labels = deg.select(col("src").as("node"), col("src").as("label"))
     val perRound = (0 to rounds).map { r =>
       if (r > 0) {
         val prop = e.join(labels, e("src") === labels("node"))
           .select(col("dst").as("node"), col("label"))
         labels = labels.select("node", "label").unionAll(prop)
-          .groupBy("node").agg(min("label").as("label")).staged
+          .groupBy("node").agg(min("label").as("label")).localCheckpoint(false)
       }
       val ls = labels.select(col("node").as("src"), col("label").as("ls"))
       val ld = labels.select(col("node").as("dst"), col("label").as("ld"))
@@ -841,7 +840,7 @@ object GraphOps {
     val deg = degrees(spark, dir)
     val wAdj = org.apache.spark.sql.expressions.Window
       .partitionBy("src").orderBy("dst")
-    val adj = e.withColumn("rn", row_number().over(wAdj).cast("long")).staged
+    val adj = e.withColumn("rn", row_number().over(wAdj).cast("long")).localCheckpoint(false)
     var walks = deg.select(col("src").as("walk"))
       .filter(col("walk") % 2 === 1 &&
         expr(s"(walk - 1) DIV 2 % $walkSeedMod") === 0L)

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Portable
 import graft.operators.Tables.t
-import graft.Cache.CacheOps
 
 /** Maximal-marginal-relevance diversified re-ranking (Carbonell &
   * Goldstein 1998) — the retrieval step between top-k search and
@@ -27,11 +26,9 @@ import graft.Cache.CacheOps
   * the selected set, per-query argmax window), so the DuckDB oracle
   * replays it exactly as chained CTEs. The per-round `selected` frame
   * has three consumers (anti-join, max-sim join, union) and is
-  * reassigned in a driver loop — the iterative-drain rule
-  * (graft.Cache): `.cutRound` in BOTH cache modes. A `.staged` variant
-  * measured 13.1 s under persist mode vs the 1.7 s checkpoint floor
-  * (the nested per-round IMR chain), the exact inflation the rule
-  * exists to prevent.
+  * reassigned in a driver loop, so each round cuts its lineage
+  * (graft.Cache): a barrier that kept the nested per-round plan
+  * measured 13.1 s against the 1.7 s floor.
   *
   * Exactness: relevance and pair similarities are the family's
   * portable fixed-point cosine (integer dot products, one final IEEE
@@ -72,7 +69,7 @@ object Mmr {
       t(spark, dir, "embeddings")
         .repartition(spark.sparkContext.defaultParallelism, col("vec_id")))
     val cands = candidates(spark, dir)
-      .staged // consumers: pair-sim build + every greedy round
+      .localCheckpoint(false) // consumers: pair-sim build + every greedy round
     // candidate vectors: one broadcast-probe of the corpus, Q·C rows out
     val cv = qn
       .join(broadcast(cands.select(col("cand_id").as("vec_id")).distinct()), "vec_id")
@@ -90,7 +87,7 @@ object Mmr {
         (Portable.dotQ(col("qx"), col("qy")).cast("double") /
           (sqrt(col("nx").cast("double")) * sqrt(col("ny").cast("double"))))
           .as("sim"))
-      .staged // consumed once per greedy round
+      .localCheckpoint(false) // consumed once per greedy round
     var selected = cands
       .select(col("query_id"), col("cand_id"), col("rel"),
         row_number().over(Window.partitionBy("query_id")
@@ -118,7 +115,7 @@ object Mmr {
         .filter(col("rn") === 1)
         .select(col("query_id"), col("cand_id"), col("rel"),
           lit(s.toLong).as("mmr_rank"))
-      selected = selected.unionAll(picked).cutRound
+      selected = selected.unionAll(picked).localCheckpoint(false)
     }
     selected.orderBy("query_id", "mmr_rank")
   }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Tables.t
 import graft.functions.Portable
-import graft.Cache.CacheOps
 
 /** Graph-based ANN: a k-NN graph built with NN-Descent (Dong, Moses &
   * Li, WWW 2011) and searched with a fixed-width beam — the
@@ -76,7 +75,7 @@ object NnDescent {
 
   // ---------------------------------------------------------------- build
 
-  /** NOT `.staged`: a checkpointed frame is a LogicalRDD with no stats
+  /** NOT checkpointed: a checkpointed frame is a LogicalRDD with no stats
     * (sizeInBytes defaults to huge), which would force every per-round
     * scoring join into sort-merge. Left as a plain plan, the scan's
     * real stats let Catalyst broadcast the vector side while it fits
@@ -163,13 +162,13 @@ object NnDescent {
             pmod(Portable.hash60(concat(lit("nnd_"), col("src"), lit("_"), col("j"))),
               col("n") - lit(1L)), col("n")).as("dst"))
         .distinct()
-      var g = keepBest(scorePairs(init, qn)).cutRound
+      var g = keepBest(scorePairs(init, qn)).localCheckpoint(false)
       for (_ <- 1 to buildRounds)
-        // per-round lineage cut — iterative-drain rule (Cache.cut)
-        g = round(g, qn).cutRound
+        // per-round lineage cut (graft.Cache)
+        g = round(g, qn).localCheckpoint(false)
       val und = g.select("src", "dst")
         .union(g.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct().staged
+        .distinct().localCheckpoint(false)
       (qn, g, und)
     }
 
@@ -219,7 +218,7 @@ object NnDescent {
         .withColumn("rn", row_number().over(
           Window.partitionBy("beam", "query_id").orderBy(desc("cosine"), col("cand_id"))))
         .filter(col("rn") <= col("beam")).drop("rn")
-        .cutRound
+        .localCheckpoint(false)
     }
     bb
   }
@@ -310,7 +309,7 @@ object NnDescent {
     val bg = g.filter(splitH(col("src")) < 90 && splitH(col("dst")) < 90)
     val ubi = bg.select("src", "dst")
       .union(bg.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().staged // read every insert round
+      .distinct().localCheckpoint(false) // read every insert round
     val dq = qn.filter(splitH(col("vec_id")) >= 90)
       .select(col("vec_id").as("query_id"), col("q").as("qa"), col("nsq").as("na"))
     val ent = qn.filter(splitH(col("vec_id")) < 90)
@@ -342,7 +341,7 @@ object NnDescent {
         .withColumn("rn", row_number().over(
           Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id"))))
         .filter(col("rn") <= beamWidth).drop("rn")
-        .cutRound
+        .localCheckpoint(false)
     }
     bb
   }

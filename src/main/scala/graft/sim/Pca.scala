@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Tables.t
 import graft.functions.Portable
-import graft.Cache.CacheOps
 
 /** PCA by power iteration over the embedding covariance — the
   * PageRank recipe (scaled-integer iteration, exact at every step)
@@ -48,7 +47,7 @@ object Pca {
     val q = t(spark, dir, "embeddings")
       .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
       .select(Portable.quantize(col("embedding")).as("q"))
-      .staged // one corpus read feeds both moment passes
+      .localCheckpoint(false) // one corpus read feeds both moment passes
     val n = q.count()
     val second = q
       .select(posexplode(col("q")).as(Seq("i", "qi")), col("q"))
@@ -68,7 +67,7 @@ object Pca {
       .join(first.select(col("i"), col("si").as("s_i")), "i")
       .join(first.select(col("i").as("j"), col("si").as("s_j")), "j")
       .select(col("i"), col("j"), (lit(n) * col("sij") - col("s_i") * col("s_j")).as("c0"))
-      .staged // model-cardinality (4096 rows); feeds max and rescale
+      .localCheckpoint(false) // model-cardinality (4096 rows); feeds max and rescale
     val m = cov.agg(max(abs(col("c0"))).as("m"))
     // (c0+m)·S can reach ~2e24 — widen to DECIMAL(38,0) for the product
     // (DuckDB mirrors with HUGEINT); operands stay non-negative so the
@@ -82,7 +81,7 @@ object Pca {
     * pcaPower, pcaExplained and anisotropyReport each re-paid the corpus
     * moment pass + the 3-round iteration per query. */
   private[graft] def covStaged(spark: SparkSession, dir: String): DataFrame =
-    graft.Memo(spark, ("pca.cov", graft.Memo.input(dir)))(scaledCov(spark, dir).staged)
+    graft.Memo(spark, ("pca.cov", graft.Memo.input(dir)))(scaledCov(spark, dir).localCheckpoint(false))
 
   /** The final power-iterate over [[covStaged]], memoized. */
   private[graft] def leadVec(spark: SparkSession, dir: String): DataFrame =
@@ -99,7 +98,7 @@ object Pca {
       v = w.crossJoin(broadcast(mw))
         .select(col("i").as("d"),
           (expr(s"((CAST(w AS DECIMAL(38,0)) + mw) * $S) DIV mw") - S).as("v"))
-        .cutRound // per-round drain cut (Cache scaladoc): plans nest otherwise
+        .localCheckpoint(false) // per-round lineage cut (graft.Cache)
     }
     v
   }
@@ -219,7 +218,7 @@ object Pca {
     val cells = t(spark, dir, "embeddings")
       .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
       .select(col("vec_id"), posexplode(Portable.quantize(col("embedding"))).as(Seq("i", "xi")))
-      .staged // one corpus explode feeds projection, residual and both cosine passes
+      .localCheckpoint(false) // one corpus explode feeds projection, residual and both cosine passes
     val v = leadVec(spark, dir)
     val vb = v.select(col("d").as("i"), col("v").as("vi"))
     val vv = v.agg(sum(col("v") * col("v")).as("vv"))
@@ -235,7 +234,7 @@ object Pca {
         when(col("mr") === 0L, 0L).otherwise(
           expr(s"CAST(((CAST(ri AS DECIMAL(38,0)) + mr) * $S) DIV mr AS BIGINT)") - S)
           .as("ri"))
-      .staged // residual cells feed the after-centroid AND the after-cosines
+      .localCheckpoint(false) // residual cells feed the after-centroid AND the after-cosines
     def report(cs: DataFrame, valCol: String, tag: String): DataFrame = {
       val cent = cs.groupBy("i").agg(sum(col(valCol)).as("s"))
       val ns = cent.agg(sum(expr("CAST(s AS DECIMAL(38,0)) * s")).as("ns"))

@@ -103,7 +103,6 @@ object Pq {
     * The shared training kernel over any (vec_id, q) corpus — the raw
     * corpus for plain PQ, the cell-residual corpus for IVFADC. */
   private def trainCodebooks(corpus: DataFrame): DataFrame = {
-    import graft.Cache.CacheOps
     // exploded subspace frame: M rows per vector, each sd wide —
     // the SAME total data volume as the corpus, scanned once per
     // round for ALL subspaces (a subspace-at-a-time loop would run
@@ -113,7 +112,7 @@ object Pq {
           struct(lit(m).as("m"), sliceM(col("q"), m).as("qm"))): _*)).as("s"))
       .select(col("vec_id"), col("s.m").as("m"), col("s.qm").as("qm"))
       .withColumn("nm", Portable.normSqQ(col("qm")))
-      .staged
+      .localCheckpoint(false)
     var model = subAll.filter(col("vec_id") < Ks)
       .select(col("m"), col("vec_id").as("cid"), col("qm").as("c"))
       .withColumn("csq", Portable.normSqQ(col("c")))
@@ -259,12 +258,11 @@ object Pq {
     * un-probed cells. */
   def ivfPqTopK(spark: SparkSession, dir: String,
                 k: Int = TopK, nprobe: Int = 2): DataFrame = {
-    import graft.Cache.CacheOps
     val (corpus, cent) = Clustering.train(spark, dir)
     val celled = encoded(spark, dir)
       .join(Clustering.assign(corpus, cent).select(col("vec_id"), col("cid")),
         "vec_id")
-      .staged // the stored index: (cell, codes) per vector
+      .localCheckpoint(false) // the stored index: (cell, codes) per vector
     val packedIvf = cent.agg(collect_list(struct(col("cid"), col("c"), col("csq"))).as("cents"))
     val probes = corpus.filter(col("vec_id") < 8)
       .crossJoin(broadcast(packedIvf))
@@ -446,11 +444,10 @@ object Pq {
     * free at the candidate-scoring level. */
   def ivfAdcTopK(spark: SparkSession, dir: String,
                  k: Int = TopK, nprobe: Int = 2): DataFrame = {
-    import graft.Cache.CacheOps
     val (corpus, cent) = Clustering.train(spark, dir)
     val rcb = residCodebooks(spark, dir)
     // the stored index: (cell, residual codes) per vector
-    val celled = encodedFrom(residualCorpus(spark, dir), rcb, Seq("cid")).staged
+    val celled = encodedFrom(residualCorpus(spark, dir), rcb, Seq("cid")).localCheckpoint(false)
     val packedIvf = cent.agg(collect_list(struct(col("cid"), col("c"), col("csq"))).as("cents"))
     val probes = corpus.filter(col("vec_id") < 8)
       .crossJoin(broadcast(packedIvf))

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Tables.t
 import graft.functions.Portable
-import graft.Cache.CacheOps
 
 /** Similarity search over the embedding column (`Array[Float]`, 64-d).
   *
@@ -156,11 +155,11 @@ object Similarity {
     * exact cosine re-ranks within the bucket. Recall trades off with
     * bucket width — the scale path when brute force is too big. */
   def annLsh(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val qn = quantized(spark, dir).staged
+    val qn = quantized(spark, dir).localCheckpoint(false)
     // signatures derive from the SAME materialized qn (no second
     // quantize pass, no harness-output orderBy before the join);
     // side is materialized once for both join sides
-    val side = qn.join(lshSignaturesFrom(qn), "vec_id").staged
+    val side = qn.join(lshSignaturesFrom(qn), "vec_id").localCheckpoint(false)
     val l = side.select(col("vec_id").as("query_id"), col("q").as("qa"),
       col("nsq").as("na"), col("signature"))
     val r = side.select(col("vec_id").as("cand_id"), col("q").as("qb"),
@@ -255,11 +254,11 @@ object Similarity {
   private[graft] def nearDupPairsFrom(qnIn: DataFrame, tau: Double): DataFrame = {
     val grouped = qnIn.groupBy("q", "nsq")
       .agg(min("vec_id").as("rep"), collect_list("vec_id").as("members"))
-      .staged
+      .localCheckpoint(false)
     // pure column-prune of the staged frame — re-deriving it per
     // consumer is free, a second checkpoint is not
     val qn = grouped.select(col("rep").as("vec_id"), col("q"), col("nsq"))
-    val sig = lshSignaturesFrom(qn).staged
+    val sig = lshSignaturesFrom(qn).localCheckpoint(false)
     val buckets = sig
       .select(col("vec_id"), col("signature"),
         explode(sequence(lit(0), lit(nBands - 1))).as("band"))
@@ -351,15 +350,15 @@ object Similarity {
           (x, i) => x + when(i === 0, 1L).otherwise(0L)).as("q"))
       .withColumn("nsq", Portable.normSqQ(col("q")))
     // the full corpus = base ∪ delta; only the delta side probes it
-    val qn = qnBase.unionByName(planted).staged
-    val sig = lshSignaturesFrom(qn).staged
+    val qn = qnBase.unionByName(planted).localCheckpoint(false)
+    val sig = lshSignaturesFrom(qn).localCheckpoint(false)
     val buckets = sig
       .select(col("vec_id"), col("signature"),
         explode(sequence(lit(0), lit(nBands - 1))).as("band"))
       .withColumn("bucket",
         expr(s"shiftright(signature, band * $bandBits) & ${(1 << bandBits) - 1}"))
       .drop("signature")
-      .staged // read twice (delta slice + index side)
+      .localCheckpoint(false) // read twice (delta slice + index side)
     // plant_base as a 1-row broadcast: "tonight's batch" = ids past the
     // base corpus maximum
     val base = qnBase.agg((max("vec_id") + 1L).as("plant_base"))
@@ -424,7 +423,7 @@ object Similarity {
     * the standard IVF layout for billion-vector corpora. */
   def ivfTopK(spark: SparkSession, dir: String, k: Int = 5, nprobe: Int = 2,
               nCells: Int = 16): DataFrame = {
-    val qn = quantized(spark, dir).staged
+    val qn = quantized(spark, dir).localCheckpoint(false)
     val cents = qn.filter(col("vec_id") < nCells)
       .select(col("vec_id").as("cid"), col("q").as("qc"), col("nsq").as("nc"))
     // nearest cell per vector (cosine desc, cid asc tie-break)
@@ -438,7 +437,7 @@ object Similarity {
     val cells = assign.filter(col("crn") === 1)
       .select(col("vec_id").as("cand_id"), col("q").as("qb"), col("nsq").as("nb"),
         col("cid"))
-      .staged
+      .localCheckpoint(false)
     // query side: nprobe nearest cells
     val probes = assign.filter(col("vec_id") < 8 && col("crn") <= nprobe)
       .select(col("vec_id").as("query_id"), col("q").as("qa"), col("nsq").as("na"),
@@ -712,7 +711,7 @@ object Similarity {
       bqWord(col("q"), 32).as("w1"))
 
   def bqTopK(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val qn0 = quantized(spark, dir).staged
+    val qn0 = quantized(spark, dir).localCheckpoint(false)
     val codes = bqCodes(qn0)
     val panel = codes.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("w0").as("p0"), col("w1").as("p1"))
@@ -837,13 +836,12 @@ object Similarity {
     * board. */
   def ivfBqTopK(spark: SparkSession, dir: String, k: Int = 5,
                 nprobe: Int = 2): DataFrame = {
-    import graft.Cache.CacheOps
     val (corpus, cent) = Clustering.train(spark, dir)
     val codes = bqCodes(corpus)
     // the stored index: (cell, sign code) per vector
     val celled = codes
       .join(Clustering.assign(corpus, cent).select(col("vec_id"), col("cid")), "vec_id")
-      .staged
+      .localCheckpoint(false)
     val packedIvf = cent.agg(collect_list(struct(col("cid"), col("c"), col("csq"))).as("cents"))
     val probes = corpus.filter(col("vec_id") < 8)
       .crossJoin(broadcast(packedIvf))
@@ -983,11 +981,11 @@ object Similarity {
     * explodes 9×, equi-join on the probe bucket, DISTINCT collapses
     * candidates reached via several probes, exact cosine re-ranks. */
   def annMultiprobe(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val qn0 = quantized(spark, dir).staged
+    val qn0 = quantized(spark, dir).localCheckpoint(false)
     val mask = (1L << probeBits) - 1
     val side = qn0.join(lshSignaturesFrom(qn0), "vec_id")
       .withColumn("bucket", col("signature").bitwiseAND(lit(mask)))
-      .staged
+      .localCheckpoint(false)
     val corpus = side.select(col("vec_id").as("cand_id"), col("q").as("qb"),
       col("nsq").as("nb"), col("bucket").as("probe"))
     // both arms share the SAME 8-bit key so the report isolates the
@@ -1092,11 +1090,11 @@ object Similarity {
     * the bucket equi-join; the corpus/index side is untouched, exactly
     * the 100 TB posture of the parent query. */
   def annProbeCurve(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val qn0 = quantized(spark, dir).staged
+    val qn0 = quantized(spark, dir).localCheckpoint(false)
     val mask = (1L << probeBits) - 1
     val side = qn0.join(lshSignaturesFrom(qn0), "vec_id")
       .withColumn("bucket", col("signature").bitwiseAND(lit(mask)))
-      .staged
+      .localCheckpoint(false)
     val corpus = side.select(col("vec_id").as("cand_id"), col("q").as("qb"),
       col("nsq").as("nb"), col("bucket").as("probe"))
     // (budget, xor-mask) pairs: every mask of Hamming weight w serves all

@@ -3,7 +3,6 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Tables.t
-import graft.Cache.CacheOps
 
 /** Byte-pair-encoding-style tokenization as pure distributed dataflow —
   * LEARNED merges, not a heuristic: the real BPE training loop
@@ -120,7 +119,7 @@ object Bpe {
     for (r <- 1 to rounds) {
       val won = pairStats(forms)
         .orderBy(desc("cnt"), col("sym"), col("nxt")).limit(1)
-      val best = if (recordMerges) won.staged else won
+      val best = if (recordMerges) won.localCheckpoint(false) else won
       if (recordMerges)
         merges += best.select(lit(r.toLong).as("rank"),
           col("sym").as("bx"), col("nxt").as("by"), col("cnt"))
@@ -155,11 +154,9 @@ object Bpe {
     val occ = docs
       .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("w"))
       .groupBy("doc_id", "w").agg(count(lit(1)).as("occ"))
-      .staged
+      .localCheckpoint(false)
     // training state: distinct word forms with corpus counts (Zipf-small)
-    // merge-round loop state: lineage cut per round is the point (round
-    // k's plan must not nest all rounds < k), so `forms` stays
-    // localCheckpoint under every Cache mode — see graft.Cache
+    // merge-round loop state: lineage cut per round (graft.Cache)
     val forms0 = occ.groupBy("w").agg(sum(col("occ")).as("wcnt"))
       .select(col("w"), col("wcnt"), symsExpr.as("syms"))
       .localCheckpoint(false)
@@ -323,7 +320,7 @@ object Bpe {
     val occ = docs
       .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("w"))
       .groupBy("doc_id", "w").agg(count(lit(1)).as("occ"))
-      .staged
+      .localCheckpoint(false)
     val forms0 = occ.groupBy("w").agg(sum(col("occ")).as("wcnt"))
       .select(col("w"), col("wcnt"), symsExpr.as("syms"))
       .localCheckpoint(false)
@@ -378,7 +375,7 @@ object Bpe {
     val occ = evalDocs
       .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("w"))
       .groupBy("doc_id", "w").agg(count(lit(1)).as("occ"))
-      .staged
+      .localCheckpoint(false)
     val evalForms0 = occ.groupBy("w").agg(sum(col("occ")).as("wcnt"))
       .select(col("w"), col("wcnt"), symsExpr.as("syms"))
       .localCheckpoint(false)

@@ -3,7 +3,6 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Tables.t
-import graft.Cache.CacheOps
 
 /** Byte-level BPE — the GPT-2/Llama default regime (Radford et al.
   * 2019 §2.2) the char-fallback family deliberately doesn't cover:
@@ -75,7 +74,7 @@ object ByteBpe {
     val occ = docs
       .select(col("doc_id"), explode(preTokens(col("text"))).as("w"))
       .groupBy("doc_id", "w").agg(count(lit(1)).as("occ"))
-      .staged // two consumers: form derivation + the final apply join
+      .localCheckpoint(false) // two consumers: form derivation + the final apply join
     def train = Bpe.trainForms(byteForms(occ), recordMerges = true)
     val (forms, _) = memoKey.fold(train)(graft.Memo(docs.sparkSession, _)(train))
     occ

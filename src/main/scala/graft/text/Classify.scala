@@ -3,7 +3,6 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Tables.t
-import graft.Cache.CacheOps
 
 /** In-query Naive Bayes quality classifier — the fastText/CCNet-style
   * model-based quality filter (Wenzek et al. 2020, CCNet; Joulin et al.
@@ -62,13 +61,13 @@ object Classify {
         explode(col("toks")).as("term"))
       .groupBy("doc_id", "split", "label", "term")
       .agg(count(lit(1)).as("tf"))
-      .staged // feeds training AND scoring
+      .localCheckpoint(false) // feeds training AND scoring
     // training: per-term class counts over the train split, one agg
     val vocab = tf.filter(col("split") === "train")
       .groupBy("term")
       .agg(sum(when(col("label") === "good", col("tf")).otherwise(0L)).as("cg"),
         sum(when(col("label") === "bad", col("tf")).otherwise(0L)).as("cb"))
-      .staged
+      .localCheckpoint(false)
     val totals = vocab.agg(sum("cg").as("tg"), sum("cb").as("tb"),
       count(lit(1)).as("v"))
     val weights = vocab.crossJoin(broadcast(totals))
@@ -195,14 +194,14 @@ object Classify {
     val bg = t(spark, dir, "documents")
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 2)
-      .staged // keep the split() out of the per-index lambda
+      .localCheckpoint(false) // keep the split() out of the per-index lambda
       .select(col("doc_id"), explode(
         transform(sequence(lit(1), size(col("toks")) - 1),
           i => concat_ws(" ", element_at(col("toks"), i),
             element_at(col("toks"), (i + 1).cast("int"))))).as("bg"))
       .groupBy("doc_id", "bg").agg(count(lit(1)).as("tf"))
-      .staged // feeds corpus counts AND the score join
-    val corpus = bg.groupBy("bg").agg(sum("tf").as("c12")).staged
+      .localCheckpoint(false) // feeds corpus counts AND the score join
+    val corpus = bg.groupBy("bg").agg(sum("tf").as("c12")).localCheckpoint(false)
     val ctx = corpus
       .withColumn("w1", substring_index(col("bg"), " ", 1))
       .groupBy("w1").agg(sum("c12").as("c1"))
@@ -335,7 +334,7 @@ object Classify {
   def qualitySweep(spark: SparkSession, dir: String): DataFrame = {
     val s = nbQuality(spark, dir)
       .select(col("label"), col("n_scored_tokens"), col("margin_bits"))
-      .staged // consumers: the sweep explode + the totals row
+      .localCheckpoint(false) // consumers: the sweep explode + the totals row
     val tot = s.agg(count(lit(1)).as("total_docs"),
       sum("n_scored_tokens").as("total_tokens"))
     s.select(col("label"), col("n_scored_tokens"), col("margin_bits"),

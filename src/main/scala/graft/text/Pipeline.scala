@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Portable
 import graft.operators.Tables.t
-import graft.Cache.CacheOps
 
 /** The end-to-end corpus-curation pipeline, composed from the
   * already-verified stages: language filter → quality filter → exact
@@ -29,24 +28,24 @@ object Pipeline {
   def curationFunnel(spark: SparkSession, dir: String): DataFrame = {
     val base = t(spark, dir, "documents")
       .select(col("doc_id"), col("text"), length(col("text")).cast("long").as("nc"))
-      .staged // every stage and the funnel reference it
+      .localCheckpoint(false) // every stage and the funnel reference it
     val keepLang = TextAnalysis.langId(spark, dir)
       .filter(col("pred_lang") =!= "unknown").select("doc_id")
-    val s1 = base.join(keepLang, "doc_id").staged
+    val s1 = base.join(keepLang, "doc_id").localCheckpoint(false)
     val keepTokens = TextAnalysis.tokenCounts(spark, dir)
       .filter(col("n_tokens") >= 10).select("doc_id")
     val keepQuality = TextAnalysis.qualityScore(spark, dir)
       .filter(col("repetition_ratio") < 0.5).select("doc_id")
     val s2 = s1.join(keepTokens, "doc_id").join(keepQuality, "doc_id")
-      .staged
+      .localCheckpoint(false)
     val keepers = s2.groupBy(md5(col("text")).as("h"))
       .agg(min("doc_id").as("doc_id")).select("doc_id")
-    val s3 = s2.join(keepers, Seq("doc_id"), "left_semi").staged
+    val s3 = s2.join(keepers, Seq("doc_id"), "left_semi").localCheckpoint(false)
     val cand = graft.dedup.Dedup.minhashCandidates(spark, dir)
     val dropped = cand
       .join(s3.select(col("doc_id").as("a")), Seq("a"), "left_semi")
       .select(col("b").as("doc_id")).distinct()
-    val s4 = s3.join(dropped, Seq("doc_id"), "left_anti").staged
+    val s4 = s3.join(dropped, Seq("doc_id"), "left_anti").localCheckpoint(false)
     val withSplit = s4.select(col("nc"),
       TextAnalysis.splitOf(col("doc_id")).as("split"))
     def stageRow(name: String, df: DataFrame): DataFrame =
@@ -618,7 +617,7 @@ object Pipeline {
     * Scale shape: two corpus passes (plain agg + tokenize agg), a
     * distinct-hash agg, and the split counts; all partial+final. */
   def datasetCard(spark: SparkSession, dir: String): DataFrame = {
-    val docs = t(spark, dir, "documents").staged
+    val docs = t(spark, dir, "documents").localCheckpoint(false)
     val base = docs.agg(
       count(lit(1)).as("n_docs"),
       sum(length(col("text")).cast("long")).as("n_chars"),

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Tables.{t, fanOut}
 import graft.functions.Portable
-import graft.Cache.CacheOps
 
 /** Retrieval-style scoring and corpus-hygiene operators for a training-
   * data pipeline: TF-IDF term extraction, BM25 document ranking, PII
@@ -39,7 +38,7 @@ object Retrieval {
     val tf = fanOut(docs.select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks")))
       .select(col("doc_id"), explode(col("toks")).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .staged // feeds both df-agg and the score join
+      .localCheckpoint(false) // feeds both df-agg and the score join
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n"))
     import org.apache.spark.sql.expressions.Window
@@ -92,7 +91,7 @@ object Retrieval {
     val docs = t(spark, dir, "documents")
     val tk = fanOut(docs.select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks")))
       .select(col("doc_id"), col("toks"), size(col("toks")).cast("long").as("dl"))
-      .staged // feeds tf, N/avgdl, and the final join
+      .localCheckpoint(false) // feeds tf, N/avgdl, and the final join
     val stats = tk.agg(count(lit(1)).as("n"), sum(col("dl")).as("sum_dl"))
       .withColumn("avgdl", col("sum_dl").cast("double") / col("n"))
     val tf = tk.select(col("doc_id"), explode(col("toks")).as("term"))
@@ -195,14 +194,14 @@ object Retrieval {
     val grams = fanOut(t(spark, dir, "documents")
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks")))
       .filter(size(col("toks")) >= n)
-      .staged // barrier: keep the split() out of the per-index lambda
+      .localCheckpoint(false) // barrier: keep the split() out of the per-index lambda
       .select(col("doc_id"), explode(array_distinct(
         transform(sequence(lit(1), size(col("toks")) - (n - 1)),
           i => concat_ws(" ", (0 until n).map(j => element_at(col("toks"), i + j)): _*))))
         .as("gram"))
       .withColumn("split",
         when(TextAnalysis.splitHash(col("doc_id")) < 80, "train").otherwise("other"))
-      .staged // feeds the df cap and both join sides
+      .localCheckpoint(false) // feeds the df cap and both join sides
     val rare = grams.groupBy("gram").agg(countDistinct("doc_id").as("gdf"))
       .filter(col("gdf") <= maxGramDf).select("gram")
     val capped = grams.join(rare, "gram")
@@ -289,13 +288,13 @@ object Retrieval {
     val tf = fanOut(docs.select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks")))
       // hard-materialize toks: an inlined tokenizer re-runs per
       // element_at inside the bigram lambda (see Dedup.shingleTable)
-      .staged
+      .localCheckpoint(false)
       .filter(size(col("toks")) >= 2)
       .select(col("doc_id"), explode(
         expr("transform(sequence(1, size(toks) - 1), " +
           "i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1)))")).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .staged // feeds df-agg and the weight join
+      .localCheckpoint(false) // feeds df-agg and the weight join
     val n = docs.agg(count(lit(1)).as("n"))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(n))
@@ -308,7 +307,7 @@ object Retrieval {
         floor(col("w").cast("double") / sqrt(col("nsq").cast("double")) * 10000d + 0.5d)
           .cast("long"))
       .select("doc_id", "term", "u")
-      .staged // quantized index feeds norms and both join sides
+      .localCheckpoint(false) // quantized index feeds norms and both join sides
     val qn = u.groupBy("doc_id").agg(sum(col("u") * col("u")).as("qn"))
     val pairs = u.select(col("doc_id").as("a"), col("term"), col("u").as("ua"))
       .join(u.select(col("doc_id").as("b"), col("term"), col("u").as("ub")), Seq("term"))
@@ -460,13 +459,13 @@ object Retrieval {
   private[graft] def ngramNoveltyFrom(docs: DataFrame): DataFrame = {
     val pairs = docs
       .filter(size(col("toks")) >= 2)
-      .staged // barrier: keep split() out of the per-index lambda
+      .localCheckpoint(false) // barrier: keep split() out of the per-index lambda
       .select(col("doc_id"), explode(array_distinct(
         transform(sequence(lit(1), size(col("toks")) - 1),
           i => Portable.hash60(concat(lit("nov_"), element_at(col("toks"), i),
             lit("_"), element_at(col("toks"), i + 1))))))
         .as("g"))
-      .staged // feeds the df agg and the join side
+      .localCheckpoint(false) // feeds the df agg and the join side
     val gdf = pairs.groupBy("g").agg(count(lit(1)).as("gdf"))
     pairs.join(gdf, "g")
       .groupBy("doc_id")

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Tables.t
 import graft.functions.Portable
-import graft.Cache.CacheOps
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * token statistics, quality scoring, language ID, fingerprinting.
@@ -210,7 +209,7 @@ object TextAnalysis {
       .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
       .select("tok")
-      .staged
+      .localCheckpoint(false)
     def bucket(i: Column, tok: Column): Column =
       pmod(Portable.hash60(concat_ws("_", i, tok)), lit(w.toLong))
     val sketch = toks
@@ -319,7 +318,7 @@ object TextAnalysis {
     val tf = docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .staged // feeds corpus counts AND the score join
+      .localCheckpoint(false) // feeds corpus counts AND the score join
     val corpus = tf.groupBy("term").agg(sum(col("tf")).as("c"))
     val total = corpus.agg(sum(col("c")).as("t"))
     val surprisal = length(bin(expr("(t * 1048576) DIV c"))).cast("long") - 1L

@@ -3,7 +3,6 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Tables.t
-import graft.Cache.CacheOps
 
 /** The tokenizer BAKE-OFF report — the table a pipeline owner reads
   * before picking a tokenizer for a corpus: corpus-level token count,
@@ -40,7 +39,7 @@ object TokenizerCompare {
       .select(explode(TextAnalysis.tokens(col("text"))).as("w"))
       .agg(count(lit(1)).as("n_words"),
         sum(length(col("w")).cast("long")).as("n_chars"))
-      .staged // feeds the chars row and every fertility denominator
+      .localCheckpoint(false) // feeds the chars row and every fertility denominator
     val armRows = Seq(
       ("bpe",
         Bpe.bpeEncodeFrom(docs, memoKey = Some(("text.bpe", graft.Memo.input(dir), "full"))),

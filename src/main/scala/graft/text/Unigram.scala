@@ -3,7 +3,6 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Tables.t
-import graft.Cache.CacheOps
 
 /** Unigram-LM (SentencePiece-style) tokenization as distributed
   * dataflow — the second member of the tokenizer family next to
@@ -127,7 +126,7 @@ object Unigram {
   /** (piece, cnt) → (piece, cnt, q) under the model's own total — the
     * M-step renormalization, exact integer arithmetic. */
   private def withQ(vocab: DataFrame): DataFrame = {
-    val v = vocab.staged
+    val v = vocab.localCheckpoint(false)
     v.crossJoin(broadcast(v.agg(sum(col("cnt")).as("t"))))
       .select(col("piece"), col("cnt"),
         expr(s"(cnt * $scale) div t").as("q"))
@@ -147,7 +146,7 @@ object Unigram {
     * model (piece, cnt, q). Each round's model is a ≤seedK-row frame —
     * localCheckpoint cuts the loop's lineage at O(vocab) cost. */
   private[graft] def trainModel(forms: DataFrame): DataFrame = {
-    val seeds = seedCounts(forms).staged
+    val seeds = seedCounts(forms).localCheckpoint(false)
     val vocab0 = seeds
       .orderBy(desc("cnt"), col("piece")).limit(seedK)
       .unionAll(seeds.filter(length(col("piece")) === 1))
@@ -214,7 +213,7 @@ object Unigram {
     val occ = evalDocs
       .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("w"))
       .groupBy("doc_id", "w").agg(count(lit(1)).as("occ"))
-      .staged
+      .localCheckpoint(false)
     val evalForms = occ.groupBy("w").agg(sum(col("occ")).as("wcnt"))
     // per-form stats: piece count + UNK count (pieces absent from the
     // model — only UNK fallback emissions can be absent)

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Portable
 import graft.operators.Tables.t
-import graft.Cache.CacheOps
 
 /** URL / registered-domain curation operators — the FIRST stage of every
   * CommonCrawl-shaped training-data pipeline: parse each document's URL,
@@ -176,7 +175,7 @@ object UrlCuration {
     val pri = parseUrls(spark, dir)
       .select(col("doc_id"), col("n_chars"), col("registered_domain"),
         h("ucap_", col("doc_id")).as("pri"))
-      .staged // consumed by both the kept ranking and the totals
+      .localCheckpoint(false) // consumed by both the kept ranking and the totals
     val w = Window.partitionBy("registered_domain").orderBy(col("pri"), col("doc_id"))
     val kept = pri.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= DomainCap)

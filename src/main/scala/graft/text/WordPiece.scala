@@ -3,7 +3,6 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Tables.t
-import graft.Cache.CacheOps
 
 /** WordPiece (BERT-style) tokenization as distributed dataflow — the
   * third member of the tokenizer family next to [[Bpe]] (merge replay)
@@ -155,7 +154,7 @@ object WordPiece {
     val occ = evalDocs
       .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("w"))
       .groupBy("doc_id", "w").agg(count(lit(1)).as("occ"))
-      .staged
+      .localCheckpoint(false)
     val formStats = occ.select(col("w")).distinct()
       .crossJoin(broadcast(vocab.agg(
         map_from_entries(collect_list(struct(col("piece"), col("cnt")))).as("vm"))))

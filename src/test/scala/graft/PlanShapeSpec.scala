@@ -252,22 +252,34 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       p.take(1500))
     assert(p.contains("LeftSemi"), p.take(1500))
-    // ... and on the memoized frame triShared returns, the one
-    // graph_triangles reads: a persist-mode child session stages it as
-    // an InMemoryRelation whose cached plan stays visible (a checkpoint
-    // hides it), and has its own memo entry
+    // ... and on the plan triShared itself checkpoints, the one
+    // graph_triangles reads: the lazy checkpoint hides it from the
+    // returned frame, so a listener records the localCheckpoint
+    // action's QueryExecution (a child session has its own memo entry)
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
     val ps = spark.newSession()
-    ps.conf.set(graft.Cache.ConfKey, "persist")
+    val checkpointed = scala.collection.mutable.ArrayBuffer.empty[QueryExecution]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") checkpointed.synchronized(checkpointed += qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ps.listenerManager.register(listener)
     try {
       val (_, shared) = graft.sim.GraphOps.triShared(ps, sf("sf0.001"), 16)
-      val sp = planString(shared)
-      assert(sp.contains("InMemoryRelation"), sp.take(1500))
+      org.apache.spark.ListenerFlush(ps.sparkContext)
+      val qe = checkpointed.synchronized(checkpointed.lastOption)
+        .getOrElse(fail("triShared took no localCheckpoint"))
+      assert(qe.analyzed.output.map(_.name) === shared.columns.toSeq)
+      val sp = qe.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       assert(!sp.contains("CartesianProduct") && !sp.contains("BroadcastNestedLoopJoin"),
         sp.take(1500))
       assert(sp.contains("LeftSemi"), sp.take(1500))
     } finally {
+      ps.listenerManager.unregister(listener)
       graft.Memo.evictAll(ps)
-      ps.sharedState.cacheManager.clearCache()
     }
   }
 

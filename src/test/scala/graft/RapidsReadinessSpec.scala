@@ -98,19 +98,19 @@ class RapidsReadinessSpec extends SparkSpec {
     "dedup_minhash_est" -> Set("rdd-segment"),
     "dedup_neardup_clusters" -> Set("rdd-segment"),
     "dedup_repeated_spans" -> Set("higher-order-function", "rdd-segment"),
-    // gram explode's HOF sits upstream of the staged grams barrier, so
-    // checkpoint mode sees only the rdd segment
+    // gram explode's HOF sits upstream of the grams checkpoint, so the
+    // audit sees only the rdd segment
     "dedup_substring_spans" -> Set("rdd-segment"),
     "dedup_substring_cjk" -> Set("rdd-segment"),
     "dedup_substring_share" -> Set("rdd-segment"),
     "dedup_substring_removal" -> Set("rdd-segment"),
-    // the eval-gram side is un-staged (single consumer), so its
-    // transform/slice HOF stays visible even in checkpoint mode
+    // the eval-gram side is not checkpointed (single consumer), so its
+    // transform/slice HOF stays visible
     "dedup_contamination_mask" -> Set("rdd-segment", "higher-order-function"),
     "dedup_simhash" -> Set("higher-order-function"),
     "dedup_soft_weights" -> Set("higher-order-function"),
-    // near-dup soft weights: clusters ride the staged candidate frames;
-    // the token-count side's transform/filter HOF is un-staged
+    // near-dup soft weights: clusters ride the checkpointed candidate
+    // frames; the token-count side's transform/filter HOF is not
     "dedup_soft_weights_near" -> Set("rdd-segment", "higher-order-function"),
     "dedup_simhash_incremental" -> Set("bit-count", "rdd-segment"),
     "dedup_simhash_pairs" -> Set("bit-count", "rdd-segment"),
@@ -183,7 +183,7 @@ class RapidsReadinessSpec extends SparkSpec {
     "sample_cluster_balanced" -> Set("custom-expression", "higher-order-function", "rdd-segment"),
     "sample_kcenter" -> Set("rdd-segment"),
     "sim_lsh_signatures" -> Set("custom-expression", "higher-order-function"),
-    // the greedy loop's final .staged barrier is the whole visible plan
+    // the greedy loop's final lineage cut is the whole visible plan
     "sim_mmr_rerank" -> Set("rdd-segment"),
     "sim_mrl_recall" -> Set("custom-expression", "higher-order-function"),
     "sim_neardup_incremental" -> Set("custom-expression", "rdd-segment"),
@@ -214,13 +214,13 @@ class RapidsReadinessSpec extends SparkSpec {
     "sim_pca_power" -> Set("rdd-segment"),
     "sim_pca_explained" -> Set("rdd-segment"),
     "sim_anisotropy_report" -> Set("rdd-segment"),
-    // the staged barrier added by the 64x per-pair-recompute fix
+    // the barrier added by the 64x per-pair-recompute fix
     "sim_random_projection" -> Set("higher-order-function", "rdd-segment"),
     "stat_spearman" -> Set("higher-order-function"),
     "stat_ols_fit" -> Set("higher-order-function"),
     // the k-term ordered double fold (determinism fix: parallel sum
-    // reassociation was flaky) is a HOF in both modes; the old staged
-    // barrier is gone with the crossJoin it served
+    // reassociation was flaky) is a HOF; the old barrier is gone with
+    // the crossJoin it served
     "stat_anova_f" -> Set("higher-order-function"),
     "dq_chi2_independence" -> Set("rdd-segment"),
     "src_generator_pushdown" -> Set("custom-source"),
@@ -249,7 +249,7 @@ class RapidsReadinessSpec extends SparkSpec {
     "text_wordpiece_encode_heldout" -> Set("higher-order-function", "rdd-segment"),
     "text_tokenizer_compare" -> Set("higher-order-function", "rdd-segment"),
     // the tokenizer HOF sits UPSTREAM of the tf/bigram stage barrier, so
-    // checkpoint mode sees only the post-barrier bin (LM weights)
+    // the audit sees only the post-barrier bin (LM weights)
     "text_nb_quality" -> Set("bin", "rdd-segment"),
     "text_nb_confusion" -> Set("bin", "rdd-segment"),
     "text_nb_calibration" -> Set("bin", "rdd-segment"),
@@ -272,183 +272,12 @@ class RapidsReadinessSpec extends SparkSpec {
     "text_trigram_stats" -> Set("higher-order-function"),
     "text_repetition_stats" -> Set("higher-order-function"),
     "window_active_users" -> Set("rdd-segment"),
-    // the cap's priority frame is .staged (ranking + totals consumers);
-    // everything in it is string/hash builtins, clean under persist
+    // the cap's priority frame is checkpointed (ranking + totals
+    // consumers); everything behind it is string/hash builtins
     "url_domain_cap" -> Set("rdd-segment"),
     "url_lang_mix" -> Set("bin"),
     "sim_hard_negatives" -> Set("custom-expression", "higher-order-function"),
     "retrieval_rrf_fusion" -> Set("custom-expression", "higher-order-function", "rdd-segment"))
-
-  /** Persist-mode classification (spark.graft.cache=persist — the
-    * RAPIDS-ready columnar-cache deploy form, graft.Cache): reuse
-    * barriers become InMemoryRelations, so (a) the rdd-segment class
-    * collapses to the SEVEN queries consuming an iterative drain's
-    * lineage cuts (k-means Lloyd rounds / BPE merge rounds — documented
-    * in graft.Cache as deliberately mode-independent), and (b) triggers
-    * UPSTREAM of a barrier, invisible behind checkpoint mode's opaque
-    * LogicalRDD, surface through the audited cached plan — which is why
-    * several sets here are supersets of their checkpoint-mode sets.
-    * Queries not listed are fully clean under persist mode. */
-  private val persistFlagged: Map[String, Set[String]] = Map(
-    "stat_anova_f" -> Set("higher-order-function"), // ordered-fold determinism fix
-    "agg_bitmap_distinct" -> Set("bit-count"),
-    "agg_hll_distinct" -> Set("bin"),
-    "agg_hll_cumulative" -> Set("bin"),
-    "agg_hll_groups" -> Set("bin"),
-    "dedup_containment" -> Set("higher-order-function"),
-    "dedup_winnowing" -> Set("higher-order-function"),
-    "dedup_cdc_chunks" -> Set("higher-order-function"),
-    "dedup_bbit_minhash" -> Set("higher-order-function", "bit-count"),
-    "dedup_decontaminate" -> Set("higher-order-function"),
-    "dedup_edit_verify" -> Set("higher-order-function"),
-    "dedup_golden_record" -> Set("higher-order-function"),
-    "dedup_incremental" -> Set("higher-order-function"),
-    "dedup_jaccard_pairs" -> Set("higher-order-function"),
-    "dedup_threshold_curve" -> Set("higher-order-function"),
-    "dedup_minhash_bands" -> Set("higher-order-function"),
-    "dedup_minhash_candidates" -> Set("higher-order-function"),
-    "dedup_minhash_cjk" -> Set("higher-order-function"),
-    "dedup_minhash_est" -> Set("higher-order-function"),
-    "dedup_neardup_clusters" -> Set("higher-order-function"),
-    "dedup_repeated_spans" -> Set("higher-order-function"),
-    "dedup_substring_spans" -> Set("higher-order-function"),
-    "dedup_substring_cjk" -> Set("higher-order-function"),
-    "dedup_substring_share" -> Set("higher-order-function"),
-    "dedup_substring_removal" -> Set("higher-order-function"),
-    "dedup_contamination_mask" -> Set("higher-order-function"),
-    "dedup_simhash" -> Set("higher-order-function"),
-    "dedup_soft_weights" -> Set("higher-order-function"),
-    "dedup_soft_weights_near" -> Set("higher-order-function"),
-    "dedup_simhash_incremental" -> Set("bit-count", "higher-order-function"),
-    "dedup_simhash_pairs" -> Set("bit-count", "higher-order-function"),
-    "fn_array_ops" -> Set("higher-order-function"),
-    "dq_category_pmi" -> Set("bin"),
-    "mm_decode_real" -> Set("object-node", "jvm-invoke"),
-    "mm_decode_audio_real" -> Set("object-node", "jvm-invoke"),
-    "mm_frame_sample_real" -> Set("object-node", "jvm-invoke"),
-    "mm_decode_summary" -> Set("object-node", "jvm-invoke"),
-    "mm_frame_sample" -> Set("object-node", "jvm-invoke"),
-    "mm_neardup_pairs" -> Set("bit-count"),
-    "mm_neardup_real" -> Set("object-node", "jvm-invoke", "bit-count"),
-    "mm_resize_real" -> Set("object-node", "jvm-invoke"),
-    "url_lang_mix" -> Set("bin"),
-    // graph drains: per-round Cache.cut lineage cuts (round 12 —
-    // measured 3-16x persist-mode inflation from nested round plans)
-    "graph_betweenness" -> Set("rdd-segment"),
-    "graph_label_prop" -> Set("rdd-segment"),
-    "graph_bfs_layers" -> Set("rdd-segment"),
-    "graph_concomp" -> Set("rdd-segment"),
-    "graph_concomp_doubling" -> Set("rdd-segment"),
-    "graph_kcore" -> Set("rdd-segment"),
-    "mm_resize_meta" -> Set("object-node", "jvm-invoke"),
-    "pipeline_chunk_overlap" -> Set("higher-order-function"),
-    "pipeline_span_corruption" -> Set("higher-order-function"),
-    "pipeline_dataset_card" -> Set("higher-order-function"),
-    "pipeline_cluster_quality" -> Set("custom-expression", "higher-order-function", "rdd-segment"),
-    "pipeline_curation" -> Set("higher-order-function"),
-    "pipeline_global_shuffle" -> Set("higher-order-function"),
-    "pipeline_dsir_select" -> Set("bin", "higher-order-function"),
-    "pipeline_leakage_split" -> Set("higher-order-function"),
-    "pipeline_length_buckets" -> Set("higher-order-function", "bin"),
-    "pipeline_mix_resample" -> Set("higher-order-function"),
-    "pipeline_pack_sequences" -> Set("higher-order-function"),
-    "pipeline_quality_sweep" -> Set("higher-order-function", "bin"),
-    "retrieval_rrf_fusion" -> Set("custom-expression", "higher-order-function"),
-    "sample_cluster_balanced" -> Set("custom-expression", "higher-order-function", "rdd-segment"),
-    "sample_kcenter" -> Set("custom-expression", "higher-order-function"),
-    "sim_ann_lsh" -> Set("custom-expression", "higher-order-function"),
-    "sim_ann_multiprobe" -> Set("custom-expression", "higher-order-function"),
-    "sim_ann_recall" -> Set("custom-expression", "higher-order-function"),
-    "sim_bq_topk" -> Set("custom-expression", "higher-order-function", "bit-count"),
-    "sim_bq_recall" -> Set("custom-expression", "higher-order-function", "bit-count"),
-    "sim_ivfbq_topk" -> Set("custom-expression", "higher-order-function", "bit-count", "rdd-segment"),
-    "sim_ivfbq_recall" -> Set("custom-expression", "higher-order-function", "bit-count", "rdd-segment"),
-    "sim_cosine_topk" -> Set("custom-expression", "higher-order-function"),
-    "sim_embed_quantize" -> Set("higher-order-function"),
-    "sim_hard_negatives" -> Set("custom-expression", "higher-order-function"),
-    "sim_ivf_recall" -> Set("custom-expression", "higher-order-function"),
-    "sim_ivf_topk" -> Set("custom-expression", "higher-order-function"),
-    "sim_ivf_trained" -> Set("custom-expression", "higher-order-function", "rdd-segment"),
-    "sim_ivf_probe_curve" -> Set("custom-expression", "higher-order-function", "rdd-segment"),
-    "sim_kmeans" -> Set("custom-expression", "higher-order-function", "rdd-segment"),
-    "sim_kmeans_incremental" -> Set("custom-expression", "higher-order-function", "rdd-segment"),
-    "sim_lsh_signatures" -> Set("custom-expression", "higher-order-function"),
-    "sim_mrl_recall" -> Set("custom-expression", "higher-order-function"),
-    "sim_neardup_incremental" -> Set("custom-expression", "higher-order-function"),
-    // greedy rounds cut per round (graft.Cache iterative-drain rule);
-    // the final cut is the whole visible plan in both modes
-    "sim_mmr_rerank" -> Set("rdd-segment"),
-    "sim_neardup_pairs" -> Set("custom-expression", "higher-order-function"),
-    // nndescent build rounds cut per round in both modes (Cache.cut)
-    "sim_nndescent_graph" -> Set("rdd-segment"),
-    "sim_nndescent_topk" -> Set("rdd-segment"),
-    "sim_nndescent_recall" -> Set("rdd-segment"),
-    "sim_nndescent_beam_curve" -> Set("rdd-segment"),
-    "sim_nndescent_insert" -> Set("rdd-segment"),
-    "sim_nndescent_insert_recall" -> Set("custom-expression", "higher-order-function", "rdd-segment"),
-    "sim_pq_topk" -> Set("custom-expression", "higher-order-function", "rdd-segment"),
-    "sim_pq_recall" -> Set("custom-expression", "higher-order-function", "rdd-segment"),
-    "sim_ivfpq_topk" -> Set("custom-expression", "higher-order-function", "rdd-segment"),
-    "sim_ivfpq_recall" -> Set("custom-expression", "higher-order-function", "rdd-segment"),
-    "sim_ivfadc_topk" -> Set("custom-expression", "higher-order-function", "rdd-segment"),
-    "sim_ivfadc_recall" -> Set("custom-expression", "higher-order-function", "rdd-segment"),
-    "sim_opq_topk" -> Set("custom-expression", "higher-order-function", "rdd-segment"),
-    "sim_opq_recall" -> Set("custom-expression", "higher-order-function", "rdd-segment"),
-    "sim_ann_probe_curve" -> Set("custom-expression", "higher-order-function"),
-    // the power-iteration loop's per-round cuts are mode-independent
-    // drain cuts (Cache.cut) since round 12; pca_power's output derives
-    // wholly from the cut iterate, so the upstream HOF is behind it
-    "sim_pca_power" -> Set("rdd-segment"),
-    "sim_pca_explained" -> Set("higher-order-function", "rdd-segment"),
-    "sim_anisotropy_report" -> Set("higher-order-function", "rdd-segment"),
-    "sim_random_projection" -> Set("higher-order-function"),
-    "stat_spearman" -> Set("higher-order-function"),
-    "stat_ols_fit" -> Set("higher-order-function"),
-    "src_generator_pushdown" -> Set("custom-source"),
-    "fn_catalog_v2" -> Set("jvm-invoke"),
-    "t8_collect_renumber" -> Set("rdd-segment", "jvm-invoke"),
-    "sim_label_centroids" -> Set("higher-order-function"),
-    "text_zipf_fit" -> Set("higher-order-function", "bin"),
-    "sim_pq_incremental" -> Set("custom-expression", "higher-order-function", "rdd-segment"),
-    "sim_semdedup" -> Set("custom-expression", "higher-order-function", "rdd-segment"),
-    "text_bm25_rank" -> Set("higher-order-function"),
-    "text_keyword_rake" -> Set("higher-order-function"),
-    "text_token_fertility" -> Set("higher-order-function", "rdd-segment"),
-    "text_bpe_counts" -> Set("higher-order-function", "rdd-segment"),
-    "text_bpe_merges" -> Set("higher-order-function", "rdd-segment"),
-    "text_bpe_vocab" -> Set("rdd-segment"),
-    "text_bpe_encode" -> Set("higher-order-function", "rdd-segment"),
-    // bytebpe pretokens are regexp_extract_all (not an HOF); the form
-    // table's drain cut is the only trigger in both modes
-    "text_bytebpe_encode" -> Set("rdd-segment"),
-    "text_bpe_encode_heldout" -> Set("higher-order-function", "rdd-segment"),
-    "text_unigram_train" -> Set("rdd-segment"),
-    "text_unigram_encode" -> Set("higher-order-function", "rdd-segment"),
-    "text_unigram_encode_heldout" -> Set("higher-order-function", "rdd-segment"),
-    "text_wordpiece_vocab" -> Set("higher-order-function", "rdd-segment"),
-    "text_wordpiece_encode" -> Set("higher-order-function", "rdd-segment"),
-    "text_wordpiece_encode_heldout" -> Set("higher-order-function", "rdd-segment"),
-    "text_tokenizer_compare" -> Set("higher-order-function", "rdd-segment"),
-    "text_char_entropy" -> Set("bin"),
-    "text_cosine_pairs" -> Set("higher-order-function"),
-    "text_countmin_est" -> Set("higher-order-function"),
-    "text_unicode_normalize" -> Set("custom-expression"),
-    "text_fingerprint" -> Set("higher-order-function"),
-    "text_heavy_hitters" -> Set("higher-order-function"),
-    "text_lang_id" -> Set("higher-order-function"),
-    "text_mix_report" -> Set("higher-order-function"),
-    "text_ngram_novelty" -> Set("higher-order-function"),
-    "text_vocab_coverage" -> Set("higher-order-function"),
-    "text_nb_quality" -> Set("higher-order-function", "bin"),
-    "text_nb_confusion" -> Set("higher-order-function", "bin"),
-    "text_nb_calibration" -> Set("higher-order-function", "bin"),
-    "text_bigram_perplexity" -> Set("higher-order-function", "bin"),
-    "text_perplexity" -> Set("bin", "higher-order-function"),
-    "text_quality_score" -> Set("higher-order-function"),
-    "text_repetition_stats" -> Set("higher-order-function"),
-    "text_tfidf_top" -> Set("higher-order-function"),
-    "text_token_counts" -> Set("higher-order-function"),
-    "text_trigram_stats" -> Set("higher-order-function"))
 
   /** Classified by documentation (construction executes work):
     * streaming (stateful operators are CPU per the docs) and the aria
@@ -482,74 +311,6 @@ class RapidsReadinessSpec extends SparkSpec {
       if (got == want) None else Some(s"$n: want $want, got $got")
     }
     assert(bad.isEmpty, bad.mkString("\n"))
-  }
-
-  test("persist mode: rdd-segment collapses to the documented drain cuts") {
-    val p = spark.newSession()
-    p.conf.set(graft.Cache.ConfKey, "persist")
-    try {
-      val dir = sf("sf0.001")
-      val names = SparkEntry.queries.keySet.toSeq.sorted.filterNot(byDocumentation)
-      assert((persistFlagged.keySet -- names).isEmpty,
-        s"stale persist entries: ${persistFlagged.keySet -- names.toSet}")
-      val bad = names.flatMap { n =>
-        val got = graft.plans.RapidsAudit.flags(SparkEntry.queries(n)(p, dir)).toSet
-        val want = persistFlagged.getOrElse(n, Set.empty)
-        if (got == want) None else Some(s"$n: want $want, got $got")
-      }
-      assert(bad.isEmpty, bad.mkString("\n"))
-      // the headline: the row-based segment class is gone except where an
-      // iterative drain's lineage cut is semantic (graft.Cache scaladoc)
-      // t8's ExternalRDD renumber is mode-independent (it IS an RDD op,
-      // not a cache barrier) — it joins the drain cuts here
-      val rddSeg = persistFlagged.filter(_._2.contains("rdd-segment")).keySet
-      assert(rddSeg == Set("t8_collect_renumber",
-        "pipeline_cluster_quality", "sample_cluster_balanced",
-        "sim_ivf_trained", "sim_kmeans", "sim_kmeans_incremental",
-        "sim_pq_topk", "sim_pq_recall", "sim_pq_incremental",
-        "sim_ivfpq_topk", "sim_ivfpq_recall",
-        "sim_ivfadc_topk", "sim_ivfadc_recall",
-        "sim_opq_topk", "sim_opq_recall",
-        "sim_ivfbq_topk", "sim_ivfbq_recall",
-        "sim_ivf_probe_curve",
-        "sim_mmr_rerank",
-        "sim_nndescent_graph", "sim_nndescent_topk",
-        "sim_nndescent_recall", "sim_nndescent_beam_curve",
-        "sim_nndescent_insert", "sim_nndescent_insert_recall",
-        "sim_semdedup", "text_token_fertility",
-        "text_bpe_counts", "text_bpe_merges",
-        "text_bpe_vocab", "text_bpe_encode", "text_bpe_encode_heldout",
-        "text_bytebpe_encode",
-        "text_unigram_train", "text_unigram_encode",
-        "text_unigram_encode_heldout",
-        // wordpiece: Bpe.formTable's localCheckpoint persists in both modes
-        "text_wordpiece_vocab", "text_wordpiece_encode",
-        "text_wordpiece_encode_heldout", "text_tokenizer_compare",
-        // round-12 drain cuts: the graph/PCA round loops now cut
-        // per round in both modes (Cache.cut scaladoc; 3-16x
-        // persist-mode inflation measured before the cuts)
-        "graph_betweenness", "graph_bfs_layers", "graph_concomp",
-        "graph_concomp_doubling", "graph_kcore", "graph_label_prop",
-        "sim_pca_power", "sim_pca_explained", "sim_anisotropy_report"))
-    } finally p.sharedState.cacheManager.clearCache()
-  }
-
-  test("the detector sees through a persist-mode barrier") {
-    import org.apache.spark.sql.functions._
-    val p = spark.newSession()
-    p.conf.set(graft.Cache.ConfKey, "persist")
-    try {
-      val df = p.range(4)
-        .select(col("id"), array(col("id"), col("id") + 1).as("xs"))
-        .select(col("id"), transform(col("xs"), x => x + 1).as("ys"))
-      val staged = graft.Cache.stage(df).select(sum(col("id")).as("s"))
-      val f = graft.plans.RapidsAudit.flags(staged)
-      // the barrier is an InMemoryRelation (no row-based segment)...
-      assert(!f.contains("rdd-segment"), f)
-      // ...and the trigger UPSTREAM of it stays visible, which a
-      // checkpoint-mode LogicalRDD hides by construction
-      assert(f.contains("higher-order-function"), f)
-    } finally p.sharedState.cacheManager.clearCache()
   }
 
   test("the detector actually fires on each trigger class") {

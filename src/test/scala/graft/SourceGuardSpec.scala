@@ -4,10 +4,12 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-scan guard: session-keyed memo maps live only in graft.Memo
-  * and SparkSession builders only in graft.Session, so a per-object
-  * copy of either mechanism cannot creep back in. Comment lines are
-  * skipped (the GraftExtensions scaladoc shows a builder by example). */
+/** Source-scan guard: session-keyed memo maps live only in graft.Memo,
+  * SparkSession builders only in graft.Session, and the one reuse
+  * barrier is `localCheckpoint`, so a per-object copy of either
+  * mechanism or a second barrier cannot creep back in. Comment lines
+  * are skipped (the GraftExtensions scaladoc shows a builder by
+  * example). */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val sources: Seq[Path] = {
@@ -16,12 +18,13 @@ class SourceGuardSpec extends AnyFunSuite {
     finally walk.close()
   }
 
-  /** (file:line, text) of every non-comment line matching `pattern`
-    * outside `home`. */
-  private def hits(pattern: String, home: String): Seq[String] = {
+  /** (file:line, text) of every non-comment line under `under`
+    * matching `pattern` outside `home`. */
+  private def hits(pattern: String, home: String = "",
+                   under: String = "src"): Seq[String] = {
     val re = pattern.r
     for {
-      p <- sources if !p.endsWith(home)
+      p <- sources if p.startsWith(under) && (home.isEmpty || !p.endsWith(home))
       (line, n) <- Files.readAllLines(p).asScala.zipWithIndex
       code = line.trim if !code.startsWith("*") && !code.startsWith("//")
       if re.findFirstIn(code).isDefined
@@ -39,5 +42,12 @@ class SourceGuardSpec extends AnyFunSuite {
 
   test("no SparkSession builder outside graft/Session.scala") {
     assert(hits("""SparkSession\s*\.\s*builder\b""", "graft/Session.scala").isEmpty)
+  }
+
+  test("src/main has one reuse barrier: no persist, cache or barrier aliases") {
+    val found = hits(
+      """\.persist\s*\(|\.cache\s*\(\s*\)|\bStorageLevel\b|\.staged\b|\.cutRound\b|\bSPARK_GRAFT_CACHE\b""",
+      under = "src/main")
+    assert(found.isEmpty, found.mkString("\n"))
   }
 }

@@ -11,8 +11,6 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  // SPARK_GRAFT_CACHE=persist runs the whole suite in the RAPIDS-ready
-  // columnar-cache mode (graft.Cache)
   lazy val session: SparkSession = {
     val s = Session.local("graft-test", cpus = 4)
     s.sparkContext.setLogLevel("ERROR")
