@@ -149,26 +149,32 @@ object AriaQueries {
   // and to keep DuckDB from re-expanding the parquet scan per reference.
   private val unrollEpochs = 12
 
+  /** The unrolled epoch chain `ops_<mode>_e` → `res` → `flg` → `ab` →
+    * `ops_<mode>_{e+1}`, ending in `stats_<mode>` (epoch, txns,
+    * committed, aborted). Reservations and hazards key on `keys` — the
+    * single table's `key`, or (tbl, key) for the multi-table drain. */
   private def drainChainSql(mode: String, reorder: Boolean,
-      opsSrc: String = defaultOpsSrc, nTxns0: Int = cfg.nTxns): Seq[String] = {
+      opsSrc: String = defaultOpsSrc, nTxns0: Int = cfg.nTxns,
+      keys: Seq[String] = Seq("key")): Seq[String] = {
     val dec = if (reorder) "(waw OR (raw AND war))" else "(raw OR waw)"
+    val k = keys.mkString(", ")
     val head = Seq(s"ops_${mode}_0 AS MATERIALIZED (\n$opsSrc)")
     val epochs = (0 until unrollEpochs).flatMap { e =>
       Seq(
         s"""res_${mode}_$e AS (
-           |  SELECT key, min(tid) AS rts,
+           |  SELECT $k, min(tid) AS rts,
            |         coalesce(min(CASE WHEN isUpdate THEN tid END), 0) AS wts
-           |  FROM ops_${mode}_$e GROUP BY key)""".stripMargin,
+           |  FROM ops_${mode}_$e GROUP BY $k)""".stripMargin,
         s"""flg_${mode}_$e AS MATERIALIZED (
            |  SELECT tid, bool_or(wts <> 0 AND wts < tid) AS raw,
            |         bool_or(isUpdate AND rts < tid) AS war,
            |         bool_or(isUpdate AND wts <> 0 AND wts < tid) AS waw
-           |  FROM ops_${mode}_$e JOIN res_${mode}_$e USING (key) GROUP BY tid)""".stripMargin,
+           |  FROM ops_${mode}_$e JOIN res_${mode}_$e USING ($k) GROUP BY tid)""".stripMargin,
         s"""ab_${mode}_$e AS MATERIALIZED (
            |  SELECT tid, row_number() OVER (ORDER BY tid) AS new_tid
            |  FROM flg_${mode}_$e WHERE $dec)""".stripMargin,
         s"""ops_${mode}_${e + 1} AS MATERIALIZED (
-           |  SELECT ab.new_tid AS tid, o.epoch + 1 AS epoch, o.opIdx, o.key, o.isUpdate
+           |  SELECT ab.new_tid AS tid, o.epoch + 1 AS epoch, o.opIdx, ${keys.map("o." + _).mkString(", ")}, o.isUpdate
            |  FROM ops_${mode}_$e o JOIN ab_${mode}_$e ab ON o.tid = ab.tid)""".stripMargin)
     }
     val statRows = (0 until unrollEpochs).map { e =>
@@ -184,6 +190,33 @@ object AriaQueries {
 
   /** The single-table epoch-0 batch restricted to present keys — the
     * default ops_0 source of [[drainChainSql]]. */
+  /** Every epoch's committed writes of a [[drainChainSql]] chain, as
+    * (keys…, epoch, tid, opIdx) rows; `cond(e)` may restrict epoch e. */
+  private def committedSql(mode: String, keys: Seq[String] = Seq("key"),
+      cond: Int => String = _ => ""): String =
+    (0 until unrollEpochs).map { e =>
+      s"""SELECT ${keys.map("o." + _).mkString(", ")}, o.epoch, o.tid, o.opIdx
+         |FROM ops_${mode}_$e o JOIN flg_${mode}_$e f USING (tid)
+         |WHERE NOT (f.raw OR f.waw) AND o.isUpdate${cond(e)}""".stripMargin
+    }.mkString("\nUNION ALL\n")
+
+  /** Field `f$i` of a final-table row: the winning write's md5 payload
+    * (aliases `w`, the winner, and `k`, the regenerated key row), else
+    * the load payload of the key `loadKey` renders — the same strings
+    * Workload.writePayload/kvTable produce. */
+  private def payloadSql(seed: Long, loadKey: String, i: Int): String =
+    s"""CASE WHEN w.key IS NULL THEN substr(md5('${seed}_load_' || $loadKey || '_$i'), 1, 10)
+       |     ELSE substr(md5('${seed}_write_' || w.epoch || '_' || w.tid || '_' || w.opIdx || '_$i'), 1, 10) END""".stripMargin
+
+  /** The three payload fields every final-table oracle checksums. */
+  private def payloadsSql(seed: Long, loadKey: String): String =
+    Seq(0, 4, 9).map(i => s"         ${payloadSql(seed, loadKey, i)} AS f$i").mkString(",\n")
+
+  /** Order-free table checksum: bit_xor of the md5-portable hash60 of
+    * `cols` joined by '_' (Spark: Portable.hash60(concat_ws("_", …))). */
+  private def checksumSql(cols: Seq[String]): String =
+    s"bit_xor(('0x' || substr(md5(${cols.mkString(" || '_' || ")}), 1, 15))::BIGINT) AS table_checksum"
+
   private def defaultOpsSrc: String =
     """  SELECT tid, epoch, opIdx, key, isUpdate
       |  FROM read_parquet('__ARIA_DIR__/aria_epoch0_ops/*.parquet')
@@ -213,16 +246,8 @@ object AriaQueries {
     * committed writer per key is unique). Payload fields are the same
     * md5 strings Workload.writePayload/kvTable produce. */
   val finalTableSql: String = {
-    def payload(i: Int): String =
-      s"""CASE WHEN w.key IS NULL THEN substr(md5('${cfg.seed}_load_' || k.key || '_$i'), 1, 10)
-         |     ELSE substr(md5('${cfg.seed}_write_' || w.epoch || '_' || w.tid || '_' || w.opIdx || '_$i'), 1, 10) END""".stripMargin
-    val cw = (0 until unrollEpochs).map { e =>
-      s"""SELECT o.key, o.epoch, o.tid, o.opIdx
-         |FROM ops_nr_$e o JOIN flg_nr_$e f USING (tid)
-         |WHERE NOT (f.raw OR f.waw) AND o.isUpdate""".stripMargin
-    }
     s"""WITH ${drainChainSql("nr", reorder = false).mkString(",\n")},
-       |cw AS (${cw.mkString("\nUNION ALL\n")}),
+       |cw AS (${committedSql("nr")}),
        |win AS (
        |  SELECT key, epoch, tid, opIdx,
        |         row_number() OVER (PARTITION BY key ORDER BY epoch DESC, opIdx DESC) AS rn
@@ -230,14 +255,12 @@ object AriaQueries {
        |),
        |fin AS (
        |  SELECT k.key,
-       |         ${payload(0)} AS f0,
-       |         ${payload(4)} AS f4,
-       |         ${payload(9)} AS f9
+       |${payloadsSql(cfg.seed, "k.key")}
        |  FROM read_parquet('__ARIA_DIR__/aria_epoch0_keys/*.parquet') k
        |  LEFT JOIN (SELECT * FROM win WHERE rn = 1) w ON k.key = w.key
        |)
        |SELECT count(*)::BIGINT AS n_rows,
-       |       bit_xor(('0x' || substr(md5(key || '_' || f0 || '_' || f4 || '_' || f9), 1, 15))::BIGINT) AS table_checksum
+       |       ${checksumSql(Seq("key", "f0", "f4", "f9"))}
        |FROM fin""".stripMargin
   }
 
@@ -296,15 +319,8 @@ object AriaQueries {
       """  SELECT tid, epoch, opIdx, key, isUpdate
         |  FROM read_parquet('__ARIA_DIR__/aria_fb_ops/*.parquet')""".stripMargin
     val thr = fbCfg.fallbackCommitRate
-    def payload(i: Int): String =
-      s"""CASE WHEN w.key IS NULL THEN substr(md5('${fbCfg.seed}_load_' || k.key || '_$i'), 1, 10)
-         |     ELSE substr(md5('${fbCfg.seed}_write_' || w.epoch || '_' || w.tid || '_' || w.opIdx || '_$i'), 1, 10) END""".stripMargin
-    val cw = (0 until unrollEpochs).map { e =>
-      s"""SELECT o.key, o.epoch, o.tid, o.opIdx
-         |FROM ops_fb_$e o JOIN flg_fb_$e f USING (tid)
-         |WHERE NOT (f.raw OR f.waw) AND o.isUpdate
-         |  AND $e <= coalesce((SELECT f FROM trig), ${unrollEpochs + 1})""".stripMargin
-    }
+    val cw = committedSql("fb", cond = e =>
+      s"\n  AND $e <= coalesce((SELECT f FROM trig), ${unrollEpochs + 1})")
     val fbw = (1 to unrollEpochs).map { e =>
       s"""SELECT key, epoch, tid, opIdx FROM ops_fb_$e
          |WHERE isUpdate AND $e = (SELECT f FROM trig) + 1""".stripMargin
@@ -319,7 +335,7 @@ object AriaQueries {
        |  UNION ALL
        |  SELECT s.epoch + 1, s.aborted, s.aborted, CAST(0 AS BIGINT)
        |  FROM stats_fb s WHERE s.epoch = (SELECT f FROM trig)),
-       |cw_fb AS (${cw.mkString("\nUNION ALL\n")}),
+       |cw_fb AS ($cw),
        |fbw AS (${fbw.mkString("\nUNION ALL\n")}),
        |win_fb AS (
        |  SELECT key, epoch, tid, opIdx,
@@ -329,14 +345,12 @@ object AriaQueries {
        |keys_fb AS (SELECT (k + 1)::INT AS key FROM range(${fbCfg.tableKeys}) t(k)),
        |fin_fb AS (
        |  SELECT k.key,
-       |         ${payload(0)} AS f0,
-       |         ${payload(4)} AS f4,
-       |         ${payload(9)} AS f9
+       |${payloadsSql(fbCfg.seed, "k.key")}
        |  FROM keys_fb k
        |  LEFT JOIN (SELECT * FROM win_fb WHERE rn = 1) w ON k.key = w.key),
        |sum_fb AS (
        |  SELECT count(*)::BIGINT AS n_rows,
-       |         bit_xor(('0x' || substr(md5(key || '_' || f0 || '_' || f4 || '_' || f9), 1, 15))::BIGINT) AS table_checksum
+       |         ${checksumSql(Seq("key", "f0", "f4", "f9"))}
        |  FROM fin_fb)
        |SELECT CAST(s.epoch AS INT) AS epoch, s.txns, s.committed, s.aborted,
        |       m.n_rows, m.table_checksum
@@ -400,45 +414,11 @@ object AriaQueries {
     * (tbl, key) reservations/hazards/installs, ending in per-table
     * checksums over regenerated dense keys. */
   val multiTableSql: String = {
-    val dec = "(raw OR waw)"
-    val head =
-      s"""ops_mt_0 AS MATERIALIZED (
-         |  SELECT tid, epoch, opIdx, tbl, key, isUpdate
-         |  FROM read_parquet('__ARIA_DIR__/aria_mt_ops/*.parquet'))""".stripMargin
-    val epochs = (0 until unrollEpochs).flatMap { e =>
-      Seq(
-        s"""res_mt_$e AS (
-           |  SELECT tbl, key, min(tid) AS rts,
-           |         coalesce(min(CASE WHEN isUpdate THEN tid END), 0) AS wts
-           |  FROM ops_mt_$e GROUP BY tbl, key)""".stripMargin,
-        s"""flg_mt_$e AS MATERIALIZED (
-           |  SELECT tid, bool_or(wts <> 0 AND wts < tid) AS raw,
-           |         bool_or(isUpdate AND rts < tid) AS war,
-           |         bool_or(isUpdate AND wts <> 0 AND wts < tid) AS waw
-           |  FROM ops_mt_$e JOIN res_mt_$e USING (tbl, key) GROUP BY tid)""".stripMargin,
-        s"""ab_mt_$e AS MATERIALIZED (
-           |  SELECT tid, row_number() OVER (ORDER BY tid) AS new_tid
-           |  FROM flg_mt_$e WHERE $dec)""".stripMargin,
-        s"""ops_mt_${e + 1} AS MATERIALIZED (
-           |  SELECT ab.new_tid AS tid, o.epoch + 1 AS epoch, o.opIdx, o.tbl, o.key, o.isUpdate
-           |  FROM ops_mt_$e o JOIN ab_mt_$e ab ON o.tid = ab.tid)""".stripMargin)
-    }
-    val statRows = (0 until unrollEpochs).map { e =>
-      val txns = if (e == 0) mtCfg.nTxns.toString
-                 else s"(SELECT count(*) FROM ab_mt_${e - 1})"
-      s"SELECT $e AS epoch WHERE $txns > 0"
-    }
-    val cw = (0 until unrollEpochs).map { e =>
-      s"""SELECT o.tbl, o.key, o.epoch, o.tid, o.opIdx
-         |FROM ops_mt_$e o JOIN flg_mt_$e f USING (tid)
-         |WHERE NOT (f.raw OR f.waw) AND o.isUpdate""".stripMargin
-    }
-    def payload(i: Int): String =
-      s"""CASE WHEN w.key IS NULL THEN substr(md5('${mtCfg.seed}_load_' || k.tbl || '_' || k.key || '_$i'), 1, 10)
-         |     ELSE substr(md5('${mtCfg.seed}_write_' || w.epoch || '_' || w.tid || '_' || w.opIdx || '_$i'), 1, 10) END""".stripMargin
-    s"""WITH ${(head +: epochs).mkString(",\n")},
-       |stats_mt AS (${statRows.mkString("\nUNION ALL\n")}),
-       |cw_mt AS (${cw.mkString("\nUNION ALL\n")}),
+    val mtSrc =
+      """  SELECT tid, epoch, opIdx, tbl, key, isUpdate
+        |  FROM read_parquet('__ARIA_DIR__/aria_mt_ops/*.parquet')""".stripMargin
+    s"""WITH ${drainChainSql("mt", reorder = false, mtSrc, mtCfg.nTxns, mtKeyCols).mkString(",\n")},
+       |cw_mt AS (${committedSql("mt", mtKeyCols)}),
        |win_mt AS (
        |  SELECT tbl, key, epoch, tid, opIdx,
        |         row_number() OVER (PARTITION BY tbl, key ORDER BY epoch DESC, opIdx DESC) AS rn
@@ -448,14 +428,12 @@ object AriaQueries {
        |  FROM range($mtTables) t(t), range(${mtCfg.tableKeys}) k(k)),
        |fin_mt AS (
        |  SELECT k.tbl, k.key,
-       |         ${payload(0)} AS f0,
-       |         ${payload(4)} AS f4,
-       |         ${payload(9)} AS f9
+       |${payloadsSql(mtCfg.seed, "k.tbl || '_' || k.key")}
        |  FROM keys_mt k
        |  LEFT JOIN (SELECT * FROM win_mt WHERE rn = 1) w
        |    ON k.tbl = w.tbl AND k.key = w.key)
        |SELECT tbl, count(*)::BIGINT AS n_rows,
-       |       bit_xor(('0x' || substr(md5(tbl || '_' || key || '_' || f0 || '_' || f4 || '_' || f9), 1, 15))::BIGINT) AS table_checksum,
+       |       ${checksumSql(Seq("tbl", "key", "f0", "f4", "f9"))},
        |       (SELECT count(*) FROM stats_mt)::BIGINT AS epochs_to_drain
        |FROM fin_mt GROUP BY tbl ORDER BY tbl""".stripMargin
   }

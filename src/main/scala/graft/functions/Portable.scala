@@ -49,11 +49,12 @@ object Portable {
   /** Exact integer squared norm of a quantized array. */
   def normSqQ(a: Column): Column = dotQ(a, a)
 
-  /** Cosine similarity from quantized arrays — exact-identical doubles in
-    * both engines (integer dot/norms, then correctly-rounded sqrt & div). */
-  def cosineQ(a: Column, b: Column): Column =
-    dotQ(a, b).cast("double") /
-      (sqrt(normSqQ(a).cast("double")) * sqrt(normSqQ(b).cast("double")))
+  /** Cosine from an exact dot product and the two exact squared norms —
+    * exact-identical doubles in both engines (integer inputs, then
+    * correctly-rounded sqrt and ONE division). DuckDB:
+    * `CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE)))`. */
+  def cosine(dot: Column, na: Column, nb: Column): Column =
+    dot.cast("double") / (sqrt(na.cast("double")) * sqrt(nb.cast("double")))
 
   /** Unicode NFC canonical composition — a native codegen'd expression
     * (Spark has no normalization builtin). DuckDB: `nfc_normalize(x)`;

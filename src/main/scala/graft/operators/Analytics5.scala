@@ -46,7 +46,7 @@ object Analytics5 {
     * edge⋈labels equi-join, a (node, label) count agg, and a per-node
     * max — all partial-aggregable BIGINT shuffles keyed on node; no
     * per-round frame ever exceeds |E|. Lineage is cut per round
-    * (`localCheckpoint`, see [[graft.Cache]]) like the CC iterations.
+    * (`localCheckpoint`) like the CC iterations.
     * Output is the community-size histogram (label identities are
     * fixture node ids — sizes are the portable signal). */
   def labelPropagation(spark: SparkSession, dir: String,

@@ -55,36 +55,51 @@ object Clustering {
   // Spark side
   // ---------------------------------------------------------------------
 
-  /** Quantized corpus (vec_id, q, nsq), repartitioned off the single-file
-    * scan (no-op at production scale). */
-  private def qn(spark: SparkSession, dir: String): DataFrame =
-    Similarity.quantizedFrom(t(spark, dir, "embeddings")
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id")))
-
   /** Deterministic init: the first K vectors are the seed centroids. */
   private def initCentroids(corpus: DataFrame): DataFrame =
     corpus.filter(col("vec_id") < K)
       .select(col("vec_id").as("cid"), col("q").as("c"))
       .withColumn("csq", Portable.normSqQ(col("c")))
 
+  /** The centroid model's packing aggregate: every (cid, c, csq) row
+    * as one array of structs. */
+  private[graft] def centPack: Column =
+    collect_list(struct(col("cid"), col("c"), col("csq")))
+
+  /** The K centroids packed into ONE broadcastable row (`cents`), so
+    * scoring + argmin/argsort run entirely map-side, with no K-way row
+    * fanout and NO per-vector window shuffle. */
+  private[graft] def packed(cent: DataFrame): DataFrame =
+    cent.agg(centPack.as("cents"))
+
+  /** struct(dist, cid) per packed centroid in `cents`: the exact integer
+    * ‖v − c‖² = nsq − 2·q·c + csq of vector `q` (squared norm `nsq`).
+    * Structs order lexicographically, so array_min is the argmin and
+    * array_sort the argsort, ties to the lowest cid. */
+  private[graft] def centDists(q: Column, nsq: Column): Column =
+    transform(col("cents"), ct =>
+      struct(
+        (nsq - lit(2L) * Portable.dotQ(q, ct.getField("c"))
+          + ct.getField("csq")).as("dist"),
+        ct.getField("cid").as("cid")))
+
   /** One assignment pass: nearest centroid by exact integer distance,
-    * ties to the lowest cid. The K centroids pack into ONE broadcast row
-    * (array of structs), so scoring + argmin run entirely map-side —
-    * array_min over struct(dist, cid) is the lexicographic argmin — with
-    * no K-way row fanout and NO per-vector window shuffle. Output:
-    * vec_id, q, nsq, cid, dist. */
-  private[graft] def assign(corpus: DataFrame, cent: DataFrame): DataFrame = {
-    val packed = cent.agg(collect_list(struct(col("cid"), col("c"), col("csq"))).as("cents"))
-    corpus.crossJoin(broadcast(packed))
-      .withColumn("best", array_min(transform(col("cents"), ct =>
-        struct(
-          (col("nsq") - lit(2L) * Portable.dotQ(col("q"), ct.getField("c"))
-            + ct.getField("csq")).as("dist"),
-          ct.getField("cid").as("cid")))))
+    * ties to the lowest cid. Output: vec_id, q, nsq, cid, dist. */
+  private[graft] def assign(corpus: DataFrame, cent: DataFrame): DataFrame =
+    corpus.crossJoin(broadcast(packed(cent)))
+      .withColumn("best", array_min(centDists(col("q"), col("nsq"))))
       .select(col("vec_id"), col("q"), col("nsq"),
         col("best").getField("cid").as("cid"),
         col("best").getField("dist").as("dist"))
-  }
+
+  /** The IVF probe: the query panel (vec_id < 8) of `corpus`, one row per
+    * probed cell — its `nprobe` L2-nearest centroids of `cent`, as
+    * `probe` = struct(dist, cid). */
+  private[graft] def probes(corpus: DataFrame, cent: DataFrame, nprobe: Int): DataFrame =
+    corpus.filter(col("vec_id") < 8)
+      .crossJoin(broadcast(packed(cent)))
+      .withColumn("probe",
+        explode(slice(array_sort(centDists(col("q"), col("nsq"))), 1, nprobe)))
 
   /** Centroid recompute: d map-side-combinable SUMs + COUNT per cluster,
     * then exact integer floor-division means. Empty clusters drop (both
@@ -111,10 +126,11 @@ object Clustering {
     * quality, balanced sampling) share one training run. */
   private[graft] def train(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
     graft.Memo(spark, ("clustering.train", graft.Memo.input(dir))) {
-      val corpus = qn(spark, dir).localCheckpoint(false)
+      val corpus = Similarity.quantized(spark, dir).localCheckpoint(false)
       var cent = initCentroids(corpus)
       for (_ <- 1 to iters)
-        // Lloyd loop state: lineage cut per round (graft.Cache)
+        // Lloyd loop state: a lineage cut per round, so round N+1 plans
+        // over one checkpoint instead of re-nesting rounds 1..N
         cent = recompute(assign(corpus, cent)).localCheckpoint(false)
       (corpus, cent)
     }
@@ -185,9 +201,7 @@ object Clustering {
     l.join(r, Seq("cid", "band", "bucket"))
       .filter(col("keep_id") < col("drop_id"))
       .select(col("cid").as("cluster_id"), col("keep_id"), col("drop_id"),
-        (Portable.dotQ(col("qa"), col("qb")).cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-          .as("cosine"))
+        Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")).as("cosine"))
       .filter(col("cosine") >= tau)
       .distinct()
       .orderBy("cluster_id", "keep_id", "drop_id")
@@ -285,21 +299,13 @@ object Clustering {
       .select(col("vec_id").as("cand_id"), col("q").as("qb"),
         col("nsq").as("nb"), col("cid"))
       .localCheckpoint(false)
-    val packed = cent.agg(collect_list(struct(col("cid"), col("c"), col("csq"))).as("cents"))
-    val probes = corpus.filter(col("vec_id") < 8)
-      .crossJoin(broadcast(packed))
-      .withColumn("probe", explode(slice(array_sort(transform(col("cents"), ct =>
-        struct(
-          (col("nsq") - lit(2L) * Portable.dotQ(col("q"), ct.getField("c"))
-            + ct.getField("csq")).as("dist"),
-          ct.getField("cid").as("cid")))), 1, nprobe)))
+    probes(corpus, cent, nprobe)
       .select(col("vec_id").as("query_id"), col("q").as("qa"),
         col("nsq").as("na"), col("probe").getField("cid").as("cid"))
-    probes.join(cells, Seq("cid"))
+      .join(cells, Seq("cid"))
       .filter(col("query_id") =!= col("cand_id"))
       .withColumn("cosine",
-        Portable.dotQ(col("qa"), col("qb")).cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
+        Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")))
       .select(col("query_id"), col("cand_id"), col("cosine"),
         row_number().over(
           Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id")))
@@ -323,16 +329,10 @@ object Clustering {
       .select(col("vec_id").as("cand_id"), col("q").as("qb"),
         col("nsq").as("nb"), col("cid"))
       .localCheckpoint(false)
-    val packed = cent.agg(collect_list(struct(col("cid"), col("c"), col("csq"))).as("cents"))
-    val maxP = budgets.max
     val probes = corpus.filter(col("vec_id") < 8)
-      .crossJoin(broadcast(packed))
+      .crossJoin(broadcast(packed(cent)))
       .select(col("vec_id").as("query_id"), col("q").as("qa"), col("nsq").as("na"),
-        posexplode(slice(array_sort(transform(col("cents"), ct =>
-          struct(
-            (col("nsq") - lit(2L) * Portable.dotQ(col("q"), ct.getField("c"))
-              + ct.getField("csq")).as("dist"),
-            ct.getField("cid").as("cid")))), 1, maxP)))
+        posexplode(slice(array_sort(centDists(col("q"), col("nsq"))), 1, budgets.max)))
       .select(col("query_id"), col("qa"), col("na"),
         col("pos"), col("col").getField("cid").as("cid"))
     val budgetF = spark.range(1)
@@ -341,24 +341,14 @@ object Clustering {
       .join(cells, Seq("cid"))
       .filter(col("query_id") =!= col("cand_id"))
       .select(col("budget"), col("query_id"), col("cand_id"),
-        (Portable.dotQ(col("qa"), col("qb")).cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-          .as("cosine"))
+        Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")).as("cosine"))
       .select(col("budget"), col("query_id"), col("cand_id"),
         row_number().over(
           Window.partitionBy("budget", "query_id")
             .orderBy(desc("cosine"), col("cand_id"))).as("rank"))
       .filter(col("rank") <= k)
-      .select(col("budget"), col("query_id"), col("cand_id"), lit(1L).as("hit"))
-    val exact = ExactPanels.cosine(spark, dir, k)
-    exact.crossJoin(broadcast(budgetF))
-      .join(top, Seq("budget", "query_id", "cand_id"), "left")
-      .groupBy("budget")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .withColumn("recall",
-        col("n_hits").cast("double") / col("n_exact").cast("double"))
-      .orderBy("budget")
+    ExactPanels.recall(ExactPanels.cosine(spark, dir, k).crossJoin(broadcast(budgetF)),
+      top, Seq("budget", "query_id", "cand_id"), Seq("budget"))
   }
 
   def ivfProbeCurveSql(k: Int = 5, budgets: Seq[Int] = Seq(1, 2, 4)): String = {
@@ -412,18 +402,6 @@ object Clustering {
   // DuckDB oracle — the unrolled training replay
   // ---------------------------------------------------------------------
 
-  private val quantizedSql: String =
-    """q AS (
-      |  SELECT vec_id,
-      |         list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*10000 + 0.5) AS BIGINT)) AS qv
-      |  FROM embeddings
-      |),
-      |qn AS (
-      |  SELECT vec_id, qv,
-      |         CAST(list_sum(list_transform(qv, x -> x*x)) AS BIGINT) AS nsq
-      |  FROM q
-      |)""".stripMargin
-
   /** dist² of row alias `v` against centroid alias `c` (exact BIGINT). */
   private def distSql(v: String, c: String): String =
     s"""$v.nsq - 2*CAST(list_sum(list_transform(generate_series(1, $dims),
@@ -453,7 +431,7 @@ object Clustering {
   /** The full unrolled training chain: cent0, a1, cent1, …, cent$iters,
     * fin (final assignment of `qn` against cent$iters). */
   private def kmeansCtes: String =
-    s"""$quantizedSql,
+    s"""${Similarity.quantizedSql},
        |$kmeansCtesNoQuantize""".stripMargin
 
   /** The training chain WITHOUT the q/qn quantization prefix — for
@@ -590,7 +568,7 @@ object Clustering {
     * TakeOrdered(1) — partial top-1 per partition, never a global
     * sort. k−1 corpus scans total; no shuffle anywhere. */
   def kCenterSample(spark: SparkSession, dir: String): DataFrame = {
-    val corpus = qn(spark, dir).localCheckpoint(false)
+    val corpus = Similarity.quantized(spark, dir).localCheckpoint(false)
     def row3(r: org.apache.spark.sql.Row): (Long, Seq[Long], Long) =
       (r.getAs[Long]("vec_id"), r.getSeq[Long](1).toSeq, r.getAs[Long]("nsq"))
     val seed = row3(corpus.filter(col("vec_id") === 0L)
@@ -631,7 +609,7 @@ object Clustering {
     val out = (2 to kcK)
       .map(i => s"UNION ALL SELECT CAST($i AS BIGINT), vec_id, md FROM c$i")
       .mkString("\n")
-    s"""WITH $quantizedSql,
+    s"""WITH ${Similarity.quantizedSql},
        |c1 AS (SELECT vec_id, qv, nsq FROM qn WHERE vec_id = 0),
        |$steps
        |SELECT CAST(1 AS BIGINT) AS step, vec_id, CAST(0 AS BIGINT) AS min_d2 FROM c1

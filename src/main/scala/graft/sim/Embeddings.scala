@@ -95,9 +95,7 @@ object Embeddings {
       .join(norms.select(col("label").as("lb"), col("nsq").as("nb"),
         col("n_vecs").as("n_b")), Seq("lb"))
       .select(col("la"), col("lb"), col("n_a"), col("n_b"), col("dot"),
-        (col("dot").cast("double")
-          / (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-          .as("cos"))
+        Portable.cosine(col("dot"), col("na"), col("nb")).as("cos"))
       .orderBy("la", "lb")
   }
 

@@ -1,10 +1,12 @@
 package graft.sim
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
-/** Session-scoped memo of the exact ground-truth (query_id, cand_id)
-  * panels the ANN recall gates compare against ([[graft.Memo]], keyed
-  * by input, metric and k).
+/** The ANN recall gate ([[recall]], with its DuckDB twin) and the
+  * session-scoped memo of the exact ground-truth (query_id, cand_id)
+  * panels it compares against ([[graft.Memo]], keyed by input, metric
+  * and k).
   *
   * Every recall gate re-paid the identical brute-force exact side per
   * query — one full corpus scan + quantize + broadcast panel join +
@@ -41,4 +43,33 @@ private[graft] object ExactPanels {
       build.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
     spark.createDataFrame(rows).toDF("query_id", "cand_id")
   }
+
+  /** The recall gate every ANN arm shares: the `exact` ground-truth
+    * pairs left-joined to the hits of `top` (the approximate result, its
+    * `on` columns marking one hit each), counted per `by` — n_exact,
+    * n_hits and recall = n_hits / n_exact, a division of identical
+    * small integers, hence identical doubles in both engines. Ordered
+    * by the first `by` key; a curve crosses its budget axis into `exact`
+    * and names it in `on` and `by` (further `by` keys are labels the
+    * first determines). */
+  private[sim] def recall(exact: DataFrame, top: DataFrame,
+                          on: Seq[String] = Seq("query_id", "cand_id"),
+                          by: Seq[String] = Seq("query_id")): DataFrame =
+    exact.join(top.select(on.map(col) :+ lit(1L).as("hit"): _*), on, "left")
+      .groupBy(by.head, by.tail: _*)
+      .agg(count(lit(1)).as("n_exact"),
+        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
+      .withColumn("recall", col("n_hits").cast("double") / col("n_exact").cast("double"))
+      .orderBy(by.head)
+
+  /** DuckDB twin of the per-query [[recall]] gate, over the CTEs
+    * `exact` and `approx` (query_id, cand_id). */
+  private[sim] val recallSql: String =
+    """SELECT e.query_id, count(*) AS n_exact,
+      |       CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
+      |       CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
+      |         / CAST(count(*) AS DOUBLE) AS recall
+      |FROM exact e LEFT JOIN approx a
+      |  ON e.query_id = a.query_id AND e.cand_id = a.cand_id
+      |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin
 }

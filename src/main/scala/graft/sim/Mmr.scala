@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Portable
-import graft.operators.Tables.t
 
 /** Maximal-marginal-relevance diversified re-ranking (Carbonell &
   * Goldstein 1998) — the retrieval step between top-k search and
@@ -27,7 +26,7 @@ import graft.operators.Tables.t
   * replays it exactly as chained CTEs. The per-round `selected` frame
   * has three consumers (anti-join, max-sim join, union) and is
   * reassigned in a driver loop, so each round cuts its lineage
-  * (graft.Cache): a barrier that kept the nested per-round plan
+  * with `localCheckpoint`: a barrier that kept the nested per-round plan
   * measured 13.1 s against the 1.7 s floor.
   *
   * Exactness: relevance and pair similarities are the family's
@@ -46,17 +45,14 @@ object Mmr {
     * PlanShapeSpec can pin that shape (the greedy loop's final lineage
     * cut hides it from the full query's plan). */
   private[graft] def candidates(spark: SparkSession, dir: String): DataFrame = {
-    val qn = Similarity.quantizedFrom(
-      t(spark, dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism, col("vec_id")))
+    val qn = Similarity.quantized(spark, dir)
     val queries = qn.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("q").as("qa"), col("nsq").as("na"))
     val corpus = qn.select(col("vec_id").as("cand_id"), col("q").as("qb"),
       col("nsq").as("nb"))
     corpus.join(broadcast(queries), col("query_id") =!= col("cand_id"))
       .withColumn("rel",
-        Portable.dotQ(col("qa"), col("qb")).cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
+        Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")))
       .select(col("query_id"), col("cand_id"), col("rel"),
         row_number().over(Window.partitionBy("query_id")
           .orderBy(desc("rel"), col("cand_id"))).as("rn"))
@@ -65,9 +61,7 @@ object Mmr {
   }
 
   def mmrRerank(spark: SparkSession, dir: String): DataFrame = {
-    val qn = Similarity.quantizedFrom(
-      t(spark, dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism, col("vec_id")))
+    val qn = Similarity.quantized(spark, dir)
     val cands = candidates(spark, dir)
       .localCheckpoint(false) // consumers: pair-sim build + every greedy round
     // candidate vectors: one broadcast-probe of the corpus, Q·C rows out
@@ -84,9 +78,7 @@ object Mmr {
         col("q").as("qy"), col("nsq").as("ny")), "query_id")
       .filter(col("pa") =!= col("pb"))
       .select(col("query_id"), col("pa"), col("pb"),
-        (Portable.dotQ(col("qx"), col("qy")).cast("double") /
-          (sqrt(col("nx").cast("double")) * sqrt(col("ny").cast("double"))))
-          .as("sim"))
+        Portable.cosine(Portable.dotQ(col("qx"), col("qy")), col("nx"), col("ny")).as("sim"))
       .localCheckpoint(false) // consumed once per greedy round
     var selected = cands
       .select(col("query_id"), col("cand_id"), col("rel"),

@@ -3,7 +3,6 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.Tables.t
 import graft.functions.Portable
 
 /** Graph-based ANN: a k-NN graph built with NN-Descent (Dong, Moses &
@@ -60,7 +59,6 @@ import graft.functions.Portable
   */
 object NnDescent {
 
-  private val dims = 64
   /** Graph out-degree K (also the reverse-edge cap). */
   private val degree = 16
   /** NN-Descent rounds — fixed budget; the recall gate prices it. */
@@ -75,26 +73,12 @@ object NnDescent {
 
   // ---------------------------------------------------------------- build
 
-  /** NOT checkpointed: a checkpointed frame is a LogicalRDD with no stats
-    * (sizeInBytes defaults to huge), which would force every per-round
-    * scoring join into sort-merge. Left as a plain plan, the scan's
-    * real stats let Catalyst broadcast the vector side while it fits
-    * and fall back to the vec_id-keyed shuffle join when it doesn't —
-    * the adaptive behavior the 100 TB posture wants. Re-deriving the
-    * quantize projection per consumer is one codegen'd map over the
-    * scan. */
-  private def quantizedPlan(spark: SparkSession, dir: String): DataFrame =
-    Similarity.quantizedFrom(t(spark, dir, "embeddings")
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id")))
-
   private def scorePairs(pairs: DataFrame, qn: DataFrame): DataFrame = {
     val a = qn.select(col("vec_id").as("src"), col("q").as("qa"), col("nsq").as("na"))
     val b = qn.select(col("vec_id").as("dst"), col("q").as("qb"), col("nsq").as("nb"))
     pairs.join(a, "src").join(b, "dst")
       .select(col("src"), col("dst"),
-        (Portable.dotQ(col("qa"), col("qb")).cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-          .as("cosine"))
+        Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")).as("cosine"))
   }
 
   private def keepBest(scored: DataFrame): DataFrame =
@@ -151,7 +135,14 @@ object NnDescent {
   /** (qn, graph, undirected graph), built once per input. */
   private def built(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
     graft.Memo(spark, ("nnd.built", graft.Memo.input(dir))) {
-      val qn = quantizedPlan(spark, dir)
+      // qn is NOT checkpointed: a checkpointed frame is a LogicalRDD
+      // with no stats (sizeInBytes defaults to huge), which would force
+      // every per-round scoring join into sort-merge. Left as a plain
+      // plan, the scan's real stats let Catalyst broadcast the vector
+      // side while it fits and fall back to the vec_id-keyed shuffle
+      // join when it doesn't. Re-deriving the quantize projection per
+      // consumer is one codegen'd map over the scan.
+      val qn = Similarity.quantized(spark, dir)
       val nF = qn.agg(count(lit(1)).as("n"))
       val init = qn.select(col("vec_id").as("src"))
         .crossJoin(broadcast(nF))
@@ -164,7 +155,8 @@ object NnDescent {
         .distinct()
       var g = keepBest(scorePairs(init, qn)).localCheckpoint(false)
       for (_ <- 1 to buildRounds)
-        // per-round lineage cut (graft.Cache)
+        // per-round lineage cut: round N+1 reads this round's graph as
+        // one checkpoint instead of re-planning rounds 1..N
         g = round(g, qn).localCheckpoint(false)
       val und = g.select("src", "dst")
         .union(g.select(col("dst").as("src"), col("src").as("dst")))
@@ -211,9 +203,7 @@ object NnDescent {
           col("nsq").as("nb")), "cand_id")
         .join(broadcast(panel), "query_id")
         .select(col("beam"), col("query_id"), col("cand_id"),
-          (Portable.dotQ(col("qa"), col("qb")).cast("double") /
-            (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-            .as("cosine"))
+          Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")).as("cosine"))
       bb = scored
         .withColumn("rn", row_number().over(
           Window.partitionBy("beam", "query_id").orderBy(desc("cosine"), col("cand_id"))))
@@ -238,17 +228,9 @@ object NnDescent {
   /** Recall@k of the graph path against the exact brute-force top-k —
     * the gate that prices the (degree, rounds, beam) budget, beside
     * the LSH/IVF/PQ/BQ gates. */
-  def nnDescentRecall(spark: SparkSession, dir: String, k: Int = topK): DataFrame = {
-    val exact = ExactPanels.cosine(spark, dir, k)
-    val approx = nnDescentTopK(spark, dir, k)
-      .select(col("query_id"), col("cand_id"), lit(1L).as("hit"))
-    exact.join(approx, Seq("query_id", "cand_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .withColumn("recall", col("n_hits").cast("double") / col("n_exact").cast("double"))
-      .orderBy("query_id")
-  }
+  def nnDescentRecall(spark: SparkSession, dir: String, k: Int = topK): DataFrame =
+    ExactPanels.recall(ExactPanels.cosine(spark, dir, k),
+      nnDescentTopK(spark, dir, k))
 
   /** Budget–recall curve over beam width (5/10/16), beside the LSH
     * probe curve and the IVF nprobe curve: one row per width, micro
@@ -260,17 +242,10 @@ object NnDescent {
       .withColumn("rank", row_number().over(
         Window.partitionBy("beam", "query_id").orderBy(desc("cosine"), col("cand_id"))))
       .filter(col("rank") <= k)
-      .select(col("beam"), col("query_id"), col("cand_id"), lit(1L).as("hit"))
-    val exact = ExactPanels.cosine(spark, dir, k)
     val budgets = spark.range(1)
       .select(explode(array(curveBeams.map(lit): _*)).as("beam"))
-    exact.crossJoin(broadcast(budgets))
-      .join(top, Seq("beam", "query_id", "cand_id"), "left")
-      .groupBy("beam")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .withColumn("recall", col("n_hits").cast("double") / col("n_exact").cast("double"))
-      .orderBy("beam")
+    ExactPanels.recall(ExactPanels.cosine(spark, dir, k).crossJoin(broadcast(budgets)),
+      top, Seq("beam", "query_id", "cand_id"), Seq("beam"))
   }
 
   // ------------------------------------------------------ insert path
@@ -318,9 +293,7 @@ object NnDescent {
     val hop = ubi.select(col("src").as("cand_id"), col("dst").as("next_id"))
     var bb = dq.crossJoin(broadcast(ent))
       .select(col("query_id"), col("cand_id"),
-        (Portable.dotQ(col("qa"), col("qb")).cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-          .as("cosine"))
+        Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")).as("cosine"))
       .withColumn("rn", row_number().over(
         Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id"))))
       .filter(col("rn") <= beamWidth).drop("rn")
@@ -334,9 +307,7 @@ object NnDescent {
           col("nsq").as("nb")), "cand_id")
         .join(dq, "query_id")
         .select(col("query_id"), col("cand_id"),
-          (Portable.dotQ(col("qa"), col("qb")).cast("double") /
-            (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-            .as("cosine"))
+          Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")).as("cosine"))
       bb = scored
         .withColumn("rn", row_number().over(
           Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id"))))
@@ -369,7 +340,7 @@ object NnDescent {
     * every other ANN gate; the production path ([[nnDescentInsert]])
     * still runs the WHOLE delta. */
   def nnDescentInsertRecall(spark: SparkSession, dir: String, k: Int = topK): DataFrame = {
-    val qn = quantizedPlan(spark, dir)
+    val qn = Similarity.quantized(spark, dir)
     val dq = qn.filter(splitH(col("vec_id")) >= 90)
       .select(col("vec_id").as("query_id"), col("q").as("qa"), col("nsq").as("na"))
       .orderBy("query_id").limit(insertPanel)
@@ -377,8 +348,7 @@ object NnDescent {
       .select(col("vec_id").as("cand_id"), col("q").as("qb"), col("nsq").as("nb"))
     val exact = base.crossJoin(broadcast(dq))
       .withColumn("cosine",
-        Portable.dotQ(col("qa"), col("qb")).cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
+        Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")))
       .select(col("query_id"), col("cand_id"),
         row_number().over(
           Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id")))
@@ -386,13 +356,7 @@ object NnDescent {
       .filter(col("rank") <= k)
       .select("query_id", "cand_id")
     val approx = nnDescentInsert(spark, dir, k)
-      .select(col("query_id"), col("cand_id"), lit(1L).as("hit"))
-    exact.join(approx, Seq("query_id", "cand_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .withColumn("recall", col("n_hits").cast("double") / col("n_exact").cast("double"))
-      .orderBy("query_id")
+    ExactPanels.recall(exact, approx)
   }
 
   // --------------------------------------------------------------- oracle
@@ -405,7 +369,7 @@ object NnDescent {
     def score(pairs: String, out: String): String =
       s"""$out AS MATERIALIZED (
          |  SELECT p.src, p.dst,
-         |         CAST(CAST(list_sum(list_transform(generate_series(1, $dims), i -> a.qv[i] * b.qv[i])) AS BIGINT) AS DOUBLE)
+         |         CAST(${Similarity.dotSql} AS DOUBLE)
          |           / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) AS cosine
          |  FROM $pairs p JOIN qn a ON a.vec_id = p.src JOIN qn b ON b.vec_id = p.dst)""".stripMargin
     def keep(scored: String, out: String): String =
@@ -458,7 +422,7 @@ object NnDescent {
     val scoreBeam = (pairs: String, out: String) =>
       s"""$out AS MATERIALIZED (
          |  SELECT p.beam, p.query_id, p.cand_id,
-         |         CAST(CAST(list_sum(list_transform(generate_series(1, $dims), i -> a.qv[i] * b.qv[i])) AS BIGINT) AS DOUBLE)
+         |         CAST(${Similarity.dotSql} AS DOUBLE)
          |           / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) AS cosine
          |  FROM $pairs p JOIN qn a ON a.vec_id = p.query_id JOIN qn b ON b.vec_id = p.cand_id)""".stripMargin
     val b0 =
@@ -493,7 +457,7 @@ object NnDescent {
     val scoreIns = (pairs: String, out: String) =>
       s"""$out AS MATERIALIZED (
          |  SELECT p.query_id, p.cand_id,
-         |         CAST(CAST(list_sum(list_transform(generate_series(1, $dims), i -> a.qv[i] * b.qv[i])) AS BIGINT) AS DOUBLE)
+         |         CAST(${Similarity.dotSql} AS DOUBLE)
          |           / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) AS cosine
          |  FROM $pairs p JOIN qn a ON a.vec_id = p.query_id JOIN qn b ON b.vec_id = p.cand_id)""".stripMargin
     val head =
@@ -510,10 +474,10 @@ object NnDescent {
          |ib0 AS MATERIALIZED (
          |  SELECT query_id, cand_id, cosine FROM (
          |    SELECT d.query_id, e.vec_id AS cand_id,
-         |           CAST(CAST(list_sum(list_transform(generate_series(1, $dims), i -> d.qv[i] * e.qv[i])) AS BIGINT) AS DOUBLE)
+         |           CAST(${Similarity.dotSqlOf("d", "e")} AS DOUBLE)
          |             / (sqrt(CAST(d.nsq AS DOUBLE)) * sqrt(CAST(e.nsq AS DOUBLE))) AS cosine,
          |           row_number() OVER (PARTITION BY d.query_id ORDER BY
-         |             CAST(CAST(list_sum(list_transform(generate_series(1, $dims), i -> d.qv[i] * e.qv[i])) AS BIGINT) AS DOUBLE)
+         |             CAST(${Similarity.dotSqlOf("d", "e")} AS DOUBLE)
          |               / (sqrt(CAST(d.nsq AS DOUBLE)) * sqrt(CAST(e.nsq AS DOUBLE))) DESC, e.vec_id) AS rn
          |    FROM dq d CROSS JOIN ent e) WHERE rn <= $beamWidth)""".stripMargin
     val rounds = (1 to insertRounds).map { tt =>
@@ -563,13 +527,7 @@ object NnDescent {
        |    FROM qn a JOIN qn b
        |      ON a.vec_id IN (SELECT vec_id FROM pnl) AND ${sp("b.vec_id")} < 90)
        |  WHERE rank <= $k)
-       |SELECT e.query_id, count(*) AS n_exact,
-       |       CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       |       CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-       |         / CAST(count(*) AS DOUBLE) AS recall
-       |FROM exact e LEFT JOIN approx a
-       |  ON e.query_id = a.query_id AND e.cand_id = a.cand_id
-       |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin
+       |${ExactPanels.recallSql}""".stripMargin
   }
 
   def knnGraphSql: String =
@@ -589,13 +547,7 @@ object NnDescent {
   def nnDescentRecallSql(k: Int = topK): String =
     s"""WITH exact AS (SELECT query_id, cand_id FROM (${Similarity.cosineTopKSql(k)})),
        |approx AS (SELECT query_id, cand_id FROM (${nnDescentTopKSql(k)}))
-       |SELECT e.query_id, count(*) AS n_exact,
-       |       CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       |       CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-       |         / CAST(count(*) AS DOUBLE) AS recall
-       |FROM exact e LEFT JOIN approx a
-       |  ON e.query_id = a.query_id AND e.cand_id = a.cand_id
-       |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin
+       |${ExactPanels.recallSql}""".stripMargin
 
   def beamCurveSql(k: Int = topK): String =
     s"""WITH ${Similarity.quantizedSql},

@@ -98,7 +98,7 @@ object Pca {
       v = w.crossJoin(broadcast(mw))
         .select(col("i").as("d"),
           (expr(s"((CAST(w AS DECIMAL(38,0)) + mw) * $S) DIV mw") - S).as("v"))
-        .localCheckpoint(false) // per-round lineage cut (graft.Cache)
+        .localCheckpoint(false) // per-round lineage cut
     }
     v
   }
@@ -244,8 +244,7 @@ object Pca {
           sum(expr(s"CAST($valCol AS DECIMAL(38,0)) * $valCol")).as("nx"))
         .filter(col("nx") > 0) // zero vectors carry no direction
         .crossJoin(broadcast(ns))
-        .select(floor((col("dot").cast("double")
-          / (sqrt(col("nx").cast("double")) * sqrt(col("ns").cast("double")))
+        .select(floor((Portable.cosine(col("dot"), col("nx"), col("ns"))
           + 1.0d) * 1000000d).cast("long").as("qcos"))
         .agg(count(lit(1)).as(s"n_$tag"),
           expr(s"sum(qcos) DIV count(1)").as(s"mean_qcos_$tag"))

@@ -3,7 +3,6 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.Tables.t
 import graft.functions.Portable
 
 /** Product quantization (PQ) with asymmetric-distance search — the
@@ -56,10 +55,6 @@ object Pq {
   // Spark side
   // ---------------------------------------------------------------------
 
-  private def qn(spark: SparkSession, dir: String): DataFrame =
-    Similarity.quantizedFrom(t(spark, dir, "embeddings")
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id")))
-
   /** Subspace slice m of the full quantized vector (1-based slice). */
   private def sliceM(q: Column, m: Int): Column = slice(q, m * sd + 1, sd)
 
@@ -69,11 +64,7 @@ object Pq {
     * to a subspace-at-a-time pass, but one stage serves all M models. */
   private def assignAll(subAll: DataFrame, packedByM: DataFrame): DataFrame =
     subAll.join(broadcast(packedByM), "m")
-      .withColumn("best", array_min(transform(col("cents"), ct =>
-        struct(
-          (col("nm") - lit(2L) * Portable.dotQ(col("qm"), ct.getField("c"))
-            + ct.getField("csq")).as("dist"),
-          ct.getField("cid").as("cid")))))
+      .withColumn("best", array_min(Clustering.centDists(col("qm"), col("nm"))))
       .select(col("m"), col("qm"),
         col("best").getField("cid").as("cid"))
 
@@ -94,8 +85,7 @@ object Pq {
 
   private def packByM(model: DataFrame): DataFrame =
     model.groupBy("m")
-      .agg(array_sort(collect_list(struct(col("cid"), col("c"), col("csq"))))
-        .as("cents"))
+      .agg(array_sort(Clustering.centPack).as("cents"))
 
   /** Train the M codebooks; returns one broadcastable row with columns
     * cents0..cents{M-1}, each an array<struct<cid,c,csq>> SORTED by cid —
@@ -123,15 +113,15 @@ object Pq {
     // final shape: ONE broadcastable row with cents0..cents{M-1}
     (0 until M).map(m =>
         model.filter(col("m") === m)
-          .agg(array_sort(collect_list(struct(col("cid"), col("c"), col("csq"))))
-            .as(s"cents$m")))
+          .agg(array_sort(Clustering.centPack).as(s"cents$m")))
       .reduce(_ crossJoin _).localCheckpoint(false)
   }
 
   /** The raw-corpus codebooks, memoized ([[graft.Memo]]): train once,
     * encode/search many. */
   private[graft] def codebooks(spark: SparkSession, dir: String): DataFrame =
-    graft.Memo(spark, ("pq.codebooks", graft.Memo.input(dir)))(trainCodebooks(qn(spark, dir)))
+    graft.Memo(spark, ("pq.codebooks", graft.Memo.input(dir)))(
+      trainCodebooks(Similarity.quantized(spark, dir)))
 
   /** Residual corpus for IVFADC: each vector re-expressed as its offset
     * from its IVF cell centroid (Jégou et al. 2011 §IV: IVFADC encodes
@@ -198,7 +188,7 @@ object Pq {
 
   /** Encode the corpus with the raw-vector codebooks. */
   private[graft] def encoded(spark: SparkSession, dir: String): DataFrame =
-    encodedFrom(qn(spark, dir), codebooks(spark, dir))
+    encodedFrom(Similarity.quantized(spark, dir), codebooks(spark, dir))
 
   /** PQ-ADC top-k: the query panel (vec_id < 8, the board's standard
     * measurement panel) builds its M×Ks distance tables map-side from
@@ -206,13 +196,13 @@ object Pq {
     * lookups per candidate; per-query top-k is the WindowGroupLimit
     * partial form. Output distances are exact BIGINTs. */
   def pqTopK(spark: SparkSession, dir: String, k: Int = TopK): DataFrame =
-    pqTopKFrom(qn(spark, dir), codebooks(spark, dir), k)
+    pqTopKFrom(Similarity.quantized(spark, dir), codebooks(spark, dir), k)
 
   /** Exact full-dimension L2² top-k over the panel — the ground truth
     * the ADC path approximates (PQ is an L2 method; the cosine family
     * has its own exact baseline in Similarity.cosineTopK). */
   private[sim] def exactL2TopK(spark: SparkSession, dir: String, k: Int): DataFrame = {
-    val c = qn(spark, dir)
+    val c = Similarity.quantized(spark, dir)
     val queries = c.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("q").as("qa"), col("nsq").as("na"))
     c.select(col("vec_id").as("cand_id"), col("q").as("qb"), col("nsq").as("nb"))
@@ -232,17 +222,9 @@ object Pq {
     * code budget (M, Ks) before anyone ships 4-byte vectors. Same
     * measurement posture as sim_ann_recall/sim_ivf_recall: exact side
     * only over the fixed panel. */
-  def pqRecall(spark: SparkSession, dir: String, k: Int = TopK): DataFrame = {
-    val exact = ExactPanels.l2(spark, dir, k)
-    val approx = pqTopK(spark, dir, k)
-      .select(col("query_id"), col("cand_id"), lit(1L).as("hit"))
-    exact.join(approx, Seq("query_id", "cand_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .withColumn("recall", col("n_hits").cast("double") / col("n_exact").cast("double"))
-      .orderBy("query_id")
-  }
+  def pqRecall(spark: SparkSession, dir: String, k: Int = TopK): DataFrame =
+    ExactPanels.recall(ExactPanels.l2(spark, dir, k),
+      pqTopK(spark, dir, k))
 
   /** Composed IVF-PQ search — the full planet-scale ANN index shape
     * (Jégou et al. 2011; the design behind FAISS's IVFPQ): the trained
@@ -263,17 +245,10 @@ object Pq {
       .join(Clustering.assign(corpus, cent).select(col("vec_id"), col("cid")),
         "vec_id")
       .localCheckpoint(false) // the stored index: (cell, codes) per vector
-    val packedIvf = cent.agg(collect_list(struct(col("cid"), col("c"), col("csq"))).as("cents"))
-    val probes = corpus.filter(col("vec_id") < 8)
-      .crossJoin(broadcast(packedIvf))
-      .withColumn("probe", explode(slice(array_sort(transform(col("cents"), ct =>
-        struct(
-          (col("nsq") - lit(2L) * Portable.dotQ(col("q"), ct.getField("c"))
-            + ct.getField("csq")).as("dist"),
-          ct.getField("cid").as("cid")))), 1, nprobe)))
+    val probes = Clustering.probes(corpus, cent, nprobe)
       .select(col("vec_id").as("query_id"), col("probe").getField("cid").as("cid"))
     val cb = codebooks(spark, dir)
-    val tables = withAdcTables(qn(spark, dir).filter(col("vec_id") < 8)
+    val tables = withAdcTables(Similarity.quantized(spark, dir).filter(col("vec_id") < 8)
         .crossJoin(broadcast(cb)))
       .select(col("vec_id").as("query_id") +: (0 until M).map(m => col(s"t$m")): _*)
     val panel = probes.join(tables, "query_id") // ≤ 8·nprobe rows
@@ -301,7 +276,7 @@ object Pq {
     * evaluations against the O(M·Ks·d/M) broadcast + one M·Ks-key agg. */
   def pqIncremental(spark: SparkSession, dir: String): DataFrame = {
     val cb = codebooks(spark, dir)
-    val delta = qn(spark, dir)
+    val delta = Similarity.quantized(spark, dir)
       .filter(graft.text.TextAnalysis.splitHash(col("vec_id")) >= 90)
     val enc = (0 until M).foldLeft(delta.crossJoin(broadcast(cb))) { (df, m) =>
       df.withColumn(s"best$m", bestOf(m))
@@ -316,7 +291,7 @@ object Pq {
   }
 
   def pqIncrementalSql: String =
-    s"""WITH $quantizedSql,
+    s"""WITH ${Similarity.quantizedSql},
        |$pqModelCtes
        |SELECT m, pos AS code, count(*) AS delta_n,
        |       CAST(sum(dist) AS BIGINT) AS delta_qerr
@@ -331,17 +306,9 @@ object Pq {
     * gate, [[ivfAdcRecall]], isolates what residual encoding buys back
     * at the SAME (M, Ks, nprobe) budget: its gap to THIS gate is the
     * raw-vs-residual coding gain (PqSpec pins residual ≥ raw). */
-  def ivfPqRecall(spark: SparkSession, dir: String, k: Int = TopK): DataFrame = {
-    val exact = ExactPanels.l2(spark, dir, k)
-    val approx = ivfPqTopK(spark, dir, k)
-      .select(col("query_id"), col("cand_id"), lit(1L).as("hit"))
-    exact.join(approx, Seq("query_id", "cand_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .withColumn("recall", col("n_hits").cast("double") / col("n_exact").cast("double"))
-      .orderBy("query_id")
-  }
+  def ivfPqRecall(spark: SparkSession, dir: String, k: Int = TopK): DataFrame =
+    ExactPanels.recall(ExactPanels.l2(spark, dir, k),
+      ivfPqTopK(spark, dir, k))
 
   /** Variance-balanced dimension permutation — OPQ-lite (Ge et al. 2013
     * optimize a rotation; the deterministic, oracle-replayable member of
@@ -366,7 +333,7 @@ object Pq {
       struct((lit(0).cast(dec) - (col("n").cast(dec) * col(s"ss$i").cast(dec)
           - col(s"s$i").cast(dec) * col(s"s$i").cast(dec))).as("negv"),
         lit(i).as("dim")))
-    qn(spark, dir).agg(aggs.head, aggs.tail: _*)
+    Similarity.quantized(spark, dir).agg(aggs.head, aggs.tail: _*)
       .select(array_sort(array(entries: _*)).as("sorted"))
       // variance rank r sits at permuted position (r mod M)·sd + r div M;
       // inverted: position p reads sorted rank (p mod sd)·M + p div sd
@@ -379,7 +346,7 @@ object Pq {
   /** The corpus re-laid-out by the OPQ permutation, presented as
     * (vec_id, q) so the shared PQ machinery applies unchanged. */
   private def permutedCorpus(spark: SparkSession, dir: String): DataFrame =
-    qn(spark, dir).crossJoin(broadcast(permRow(spark, dir)))
+    Similarity.quantized(spark, dir).crossJoin(broadcast(permRow(spark, dir)))
       .select(col("vec_id"),
         transform(col("perm"), d => element_at(col("q"), d)).as("q"))
 
@@ -415,17 +382,9 @@ object Pq {
   /** Recall@k of the permuted-space ADC path against exact L2 — prices
     * the permutation against [[pqRecall]] at the identical (M, Ks)
     * budget; the gap is pure subspace-layout effect. */
-  def opqRecall(spark: SparkSession, dir: String, k: Int = TopK): DataFrame = {
-    val exact = ExactPanels.l2(spark, dir, k)
-    val approx = opqTopK(spark, dir, k)
-      .select(col("query_id"), col("cand_id"), lit(1L).as("hit"))
-    exact.join(approx, Seq("query_id", "cand_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .withColumn("recall", col("n_hits").cast("double") / col("n_exact").cast("double"))
-      .orderBy("query_id")
-  }
+  def opqRecall(spark: SparkSession, dir: String, k: Int = TopK): DataFrame =
+    ExactPanels.recall(ExactPanels.l2(spark, dir, k),
+      opqTopK(spark, dir, k))
 
   /** IVFADC proper (Jégou et al. 2011 §IV — the form production FAISS
     * ships as IVFPQ): the coarse quantizer prunes to `nprobe` cells, and
@@ -448,14 +407,7 @@ object Pq {
     val rcb = residCodebooks(spark, dir)
     // the stored index: (cell, residual codes) per vector
     val celled = encodedFrom(residualCorpus(spark, dir), rcb, Seq("cid")).localCheckpoint(false)
-    val packedIvf = cent.agg(collect_list(struct(col("cid"), col("c"), col("csq"))).as("cents"))
-    val probes = corpus.filter(col("vec_id") < 8)
-      .crossJoin(broadcast(packedIvf))
-      .withColumn("probe", explode(slice(array_sort(transform(col("cents"), ct =>
-        struct(
-          (col("nsq") - lit(2L) * Portable.dotQ(col("q"), ct.getField("c"))
-            + ct.getField("csq")).as("dist"),
-          ct.getField("cid").as("cid")))), 1, nprobe)))
+    val probes = Clustering.probes(corpus, cent, nprobe)
       .select(col("vec_id").as("query_id"), col("q"),
         col("probe").getField("cid").as("cid"))
     // per-(query, probed cell) residual query → its own ADC tables
@@ -480,33 +432,13 @@ object Pq {
   /** Recall@k of the residual (IVFADC) path against exact L2 — the gate
     * that prices residual encoding against [[ivfPqRecall]]'s raw-code
     * composition at the identical (M, Ks, nprobe) budget. */
-  def ivfAdcRecall(spark: SparkSession, dir: String, k: Int = TopK): DataFrame = {
-    val exact = ExactPanels.l2(spark, dir, k)
-    val approx = ivfAdcTopK(spark, dir, k)
-      .select(col("query_id"), col("cand_id"), lit(1L).as("hit"))
-    exact.join(approx, Seq("query_id", "cand_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .withColumn("recall", col("n_hits").cast("double") / col("n_exact").cast("double"))
-      .orderBy("query_id")
-  }
+  def ivfAdcRecall(spark: SparkSession, dir: String, k: Int = TopK): DataFrame =
+    ExactPanels.recall(ExactPanels.l2(spark, dir, k),
+      ivfAdcTopK(spark, dir, k))
 
   // ---------------------------------------------------------------------
   // DuckDB oracle — the unrolled per-subspace training replay
   // ---------------------------------------------------------------------
-
-  private val quantizedSql: String =
-    """q AS (
-      |  SELECT vec_id,
-      |         list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*10000 + 0.5) AS BIGINT)) AS qv
-      |  FROM embeddings
-      |),
-      |qn AS (
-      |  SELECT vec_id, qv,
-      |         CAST(list_sum(list_transform(qv, x -> x*x)) AS BIGINT) AS nsq
-      |  FROM q
-      |)""".stripMargin
 
   /** dist² of row alias `v` (cols qv, nsq) vs centroid alias `c` in a
     * `w`-dim space. */
@@ -534,7 +466,7 @@ object Pq {
   /** All subspace CTEs: slices, unrolled training, packed positions,
     * encoded codes, and the panel's ADC tables, in long (m, pos) form. */
   private def pqCtes: String =
-    s"""$quantizedSql,
+    s"""${Similarity.quantizedSql},
        |$pqModelCtes,
        |scored AS (
        |  SELECT t.query_id, c.vec_id AS cand_id, CAST(sum(t.dist) AS BIGINT) AS adist
@@ -621,17 +553,11 @@ object Pq {
        |  ) WHERE rank <= $k),
        |approx AS (
        |  SELECT query_id, cand_id FROM pq_ranked WHERE rank <= $k)
-       |SELECT e.query_id, count(*) AS n_exact,
-       |       CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       |       CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-       |         / CAST(count(*) AS DOUBLE) AS recall
-       |FROM exact e LEFT JOIN approx a
-       |  ON e.query_id = a.query_id AND e.cand_id = a.cand_id
-       |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin
+       |${ExactPanels.recallSql}""".stripMargin
 
   /** The IVF chain + PQ model + cell-restricted ADC scoring. */
   private def ivfPqCtes(nprobe: Int): String =
-    s"""$quantizedSql,
+    s"""${Similarity.quantizedSql},
        |${Clustering.kmeansCtesNoQuantize},
        |$pqModelCtes,
        |probes AS (
@@ -667,7 +593,7 @@ object Pq {
     val tablesLong = (0 until M)
       .map(m => s"SELECT query_id, $m AS m, pos, dist FROM to$m")
       .mkString("\n  UNION ALL ")
-    s"""$quantizedSql,
+    s"""${Similarity.quantizedSql},
        |vars AS (
        |  SELECT i.i AS dim,
        |         CAST(count(*) AS HUGEINT) * CAST(sum(qv[i.i]*qv[i.i]) AS HUGEINT)
@@ -713,13 +639,7 @@ object Pq {
        |  ) WHERE rank <= $k),
        |approx AS (
        |  SELECT query_id, cand_id FROM opq_ranked WHERE rank <= $k)
-       |SELECT e.query_id, count(*) AS n_exact,
-       |       CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       |       CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-       |         / CAST(count(*) AS DOUBLE) AS recall
-       |FROM exact e LEFT JOIN approx a
-       |  ON e.query_id = a.query_id AND e.cand_id = a.cand_id
-       |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin
+       |${ExactPanels.recallSql}""".stripMargin
 
   /** The IVFADC residual chain: residual corpus (x − centroid(cell)),
     * the residual-trained PQ model, per-(query, probed-cell) residual ADC
@@ -741,7 +661,7 @@ object Pq {
     val rtLong = (0 until M)
       .map(m => s"SELECT query_id, cid, $m AS m, pos, dist FROM rt$m")
       .mkString("\n  UNION ALL ")
-    s"""$quantizedSql,
+    s"""${Similarity.quantizedSql},
        |${Clustering.kmeansCtesNoQuantize},
        |resid AS (
        |  SELECT f.vec_id, f.cid,
@@ -794,13 +714,7 @@ object Pq {
        |  ) WHERE rank <= $k),
        |approx AS (
        |  SELECT query_id, cand_id FROM adc_ranked WHERE rank <= $k)
-       |SELECT e.query_id, count(*) AS n_exact,
-       |       CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       |       CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-       |         / CAST(count(*) AS DOUBLE) AS recall
-       |FROM exact e LEFT JOIN approx a
-       |  ON e.query_id = a.query_id AND e.cand_id = a.cand_id
-       |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin
+       |${ExactPanels.recallSql}""".stripMargin
 
   def ivfPqTopKSql(k: Int = TopK, nprobe: Int = 2): String =
     s"""WITH ${ivfPqCtes(nprobe)}
@@ -820,13 +734,7 @@ object Pq {
        |  ) WHERE rank <= $k),
        |approx AS (
        |  SELECT query_id, cand_id FROM ivfpq_ranked WHERE rank <= $k)
-       |SELECT e.query_id, count(*) AS n_exact,
-       |       CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       |       CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-       |         / CAST(count(*) AS DOUBLE) AS recall
-       |FROM exact e LEFT JOIN approx a
-       |  ON e.query_id = a.query_id AND e.cand_id = a.cand_id
-       |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin
+       |${ExactPanels.recallSql}""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "sim_pq_topk" -> ((s, d) => pqTopK(s, d)),

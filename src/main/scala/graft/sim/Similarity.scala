@@ -36,10 +36,11 @@ object Similarity {
       .select(col("vec_id"), Portable.quantize(col("embedding")).as("q"))
       .withColumn("nsq", Portable.normSqQ(col("q")))
 
-  /** As above, from the sf dir. Repartitioned off the single-file scan so
-    * the quantize/projection map stages parallelize (no-op at production
+  /** As above, from the sf dir: the ONE quantized-corpus reader of the
+    * vector family. Repartitioned off the single-file scan so the
+    * quantize/projection map stages parallelize (no-op at production
     * scale). */
-  private def quantized(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def quantized(spark: SparkSession, dir: String): DataFrame =
     quantizedFrom(t(spark, dir, "embeddings")
       .repartition(spark.sparkContext.defaultParallelism, col("vec_id")))
 
@@ -55,8 +56,12 @@ object Similarity {
       |  FROM q
       |)""".stripMargin
 
-  private[sim] val dotSql =
-    s"CAST(list_sum(list_transform(generate_series(1, $dims), i -> a.qv[i] * b.qv[i])) AS BIGINT)"
+  /** Exact integer dot product of the `qv` vectors of row aliases `a`
+    * and `b` (the DuckDB twin of Portable.dotQ). */
+  private[sim] def dotSqlOf(a: String, b: String): String =
+    s"CAST(list_sum(list_transform(generate_series(1, $dims), i -> $a.qv[i] * $b.qv[i])) AS BIGINT)"
+
+  private[sim] val dotSql = dotSqlOf("a", "b")
 
   /** Brute-force exact cosine top-k: queries = vec_id < 8 against the full
     * corpus (self excluded). The TINY QUERY SIDE broadcasts (the corpus is
@@ -72,8 +77,7 @@ object Similarity {
     val corpus = qn.select(col("vec_id").as("cand_id"), col("q").as("qb"), col("nsq").as("nb"))
     val scored = corpus.join(broadcast(queries), col("query_id") =!= col("cand_id"))
       .withColumn("cosine",
-        Portable.dotQ(col("qa"), col("qb")).cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
+        Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")))
     scored
       .select(col("query_id"), col("cand_id"), col("cosine"),
         row_number().over(
@@ -167,8 +171,7 @@ object Similarity {
     l.join(r, Seq("signature"))
       .filter(col("query_id") =!= col("cand_id"))
       .withColumn("cosine",
-        Portable.dotQ(col("qa"), col("qb")).cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
+        Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")))
       .select(col("query_id"), col("cand_id"), col("cosine"),
         row_number().over(
           Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id")))
@@ -274,8 +277,7 @@ object Similarity {
       .join(qn.select(col("vec_id").as("a"), col("q").as("qa"), col("nsq").as("na")), Seq("a"))
       .join(qn.select(col("vec_id").as("b"), col("q").as("qb"), col("nsq").as("nb")), Seq("b"))
       .withColumn("cosine",
-        Portable.dotQ(col("qa"), col("qb")).cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
+        Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")))
       .filter(col("cosine") >= tau)
       .select("a", "b", "cosine")
     // cross-group expansion: every member of rep-a's group pairs with
@@ -298,8 +300,7 @@ object Similarity {
             |  transform(slice(members, i + 2, size(members)),
             |            y -> struct(x AS x, y AS y))))""".stripMargin)).as("p"))
       .withColumn("cosine",
-        Portable.dotQ(col("q"), col("q")).cast("double") /
-          (sqrt(col("nsq").cast("double")) * sqrt(col("nsq").cast("double"))))
+        Portable.cosine(Portable.dotQ(col("q"), col("q")), col("nsq"), col("nsq")))
       .filter(col("cosine") >= tau)
       .select(least(col("p.x"), col("p.y")).as("a"),
         greatest(col("p.x"), col("p.y")).as("b"), col("cosine"))
@@ -376,8 +377,7 @@ object Similarity {
       .join(qn.select(col("vec_id").as("a"), col("q").as("qa"), col("nsq").as("na")), Seq("a"))
       .join(qn.select(col("vec_id").as("b"), col("q").as("qb"), col("nsq").as("nb")), Seq("b"))
       .withColumn("cosine",
-        Portable.dotQ(col("qa"), col("qb")).cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
+        Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")))
       .filter(col("cosine") >= tau)
       .select("a", "b", "cosine")
       .orderBy("a", "b")
@@ -429,8 +429,7 @@ object Similarity {
     // nearest cell per vector (cosine desc, cid asc tie-break)
     val assign = qn.crossJoin(broadcast(cents))
       .withColumn("ccos",
-        Portable.dotQ(col("q"), col("qc")).cast("double") /
-          (sqrt(col("nsq").cast("double")) * sqrt(col("nc").cast("double"))))
+        Portable.cosine(Portable.dotQ(col("q"), col("qc")), col("nsq"), col("nc")))
       .select(col("vec_id"), col("q"), col("nsq"), col("cid"), col("ccos"),
         row_number().over(
           Window.partitionBy("vec_id").orderBy(desc("ccos"), col("cid"))).as("crn"))
@@ -445,8 +444,7 @@ object Similarity {
     probes.join(cells, Seq("cid"))
       .filter(col("query_id") =!= col("cand_id"))
       .withColumn("cosine",
-        Portable.dotQ(col("qa"), col("qb")).cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
+        Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")))
       .select(col("query_id"), col("cand_id"), col("cosine"),
         row_number().over(
           Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id")))
@@ -496,58 +494,28 @@ object Similarity {
     * never the full corpus). The compare is a left join on
     * (query, candidate) + per-query counts; recall = hits/k is a
     * division of identical small integers → identical doubles. */
-  def annRecall(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val exact = ExactPanels.cosine(spark, dir, k)
-    val approx = annLsh(spark, dir, k)
-      .filter(col("query_id") < 8)
-      .select(col("query_id"), col("cand_id"), lit(1L).as("hit"))
-    exact.join(approx, Seq("query_id", "cand_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .withColumn("recall", col("n_hits").cast("double") / col("n_exact").cast("double"))
-      .orderBy("query_id")
-  }
+  def annRecall(spark: SparkSession, dir: String, k: Int = 5): DataFrame =
+    ExactPanels.recall(ExactPanels.cosine(spark, dir, k),
+      annLsh(spark, dir, k).filter(col("query_id") < 8))
 
   def annRecallSql(k: Int = 5): String =
     s"""WITH exact AS (SELECT query_id, cand_id FROM (${cosineTopKSql(k)})),
        |approx AS (SELECT query_id, cand_id FROM (${annLshSql(k)}) WHERE query_id < 8)
-       |SELECT e.query_id, count(*) AS n_exact,
-       |       CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       |       CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-       |         / CAST(count(*) AS DOUBLE) AS recall
-       |FROM exact e LEFT JOIN approx a
-       |  ON e.query_id = a.query_id AND e.cand_id = a.cand_id
-       |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin
+       |${ExactPanels.recallSql}""".stripMargin
 
   /** IVF recall@k vs the exact brute-force top-k — the same
     * measurement surface as [[annRecall]] for the OTHER approximate
     * path, so both production ANN variants carry a first-class quality
     * query (nprobe tuning reads directly off this report). Same scale
     * posture: the exact side runs only over the fixed query panel. */
-  def ivfRecall(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val exact = ExactPanels.cosine(spark, dir, k)
-    val approx = ivfTopK(spark, dir, k)
-      .filter(col("query_id") < 8)
-      .select(col("query_id"), col("cand_id"), lit(1L).as("hit"))
-    exact.join(approx, Seq("query_id", "cand_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .withColumn("recall", col("n_hits").cast("double") / col("n_exact").cast("double"))
-      .orderBy("query_id")
-  }
+  def ivfRecall(spark: SparkSession, dir: String, k: Int = 5): DataFrame =
+    ExactPanels.recall(ExactPanels.cosine(spark, dir, k),
+      ivfTopK(spark, dir, k).filter(col("query_id") < 8))
 
   def ivfRecallSql(k: Int = 5): String =
     s"""WITH exact AS (SELECT query_id, cand_id FROM (${cosineTopKSql(k)})),
        |approx AS (SELECT query_id, cand_id FROM (${ivfTopKSql(k)}) WHERE query_id < 8)
-       |SELECT e.query_id, count(*) AS n_exact,
-       |       CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       |       CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-       |         / CAST(count(*) AS DOUBLE) AS recall
-       |FROM exact e LEFT JOIN approx a
-       |  ON e.query_id = a.query_id AND e.cand_id = a.cand_id
-       |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin
+       |${ExactPanels.recallSql}""".stripMargin
 
   /** Matryoshka (MRL) truncation quality as a first-class query:
     * recall@k of brute-force search over the FIRST `prefixDims`
@@ -578,20 +546,13 @@ object Similarity {
     val corpus = pq.select(col("vec_id").as("cand_id"), col("pq").as("qb"), col("pnsq").as("nb"))
     val approx = corpus.join(broadcast(queries), col("query_id") =!= col("cand_id"))
       .withColumn("cosine",
-        Portable.dotQ(col("qa"), col("qb")).cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
+        Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")))
       .select(col("query_id"), col("cand_id"),
         row_number().over(
           Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id")))
           .cast("long").as("rank"))
       .filter(col("rank") <= k)
-      .select(col("query_id"), col("cand_id"), lit(1L).as("hit"))
-    exact.join(approx, Seq("query_id", "cand_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .withColumn("recall", col("n_hits").cast("double") / col("n_exact").cast("double"))
-      .orderBy("query_id")
+    ExactPanels.recall(exact, approx)
   }
 
   def mrlRecallSql(k: Int = 5, prefixDims: Int = 16): String = {
@@ -602,7 +563,7 @@ object Similarity {
        |         CAST(list_sum(list_transform(list_slice(qv, 1, $prefixDims), x -> x*x)) AS BIGINT) AS pnsq
        |  FROM qn
        |),
-       |papprox AS (
+       |approx AS (
        |  SELECT query_id, cand_id FROM (
        |    SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
        |           row_number() OVER (PARTITION BY a.vec_id ORDER BY
@@ -612,14 +573,8 @@ object Similarity {
        |    WHERE a.vec_id < 8)
        |  WHERE rank <= $k
        |),
-       |pexact AS (SELECT query_id, cand_id FROM (${cosineTopKSql(k)}))
-       |SELECT e.query_id, count(*) AS n_exact,
-       |       CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       |       CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-       |         / CAST(count(*) AS DOUBLE) AS recall
-       |FROM pexact e LEFT JOIN papprox a
-       |  ON e.query_id = a.query_id AND e.cand_id = a.cand_id
-       |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin
+       |exact AS (SELECT query_id, cand_id FROM (${cosineTopKSql(k)}))
+       |${ExactPanels.recallSql}""".stripMargin
   }
 
   /** Hard-negative mining for contrastive training: for each query
@@ -645,8 +600,7 @@ object Similarity {
       col("q").as("qb"), col("nsq").as("nb"))
     corpus.join(broadcast(queries), col("cand_label") =!= col("query_label"))
       .withColumn("cosine",
-        Portable.dotQ(col("qa"), col("qb")).cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
+        Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")))
       .select(col("query_id"), col("query_label").cast("long").as("query_label"),
         col("cand_id"), col("cand_label").cast("long").as("cand_label"), col("cosine"),
         row_number().over(
@@ -730,8 +684,7 @@ object Similarity {
     val qb = qn0.select(col("vec_id").as("cand_id"), col("q").as("qb"), col("nsq").as("nb"))
     short.join(qb, "cand_id").join(broadcast(qa), "query_id")
       .withColumn("cosine",
-        Portable.dotQ(col("qa"), col("qb")).cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
+        Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")))
       .select(col("query_id"), col("cand_id"), col("hamming"), col("cosine"),
         row_number().over(
           Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id")))
@@ -742,17 +695,9 @@ object Similarity {
 
   /** Recall@k of the BQ-shortlist+rerank path against exact cosine — the
     * gate that prices the 32× memory saving, beside the LSH/IVF/PQ gates. */
-  def bqRecall(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val exact = ExactPanels.cosine(spark, dir, k)
-    val approx = bqTopK(spark, dir, k)
-      .select(col("query_id"), col("cand_id"), lit(1L).as("hit"))
-    exact.join(approx, Seq("query_id", "cand_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .withColumn("recall", col("n_hits").cast("double") / col("n_exact").cast("double"))
-      .orderBy("query_id")
-  }
+  def bqRecall(spark: SparkSession, dir: String, k: Int = 5): DataFrame =
+    ExactPanels.recall(ExactPanels.cosine(spark, dir, k),
+      bqTopK(spark, dir, k))
 
   private def bqCodesSql: String = {
     def word(lo: Int): String =
@@ -816,13 +761,7 @@ object Similarity {
        |             b.vec_id) AS rank
        |    FROM qn a JOIN qn b ON a.vec_id <> b.vec_id
        |    WHERE a.vec_id < 8) WHERE rank <= $k)
-       |SELECT e.query_id, count(*) AS n_exact,
-       |       CAST(sum(CASE WHEN x.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       |       CAST(sum(CASE WHEN x.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-       |         / CAST(count(*) AS DOUBLE) AS recall
-       |FROM exact e LEFT JOIN approx x
-       |  ON e.query_id = x.query_id AND e.cand_id = x.cand_id
-       |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin
+       |${ExactPanels.recallSql}""".stripMargin
 
   /** Composed IVF + binary quantization — the third member of the
     * composition matrix beside IVF×PQ-raw (sim_ivfpq) and IVF×PQ-residual
@@ -842,14 +781,7 @@ object Similarity {
     val celled = codes
       .join(Clustering.assign(corpus, cent).select(col("vec_id"), col("cid")), "vec_id")
       .localCheckpoint(false)
-    val packedIvf = cent.agg(collect_list(struct(col("cid"), col("c"), col("csq"))).as("cents"))
-    val probes = corpus.filter(col("vec_id") < 8)
-      .crossJoin(broadcast(packedIvf))
-      .withColumn("probe", explode(slice(array_sort(transform(col("cents"), ct =>
-        struct(
-          (col("nsq") - lit(2L) * Portable.dotQ(col("q"), ct.getField("c"))
-            + ct.getField("csq")).as("dist"),
-          ct.getField("cid").as("cid")))), 1, nprobe)))
+    val probes = Clustering.probes(corpus, cent, nprobe)
       .select(col("vec_id").as("query_id"), col("probe").getField("cid").as("cid"))
     val panel = probes.join(
       codes.select(col("vec_id").as("query_id"), col("w0").as("p0"), col("w1").as("p1")),
@@ -869,8 +801,7 @@ object Similarity {
     val qb = corpus.select(col("vec_id").as("cand_id"), col("q").as("qb"), col("nsq").as("nb"))
     short.join(qb, "cand_id").join(broadcast(qa), "query_id")
       .withColumn("cosine",
-        Portable.dotQ(col("qa"), col("qb")).cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
+        Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")))
       .select(col("query_id"), col("cand_id"), col("hamming"), col("cosine"),
         row_number().over(
           Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id")))
@@ -882,17 +813,9 @@ object Similarity {
   /** Recall@k of the IVF×BQ path against exact cosine — with
     * [[bqRecall]] it separates the cell-pruning loss from the sign-code
     * loss, the same two-gate decomposition as sim_ivfpq vs sim_pq. */
-  def ivfBqRecall(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val exact = ExactPanels.cosine(spark, dir, k)
-    val approx = ivfBqTopK(spark, dir, k)
-      .select(col("query_id"), col("cand_id"), lit(1L).as("hit"))
-    exact.join(approx, Seq("query_id", "cand_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .withColumn("recall", col("n_hits").cast("double") / col("n_exact").cast("double"))
-      .orderBy("query_id")
-  }
+  def ivfBqRecall(spark: SparkSession, dir: String, k: Int = 5): DataFrame =
+    ExactPanels.recall(ExactPanels.cosine(spark, dir, k),
+      ivfBqTopK(spark, dir, k))
 
   private def ivfBqCtes(nprobe: Int): String = {
     val r = Clustering.trainRounds
@@ -952,13 +875,7 @@ object Similarity {
        |    WHERE a.vec_id < 8) WHERE rank <= $k),
        |approx AS (
        |  SELECT query_id, cand_id FROM ivfbq_ranked WHERE rank <= $k)
-       |SELECT e.query_id, count(*) AS n_exact,
-       |       CAST(sum(CASE WHEN x.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       |       CAST(sum(CASE WHEN x.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-       |         / CAST(count(*) AS DOUBLE) AS recall
-       |FROM exact e LEFT JOIN approx x
-       |  ON e.query_id = x.query_id AND e.cand_id = x.cand_id
-       |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin
+       |${ExactPanels.recallSql}""".stripMargin
 
   /** Bit width of the multi-probe bucket key (the low bits of the
     * 16-plane signature). The full 16-bit key is sim_ann_lsh's
@@ -994,9 +911,7 @@ object Similarity {
       panel.join(corpus, Seq("probe"))
         .filter(col("query_id") =!= col("cand_id"))
         .select(col("query_id"), col("cand_id"),
-          (Portable.dotQ(col("qa"), col("qb")).cast("double") /
-            (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-            .as("cosine"))
+          Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")).as("cosine"))
         .distinct() // candidates reachable via several probes collapse
         .select(col("query_id"), col("cand_id"),
           row_number().over(
@@ -1117,29 +1032,21 @@ object Similarity {
     val top = panel.join(corpus, Seq("probe"))
       .filter(col("query_id") =!= col("cand_id"))
       .select(col("budget"), col("query_id"), col("cand_id"),
-        (Portable.dotQ(col("qa"), col("qb")).cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-          .as("cosine"))
+        Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")).as("cosine"))
       .distinct() // candidates reachable via several probes collapse
       .select(col("budget"), col("query_id"), col("cand_id"),
         row_number().over(
           Window.partitionBy("budget", "query_id")
             .orderBy(desc("cosine"), col("cand_id"))).as("rank"))
       .filter(col("rank") <= k)
-      .select(col("budget"), col("query_id"), col("cand_id"), lit(1L).as("hit"))
     val exact = ExactPanels.cosine(spark, dir, k)
     val budgets = Seq(0, 1, 2).map(b =>
         struct(lit(b).as("budget"), lit(nProbes(b).toLong).as("n_probes")))
-    exact.crossJoin(broadcast(
+    ExactPanels.recall(
+      exact.crossJoin(broadcast(
         spark.range(1).select(explode(array(budgets: _*)).as("b"))
-          .select(col("b.budget").as("budget"), col("b.n_probes").as("n_probes"))))
-      .join(top, Seq("budget", "query_id", "cand_id"), "left")
-      .groupBy("budget", "n_probes")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .withColumn("recall",
-        col("n_hits").cast("double") / col("n_exact").cast("double"))
-      .orderBy("budget")
+          .select(col("b.budget").as("budget"), col("b.n_probes").as("n_probes")))),
+      top, Seq("budget", "query_id", "cand_id"), Seq("budget", "n_probes"))
   }
 
   def annProbeCurveSql(k: Int = 5): String =

@@ -156,7 +156,7 @@ object Bpe {
       .groupBy("doc_id", "w").agg(count(lit(1)).as("occ"))
       .localCheckpoint(false)
     // training state: distinct word forms with corpus counts (Zipf-small)
-    // merge-round loop state: lineage cut per round (graft.Cache)
+    // merge-round loop state: lineage cut per round
     val forms0 = occ.groupBy("w").agg(sum(col("occ")).as("wcnt"))
       .select(col("w"), col("wcnt"), symsExpr.as("syms"))
       .localCheckpoint(false)

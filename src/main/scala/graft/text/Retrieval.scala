@@ -316,8 +316,7 @@ object Retrieval {
     pairs
       .join(qn.select(col("doc_id").as("a"), col("qn").as("qa")), Seq("a"))
       .join(qn.select(col("doc_id").as("b"), col("qn").as("qb")), Seq("b"))
-      .withColumn("cosine", col("dot").cast("double") /
-        (sqrt(col("qa").cast("double")) * sqrt(col("qb").cast("double"))))
+      .withColumn("cosine", Portable.cosine(col("dot"), col("qa"), col("qb")))
       .filter(col("cosine") >= tau)
       .select(col("a"), col("b"), col("cosine"))
       .orderBy("a", "b")
@@ -383,17 +382,13 @@ object Retrieval {
       .select(col("doc_id"),
         row_number().over(Window.orderBy(desc("score"), col("doc_id")))
           .cast("long").as("lex_rank"))
-    val qn = t(spark, dir, "embeddings")
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), Portable.quantize(col("embedding")).as("q"))
-      .withColumn("nsq", Portable.normSqQ(col("q")))
+    val qn = graft.sim.Similarity.quantized(spark, dir)
     val q0 = qn.filter(col("vec_id") === 0)
       .select(col("q").as("qa"), col("nsq").as("na"))
     val vecTop = qn.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q0)) // 1-row query vector
       .withColumn("cosine",
-        Portable.dotQ(col("qa"), col("q")).cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nsq").cast("double"))))
+        Portable.cosine(Portable.dotQ(col("qa"), col("q")), col("na"), col("nsq")))
       .select(col("vec_id").as("doc_id"), col("cosine"))
       .orderBy(desc("cosine"), col("doc_id")).limit(topN)
     val vec = vecTop.select(col("doc_id"),

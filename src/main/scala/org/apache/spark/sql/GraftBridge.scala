@@ -2,11 +2,12 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Bridge into `private[sql]` API: Column ↔ catalyst Expression
+/** Bridge into Spark's package-private API: Column ↔ catalyst Expression
   * conversion for registering custom codegen expressions (Spark 4 split
   * Column off the catalyst tree; the blessed converters live in
-  * `org.apache.spark.sql.classic.ExpressionUtils`, package-private).
-  * This is the entire surface we borrow — no other internals are used.
+  * `org.apache.spark.sql.classic.ExpressionUtils`, package-private),
+  * plus the function-registry, plan, checkpoint-block and listener-bus
+  * calls below.
   */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -20,6 +21,12 @@ object GraftBridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.registerFunction(
       org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
+
+  /** Block until every event posted to the driver's listener bus so far
+    * has reached its listeners (a `QueryExecutionListener` hears of an
+    * action only through the bus, after the action returns). */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 
   /** DataFrame from a catalyst LogicalPlan (custom operator nodes). */
   def ofRows(spark: SparkSession,

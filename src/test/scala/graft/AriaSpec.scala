@@ -350,7 +350,7 @@ class AriaSpec extends SparkSpec {
       sc.setJobGroup(group, "aria drain")
       val r = Aria.run(spark, cfg)
       collectTable(r.table)
-      org.apache.spark.ListenerFlush(sc)
+      org.apache.spark.sql.GraftBridge.drainListeners(sc)
       r
     } finally {
       sc.clearJobGroup()

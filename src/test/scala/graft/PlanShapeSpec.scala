@@ -268,7 +268,7 @@ class PlanShapeSpec extends SparkSpec {
     ps.listenerManager.register(listener)
     try {
       val (_, shared) = graft.sim.GraphOps.triShared(ps, sf("sf0.001"), 16)
-      org.apache.spark.ListenerFlush(ps.sparkContext)
+      org.apache.spark.sql.GraftBridge.drainListeners(ps.sparkContext)
       val qe = checkpointed.synchronized(checkpointed.lastOption)
         .getOrElse(fail("triShared took no localCheckpoint"))
       assert(qe.analyzed.output.map(_.name) === shared.columns.toSeq)

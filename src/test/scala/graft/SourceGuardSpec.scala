@@ -50,4 +50,13 @@ class SourceGuardSpec extends AnyFunSuite {
       under = "src/main")
     assert(found.isEmpty, found.mkString("\n"))
   }
+
+  test("the ANN family has one portable cosine and one centroid pack") {
+    val cosine = hits("""sqrt\(col\("n[^"]*"\)\.cast\("double"\)\) \* sqrt\(""",
+      "functions/Portable.scala")
+    val pack = hits("""collect_list\(struct\(col\("cid"\), col\("c"\), col\("csq"\)\)\)""",
+      "sim/Clustering.scala")
+    val found = cosine ++ pack
+    assert(found.isEmpty, found.mkString("\n"))
+  }
 }
