@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.aria.Aria
 import graft.model.AriaConfig
@@ -25,15 +26,16 @@ object AriaMain {
     val t0 = System.nanoTime()
     val result = Aria.run(spark, cfg)
     // bit_xor, not sum: ANSI mode (Spark 4 default) makes sum() throw on
-    // Long overflow, and xor is order/partitioning-independent.
-    val checksum = result.table
+    // Long overflow, and xor is order/partitioning-independent. One
+    // aggregation reads the lazy final merge for both figures.
+    val Row(rows: Long, checksum: Long) = result.table
       .select(xxhash64(col("key"), col("f0"), col("f4"), col("f9")).as("h"))
-      .agg(expr("bit_xor(h)")).head.getLong(0)
+      .agg(count(lit(1)), expr("bit_xor(h)")).head
     val elapsed = (System.nanoTime() - t0) / 1e9
     result.stats.foreach { s =>
       println(f"epoch=${s.epoch}%2d txns=${s.txns}%5d committed=${s.committed}%5d aborted=${s.aborted}%5d")
     }
-    println(f"drained in ${result.stats.length} epochs, ${elapsed}%.2f s; table checksum=$checksum%016x rows=${result.table.count()}")
+    println(f"drained in ${result.stats.length} epochs, ${elapsed}%.2f s; table checksum=$checksum%016x rows=$rows")
     spark.stop()
   }
 }

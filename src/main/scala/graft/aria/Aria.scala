@@ -56,10 +56,12 @@ object Aria {
     * strictly smaller Tid. WAR: any write op sees a read reservation from a
     * strictly smaller Tid. WAW: any write op sees a write reservation from
     * a strictly smaller Tid. (TrancM_func.cuh:126-164.)
-    */
+    * A shuffled hash join: [[reserve]] already partitions the
+    * reservations on the key, so only the ops shuffle, and no broadcast
+    * job runs before the epoch's abort-set collect. */
   def analyze(ops: DataFrame, reservations: DataFrame,
               keyCols: Seq[String] = Seq("key")): DataFrame = {
-    val j = ops.join(reservations, keyCols)
+    val j = ops.join(reservations.hint("shuffle_hash"), keyCols)
     j.groupBy("tid").agg(
       max(col("wts") =!= 0 && col("wts") < col("tid")).as("raw"),
       max(col("isUpdate") && col("rts") < col("tid")).as("war"),
@@ -208,17 +210,14 @@ object Aria {
   final case class RunResult(table: DataFrame, stats: Seq[EpochStats])
 
   /** The full drain-to-empty loop (db.h:104-109) from the generated
-    * epoch-0 state: [[runFrom]] over a checkpointed `kvTable` and
-    * `txnOps` batch. */
+    * epoch-0 state: [[runFrom]] over a lazily checkpointed `txnOps` batch
+    * and the `kvTable` plan itself, which readers prune to the columns
+    * they select. */
   def run(spark: SparkSession, cfg: AriaConfig): RunResult = {
-    // lazy localCheckpoints: lineage is truncated identically, but the
-    // materialization folds into the first job that reads each frame
-    // instead of costing a dedicated job per checkpoint.
-    val table = Workload.kvTable(spark, cfg.tableKeys, cfg.seed)
-      .localCheckpoint(eager = eagerHygiene(cfg))
     val ops = Workload.txnOps(spark, cfg.nTxns, cfg.maxOps, cfg.writePct,
       cfg.keysMax, cfg.seed).localCheckpoint(eager = eagerHygiene(cfg))
-    runFrom(spark, cfg, table, ops, startEpoch = 0, remaining0 = cfg.nTxns.toLong)
+    runFrom(spark, cfg, Workload.kvTable(spark, cfg.tableKeys, cfg.seed), ops,
+      startEpoch = 0, remaining0 = cfg.nTxns.toLong)
   }
 
   /** Table keys one shuffle task can hold without thrashing the heap —
@@ -241,9 +240,7 @@ object Aria {
     * batch eagerly and free the superseded retry batch's blocks (see
     * [[runFrom]]). The reference-size drain keeps its lazy checkpoints:
     * it holds one retry-batch block set per epoch, each at most the
-    * 150-txn batch (≤4,500 ops), beside the base table's checkpoint
-    * (about 120 MB at 199,999 keys), which every drain holds until its
-    * final merge. */
+    * 150-txn batch (≤4,500 ops), until its final merge is read. */
   private def eagerHygiene(cfg: AriaConfig): Boolean =
     cfg.forceEagerHygiene || cfg.tableKeys >= EagerHygieneKeys
 
@@ -262,10 +259,9 @@ object Aria {
     * pay a count job to rediscover it). `keyCols` = the reservation key
     * (see [[reserve]]); (tbl, key) drains a multi-table state.
     *
-    * The returned table is a lazy localCheckpoint of the one merge: it
-    * materializes in the first job that reads it, planned here with the
-    * drain's confs below.
-    */
+    * The returned table is [[install]]'s plan, not a checkpoint: each
+    * reader plans the merge with its own confs and prunes it to the
+    * payload columns it selects. */
   def runFrom(spark: SparkSession, cfg: AriaConfig, table0: DataFrame,
               ops0: DataFrame, startEpoch: Int, remaining0: Long,
               keyCols: Seq[String] = Seq("key")): RunResult = {
@@ -295,7 +291,6 @@ object Aria {
       val table =
         if (writes.isEmpty) table0
         else install(table0, writes.reduce(_ unionByName _), cfg.seed, keyCols)
-          .localCheckpoint(eager = false)
       RunResult(table, stats)
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)

@@ -35,19 +35,14 @@ object AriaQueries {
   // small-batch conf tuning in Aria.run cannot race on a shared conf):
   // the drains are independent latency-bound job chains, so the sibling
   // overlaps this one's scheduler gaps and the family pays ~max, not
-  // sum. Each future also materializes the final table (the drain's one
-  // install merge), so the table-summary query reads a stored snapshot.
+  // sum. The final table stays a lazy merge that each reader prunes.
   private val drainPool = java.util.concurrent.Executors.newFixedThreadPool(2,
     (r: Runnable) => { val t = new Thread(r, "aria-drain"); t.setDaemon(true); t })
   private implicit val drainEc: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutor(drainPool)
 
-  private def drain(spark: SparkSession, reorder: Boolean) =
-    graft.Memo(spark, ("aria.drain", reorder))(scala.concurrent.Future {
-      val r = Aria.run(spark.newSession(), cfg.copy(reorder = reorder))
-      r.table.count() // materialize the install merge eagerly
-      r
-    })
+  private def drain(spark: SparkSession, reorder: Boolean) = graft.Memo(spark, ("aria.drain", reorder))(
+    scala.concurrent.Future(Aria.run(spark.newSession(), cfg.copy(reorder = reorder))))
 
   private def cachedRun(spark: SparkSession, reorder: Boolean): Aria.RunResult = {
     val fut = drain(spark, reorder)
@@ -381,7 +376,6 @@ object AriaQueries {
       nTables: Int = mtTables): (DataFrame, Seq[graft.model.EpochStats]) = {
     val s = spark.newSession()
     val table = Workload.kvTables(s, nTables, cfg.tableKeys, cfg.seed)
-      .localCheckpoint(false)
     val ops = Workload.txnOpsMulti(s, cfg.nTxns, cfg.maxOps,
       cfg.writePct, cfg.keysMax, nTables, cfg.seed).localCheckpoint(false)
     val r = Aria.runFrom(s, cfg, table, ops, startEpoch = 0,

@@ -338,7 +338,7 @@ object Multimodal {
   /** Write the PNG fixture once per JVM (bench warms it untimed, so the
     * timed pass measures binaryFile read + decode, like the src_* rows). */
   private[multimodal] def realPngFixture(): String = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_mm_real_png"
+    val path = graft.sources.Formats.fixture("mm_real_png")
     graft.sources.Formats.writeOnce(s"mm_png|$path") {
       // fresh dir: the binaryFile scan globs everything here, so stale
       // files from an older fixture shape would surface as phantom rows
@@ -505,7 +505,7 @@ object Multimodal {
   private def realWavSample(k: Int, i: Int): Int = (37 * i + 11 * k) % 256
 
   private[multimodal] def realWavFixture(): String = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_mm_real_wav"
+    val path = graft.sources.Formats.fixture("mm_real_wav")
     graft.sources.Formats.writeOnce(s"mm_wav|$path") {
       val dir = graft.sources.Formats.freshDir(path)
       val fmt = new javax.sound.sampled.AudioFormat(8000f, 8, 1,
@@ -592,7 +592,7 @@ object Multimodal {
   private val gifSampleEvery = 2
 
   private[multimodal] def realGifFixture(): String = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_mm_real_gif"
+    val path = graft.sources.Formats.fixture("mm_real_gif")
     graft.sources.Formats.writeOnce(s"mm_gif|$path") {
       val dir = graft.sources.Formats.freshDir(path)
       val grays = Array.tabulate[Byte](256)(_.toByte)
@@ -718,7 +718,7 @@ object Multimodal {
   private val ndMaxHamming = 3
 
   private[graft] def realNearDupFixture(): String = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_mm_real_neardup"
+    val path = graft.sources.Formats.fixture("mm_real_neardup")
     graft.sources.Formats.writeOnce(s"mm_nd|$path") {
       val dir = graft.sources.Formats.freshDir(path)
       (0 until realPngCount + ndPlantCount).foreach { id =>

@@ -29,15 +29,23 @@ object Formats {
     * phantom rows (looks like a codec bug; ADVICE r13). */
   private[graft] def freshDir(path: String): java.io.File = {
     val dir = new java.io.File(path)
-    if (dir.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(): Unit
-      }
-      rm(dir)
-    }
+    if (dir.exists()) rm(dir)
     dir.mkdirs()
     dir
+  }
+
+  private def rm(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
+    f.delete(): Unit
+  }
+
+  /** Path of fixture `name` under this JVM's own root, a fresh
+    * `graft_fixtures_*` directory in `java.io.tmpdir` deleted on exit:
+    * [[writeOnce]] guards fixtures per JVM, so two JVMs never share one. */
+  private[graft] def fixture(name: String): String = new java.io.File(fixtureRoot, name).getPath
+  private lazy val fixtureRoot = {
+    val root = java.nio.file.Files.createTempDirectory("graft_fixtures_").toFile
+    sys.addShutdownHook(rm(root)); root
   }
 
   private[graft] def writeOnce(key: String)(write: => Unit): Unit =
@@ -84,11 +92,9 @@ object Formats {
   import graft.operators.Tables.t
   import org.apache.spark.sql.types.DecimalType
 
-  /** Fixed per-(purpose, sf) scratch path: repeated Verify/Bench/spec
-    * runs overwrite in place instead of accumulating a new temp dir (and
-    * a full table copy) per invocation. */
+  /** Per-(purpose, sf) scratch path under this JVM's fixture root. */
   private def scratch(purpose: String, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_fmt_${purpose}_${math.abs(dir.hashCode)}"
+    fixture(s"fmt_${purpose}_${math.abs(dir.hashCode)}")
 
   /** CSV round-trip of the nation table: write → schema'd read-back must
     * reproduce the original exactly (quoting covers commas/newlines in

@@ -362,7 +362,7 @@ object StreamingQueries {
     val spark = streamSession(spark0)
     val rateFiles = 4
     // per-SF fixture path: one JVM may verify several scale factors
-    val path = s"/tmp/graft_fixtures/events_rate_split_${new java.io.File(dir).getName}"
+    val path = graft.sources.Formats.fixture(s"events_rate_split_${new java.io.File(dir).getName}")
     graft.sources.Formats.writeOnce(s"ratesplit|$path") {
       graft.operators.Tables.t(spark, dir, "events")
         .repartitionByRange(rateFiles, col("event_id"))
@@ -411,7 +411,7 @@ object StreamingQueries {
     * parallelism — not raw input rows. */
   def streamLateData(spark0: SparkSession, dir: String): DataFrame = {
     val spark = streamSession(spark0)
-    val path = s"/tmp/graft_fixtures/events_late_split_${new java.io.File(dir).getName}"
+    val path = graft.sources.Formats.fixture(s"events_late_split_${new java.io.File(dir).getName}")
     graft.sources.Formats.writeOnce(s"latesplit|$path") {
       val ev = graft.operators.Tables.t(spark, dir, "events")
       graft.sources.Formats.freshDir(path): Unit
@@ -547,7 +547,7 @@ object StreamingQueries {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
-    val path = s"/tmp/graft_fixtures/docs_tok_split_${new java.io.File(dir).getName}"
+    val path = graft.sources.Formats.fixture(s"docs_tok_split_${new java.io.File(dir).getName}")
     graft.sources.Formats.writeOnce(s"toksplit|$path") {
       val docs = graft.operators.Tables.t(spark, dir, "documents")
         .select(col("doc_id"),

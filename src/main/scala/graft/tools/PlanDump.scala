@@ -20,8 +20,9 @@ import scala.collection.mutable.ArrayBuffer
   * same code. Memos are evicted before each query, so each file carries
   * the builds that query pays for when it runs alone. Expression ids,
   * lambda-variable counters, RDD ids, `plan_id`s, codegen ids, call
-  * sites and JVM identity hashes are normalized away, so two dumps of
-  * the same code compare equal with `diff`. The session is Bench's
+  * sites, JVM identity hashes and the per-JVM fixture root are
+  * normalized away, so two dumps of the same code compare equal with
+  * `diff`. The session is Bench's
   * ([[graft.Session]]) so the captured plans are the plans the bench
   * runs.
   */
@@ -39,6 +40,7 @@ object PlanDump {
       .replaceAll(" at [\\w$]+\\.scala:\\d+", " at <site>")
       .replaceAll("\\$Lambda[$/][\\w$/.]*", "\\$Lambda")
       .replaceAll("@[0-9a-f]+\\b", "@")
+      .replaceAll("graft_fixtures_\\d+", "graft_fixtures_")
 
   /** `qe`'s physical plan in the formatted layout, as AQE planned it
     * before running it. */

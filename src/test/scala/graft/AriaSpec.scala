@@ -146,7 +146,7 @@ class AriaSpec extends SparkSpec {
     val ops0 = Workload.txnOps(spark, c.nTxns, c.maxOps, c.writePct, c.keysMax, c.seed)
     val r0 = Aria.runEpoch(table0, ops0, 0, c.nTxns, c)
     assert(r0.stats.aborted > 0, "fixture must abort in epoch 0 for the test to mean anything")
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_aria_restart"
+    val dir = graft.sources.Formats.fixture("aria_restart")
     Aria.install(table0, r0.writes, c.seed).write.mode("overwrite").parquet(s"$dir/table")
     r0.retryOps.write.mode("overwrite").parquet(s"$dir/ops")
     val resumed = Aria.runFrom(spark, c,
@@ -170,7 +170,7 @@ class AriaSpec extends SparkSpec {
     val ops0 = Workload.txnOps(spark, c.nTxns, c.maxOps, c.writePct, c.keysMax, c.seed)
     val r0 = Aria.runEpoch(table0, ops0, 0, c.nTxns, c)
     assert(r0.stats.aborted > 0, "fixture must abort in epoch 0 for the test to mean anything")
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_aria_restart_eager"
+    val dir = graft.sources.Formats.fixture("aria_restart_eager")
     Aria.install(table0, r0.writes, c.seed).write.mode("overwrite").parquet(s"$dir/table")
     r0.retryOps.write.mode("overwrite").parquet(s"$dir/ops")
     val resumed = Aria.runFrom(spark, c,
@@ -333,10 +333,12 @@ class AriaSpec extends SparkSpec {
       s"epoch 0 must NOT trip the threshold: ${run.stats}")
   }
 
-  test("deferred install: a drain submits at most 2 jobs per epoch plus 2") {
-    // epochs emit write sets and the table is merged once at the end, so
-    // no per-epoch install job or table checkpoint remains. Counts every
-    // job of the drain and of reading its final table.
+  test("deferred install: a drain submits at most one job per epoch plus 3") {
+    // epochs emit write sets and the table is merged once, lazily, by its
+    // reader, so no per-epoch install job or table checkpoint remains, and
+    // analyze's shuffled hash join leaves the abort-set collect as the
+    // epoch's one job. Counts every job of the drain and of reading its
+    // final table.
     val sc = spark.sparkContext
     val group = s"aria-jobs-${System.nanoTime()}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
@@ -358,7 +360,19 @@ class AriaSpec extends SparkSpec {
     }
     val epochs = run.stats.length
     assert(epochs >= 3, s"fixture must drain in 3+ epochs: ${run.stats}")
-    assert(jobs.get <= 2 * epochs + 2, s"${jobs.get} jobs for $epochs epochs")
+    assert(jobs.get <= epochs + 3, s"${jobs.get} jobs for $epochs epochs")
+  }
+
+  test("the final table prunes: a (key, f0) read computes at most two md5s and scans no f1") {
+    // no checkpoint sits under the reader's projection, so the merge
+    // computes f0 once on the table side and once on the winners side
+    val plan = Aria.run(spark, cfg).table.select("key", "f0").queryExecution.optimizedPlan
+    val scans = plan.collect { case r: org.apache.spark.sql.execution.LogicalRDD => r }
+    assert(!scans.exists(_.output.exists(_.name == "f1")),
+      s"a scan under the read carries f1:\n$plan")
+    val md5s = plan.flatMap(_.expressions.flatMap(_.collect {
+      case m: org.apache.spark.sql.catalyst.expressions.Md5 => m }))
+    assert(md5s.size <= 2, s"${md5s.size} md5s under a (key, f0) read:\n$plan")
   }
 
   test("epoch loop drains: committed+aborted = batch size each epoch, ends at 0") {

@@ -11,7 +11,7 @@ class ByteBpeSpec extends SparkSpec {
   import spark.implicits._
 
   private def fixture(rows: Seq[(Long, String)]): String = {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_bytebpe_spec"
+    val dir = graft.sources.Formats.fixture("bytebpe_spec")
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("xx"))
       .withColumn("source", lit("spec"))

@@ -12,7 +12,7 @@ class CjkDedupSpec extends SparkSpec {
   /** Write a documents table to a temp dir so the (spark, dir) query
     * surface runs unchanged. */
   private def fixture(rows: Seq[(Long, String, String)]): String = {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_cjk_spec"
+    val dir = graft.sources.Formats.fixture("cjk_spec")
     rows.toDF("doc_id", "text", "lang")
       .withColumn("source", lit("spec"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -59,7 +59,7 @@ class CjkDedupSpec extends SparkSpec {
     val dir = sf("sf0.001")
     val docs = graft.operators.Tables.t(spark, dir, "documents")
       .filter(col("lang") =!= "zh")
-    val tmp = s"${sys.props("java.io.tmpdir")}/graft_cjk_spec_nozh"
+    val tmp = graft.sources.Formats.fixture("cjk_spec_nozh")
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val a = Dedup.minhashCandidatesCjk(spark, tmp).collect().toSeq
     val b = Dedup.minhashCandidates(spark, tmp).collect().toSeq

@@ -5,9 +5,10 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-scan guard: session-keyed memo maps live only in graft.Memo,
-  * SparkSession builders only in graft.Session, and the one reuse
-  * barrier is `localCheckpoint`, so a per-object copy of either
-  * mechanism or a second barrier cannot creep back in. Comment lines
+  * SparkSession builders only in graft.Session, the one reuse barrier
+  * is `localCheckpoint`, and fixtures live under `Formats.fixture`'s
+  * per-JVM root, so a per-object copy of either mechanism, a second
+  * barrier or a fixed path shared between JVMs cannot creep back in. Comment lines
   * are skipped (the GraftExtensions scaladoc shows a builder by
   * example). */
 class SourceGuardSpec extends AnyFunSuite {
@@ -48,6 +49,11 @@ class SourceGuardSpec extends AnyFunSuite {
     val found = hits(
       """\.persist\s*\(|\.cache\s*\(\s*\)|\bStorageLevel\b|\.staged\b|\.cutRound\b|\bSPARK_GRAFT_CACHE\b""",
       under = "src/main")
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("fixtures live under the per-JVM fixture root: no fixed /tmp path in src") {
+    val found = hits(""""/tmp/""", "graft/SourceGuardSpec.scala")
     assert(found.isEmpty, found.mkString("\n"))
   }
 

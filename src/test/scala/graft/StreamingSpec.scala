@@ -180,7 +180,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     // 4-file fixture; limit 2 files/trigger → exactly 2 data batches,
     // and the final state equals the unthrottled aggregation
-    val path = "/tmp/graft_fixtures/events_rate_spec"
+    val path = graft.sources.Formats.fixture("events_rate_spec")
     graft.sources.Formats.writeOnce(s"ratespec|$path") {
       graft.operators.Tables.t(spark, sf("sf0.001"), "events")
         .repartitionByRange(4, col("event_id"))
