@@ -41,8 +41,8 @@ import graft.functions.Portable
   * the beam one undirected hop, re-score against the query, keep the
   * best `beam`, `beamRounds` times (greedy best-first restricted to a
   * per-round frontier; beam ∪ expansion is monotone so recall never
-  * drops with more rounds). The recall gate prices the whole path
-  * against the exact brute-force top-k like every other ANN arm.
+  * drops with more rounds), one search for every budget. The recall
+  * gate prices the whole path against the exact brute-force top-k.
   *
   * Scale shape: the build is per-round equi-joins + window top-k on
   * the BIGINT vec id — shuffles bounded by n·(2·degree)² candidate
@@ -67,9 +67,9 @@ object NnDescent {
   private val beamWidth = 16
   private val beamRounds = 4
   private val topK = 5
-  /** Budget axis of the beam curve (all ≥ topK: a beam narrower than
-    * k truncates the return set, which measures nothing). */
-  private val curveBeams = Seq(5L, 10L, 16L)
+  /** Budget axis of the beam curve, ending at the flagship width (all ≥
+    * topK: a beam narrower than k truncates the return set). */
+  private val curveBeams = Seq(5L, 10L, beamWidth.toLong)
 
   // ---------------------------------------------------------------- build
 
@@ -175,24 +175,23 @@ object NnDescent {
 
   // --------------------------------------------------------------- search
 
-  /** Beam search over the built graph, one beam per (budget, query).
-    * Returns the final beams (beam, query_id, cand_id, cosine), memoized
-    * beside the build: `sim_nndescent_recall` re-paid the whole beam loop
-    * `sim_nndescent_topk` had already run (search once, gate many). */
-  private def beams(spark: SparkSession, dir: String, widths: Seq[Long],
-                    rounds: Int): DataFrame =
-      graft.Memo(spark, ("nnd.beams", graft.Memo.input(dir), widths, rounds)) {
+  /** Final beams (beam, query_id, cand_id, cosine) of one beam search
+    * per (budget, query) over every [[curveBeams]] width, memoized: the
+    * curve, top-k and recall read it. Operators are keyed per (beam,
+    * query_id), ties break by cand_id: each width equals a lone search. */
+  private def beams(spark: SparkSession, dir: String): DataFrame =
+      graft.Memo(spark, ("nnd.beams", graft.Memo.input(dir))) {
     val (qn, g, und) = built(spark, dir)
     val panel = qn.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("q").as("qa"), col("nsq").as("na"))
     val hop = und.select(col("src").as("cand_id"), col("dst").as("next_id"))
     var bb = g.filter(col("src") < 8)
-      .select(explode(array(widths.map(lit): _*)).as("beam"),
+      .select(explode(array(curveBeams.map(lit): _*)).as("beam"),
         col("src").as("query_id"), col("dst").as("cand_id"), col("cosine"))
       .withColumn("rn", row_number().over(
         Window.partitionBy("beam", "query_id").orderBy(desc("cosine"), col("cand_id"))))
       .filter(col("rn") <= col("beam")).drop("rn")
-    for (_ <- 1 to rounds) {
+    for (_ <- 1 to beamRounds) {
       val expand = bb.select(col("beam"), col("query_id"), col("cand_id"))
         .join(hop, "cand_id")
         .filter(col("next_id") =!= col("query_id"))
@@ -213,11 +212,11 @@ object NnDescent {
     bb
   }
 
-  /** Flagship graph-ANN search: beam-search top-k for the fixed query
-    * panel — same output shape as [[Similarity.cosineTopK]] so recall
-    * joins on (query_id, cand_id). */
+  /** Flagship graph-ANN search: top-k of the [[beams]] rows at width
+    * `beamWidth` for the fixed query panel — same output shape as
+    * [[Similarity.cosineTopK]] so recall joins on (query_id, cand_id). */
   def nnDescentTopK(spark: SparkSession, dir: String, k: Int = topK): DataFrame =
-    beams(spark, dir, Seq(beamWidth.toLong), beamRounds)
+    beams(spark, dir).filter(col("beam") === beamWidth.toLong)
       .select(col("query_id"), col("cand_id"), col("cosine"),
         row_number().over(
           Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id")))
@@ -238,7 +237,7 @@ object NnDescent {
     * by width 5 — the report that PROVES the narrow beam is safe,
     * which is the tuning decision a serving deployment makes. */
   def beamCurve(spark: SparkSession, dir: String, k: Int = topK): DataFrame = {
-    val top = beams(spark, dir, curveBeams, beamRounds)
+    val top = beams(spark, dir)
       .withColumn("rank", row_number().over(
         Window.partitionBy("beam", "query_id").orderBy(desc("cosine"), col("cand_id"))))
       .filter(col("rank") <= k)

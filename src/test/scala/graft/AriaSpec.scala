@@ -339,28 +339,14 @@ class AriaSpec extends SparkSpec {
     // analyze's shuffled hash join leaves the abort-set collect as the
     // epoch's one job. Counts every job of the drain and of reading its
     // final table.
-    val sc = spark.sparkContext
-    val group = s"aria-jobs-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    val run = try {
-      sc.setJobGroup(group, "aria drain")
+    val (run, jobs) = jobsIn {
       val r = Aria.run(spark, cfg)
       collectTable(r.table)
-      org.apache.spark.sql.GraftBridge.drainListeners(sc)
       r
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
     val epochs = run.stats.length
     assert(epochs >= 3, s"fixture must drain in 3+ epochs: ${run.stats}")
-    assert(jobs.get <= epochs + 3, s"${jobs.get} jobs for $epochs epochs")
+    assert(jobs <= epochs + 3, s"$jobs jobs for $epochs epochs")
   }
 
   test("the final table prunes: a (key, f0) read computes at most two md5s and scans no f1") {

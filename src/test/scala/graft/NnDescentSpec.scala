@@ -92,14 +92,26 @@ class NnDescentSpec extends SparkSpec {
       assert(rc >= 0.0 && rc <= 1.0)
     }
     // beam width is NOT formally monotone round-by-round (a wider beam
-    // explores different frontiers), but the final width-16 search must
-    // dominate the flagship report's own recall measurement surface:
-    // the width-16 row equals the paired recall query's micro recall
+    // explores different frontiers). The width-16 row equals the paired
+    // recall query's micro recall by construction: top-k and recall read
+    // the width-16 rows of the one search the curve runs
     val rec = NnDescent.nnDescentRecall(spark, dir).collect()
     val micro = rec.map(_.getAs[Long]("n_hits")).sum.toDouble /
       rec.map(_.getAs[Long]("n_exact")).sum
     val w16 = curve.find(_.getAs[Long]("beam") == 16L).get.getAs[Double]("recall")
     assert(w16 === micro, s"curve endpoint $w16 != paired recall $micro")
+  }
+
+  test("one search serves every budget: after the curve, top-k and recall frames submit no job") {
+    // the curve runs the memoized search at every width, flagship
+    // included, and fills the exact panel; top-k and recall read both
+    Memo.evictAll(spark)
+    NnDescent.beamCurve(spark, dir).collect()
+    val (_, jobs) = jobsIn {
+      NnDescent.nnDescentTopK(spark, dir)
+      NnDescent.nnDescentRecall(spark, dir)
+    }
+    assert(jobs === 0, s"$jobs jobs building the top-k and recall frames")
   }
 
   test("insert path: every delta vector attaches k base neighbors, never another delta, cosines exact") {
