@@ -1,7 +1,10 @@
 package graft.aria
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import graft.gen.Workload
 import graft.model.{AriaConfig, EpochStats}
 
@@ -17,7 +20,7 @@ import graft.model.{AriaConfig, EpochStats}
   *   Commit(analyze)  = ops ⋈ reservations + per-txn max(hazard flags)
   *   Install          = committed write sets, merged into the table once
   *                      per drain (max(epoch, tid, opIdx) per key)
-  *   Collect          = filter aborted + row_number renumber
+  *   Collect          = filter aborted + renumber by rank in the abort set
   *
   * The CAS-min races of the reference (metadatahelper.cuh:36-90) are a
   * commutative min-monoid — exactly Spark's partial+final hash aggregation,
@@ -123,41 +126,42 @@ object Aria {
     * every txn not in `abortedTids`, as keyCols ++ (epoch, tid, opIdx).
     * A map-only filter over the epoch's ops — the abort set is already
     * on the driver, so no join with the decisions re-runs the reserve
-    * and analyze shuffles. With no aborts (the serial fallback epoch)
-    * every update op is a committed write. */
+    * and analyze shuffles. The set is matched by [[abortRank]], so every
+    * epoch runs the same generated code. With no aborts (the serial
+    * fallback epoch) every update op is a committed write. */
   def committedWrites(ops: DataFrame, abortedTids: Array[Int],
-                      keyCols: Seq[String] = Seq("key")): DataFrame = {
-    val updates = ops.filter(col("isUpdate"))
-    val committed =
-      if (abortedTids.isEmpty) updates
-      else updates.filter(!col("tid").isInCollection(abortedTids))
-    committed.select(keyCols.map(col) ++ Seq(col("epoch"), col("tid"), col("opIdx")): _*)
-  }
+                      keyCols: Seq[String] = Seq("key")): DataFrame =
+    ops.filter(col("isUpdate") && abortRank(abortedTids) <= 0)
+      .select(keyCols.map(col) ++ Seq(col("epoch"), col("tid"), col("opIdx")): _*)
 
   /** T8 Collect: keep aborted txns' ops, renumber Tids 1..m preserving
     * original relative order (TransctionManager.cuh:176-184), bump epoch.
     *
     * The aborted-Tid set is already on the driver (the loop needs the
     * count anyway, and it is bounded by the batch size — 150 in the
-    * reference, never the table size), so renumbering is a literal-map
-    * lookup folded into the projection — no join, no broadcast exchange,
-    * no global window: one map-side stage per epoch on the latency-bound
-    * drain chain.
+    * reference, never the table size), so the new Tid is the old one's
+    * [[abortRank]], folded into the projection — no join, no broadcast
+    * exchange, no global window: one map-side stage per epoch on the
+    * latency-bound drain chain, compiled once per JVM.
     */
   def collect(ops: DataFrame, abortedTids: Array[Int],
               keyCols: Seq[String] = Seq("key")): DataFrame = {
-    val tail = keyCols.map(col) :+ col("isUpdate")
-    val shape = ops.select(col("tid") +: (col("epoch") + 1).as("epoch") +:
-      col("opIdx") +: tail: _*)
-    if (abortedTids.isEmpty) shape.filter(lit(false))
-    else {
-      val renumber = map(abortedTids.sorted.zipWithIndex.flatMap {
-        case (t, i) => Seq(lit(t), lit(i + 1)) }: _*)
-      ops.filter(col("tid").isInCollection(abortedTids))
-        .select(element_at(renumber, col("tid")).as("tid") +:
-          (col("epoch") + 1).as("epoch") +: col("opIdx") +: tail: _*)
-    }
+    // no aborts: a statically empty frame, which no job computes
+    val tid = if (abortedTids.isEmpty) lit(0) else abortRank(abortedTids)
+    ops.select(tid.as("tid") +: (col("epoch") + 1).as("epoch") +: col("opIdx") +:
+        keyCols.map(col) :+ col("isUpdate"): _*)
+      .filter(col("tid") > 0)
   }
+
+  /** `tid`'s 1-based rank in the abort set, ≤ 0 if it did not abort: a
+    * binary search of the sorted set, passed as one object literal that
+    * codegen references, so the filters above compile once per JVM. An
+    * `isin` set is written into the code (an `==` chain or a `switch`):
+    * new classes every epoch, which evict the drain's from the cache. */
+  private def abortRank(abortedTids: Array[Int]): Column =
+    GraftBridge.column(StaticInvoke(classOf[java.util.Arrays], IntegerType, "binarySearch",
+      Seq(Literal.fromObject(abortedTids.sorted), GraftBridge.expression(col("tid"))),
+      returnNullable = false)) + 1
 
   final case class EpochResult(writes: DataFrame, retryOps: DataFrame, stats: EpochStats)
 
@@ -195,7 +199,7 @@ object Aria {
     // the only driver action of the epoch: the loop needs the abort set
     // anyway (loop condition + Tid renumbering); bounded by batch size.
     val abortedTids = verdicts.filter(col("abort")).select("tid")
-      .collect().map(_.getInt(0)).sorted
+      .collect().map(_.getInt(0))
 
     // the write set reads the ops before the presence semi-join, so the
     // final merge does not re-run it: writes to absent keys drop at

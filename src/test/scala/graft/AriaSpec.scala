@@ -361,6 +361,26 @@ class AriaSpec extends SparkSpec {
     assert(md5s.size <= 2, s"${md5s.size} md5s under a (key, f0) read:\n$plan")
   }
 
+  test("the abort-set filters generate the same code for every abort set") {
+    // an abort set written into the generated code makes every epoch
+    // compile new classes; the sizes cross Spark's In→InSet threshold
+    // (10) and its switch threshold (400). Code only: the plan text
+    // prints the set.
+    val ops = Workload.txnOps(spark, 500, 8, 40, 1000, 7L).localCheckpoint(eager = false)
+    def code(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      org.apache.spark.sql.execution.debug.codegenStringSeq(
+        df.queryExecution.executedPlan).map(_._2).sorted
+    val sizes = Seq(1, 5, 17, 450)
+    for ((name, stage) <- Seq[(String, Array[Int] => org.apache.spark.sql.DataFrame)](
+        "collect" -> (Aria.collect(ops, _)),
+        "committedWrites" -> (Aria.committedWrites(ops, _)))) {
+      val codes = sizes.map(n => code(stage((1 to n).map(_ * 3 - 1).toArray)))
+      assert(codes.head.nonEmpty, s"$name: no whole-stage code")
+      assert(codes.distinct.size === 1,
+        s"$name: ${codes.distinct.size} distinct codes over abort-set sizes $sizes")
+    }
+  }
+
   test("epoch loop drains: committed+aborted = batch size each epoch, ends at 0") {
     val run = Aria.run(spark, cfg)
     assert(run.stats.nonEmpty)

@@ -27,4 +27,13 @@ class BenchParseSpec extends AnyFunSuite {
     assert(Bench.extractObject(txt, "missing").isEmpty)
     assert(Bench.extractObject("""{"queries":""", "queries").isEmpty)
   }
+
+  test("the final line names the detail file the run wrote") {
+    // ONLY mode writes no detail file; a diverted contended run writes
+    // the contended file and leaves the kept board as it was
+    assert(Bench.detailWritten(onlyMode = false, diverted = false).contains("bench_detail.json"))
+    assert(Bench.detailWritten(onlyMode = true, diverted = false).isEmpty)
+    assert(Bench.detailWritten(onlyMode = false, diverted = true).contains("bench_detail_contended.json"))
+    assert(Bench.detailWritten(onlyMode = true, diverted = true).contains("bench_detail_contended.json"))
+  }
 }

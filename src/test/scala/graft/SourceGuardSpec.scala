@@ -57,6 +57,11 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(found.isEmpty, found.mkString("\n"))
   }
 
+  test("the Aria drain inlines no abort set: no isInCollection or isin under graft/aria") {
+    val found = hits("""\.isInCollection\s*\(|\.isin\s*\(""", under = "src/main/scala/graft/aria")
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
   test("the ANN family has one portable cosine and one centroid pack") {
     val cosine = hits("""sqrt\(col\("n[^"]*"\)\.cast\("double"\)\) \* sqrt\(""",
       "functions/Portable.scala")
