@@ -2,6 +2,7 @@ package graft.aria
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Portable
 import graft.gen.Workload
 import graft.model.AriaConfig
 
@@ -210,7 +211,7 @@ object AriaQueries {
   /** Order-free table checksum: bit_xor of the md5-portable hash60 of
     * `cols` joined by '_' (Spark: Portable.hash60(concat_ws("_", …))). */
   private def checksumSql(cols: Seq[String]): String =
-    s"bit_xor(('0x' || substr(md5(${cols.mkString(" || '_' || ")}), 1, 15))::BIGINT) AS table_checksum"
+    s"bit_xor(${Portable.hash60Sql(cols.mkString(" || '_' || "))}) AS table_checksum"
 
   private def defaultOpsSrc: String =
     """  SELECT tid, epoch, opIdx, key, isUpdate

@@ -280,7 +280,7 @@ object Dedup {
     }.mkString("\n|  UNION ALL ")
     s"""$shingleTableSql,
        |sh AS (SELECT doc_id, unnest(st.sh) AS shingle FROM st),
-       |hp AS (SELECT doc_id, (('0x' || substr(md5(shingle), 1, 15))::BIGINT % $P) AS hp FROM sh),
+       |hp AS (SELECT doc_id, (${Portable.hash60Sql("shingle")} % $P) AS hp FROM sh),
        |mh AS (
        |  SELECT doc_id,
        |         $minExprs
@@ -396,7 +396,7 @@ object Dedup {
     }.mkString("\n|  UNION ALL ")
     s"""$cjkShingleTableSql,
        |sh AS (SELECT doc_id, unnest(st.sh) AS shingle FROM st),
-       |hp AS (SELECT doc_id, (('0x' || substr(md5(shingle), 1, 15))::BIGINT % $P) AS hp FROM sh),
+       |hp AS (SELECT doc_id, (${Portable.hash60Sql("shingle")} % $P) AS hp FROM sh),
        |mh AS (
        |  SELECT doc_id,
        |         $minExprs
@@ -485,7 +485,7 @@ object Dedup {
     s"""WITH bands AS (${minhashBandsSql().replace("ORDER BY doc_id, band", "")}),
        |delta AS (
        |  SELECT doc_id AS d, band, bucket FROM bands
-       |  WHERE ${TextAnalysis.splitHashSql} >= 90
+       |  WHERE ${TextAnalysis.splitHashSql("doc_id")} >= 90
        |),
        |pairs AS (
        |  SELECT DISTINCT least(l.d, r.doc_id) AS a,
@@ -555,7 +555,7 @@ object Dedup {
       .mkString(" + ")
     s"""$shingleTableSql,
        |shx AS (SELECT doc_id, unnest(st.sh) AS shingle FROM st),
-       |hpx AS (SELECT doc_id, (('0x' || substr(md5(shingle), 1, 15))::BIGINT % $P) AS hp FROM shx),
+       |hpx AS (SELECT doc_id, (${Portable.hash60Sql("shingle")} % $P) AS hp FROM shx),
        |mh AS (
        |  SELECT doc_id,
        |         $minExprs
@@ -631,7 +631,7 @@ object Dedup {
       s"CASE WHEN s$j > 0 THEN ${1L << j} ELSE 0 END").mkString(" + ")
     s"""WITH tk AS (SELECT doc_id, $tokSql AS toks FROM documents),
        |tok AS (SELECT doc_id, unnest(list_distinct(toks)) AS tok FROM tk),
-       |th AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS th FROM tok),
+       |th AS (SELECT doc_id, ${Portable.hash60Sql("tok")} AS th FROM tok),
        |bits AS (
        |  SELECT doc_id,
        |         $sums
@@ -727,7 +727,7 @@ object Dedup {
        |),
        |delta AS (
        |  SELECT doc_id AS d, simhash AS sig_d, p, piece FROM pieces
-       |  WHERE ${TextAnalysis.splitHashSql} >= 90
+       |  WHERE ${TextAnalysis.splitHashSql("doc_id")} >= 90
        |),
        |cand AS (
        |  SELECT DISTINCT least(l.d, r.doc_id) AS a, greatest(l.d, r.doc_id) AS b,
@@ -1326,7 +1326,7 @@ object Dedup {
   }
 
   def contaminationMaskSql(k: Int = spanSeedK): String = {
-    val h = TextAnalysis.splitHashSql
+    val h = TextAnalysis.splitHashSql("doc_id")
     s"""WITH tk AS (SELECT doc_id, $tokSql AS toks FROM documents),
        |tr AS (SELECT doc_id, toks FROM tk WHERE $h < 80),
        |g AS (
@@ -1490,10 +1490,8 @@ object Dedup {
        |  SELECT doc_id,
        |         CASE WHEN len(toks) >= 3
        |           THEN list_transform(generate_series(1, len(toks) - 2),
-       |                  i -> CAST(('0x' || substr(md5(toks[i] || ' ' || toks[i+1]
-       |                             || ' ' || toks[i+2]), 1, 15)) AS BIGINT))
-       |           ELSE [CAST(('0x' || substr(md5(array_to_string(toks, ' ')), 1, 15))
-       |                 AS BIGINT)]
+       |                  i -> ${Portable.hash60Sql("toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]")})
+       |           ELSE [${Portable.hash60Sql("array_to_string(toks, ' ')")}]
        |         END AS hs
        |  FROM tk
        |), f AS (
@@ -1574,7 +1572,7 @@ object Dedup {
       s"CASE WHEN x.mh$i % 2 = y.mh$i % 2 THEN 1 ELSE 0 END").mkString(" + ")
     s"""$shingleTableSql,
        |sh AS (SELECT doc_id, unnest(st.sh) AS shingle FROM st WHERE doc_id < $panel),
-       |hp AS (SELECT doc_id, (('0x' || substr(md5(shingle), 1, 15))::BIGINT % $P) AS hp FROM sh),
+       |hp AS (SELECT doc_id, (${Portable.hash60Sql("shingle")} % $P) AS hp FROM sh),
        |mh AS (SELECT doc_id, $minExprs FROM hp GROUP BY doc_id),
        |pairs AS (
        |  SELECT x.doc_id AS a, y.doc_id AS b,
@@ -1657,7 +1655,7 @@ object Dedup {
     s"""WITH tk AS (SELECT doc_id, $tokSql AS toks FROM documents),
        |pos AS (
        |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-       |         ('0x' || substr(md5(toks[i]), 1, 15))::BIGINT AS h
+       |         ${Portable.hash60Sql("toks[i]")} AS h
        |  FROM tk, unnest(generate_series(1, len(toks))) AS u(i)
        |  WHERE len(toks) > 0
        |), ch AS (

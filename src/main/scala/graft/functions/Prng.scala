@@ -16,9 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object Prng {
 
-  /** 64-bit hash of the given columns — the PRNG core. */
-  def h64(cols: Column*): Column = xxhash64(cols: _*)
-
   /** Uniform integer in [0, n) as a function of the hashed columns.
     * `pmod` keeps it non-negative regardless of hash sign.
     */

@@ -44,8 +44,8 @@ object Multimodal {
   object FakeCodec {
     /** First 15 md5 hex chars of salt-bytes ++ blob as a non-negative
       * Long — the byte-level analog of Portable.hash60 (DuckDB:
-      * ('0x' || substr(md5(salt || text), 1, 15))::BIGINT when the blob
-      * is the UTF-8 encoding of text). */
+      * `Portable.hash60Sql("salt || text")` when the blob is the UTF-8
+      * encoding of text). */
     private def hash60(salt: String, bytes: Array[Byte]): Long = {
       val md = java.security.MessageDigest.getInstance("MD5")
       md.update(salt.getBytes("UTF-8"))
@@ -130,13 +130,13 @@ object Multimodal {
       .orderBy("media_id")
 
   val mediaMetaSql: String =
-    """SELECT doc_id AS media_id,
+    s"""SELECT doc_id AS media_id,
       |       ['image','audio','video'][CAST(doc_id % 3 AS INT) + 1] AS kind,
       |       octet_length(encode(text))::BIGINT AS n_bytes,
-      |       CAST(('0x' || substr(md5('w' || doc_id), 1, 15))::BIGINT % 448 + 64 AS INT) AS declared_w,
-      |       CAST(('0x' || substr(md5('h' || doc_id), 1, 15))::BIGINT % 448 + 64 AS INT) AS declared_h,
-      |       (('0x' || substr(md5('w' || doc_id), 1, 15))::BIGINT % 448 + 64)
-      |         * (('0x' || substr(md5('h' || doc_id), 1, 15))::BIGINT % 448 + 64) AS declared_pixels
+      |       CAST(${Portable.hash60Sql("'w' || doc_id")} % 448 + 64 AS INT) AS declared_w,
+      |       CAST(${Portable.hash60Sql("'h' || doc_id")} % 448 + 64 AS INT) AS declared_h,
+      |       (${Portable.hash60Sql("'w' || doc_id")} % 448 + 64)
+      |         * (${Portable.hash60Sql("'h' || doc_id")} % 448 + 64) AS declared_pixels
       |FROM documents ORDER BY media_id""".stripMargin
 
   /** Aggregate over the decoded (stub) features: per kind, count/bytes/
@@ -156,13 +156,13 @@ object Multimodal {
     * encoding of `text`, so md5 over salt||text hashes the same bytes
     * the JVM codec digests. */
   private val decodedSql: String =
-    """dec AS (
+    s"""dec AS (
       |  SELECT doc_id AS media_id,
       |         ['image','audio','video'][CAST(doc_id % 3 AS INT) + 1] AS kind,
       |         octet_length(encode(text)) AS n_bytes,
-      |         CAST(('0x' || substr(md5('w' || text), 1, 15))::BIGINT % 448 + 64 AS INT) AS width,
-      |         CAST(('0x' || substr(md5('h' || text), 1, 15))::BIGINT % 448 + 64 AS INT) AS height,
-      |         ('0x' || substr(md5('ck' || text), 1, 15))::BIGINT % 4294967296 AS checksum
+      |         CAST(${Portable.hash60Sql("'w' || text")} % 448 + 64 AS INT) AS width,
+      |         CAST(${Portable.hash60Sql("'h' || text")} % 448 + 64 AS INT) AS height,
+      |         ${Portable.hash60Sql("'ck' || text")} % 4294967296 AS checksum
       |  FROM documents
       |), decf AS (
       |  SELECT *, CAST(CASE WHEN kind = 'video' THEN 1 + n_bytes // 256 ELSE 1 END AS INT) AS n_frames
@@ -285,7 +285,8 @@ object Multimodal {
       .orderBy("a", "b")
   }
 
-  val mediaNearDupPairsSql: String =
+  val mediaNearDupPairsSql: String = {
+    val cell = s"substr(text, (j * length(text)) // $gridCells + 1, greatest(1, length(text) // $gridCells))"
     s"""WITH docs AS (SELECT doc_id AS media_id, text FROM documents),
        |planted AS (
        |  SELECT media_id + (SELECT max(media_id) + 1 FROM docs) AS media_id,
@@ -296,9 +297,7 @@ object Multimodal {
        |cells AS (
        |  SELECT media_id,
        |         list_transform(generate_series(0, ${gridCells - 1}), j ->
-       |           ('0x' || substr(md5('px' || j || '|' ||
-       |              substr(text, (j * length(text)) // $gridCells + 1,
-       |                     greatest(1, length(text) // $gridCells))), 1, 15))::BIGINT % 256) AS c
+       |           ${Portable.hash60Sql(s"'px' || j || '|' || $cell")} % 256) AS c
        |  FROM corpus),
        |bits AS (
        |  SELECT media_id,
@@ -312,6 +311,7 @@ object Multimodal {
        |  FROM bits l JOIN bits r ON l.media_id < r.media_id)
        |SELECT a, b, hamming FROM scored WHERE hamming <= $maxHamming
        |ORDER BY a, b""".stripMargin
+  }
 
   // ——— Real-codec arm: javax.imageio PNG through the same pipeline ———
   //

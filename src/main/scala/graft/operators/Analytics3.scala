@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Portable
 import org.apache.spark.sql.types.DecimalType
 import graft.operators.Tables.t
 
@@ -143,7 +144,7 @@ object Analytics3 {
   def epochShuffleSql(epochs: Int = 4, shards: Int = 16): String =
     s"""WITH assigned AS (
        |  SELECT d.doc_id, e.epoch,
-       |         CAST(('0x' || substr(md5('epshuf_' || e.epoch || '_' || d.doc_id), 1, 15)) AS BIGINT) AS h
+       |         ${Portable.hash60Sql("'epshuf_' || e.epoch || '_' || d.doc_id")} AS h
        |  FROM documents d CROSS JOIN (SELECT unnest(range(0, $epochs)) AS epoch) e
        |), ranked AS (
        |  SELECT epoch, h % $shards AS shard, h,
@@ -204,7 +205,7 @@ object Analytics3 {
     s"""WITH drawn AS (
        |  SELECT r.r, ev.event_id,
        |         CAST(CAST(ev.value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v,
-       |         CAST(('0x' || substr(md5('boot_' || r.r || '_' || ev.event_id), 1, 15)) AS BIGINT)
+       |         ${Portable.hash60Sql("'boot_' || r.r || '_' || ev.event_id")}
        |           % 1000000 AS u
        |  FROM events ev CROSS JOIN (SELECT unnest(range(0, $reps)) AS r) r
        |), weighted AS (
@@ -428,7 +429,7 @@ object Analytics3 {
   def kmvJaccardSql(k: Int = 256): String =
     s"""WITH tu AS (
        |  SELECT DISTINCT event_type,
-       |         CAST(('0x' || substr(md5('kmv_' || user_id), 1, 15)) AS BIGINT) AS uh
+       |         ${Portable.hash60Sql("'kmv_' || user_id")} AS uh
        |  FROM events
        |), sk AS (
        |  SELECT event_type, uh FROM (
@@ -542,15 +543,14 @@ object Analytics3 {
   def randomProjectionSql(outDims: Int = 16, inDims: Int = 64): String =
     s"""WITH base AS (
        |  SELECT vec_id,
-       |         list_transform(embedding,
-       |           x -> CAST(floor(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT)) AS q
+       |         ${Portable.quantizeSql("embedding")} AS q
        |  FROM embeddings
        |), proj AS (
        |  SELECT vec_id, q,
        |         list_transform(generate_series(1, $outDims), j ->
        |           CAST(list_sum(list_transform(generate_series(1, $inDims), i ->
        |             q[CAST(i AS INT)] *
-       |             (CASE CAST(('0x' || substr(md5('rp_' || j || '_' || i), 1, 15)) AS BIGINT) % 6
+       |             (CASE ${Portable.hash60Sql("'rp_' || j || '_' || i")} % 6
        |              WHEN 0 THEN 1 WHEN 1 THEN -1 ELSE 0 END))) AS BIGINT)) AS y
        |  FROM base
        |), panel AS (
@@ -1218,7 +1218,7 @@ object Analytics3 {
        |  FROM events GROUP BY 1, 2
        |), n AS (
        |  SELECT event_type, day, true_count,
-       |         ('0x' || substr(md5('dp_' || event_type || '_' || day), 1, 15))::BIGINT
+       |         ${Portable.hash60Sql("'dp_' || event_type || '_' || day")}
        |           % 65536 AS u
        |  FROM g
        |)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Portable
 import org.apache.spark.sql.types.DecimalType
 import graft.operators.Tables.t
 
@@ -848,7 +849,7 @@ object Analytics4 {
          |       (1000 * CAST(max(cnt) AS BIGINT) * $skewBuckets) // CAST(sum(cnt) AS BIGINT)
          |         AS skew_permille
          |FROM (
-         |  SELECT CAST(('0x' || substr(md5(CAST($k AS VARCHAR)), 1, 15)) AS BIGINT)
+         |  SELECT ${Portable.hash60Sql(s"CAST($k AS VARCHAR)")}
          |           % $skewBuckets AS b, count(*) AS cnt
          |  FROM $tb GROUP BY 1
          |)""".stripMargin

@@ -129,7 +129,7 @@ object Sketches {
        |         CAST(event_id AS VARCHAR) AS tok
        |  FROM events
        |), hashed AS (
-       |  SELECT day, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM toks
+       |  SELECT day, ${Portable.hash60Sql("tok")} AS h FROM toks
        |), dayregs AS (
        |  SELECT day, h % $m AS bucket,
        |         max(CASE WHEN h // $m = 0 THEN 53
@@ -173,7 +173,7 @@ object Sketches {
     s"""WITH toks AS (
        |  SELECT CAST(l_orderkey AS VARCHAR) AS tok FROM lineitem
        |), hashed AS (
-       |  SELECT ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM toks
+       |  SELECT ${Portable.hash60Sql("tok")} AS h FROM toks
        |), regs AS (
        |  SELECT h % $m AS bucket,
        |         max(CASE WHEN h // $m = 0 THEN 53
@@ -248,7 +248,7 @@ object Sketches {
     s"""WITH toks AS (
        |  SELECT o_orderpriority AS g, CAST(o_custkey AS VARCHAR) AS tok FROM orders
        |), hashed AS (
-       |  SELECT g, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM toks
+       |  SELECT g, ${Portable.hash60Sql("tok")} AS h FROM toks
        |), regs AS (
        |  SELECT g, h % $m AS bucket,
        |         max(CASE WHEN h // $m = 0 THEN 53
@@ -315,7 +315,7 @@ object Sketches {
 
   def bloomPruneSql(segment: String = "BUILDING", m: Int = 65536, k: Int = 3): String = {
     val posList = (0 until k).map(i =>
-      s"('0x' || substr(md5('bf${i}_' || key), 1, 15))::BIGINT % $m")
+      s"${Portable.hash60Sql(s"'bf${i}_' || key")} % $m")
       .mkString("[", ", ", "]")
     s"""WITH build AS (
        |  SELECT c_custkey FROM customer WHERE c_mktsegment = '$segment'
@@ -360,7 +360,7 @@ object Sketches {
   def bottomKSql(k: Int = 5): String =
     s"""WITH hashed AS (
        |  SELECT c_mktsegment, c_custkey,
-       |         ('0x' || substr(md5('bk_' || c_custkey), 1, 15))::BIGINT AS h
+       |         ${Portable.hash60Sql("'bk_' || c_custkey")} AS h
        |  FROM customer
        |), ranked AS (
        |  SELECT *, row_number() OVER (PARTITION BY c_mktsegment ORDER BY h, c_custkey)::BIGINT AS rn
@@ -391,7 +391,7 @@ object Sketches {
   def stratifiedSampleSql(permille: Int = 100): String =
     s"""WITH flagged AS (
        |  SELECT o_orderpriority, o_totalprice,
-       |         ('0x' || substr(md5('samp_' || o_orderkey), 1, 15))::BIGINT % 1000 < $permille AS in_s
+       |         ${Portable.hash60Sql("'samp_' || o_orderkey")} % 1000 < $permille AS in_s
        |  FROM orders
        |)
        |SELECT o_orderpriority,
@@ -434,7 +434,7 @@ object Sketches {
   def weightedSampleSql(k: Int = 5): String =
     s"""WITH pri AS (
        |  SELECT lang, doc_id, greatest(CAST(length(text) AS BIGINT), 1) AS w,
-       |         CAST(('0x' || substr(md5('wsamp_' || doc_id), 1, 15))::BIGINT AS DOUBLE)
+       |         CAST(${Portable.hash60Sql("'wsamp_' || doc_id")} AS DOUBLE)
        |           / CAST(greatest(CAST(length(text) AS BIGINT), 1) AS DOUBLE) AS priority
        |  FROM documents
        |),
@@ -717,7 +717,7 @@ object Sketches {
        |), ranked AS (
        |  SELECT event_type, event_id,
        |         row_number() OVER (PARTITION BY event_type
-       |           ORDER BY ('0x' || substr(md5('ney_' || event_id), 1, 15))::BIGINT % 1000000007,
+       |           ORDER BY ${Portable.hash60Sql("'ney_' || event_id")} % 1000000007,
        |                    event_id) AS rk
        |  FROM ev
        |)

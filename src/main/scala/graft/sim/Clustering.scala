@@ -278,7 +278,7 @@ object Clustering {
   def kmeansIncrementalSql: String =
     s"""WITH $kmeansCtes,
        |delta AS (SELECT vec_id, qv, nsq FROM qn
-       |          WHERE ${graft.text.TextAnalysis.splitHashSql.replace("doc_id", "vec_id")} >= 90),
+       |          WHERE ${graft.text.TextAnalysis.splitHashSql("vec_id")} >= 90),
        |adelta AS (${assignSql("delta", s"cent$iters")})
        |SELECT cid AS cluster_id, count(*) AS delta_n,
        |       CAST(sum(dist) AS BIGINT) AS delta_inertia
@@ -354,9 +354,7 @@ object Clustering {
   def ivfProbeCurveSql(k: Int = 5, budgets: Seq[Int] = Seq(1, 2, 4)): String = {
     val maxP = budgets.max
     val blist = budgets.mkString(", ")
-    val cosSql = "CAST(CAST(list_sum(list_transform(generate_series(1, " + dims +
-      "), i -> a.qv[i] * f.qv[i])) AS BIGINT) AS DOUBLE)" +
-      " / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(f.nsq AS DOUBLE)))"
+    val cosSql = Portable.cosineSql(Portable.dotSql("a.qv", "f.qv"), "a.nsq", "f.nsq")
     s"""WITH $kmeansCtes,
        |probes AS (
        |  SELECT vec_id AS query_id, cid, rn - 1 AS pos FROM (
@@ -378,16 +376,7 @@ object Clustering {
        |           row_number() OVER (PARTITION BY budget, query_id
        |             ORDER BY cosine DESC, cand_id) AS rank
        |    FROM cand) WHERE rank <= $k),
-       |exact AS (
-       |  SELECT query_id, cand_id FROM (
-       |    SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
-       |           row_number() OVER (PARTITION BY a.vec_id ORDER BY
-       |             CAST(CAST(list_sum(list_transform(generate_series(1, $dims),
-       |               i -> a.qv[i] * b.qv[i])) AS BIGINT) AS DOUBLE)
-       |               / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) DESC,
-       |             b.vec_id) AS rank
-       |    FROM qn a JOIN qn b ON a.vec_id <> b.vec_id
-       |    WHERE a.vec_id < 8) WHERE rank <= $k)
+       |exact AS (${ExactPanels.cosineSql(k)})
        |SELECT b.budget, count(*) AS n_exact,
        |       CAST(sum(CASE WHEN t.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
        |       CAST(sum(CASE WHEN t.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
@@ -404,8 +393,7 @@ object Clustering {
 
   /** dist² of row alias `v` against centroid alias `c` (exact BIGINT). */
   private def distSql(v: String, c: String): String =
-    s"""$v.nsq - 2*CAST(list_sum(list_transform(generate_series(1, $dims),
-       |      i -> $v.qv[i] * $c.c[i])) AS BIGINT)
+    s"""$v.nsq - 2*${Portable.dotSql(s"$v.qv", s"$c.c")}
        |    + CAST(list_sum(list_transform($c.c, x -> x*x)) AS BIGINT)""".stripMargin
 
   /** Assignment CTE body: every row of `src` to its nearest centroid in
@@ -482,8 +470,7 @@ object Clustering {
        |cells AS (SELECT vec_id AS cand_id, qv AS qb, nsq AS nb, cid FROM fin),
        |scored AS (
        |  SELECT query_id, cand_id,
-       |         CAST(CAST(list_sum(list_transform(generate_series(1, $dims), i -> p.qa[i] * s.qb[i])) AS BIGINT) AS DOUBLE)
-       |           / (sqrt(CAST(p.na AS DOUBLE)) * sqrt(CAST(s.nb AS DOUBLE))) AS cosine
+       |         ${Portable.cosineSql(Portable.dotSql("p.qa", "s.qb"), "p.na", "s.nb")} AS cosine
        |  FROM probes p JOIN cells s USING (cid)
        |  WHERE p.query_id <> s.cand_id
        |),
@@ -531,15 +518,11 @@ object Clustering {
        |         (signature >> (b.band * $bandBits)) & ${(1 << bandBits) - 1} AS bucket
        |  FROM side, (SELECT unnest(generate_series(0, ${nBands - 1})) AS band) b)
        |SELECT DISTINCT a.cid AS cluster_id, a.vec_id AS keep_id, b.vec_id AS drop_id,
-       |       CAST(list_sum(list_transform(generate_series(1, $dims),
-       |         i -> a.qv[i] * b.qv[i])) AS DOUBLE)
-       |         / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) AS cosine
+       |       ${Similarity.abCosineSql} AS cosine
        |FROM buckets a
        |JOIN buckets b ON a.cid = b.cid AND a.band = b.band AND a.bucket = b.bucket
        |             AND a.vec_id < b.vec_id
-       |WHERE CAST(list_sum(list_transform(generate_series(1, $dims),
-       |         i -> a.qv[i] * b.qv[i])) AS DOUBLE)
-       |         / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) >= $tau
+       |WHERE ${Similarity.abCosineSql} >= $tau
        |ORDER BY cluster_id, keep_id, drop_id""".stripMargin
 
   // ---------------------------------------------------------------------
@@ -593,12 +576,11 @@ object Clustering {
   }
 
   def kCenterSampleSql: String = {
-    def dot(a: String, c: String): String =
-      s"CAST(list_sum(list_transform(generate_series(1, $dims), i -> $a.qv[i] * $c.qv[i])) AS BIGINT)"
+    val dot = Portable.dotSql("a.qv", "c.qv")
     val steps = (2 to kcK).map { i =>
       val mdExpr =
-        if (i == 2) s"a.nsq + c.nsq - 2*${dot("a", "c")}"
-        else s"LEAST(a.md, a.nsq + c.nsq - 2*${dot("a", "c")})"
+        if (i == 2) s"a.nsq + c.nsq - 2*$dot"
+        else s"LEAST(a.md, a.nsq + c.nsq - 2*$dot)"
       s"""m${i - 1} AS (
          |  SELECT a.vec_id, a.qv, a.nsq, $mdExpr AS md
          |  FROM ${if (i == 2) "qn" else s"m${i - 2}"} a CROSS JOIN c${i - 1} c

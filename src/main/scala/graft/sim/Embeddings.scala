@@ -46,9 +46,9 @@ object Embeddings {
   }
 
   val int8QuantizeSql: String =
-    """WITH q AS (
+    s"""WITH q AS (
       |  SELECT vec_id,
-      |         list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*10000 + 0.5) AS BIGINT)) AS q
+      |         ${Portable.quantizeSql("embedding")} AS q
       |  FROM embeddings
       |), scaled AS (
       |  SELECT vec_id, q,
@@ -100,9 +100,9 @@ object Embeddings {
   }
 
   val labelCentroidsSql: String =
-    """WITH q AS (
+    s"""WITH q AS (
       |  SELECT CAST(label AS BIGINT) AS label,
-      |         list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*10000 + 0.5) AS BIGINT)) AS qv
+      |         ${Portable.quantizeSql("embedding")} AS qv
       |  FROM embeddings
       |), cells AS (
       |  SELECT label, i.i AS i, CAST(sum(qv[i.i]) AS BIGINT) AS s,
@@ -117,8 +117,7 @@ object Embeddings {
       |  GROUP BY 1, 2
       |)
       |SELECT p.la, p.lb, nna.n_vecs AS n_a, nnb.n_vecs AS n_b, p.dot,
-      |       CAST(p.dot AS DOUBLE) / (sqrt(CAST(nna.nsq AS DOUBLE)) * sqrt(CAST(nnb.nsq AS DOUBLE)))
-      |         AS cos
+      |       ${Portable.cosineSql("p.dot", "nna.nsq", "nnb.nsq")} AS cos
       |FROM pairs p
       |JOIN norms nna ON p.la = nna.label
       |JOIN norms nnb ON p.lb = nnb.label
@@ -867,7 +866,7 @@ object GraphOps {
          |  FROM w${t - 1} w
          |  JOIN deg d ON w.cur = d.src
          |  JOIN adj a ON a.src = w.cur
-         |   AND a.rn = CAST(('0x' || substr(md5(CAST(w.walk AS VARCHAR) || '|' || '$t' || '|' || CAST(w.cur AS VARCHAR)), 1, 15)) AS BIGINT) % d.deg + 1
+         |   AND a.rn = ${Portable.hash60Sql(s"CAST(w.walk AS VARCHAR) || '|' || '$t' || '|' || CAST(w.cur AS VARCHAR)")} % d.deg + 1
          |)"""
     }.mkString(",\n")
     s"""WITH $edgesSql,

@@ -2,11 +2,12 @@ package graft.sim
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Portable
 
 /** The ANN recall gate ([[recall]], with its DuckDB twin) and the
   * session-scoped memo of the exact ground-truth (query_id, cand_id)
   * panels it compares against ([[graft.Memo]], keyed by input, metric
-  * and k).
+  * and k), with the panels' DuckDB twins ([[cosineSql]], [[l2Sql]]).
   *
   * Every recall gate re-paid the identical brute-force exact side per
   * query — one full corpus scan + quantize + broadcast panel join +
@@ -33,6 +34,26 @@ private[graft] object ExactPanels {
   /** Exact-L2 panel ([[Pq.exactL2TopK]] ground truth). */
   private[sim] def l2(spark: SparkSession, dir: String, k: Int): DataFrame =
     panel(spark, ("exact.l2", graft.Memo.input(dir), k))(Pq.exactL2TopK(spark, dir, k))
+
+  /** DuckDB twin of the [[cosine]] panel: an `exact` CTE body over the
+    * oracle's `qn` CTE (vec_id, qv, nsq). */
+  private[sim] def cosineSql(k: Int): String =
+    panelSql(s"${Similarity.abCosineSql} DESC", k)
+
+  /** DuckDB twin of the [[l2]] panel, over the same `qn` CTE: exact
+    * BIGINT dist², ascending. */
+  private[sim] def l2Sql(k: Int): String =
+    panelSql(s"a.nsq - 2*${Portable.dotSql("a.qv", "b.qv")} + b.nsq", k)
+
+  /** The k best candidates by `order` of each panel query (vec_id < 8,
+    * self excluded), ties to the lower cand_id. */
+  private def panelSql(order: String, k: Int): String =
+    s"""SELECT query_id, cand_id FROM (
+       |    SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
+       |           row_number() OVER (PARTITION BY a.vec_id ORDER BY
+       |             $order, b.vec_id) AS rank
+       |    FROM qn a JOIN qn b ON a.vec_id <> b.vec_id
+       |    WHERE a.vec_id < 8) WHERE rank <= $k""".stripMargin
 
   /** The memoized exact panel for `key`, built by `build` (a frame
     * whose first two columns are BIGINT query_id, cand_id) on first

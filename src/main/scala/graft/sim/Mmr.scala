@@ -134,7 +134,7 @@ object Mmr {
     s"""WITH ${Similarity.quantizedSql},
        |scored AS (
        |  SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
-       |         CAST(${Similarity.dotSql} AS DOUBLE) / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) AS rel
+       |         ${Similarity.abCosineSql} AS rel
        |  FROM qn a JOIN qn b ON a.vec_id <> b.vec_id
        |  WHERE a.vec_id < $nQueries
        |),
@@ -150,7 +150,7 @@ object Mmr {
        |),
        |pairs AS (
        |  SELECT a.query_id, a.cand_id AS pa, b.cand_id AS pb,
-       |         CAST(${Similarity.dotSql} AS DOUBLE) / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) AS sim
+       |         ${Similarity.abCosineSql} AS sim
        |  FROM pv a JOIN pv b ON a.query_id = b.query_id AND a.cand_id <> b.cand_id
        |),
        |sel1 AS (

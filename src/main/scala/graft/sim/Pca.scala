@@ -125,7 +125,7 @@ object Pca {
          |)""".stripMargin
     }.mkString(",\n")
     s"""q AS (
-       |  SELECT list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*10000 + 0.5) AS BIGINT)) AS qv
+       |  SELECT ${Portable.quantizeSql("embedding")} AS qv
        |  FROM embeddings
        |), nt AS (SELECT count(*) AS n FROM q),
        |cells AS (
@@ -258,7 +258,7 @@ object Pca {
        |cellsx AS (
        |  SELECT vec_id, i.i - 1 AS i, qv2.qv[i.i] AS xi
        |  FROM (SELECT vec_id,
-       |          list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*10000 + 0.5) AS BIGINT)) AS qv
+       |          ${Portable.quantizeSql("embedding")} AS qv
        |        FROM embeddings) qv2, generate_series(1, $dims) i(i)
        |), vvt AS (SELECT CAST(sum(v * v) AS BIGINT) AS vv FROM v3),
        |pt AS (
@@ -286,8 +286,7 @@ object Pca {
        |         CAST(sum(CAST(c.xi AS HUGEINT) * c.xi) AS HUGEINT) AS nx
        |  FROM cellsx c JOIN centb cb ON c.i = cb.i GROUP BY c.vec_id
        |), qb AS (
-       |  SELECT CAST(floor((CAST(dot AS DOUBLE)
-       |           / (sqrt(CAST(nx AS DOUBLE)) * sqrt(CAST(ns AS DOUBLE))) + 1.0) * 1000000)
+       |  SELECT CAST(floor((${Portable.cosineSql("dot", "nx", "ns")} + 1.0) * 1000000)
        |         AS BIGINT) AS qcos
        |  FROM cosb CROSS JOIN nsb WHERE nx > 0
        |), centa AS (SELECT i, CAST(sum(ri) AS BIGINT) AS s FROM rp GROUP BY i),
@@ -298,8 +297,7 @@ object Pca {
        |         CAST(sum(CAST(r.ri AS HUGEINT) * r.ri) AS HUGEINT) AS nx
        |  FROM rp r JOIN centa ca ON r.i = ca.i GROUP BY r.vec_id
        |), qa AS (
-       |  SELECT CAST(floor((CAST(dot AS DOUBLE)
-       |           / (sqrt(CAST(nx AS DOUBLE)) * sqrt(CAST(ns AS DOUBLE))) + 1.0) * 1000000)
+       |  SELECT CAST(floor((${Portable.cosineSql("dot", "nx", "ns")} + 1.0) * 1000000)
        |         AS BIGINT) AS qcos
        |  FROM cosa CROSS JOIN nsa WHERE nx > 0
        |), rb AS (

@@ -296,7 +296,7 @@ object Pq {
        |SELECT m, pos AS code, count(*) AS delta_n,
        |       CAST(sum(dist) AS BIGINT) AS delta_qerr
        |FROM codes_long
-       |WHERE ${graft.text.TextAnalysis.splitHashSql.replace("doc_id", "vec_id")} >= 90
+       |WHERE ${graft.text.TextAnalysis.splitHashSql("vec_id")} >= 90
        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
   /** Recall@k of the composed IVF-PQ path against exact L2 — alongside
@@ -443,8 +443,7 @@ object Pq {
   /** dist² of row alias `v` (cols qv, nsq) vs centroid alias `c` in a
     * `w`-dim space. */
   private def distSql(v: String, c: String, w: Int): String =
-    s"""$v.nsq - 2*CAST(list_sum(list_transform(generate_series(1, $w),
-       |      i -> $v.qv[i] * $c.c[i])) AS BIGINT)
+    s"""$v.nsq - 2*${Portable.dotSql(s"$v.qv", s"$c.c", w)}
        |    + CAST(list_sum(list_transform($c.c, x -> x*x)) AS BIGINT)""".stripMargin
 
   private def assignSubSql(src: String, cent: String): String =
@@ -540,17 +539,7 @@ object Pq {
 
   def pqRecallSql(k: Int = TopK): String =
     s"""WITH $pqCtes,
-       |exact AS (
-       |  SELECT query_id, cand_id FROM (
-       |    SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
-       |           a.nsq - 2*CAST(list_sum(list_transform(generate_series(1, $dims),
-       |               i -> a.qv[i] * b.qv[i])) AS BIGINT) + b.nsq AS dist,
-       |           row_number() OVER (PARTITION BY a.vec_id
-       |             ORDER BY a.nsq - 2*CAST(list_sum(list_transform(generate_series(1, $dims),
-       |               i -> a.qv[i] * b.qv[i])) AS BIGINT) + b.nsq, b.vec_id) AS rank
-       |    FROM qn a JOIN qn b ON a.vec_id <> b.vec_id
-       |    WHERE a.vec_id < 8
-       |  ) WHERE rank <= $k),
+       |exact AS (${ExactPanels.l2Sql(k)}),
        |approx AS (
        |  SELECT query_id, cand_id FROM pq_ranked WHERE rank <= $k)
        |${ExactPanels.recallSql}""".stripMargin
@@ -628,15 +617,7 @@ object Pq {
 
   def opqRecallSql(k: Int = TopK): String =
     s"""WITH $opqCtes,
-       |exact AS (
-       |  SELECT query_id, cand_id FROM (
-       |    SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
-       |           row_number() OVER (PARTITION BY a.vec_id
-       |             ORDER BY a.nsq - 2*CAST(list_sum(list_transform(generate_series(1, $dims),
-       |               i -> a.qv[i] * b.qv[i])) AS BIGINT) + b.nsq, b.vec_id) AS rank
-       |    FROM qn a JOIN qn b ON a.vec_id <> b.vec_id
-       |    WHERE a.vec_id < 8
-       |  ) WHERE rank <= $k),
+       |exact AS (${ExactPanels.l2Sql(k)}),
        |approx AS (
        |  SELECT query_id, cand_id FROM opq_ranked WHERE rank <= $k)
        |${ExactPanels.recallSql}""".stripMargin
@@ -703,15 +684,7 @@ object Pq {
 
   def ivfAdcRecallSql(k: Int = TopK, nprobe: Int = 2): String =
     s"""WITH ${ivfAdcCtes(nprobe)},
-       |exact AS (
-       |  SELECT query_id, cand_id FROM (
-       |    SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
-       |           row_number() OVER (PARTITION BY a.vec_id
-       |             ORDER BY a.nsq - 2*CAST(list_sum(list_transform(generate_series(1, $dims),
-       |               i -> a.qv[i] * b.qv[i])) AS BIGINT) + b.nsq, b.vec_id) AS rank
-       |    FROM qn a JOIN qn b ON a.vec_id <> b.vec_id
-       |    WHERE a.vec_id < 8
-       |  ) WHERE rank <= $k),
+       |exact AS (${ExactPanels.l2Sql(k)}),
        |approx AS (
        |  SELECT query_id, cand_id FROM adc_ranked WHERE rank <= $k)
        |${ExactPanels.recallSql}""".stripMargin
@@ -723,15 +696,7 @@ object Pq {
 
   def ivfPqRecallSql(k: Int = TopK, nprobe: Int = 2): String =
     s"""WITH ${ivfPqCtes(nprobe)},
-       |exact AS (
-       |  SELECT query_id, cand_id FROM (
-       |    SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
-       |           row_number() OVER (PARTITION BY a.vec_id
-       |             ORDER BY a.nsq - 2*CAST(list_sum(list_transform(generate_series(1, $dims),
-       |               i -> a.qv[i] * b.qv[i])) AS BIGINT) + b.nsq, b.vec_id) AS rank
-       |    FROM qn a JOIN qn b ON a.vec_id <> b.vec_id
-       |    WHERE a.vec_id < 8
-       |  ) WHERE rank <= $k),
+       |exact AS (${ExactPanels.l2Sql(k)}),
        |approx AS (
        |  SELECT query_id, cand_id FROM ivfpq_ranked WHERE rank <= $k)
        |${ExactPanels.recallSql}""".stripMargin

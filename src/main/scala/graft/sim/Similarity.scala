@@ -45,9 +45,9 @@ object Similarity {
       .repartition(spark.sparkContext.defaultParallelism, col("vec_id")))
 
   private[sim] val quantizedSql: String =
-    """q AS (
+    s"""q AS (
       |  SELECT vec_id,
-      |         list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*10000 + 0.5) AS BIGINT)) AS qv
+      |         ${Portable.quantizeSql("embedding")} AS qv
       |  FROM embeddings
       |),
       |qn AS (
@@ -56,12 +56,10 @@ object Similarity {
       |  FROM q
       |)""".stripMargin
 
-  /** Exact integer dot product of the `qv` vectors of row aliases `a`
-    * and `b` (the DuckDB twin of Portable.dotQ). */
-  private[sim] def dotSqlOf(a: String, b: String): String =
-    s"CAST(list_sum(list_transform(generate_series(1, $dims), i -> $a.qv[i] * $b.qv[i])) AS BIGINT)"
-
-  private[sim] val dotSql = dotSqlOf("a", "b")
+  /** Exact cosine of the quantized rows aliased `a` and `b` (columns
+    * qv, nsq): the DuckDB twin of the vector family's scoring. */
+  private[sim] val abCosineSql: String =
+    Portable.cosineSql(Portable.dotSql("a.qv", "b.qv"), "a.nsq", "b.nsq")
 
   /** Brute-force exact cosine top-k: queries = vec_id < 8 against the full
     * corpus (self excluded). The TINY QUERY SIDE broadcasts (the corpus is
@@ -91,7 +89,7 @@ object Similarity {
     s"""WITH $quantizedSql,
        |scored AS (
        |  SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
-       |         CAST($dotSql AS DOUBLE) / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) AS cosine
+       |         $abCosineSql AS cosine
        |  FROM qn a JOIN qn b ON a.vec_id <> b.vec_id
        |  WHERE a.vec_id < 8
        |),
@@ -186,7 +184,7 @@ object Similarity {
        |side AS (SELECT qn.vec_id, qv, nsq, signature FROM qn JOIN sig ON qn.vec_id = sig.vec_id),
        |scored AS (
        |  SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
-       |         CAST($dotSql AS DOUBLE) / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) AS cosine
+       |         $abCosineSql AS cosine
        |  FROM side a JOIN side b ON a.signature = b.signature AND a.vec_id <> b.vec_id
        |),
        |ranked AS (
@@ -325,9 +323,9 @@ object Similarity {
        |  UNION ALL SELECT vec_id, qv, nsq FROM plantedn
        |)
        |SELECT a.vec_id AS a, b.vec_id AS b,
-       |       CAST($dotSql AS DOUBLE) / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) AS cosine
+       |       $abCosineSql AS cosine
        |FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
-       |WHERE CAST($dotSql AS DOUBLE) / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) >= $tau
+       |WHERE $abCosineSql >= $tau
        |ORDER BY a, b""".stripMargin
 
   /** INCREMENTAL embedding near-dup — the nightly-ingest shape for the
@@ -404,11 +402,11 @@ object Similarity {
        |  UNION ALL SELECT vec_id, qv, nsq FROM plantedn
        |)
        |SELECT a.vec_id AS a, b.vec_id AS b,
-       |       CAST($dotSql AS DOUBLE) / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) AS cosine
+       |       $abCosineSql AS cosine
        |FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
        |WHERE (a.vec_id >= (SELECT max(vec_id) + 1 FROM qn)
        |       OR b.vec_id >= (SELECT max(vec_id) + 1 FROM qn))
-       |  AND CAST($dotSql AS DOUBLE) / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) >= $tau
+       |  AND $abCosineSql >= $tau
        |ORDER BY a, b""".stripMargin
 
   /** IVF-style ANN: a deterministic coarse quantizer (centroids = the
@@ -458,8 +456,7 @@ object Similarity {
        |cents AS (SELECT vec_id AS cid, qv AS qc, nsq AS nc FROM qn WHERE vec_id < $nCells),
        |assign AS (
        |  SELECT qn.vec_id, qn.qv, qn.nsq, c.cid,
-       |         CAST(CAST(list_sum(list_transform(generate_series(1, $dims), i -> qn.qv[i] * c.qc[i])) AS BIGINT) AS DOUBLE)
-       |           / (sqrt(CAST(qn.nsq AS DOUBLE)) * sqrt(CAST(c.nc AS DOUBLE))) AS ccos
+       |         ${Portable.cosineSql(Portable.dotSql("qn.qv", "c.qc"), "qn.nsq", "c.nc")} AS ccos
        |  FROM qn CROSS JOIN cents c
        |),
        |ranked_assign AS (
@@ -473,8 +470,7 @@ object Similarity {
        |           FROM ranked_assign WHERE vec_id < 8 AND crn <= $nprobe),
        |scored AS (
        |  SELECT query_id, cand_id,
-       |         CAST(CAST(list_sum(list_transform(generate_series(1, $dims), i -> p.qa[i] * s.qb[i])) AS BIGINT) AS DOUBLE)
-       |           / (sqrt(CAST(p.na AS DOUBLE)) * sqrt(CAST(s.nb AS DOUBLE))) AS cosine
+       |         ${Portable.cosineSql(Portable.dotSql("p.qa", "s.qb"), "p.na", "s.nb")} AS cosine
        |  FROM probes p JOIN cells s USING (cid)
        |  WHERE p.query_id <> s.cand_id
        |),
@@ -556,7 +552,7 @@ object Similarity {
   }
 
   def mrlRecallSql(k: Int = 5, prefixDims: Int = 16): String = {
-    val pdot = s"CAST(list_sum(list_transform(generate_series(1, $prefixDims), i -> a.pq[i] * b.pq[i])) AS BIGINT)"
+    val pcos = Portable.cosineSql(Portable.dotSql("a.pq", "b.pq", prefixDims), "a.pnsq", "b.pnsq")
     s"""WITH $quantizedSql,
        |pq AS (
        |  SELECT vec_id, list_slice(qv, 1, $prefixDims) AS pq,
@@ -567,7 +563,7 @@ object Similarity {
        |  SELECT query_id, cand_id FROM (
        |    SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
        |           row_number() OVER (PARTITION BY a.vec_id ORDER BY
-       |             CAST($pdot AS DOUBLE) / (sqrt(CAST(a.pnsq AS DOUBLE)) * sqrt(CAST(b.pnsq AS DOUBLE))) DESC,
+       |             $pcos DESC,
        |             b.vec_id) AS rank
        |    FROM pq a JOIN pq b ON a.vec_id <> b.vec_id
        |    WHERE a.vec_id < 8)
@@ -613,7 +609,7 @@ object Similarity {
   def hardNegativesSql(k: Int = 10): String =
     s"""WITH q AS (
        |  SELECT vec_id, label,
-       |         list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*10000 + 0.5) AS BIGINT)) AS qv
+       |         ${Portable.quantizeSql("embedding")} AS qv
        |  FROM embeddings
        |),
        |qn AS (
@@ -624,7 +620,7 @@ object Similarity {
        |scored AS (
        |  SELECT a.vec_id AS query_id, a.label::BIGINT AS query_label,
        |         b.vec_id AS cand_id, b.label::BIGINT AS cand_label,
-       |         CAST($dotSql AS DOUBLE) / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) AS cosine
+       |         $abCosineSql AS cosine
        |  FROM qn a JOIN qn b ON a.label <> b.label
        |  WHERE a.vec_id < 8
        |),
@@ -723,7 +719,7 @@ object Similarity {
        |    FROM ham) WHERE rn <= $bqShortlist),
        |rerank AS (
        |  SELECT s.query_id, s.cand_id, s.hamming,
-       |         CAST($dotSql AS DOUBLE) / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) AS cosine
+       |         $abCosineSql AS cosine
        |  FROM short s JOIN qn a ON a.vec_id = s.query_id
        |  JOIN qn b ON b.vec_id = s.cand_id)
        |SELECT query_id, cand_id, hamming, cosine, rank FROM (
@@ -745,7 +741,7 @@ object Similarity {
        |    FROM ham) WHERE rn <= $bqShortlist),
        |rerank AS (
        |  SELECT s.query_id, s.cand_id,
-       |         CAST($dotSql AS DOUBLE) / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) AS cosine
+       |         $abCosineSql AS cosine
        |  FROM short s JOIN qn a ON a.vec_id = s.query_id
        |  JOIN qn b ON b.vec_id = s.cand_id),
        |approx AS (
@@ -753,14 +749,7 @@ object Similarity {
        |    SELECT query_id, cand_id,
        |           row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
        |    FROM rerank) WHERE rank <= $k),
-       |exact AS (
-       |  SELECT query_id, cand_id FROM (
-       |    SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
-       |           row_number() OVER (PARTITION BY a.vec_id ORDER BY
-       |             CAST($dotSql AS DOUBLE) / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) DESC,
-       |             b.vec_id) AS rank
-       |    FROM qn a JOIN qn b ON a.vec_id <> b.vec_id
-       |    WHERE a.vec_id < 8) WHERE rank <= $k)
+       |exact AS (${ExactPanels.cosineSql(k)})
        |${ExactPanels.recallSql}""".stripMargin
 
   /** Composed IVF + binary quantization — the third member of the
@@ -820,8 +809,7 @@ object Similarity {
   private def ivfBqCtes(nprobe: Int): String = {
     val r = Clustering.trainRounds
     val centDist =
-      s"""qn.nsq - 2*CAST(list_sum(list_transform(generate_series(1, $dims),
-         |      i -> qn.qv[i] * c.c[i])) AS BIGINT)
+      s"""qn.nsq - 2*${Portable.dotSql("qn.qv", "c.c")}
          |    + CAST(list_sum(list_transform(c.c, x -> x*x)) AS BIGINT)""".stripMargin
     s"""$quantizedSql,
        |${Clustering.kmeansCtesNoQuantize},
@@ -849,7 +837,7 @@ object Similarity {
        |    FROM ham) WHERE rn <= $bqShortlist),
        |rerank AS (
        |  SELECT s.query_id, s.cand_id, s.hamming,
-       |         CAST($dotSql AS DOUBLE) / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) AS cosine
+       |         $abCosineSql AS cosine
        |  FROM short s JOIN qn a ON a.vec_id = s.query_id
        |  JOIN qn b ON b.vec_id = s.cand_id),
        |ivfbq_ranked AS (
@@ -865,14 +853,7 @@ object Similarity {
 
   def ivfBqRecallSql(k: Int = 5, nprobe: Int = 2): String =
     s"""WITH ${ivfBqCtes(nprobe)},
-       |exact AS (
-       |  SELECT query_id, cand_id FROM (
-       |    SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
-       |           row_number() OVER (PARTITION BY a.vec_id ORDER BY
-       |             CAST($dotSql AS DOUBLE) / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) DESC,
-       |             b.vec_id) AS rank
-       |    FROM qn a JOIN qn b ON a.vec_id <> b.vec_id
-       |    WHERE a.vec_id < 8) WHERE rank <= $k),
+       |exact AS (${ExactPanels.cosineSql(k)}),
        |approx AS (
        |  SELECT query_id, cand_id FROM ivfbq_ranked WHERE rank <= $k)
        |${ExactPanels.recallSql}""".stripMargin
@@ -956,7 +937,7 @@ object Similarity {
        |),
        |multi AS (
        |  SELECT DISTINCT a.query_id, b.vec_id AS cand_id,
-       |         CAST($dotSql AS DOUBLE) / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) AS cosine
+       |         $abCosineSql AS cosine
        |  FROM probes a JOIN side b ON b.bucket = a.probe AND b.vec_id <> a.query_id
        |),
        |multitop AS (
@@ -969,20 +950,12 @@ object Similarity {
        |  SELECT query_id, cand_id FROM (
        |    SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
        |           row_number() OVER (PARTITION BY a.vec_id ORDER BY
-       |             CAST($dotSql AS DOUBLE) / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) DESC,
+       |             $abCosineSql DESC,
        |             b.vec_id) AS rank
        |    FROM side a JOIN side b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
        |    WHERE a.vec_id < 8) WHERE rank <= $k
        |),
-       |exact AS (
-       |  SELECT query_id, cand_id FROM (
-       |    SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
-       |           row_number() OVER (PARTITION BY a.vec_id ORDER BY
-       |             CAST($dotSql AS DOUBLE) / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) DESC,
-       |             b.vec_id) AS rank
-       |    FROM qn a JOIN qn b ON a.vec_id <> b.vec_id
-       |    WHERE a.vec_id < 8) WHERE rank <= $k
-       |)
+       |exact AS (${ExactPanels.cosineSql(k)})
        |SELECT e.query_id, count(*) AS n_exact,
        |       CAST(sum(CASE WHEN s.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits_single,
        |       CAST(sum(CASE WHEN m.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits_multi,
@@ -1075,7 +1048,7 @@ object Similarity {
        |  WHERE m.w <= b.budget AND s.vec_id < 8),
        |cand AS (
        |  SELECT DISTINCT a.budget, a.query_id, b.vec_id AS cand_id,
-       |         CAST($dotSql AS DOUBLE) / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) AS cosine
+       |         $abCosineSql AS cosine
        |  FROM probes a JOIN side b ON b.bucket = a.probe AND b.vec_id <> a.query_id),
        |top AS (
        |  SELECT budget, query_id, cand_id FROM (
@@ -1083,14 +1056,7 @@ object Similarity {
        |           row_number() OVER (PARTITION BY budget, query_id
        |             ORDER BY cosine DESC, cand_id) AS rank
        |    FROM cand) WHERE rank <= $k),
-       |exact AS (
-       |  SELECT query_id, cand_id FROM (
-       |    SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
-       |           row_number() OVER (PARTITION BY a.vec_id ORDER BY
-       |             CAST($dotSql AS DOUBLE) / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) DESC,
-       |             b.vec_id) AS rank
-       |    FROM qn a JOIN qn b ON a.vec_id <> b.vec_id
-       |    WHERE a.vec_id < 8) WHERE rank <= $k)
+       |exact AS (${ExactPanels.cosineSql(k)})
        |SELECT b.budget, b.n_probes, count(*) AS n_exact,
        |       CAST(sum(CASE WHEN t.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
        |       CAST(sum(CASE WHEN t.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Portable
 
 /** Source/sink format surface. The reference has no file formats at all
   * (in-memory only, stdout output — SURVEY.md §2.4); a complete Spark
@@ -270,9 +271,9 @@ object Formats {
       .orderBy("bucket")
 
   val generatorPushdownSql: String =
-    """WITH g AS (SELECT range AS k FROM range(50000, 150000))
+    s"""WITH g AS (SELECT range AS k FROM range(50000, 150000))
       |SELECT k % 100 AS bucket, count(*) AS n_keys,
-      |       bit_xor(CAST(('0x' || substr(md5(md5('gen_' || k)), 1, 15)) AS BIGINT))
+      |       bit_xor(${Portable.hash60Sql("md5('gen_' || k)")})
       |         AS payload_xor
       |FROM g GROUP BY 1 ORDER BY 1""".stripMargin
 
@@ -294,7 +295,7 @@ object Formats {
   }
 
   val textRoundTripSql: String =
-    """SELECT CAST(('0x' || substr(md5(c_name), 1, 15)) AS BIGINT) AS line_hash,
+    s"""SELECT ${Portable.hash60Sql("c_name")} AS line_hash,
       |       CAST(len(c_name) AS BIGINT) AS n_chars
       |FROM customer ORDER BY line_hash""".stripMargin
 
@@ -324,14 +325,14 @@ object Formats {
   }
 
   val binaryMetaSql: String =
-    """WITH g AS (
+    s"""WITH g AS (
       |  SELECT range AS i,
       |         array_to_string(list_transform(generate_series(0, (range + 1) * 3 - 1),
       |           j -> 'blob_' || range || '_' || j), ',') AS content
       |  FROM range(0, 16)
       |)
       |SELECT i AS idx, CAST(len(content) AS BIGINT) AS length,
-      |       CAST(('0x' || substr(md5(content), 1, 15)) AS BIGINT) AS content_hash
+      |       ${Portable.hash60Sql("content")} AS content_hash
       |FROM g ORDER BY idx""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -484,7 +484,7 @@ object Bpe {
     * of its own, each round cross-joins the train chain's b$r) over the
     * val split, accounted like [[bpeEncodeSql]]. */
   val bpeEncodeHeldoutSql: String = {
-    val h = TextAnalysis.splitHashSql
+    val h = TextAnalysis.splitHashSql("doc_id")
     val applyRounds = (1 to rounds).map { r =>
       s"""q$r AS (
          |  SELECT doc_id, wid, pos, sym,

@@ -89,8 +89,8 @@ object Classify {
     val tok = TextAnalysis.tokSql
     s"""WITH d AS (
        |  SELECT doc_id, $tok AS toks,
-       |         CASE WHEN ${TextAnalysis.splitHashSql} < 80 THEN 'train'
-       |              WHEN ${TextAnalysis.splitHashSql} < 90 THEN 'val'
+       |         CASE WHEN ${TextAnalysis.splitHashSql("doc_id")} < 80 THEN 'train'
+       |              WHEN ${TextAnalysis.splitHashSql("doc_id")} < 90 THEN 'val'
        |              ELSE 'test' END AS split
        |  FROM documents
        |), lab AS (

@@ -90,8 +90,8 @@ object Pipeline {
        |  SELECT s3.* FROM s3 WHERE doc_id NOT IN (SELECT doc_id FROM dropped)
        |), sp AS (
        |  SELECT nc,
-       |         CASE WHEN ${TextAnalysis.splitHashSql} < 80 THEN 'train'
-       |              WHEN ${TextAnalysis.splitHashSql} < 90 THEN 'val'
+       |         CASE WHEN ${TextAnalysis.splitHashSql("doc_id")} < 80 THEN 'train'
+       |              WHEN ${TextAnalysis.splitHashSql("doc_id")} < 90 THEN 'val'
        |              ELSE 'test' END AS split
        |  FROM s4
        |)
@@ -141,7 +141,7 @@ object Pipeline {
     s"""WITH toks AS (
        |  SELECT doc_id,
        |         len(${TextAnalysis.tokSql})::BIGINT AS n_tok,
-       |         ('0x' || substr(md5('pack_' || doc_id), 1, 15))::BIGINT % $PackShards AS shard
+       |         ${Portable.hash60Sql("'pack_' || doc_id")} % $PackShards AS shard
        |  FROM documents
        |), off AS (
        |  -- DuckDB windowed sum(BIGINT) is HUGEINT; chunk_id must stay BIGINT
@@ -199,7 +199,7 @@ object Pipeline {
        |  FROM tot, mx
        |), j AS (
        |  SELECT d.lang, d.n_tok, rl.r,
-       |         rl.r // 1000 + CASE WHEN ('0x' || substr(md5('mix_' || d.doc_id), 1, 15))::BIGINT % 1000
+       |         rl.r // 1000 + CASE WHEN ${Portable.hash60Sql("'mix_' || d.doc_id")} % 1000
        |                                  < rl.r % 1000 THEN 1 ELSE 0 END AS k
        |  FROM toks d JOIN rl USING (lang)
        |)
@@ -328,7 +328,7 @@ object Pipeline {
        |  SELECT doc_id, lang, ${TextAnalysis.tokSql} AS toks FROM documents
        |), grams AS (
        |  SELECT doc_id, lang,
-       |         ('0x' || substr(md5('dsir_' || toks[i] || '_' || toks[i + 1]), 1, 15))::BIGINT
+       |         ${Portable.hash60Sql("'dsir_' || toks[i] || '_' || toks[i + 1]")}
        |           % $DsirBuckets AS b
        |  FROM tk, unnest(range(1, len(toks))) AS u(i)
        |), model AS (
@@ -368,9 +368,9 @@ object Pipeline {
   val leakageSplitSql: String =
     s"""WITH d AS (
        |  SELECT source,
-       |         CASE WHEN ('0x' || substr(md5('gsplit_' || source), 1, 15))::BIGINT % 100 < 80
+       |         CASE WHEN ${Portable.hash60Sql("'gsplit_' || source")} % 100 < 80
        |                THEN 'train'
-       |              WHEN ('0x' || substr(md5('gsplit_' || source), 1, 15))::BIGINT % 100 < 90
+       |              WHEN ${Portable.hash60Sql("'gsplit_' || source")} % 100 < 90
        |                THEN 'val' ELSE 'test' END AS split,
        |         len(${TextAnalysis.tokSql})::BIGINT AS n_toks
        |  FROM documents
@@ -413,6 +413,7 @@ object Pipeline {
 
   val chunkOverlapSql: String = {
     val (c, s) = (ChunkSize, ChunkStride)
+    val chunkText = s"array_to_string(list_slice(toks, (chunk_id * $s + 1)::INT, (chunk_id * $s + $c)::INT), '_')"
     s"""WITH tk AS (
        |  SELECT doc_id, ${TextAnalysis.tokSql} AS toks,
        |         len(${TextAnalysis.tokSql})::BIGINT AS n
@@ -426,10 +427,7 @@ object Pipeline {
        |)
        |SELECT doc_id, chunk_id, chunk_id * $s AS tok_start,
        |       least($c, n - chunk_id * $s) AS n_chunk_tokens,
-       |       ('0x' || substr(md5('chunk_' ||
-       |          array_to_string(list_slice(toks, (chunk_id * $s + 1)::INT,
-       |                                     (chunk_id * $s + $c)::INT), '_')), 1, 15))::BIGINT
-       |         AS chunk_hash
+       |       ${Portable.hash60Sql(s"'chunk_' || $chunkText")} AS chunk_hash
        |FROM chunks ORDER BY doc_id, chunk_id""".stripMargin
   }
 
@@ -524,7 +522,7 @@ object Pipeline {
   }
 
   val spanCorruptionSql: String =
-    """WITH tk AS (
+    s"""WITH tk AS (
       |  SELECT doc_id, len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
       |                                 x -> len(x) > 0)) AS n FROM documents
       |), pos AS (
@@ -534,8 +532,8 @@ object Pipeline {
       |  SELECT doc_id, pos,
       |         (SELECT bool_or(
       |            j >= 0
-      |            AND ('0x' || substr(md5('span_' || doc_id || '_' || j), 1, 15))::BIGINT % 100 < 10
-      |            AND (j + 1 + (('0x' || substr(md5('span_' || doc_id || '_' || j), 1, 15))::BIGINT * 7 + 13) % 3) > pos)
+      |            AND ${Portable.hash60Sql("'span_' || doc_id || '_' || j")} % 100 < 10
+      |            AND (j + 1 + (${Portable.hash60Sql("'span_' || doc_id || '_' || j")} * 7 + 13) % 3) > pos)
       |          FROM (SELECT unnest([pos, pos - 1, pos - 2]) AS j)) AS masked
       |  FROM pos
       |), isl AS (
@@ -589,11 +587,11 @@ object Pipeline {
   }
 
   val fimSplitSql: String =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT doc_id, text, n_chars,
-      |         ('0x' || substr(md5('fim_' || doc_id), 1, 15))::BIGINT % 2 = 0 AS fim,
-      |         ('0x' || substr(md5('fim1_' || doc_id), 1, 15))::BIGINT % n_chars + 1 AS h1,
-      |         ('0x' || substr(md5('fim2_' || doc_id), 1, 15))::BIGINT % n_chars + 1 AS h2
+      |         ${Portable.hash60Sql("'fim_' || doc_id")} % 2 = 0 AS fim,
+      |         ${Portable.hash60Sql("'fim1_' || doc_id")} % n_chars + 1 AS h1,
+      |         ${Portable.hash60Sql("'fim2_' || doc_id")} % n_chars + 1 AS h2
       |  FROM documents WHERE n_chars > 0
       |)
       |SELECT doc_id, fim,
@@ -649,8 +647,8 @@ object Pipeline {
        |  SELECT CAST(sum(len(${TextAnalysis.tokSql})) AS BIGINT) AS n_tokens
        |  FROM documents
        |), splits AS (
-       |  SELECT CASE WHEN ${TextAnalysis.splitHashSql} < 80 THEN 'train'
-       |              WHEN ${TextAnalysis.splitHashSql} < 90 THEN 'val'
+       |  SELECT CASE WHEN ${TextAnalysis.splitHashSql("doc_id")} < 80 THEN 'train'
+       |              WHEN ${TextAnalysis.splitHashSql("doc_id")} < 90 THEN 'val'
        |              ELSE 'test' END AS split, count(*) AS n
        |  FROM documents GROUP BY 1
        |)
@@ -691,10 +689,10 @@ object Pipeline {
   }
 
   val shardManifestSql: String =
-    s"""SELECT ('0x' || substr(md5('shard_' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
+    s"""SELECT ${Portable.hash60Sql("'shard_' || CAST(doc_id AS VARCHAR)")}
        |         % $nShards AS shard,
        |       count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS n_chars,
-       |       bit_xor(('0x' || substr(md5(text), 1, 15))::BIGINT) AS xor_checksum
+       |       bit_xor(${Portable.hash60Sql("text")}) AS xor_checksum
        |FROM documents GROUP BY 1 ORDER BY shard""".stripMargin
 
   private val ShuffleSeed = 42
@@ -737,7 +735,7 @@ object Pipeline {
   val globalShuffleSql: String =
     s"""WITH k AS (
        |  SELECT doc_id, len(${TextAnalysis.tokSql})::BIGINT AS n_tok,
-       |         ('0x' || substr(md5('shuf${ShuffleSeed}_' || doc_id), 1, 15))::BIGINT AS key
+       |         ${Portable.hash60Sql(s"'shuf${ShuffleSeed}_' || doc_id")} AS key
        |  FROM documents
        |), s AS (
        |  SELECT doc_id, n_tok, key, key // $ShuffleShardWidth AS shard FROM k
@@ -747,7 +745,7 @@ object Pipeline {
        |  FROM s
        |)
        |SELECT shard, count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-       |       bit_xor(('0x' || substr(md5(pos || '_' || doc_id), 1, 15))::BIGINT) AS order_checksum
+       |       bit_xor(${Portable.hash60Sql("pos || '_' || doc_id")}) AS order_checksum
        |FROM p GROUP BY 1 ORDER BY shard""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -224,7 +224,7 @@ object Retrieval {
        |  SELECT doc_id,
        |         unnest(list_distinct(list_transform(
        |           generate_series(1, len(toks) - ${n - 1}), i -> $gramExpr))) AS gram,
-       |         CASE WHEN ${TextAnalysis.splitHashSql} < 80
+       |         CASE WHEN ${TextAnalysis.splitHashSql("doc_id")} < 80
        |              THEN 'train' ELSE 'other' END AS split
        |  FROM tk WHERE len(toks) >= $n
        |), rare AS (
@@ -355,10 +355,10 @@ object Retrieval {
        |  GROUP BY a, b
        |)
        |SELECT a, b,
-       |       CAST(dot AS DOUBLE) / (sqrt(CAST(qa.qn AS DOUBLE)) * sqrt(CAST(qb.qn AS DOUBLE))) AS cosine
+       |       ${Portable.cosineSql("dot", "qa.qn", "qb.qn")} AS cosine
        |FROM pairs JOIN qn qa ON pairs.a = qa.doc_id
        |           JOIN qn qb ON pairs.b = qb.doc_id
-       |WHERE CAST(dot AS DOUBLE) / (sqrt(CAST(qa.qn AS DOUBLE)) * sqrt(CAST(qb.qn AS DOUBLE))) >= $tau
+       |WHERE ${Portable.cosineSql("dot", "qa.qn", "qb.qn")} >= $tau
        |ORDER BY a, b""".stripMargin
 
   /** Hybrid retrieval via reciprocal-rank fusion (Cormack et al. 2009):
@@ -408,7 +408,7 @@ object Retrieval {
        |  FROM lexbase),
        |q AS (
        |  SELECT vec_id,
-       |         list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*10000 + 0.5) AS BIGINT)) AS qv
+       |         ${Portable.quantizeSql("embedding")} AS qv
        |  FROM embeddings),
        |qn AS (
        |  SELECT vec_id, qv,
@@ -417,8 +417,7 @@ object Retrieval {
        |q0 AS (SELECT qv, nsq FROM qn WHERE vec_id = 0),
        |vscore AS (
        |  SELECT b.vec_id AS doc_id,
-       |         CAST(list_sum(list_transform(generate_series(1, 64), i -> a.qv[i] * b.qv[i])) AS BIGINT)::DOUBLE
-       |           / (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) AS cosine
+       |         ${Portable.cosineSql(Portable.dotSql("a.qv", "b.qv"), "a.nsq", "b.nsq")} AS cosine
        |  FROM qn b, q0 a WHERE b.vec_id <> 0),
        |vectop AS (SELECT doc_id, cosine FROM vscore ORDER BY cosine DESC, doc_id LIMIT $topN),
        |vec AS (
@@ -476,7 +475,7 @@ object Retrieval {
        |), pairs AS (
        |  SELECT doc_id,
        |         unnest(list_distinct(list_transform(generate_series(1, len(toks) - 1),
-       |           i -> ('0x' || substr(md5('nov_' || toks[i] || '_' || toks[i+1]), 1, 15))::BIGINT)))
+       |           i -> ${Portable.hash60Sql("'nov_' || toks[i] || '_' || toks[i+1]")})))
        |           AS g
        |  FROM tk WHERE len(toks) >= 2
        |), gdf AS (

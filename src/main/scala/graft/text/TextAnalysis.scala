@@ -155,7 +155,7 @@ object TextAnalysis {
        |SELECT doc_id,
        |       md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS set_fingerprint,
        |       CAST(coalesce(list_sum(list_transform(generate_series(1, len(toks)),
-       |           i -> i * (('0x' || substr(md5(toks[i]), 1, 15))::BIGINT % 1000003))), 0) AS BIGINT) AS rolling_hash
+       |           i -> i * (${Portable.hash60Sql("toks[i]")} % 1000003))), 0) AS BIGINT) AS rolling_hash
        |FROM tk ORDER BY doc_id""".stripMargin
 
   /** Duplicate-trigram fraction — the n-gram repetition signal
@@ -231,7 +231,7 @@ object TextAnalysis {
        |  SELECT unnest($tokSql) AS tok FROM documents
        |), cells AS (
        |  SELECT tok, i.i AS i,
-       |         ('0x' || substr(md5(i.i || '_' || tok), 1, 15))::BIGINT % $w AS bucket
+       |         ${Portable.hash60Sql("i.i || '_' || tok")} % $w AS bucket
        |  FROM toks, (SELECT unnest(generate_series(0, ${d - 1})) AS i) i
        |), sketch AS (
        |  SELECT i, bucket, count(*) AS c FROM cells GROUP BY i, bucket
@@ -240,7 +240,7 @@ object TextAnalysis {
        |  ORDER BY exact_count DESC, tok LIMIT $topN
        |), probe_cells AS (
        |  SELECT p.tok, p.exact_count, i.i AS i,
-       |         ('0x' || substr(md5(i.i || '_' || p.tok), 1, 15))::BIGINT % $w AS bucket
+       |         ${Portable.hash60Sql("i.i || '_' || p.tok")} % $w AS bucket
        |  FROM probes p, (SELECT unnest(generate_series(0, ${d - 1})) AS i) i
        |)
        |SELECT pc.tok, pc.exact_count, min(s.c)::BIGINT AS est_count
@@ -352,8 +352,7 @@ object TextAnalysis {
   def splitHash(docId: Column): Column =
     pmod(Portable.hash60(concat_ws("_", lit("split"), docId)), lit(100L))
 
-  val splitHashSql: String =
-    "('0x' || substr(md5('split_' || doc_id), 1, 15))::BIGINT % 100"
+  def splitHashSql(id: String): String = s"${Portable.hash60Sql(s"'split_' || $id")} % 100"
 
   /** 80/10/10 split label from [[splitHash]]. */
   def splitOf(docId: Column): Column = {
@@ -376,7 +375,7 @@ object TextAnalysis {
 
   val splitAssignSql: String =
     s"""WITH h AS (
-      |  SELECT doc_id, $splitHashSql AS h
+      |  SELECT doc_id, ${splitHashSql("doc_id")} AS h
       |  FROM documents
       |)
       |SELECT doc_id, h,
@@ -404,8 +403,8 @@ object TextAnalysis {
   val mixReportSql: String =
     s"""WITH per_doc AS (
        |  SELECT source,
-       |         CASE WHEN $splitHashSql < 80 THEN 'train'
-       |              WHEN $splitHashSql < 90 THEN 'val' ELSE 'test' END AS split,
+       |         CASE WHEN ${splitHashSql("doc_id")} < 80 THEN 'train'
+       |              WHEN ${splitHashSql("doc_id")} < 90 THEN 'val' ELSE 'test' END AS split,
        |         len($tokSql)::BIGINT AS n_toks
        |  FROM documents
        |), cells AS (
@@ -610,7 +609,7 @@ object TextAnalysis {
   }
 
   val unicodeNormalizeSql: String =
-    """WITH planted AS (
+    s"""WITH planted AS (
       |  SELECT doc_id, lang,
       |         CASE WHEN doc_id % 5 = 0
       |              THEN regexp_replace(text, 'a', 'a' || chr(769), 'g')
@@ -621,7 +620,7 @@ object TextAnalysis {
       |       CAST(sum(CASE WHEN nt <> t THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
       |       CAST(sum(length(t)) AS BIGINT) AS chars_before,
       |       CAST(sum(length(nt)) AS BIGINT) AS chars_after,
-      |       bit_xor(('0x' || substr(md5(nt), 1, 15))::BIGINT) AS xor_norm_hash
+      |       bit_xor(${Portable.hash60Sql("nt")}) AS xor_norm_hash
       |FROM n GROUP BY 1 ORDER BY lang""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

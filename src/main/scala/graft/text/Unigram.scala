@@ -395,7 +395,7 @@ object Unigram {
        |${encodeSql("", s"m$emRounds")}""".stripMargin
 
   val unigramEncodeHeldoutSql: String = {
-    val h = TextAnalysis.splitHashSql
+    val h = TextAnalysis.splitHashSql("doc_id")
     s"""WITH RECURSIVE ${formCtes(s" WHERE $h < 80", "tr")},
        |${trainCtes("tr")},
        |${formCtes(s" WHERE $h >= 80 AND $h < 90", "ev")},

@@ -44,9 +44,6 @@ object UrlCuration {
   private def h(prefix: String, c: Column): Column =
     Portable.hash60(concat(lit(prefix), c))
 
-  private def hSql(prefix: String, e: String): String =
-    s"('0x' || substr(md5('$prefix' || $e), 1, 15))::BIGINT"
-
   /** documents plus the derived `url` column. */
   def withUrls(spark: SparkSession, dir: String): DataFrame = {
     val ukey = when(
@@ -75,19 +72,19 @@ object UrlCuration {
     * scheme/host and reduce to the registered domain. */
   private val urlSqlCte: String =
     s"""uk AS (
-       |  SELECT *, CASE WHEN (${hSql("udup_", "CAST(doc_id AS VARCHAR)")} % 5) = 0 AND doc_id > 0
+       |  SELECT *, CASE WHEN (${Portable.hash60Sql("'udup_' || CAST(doc_id AS VARCHAR)")} % 5) = 0 AND doc_id > 0
        |                 THEN doc_id - 1 ELSE doc_id END AS ukey
        |  FROM documents ),
        |ub AS (
-       |  SELECT *, 39 - CAST(floor(sqrt(CAST(${hSql("udom_", "CAST(ukey AS VARCHAR)")} % 1600 AS DOUBLE))) AS BIGINT) AS b
+       |  SELECT *, 39 - CAST(floor(sqrt(CAST(${Portable.hash60Sql("'udom_' || CAST(ukey AS VARCHAR)")} % 1600 AS DOUBLE))) AS BIGINT) AS b
        |  FROM uk ),
        |ut AS (
        |  SELECT *,
-       |    CASE ${hSql("utld_", "CAST(b AS VARCHAR)")} % 5
+       |    CASE ${Portable.hash60Sql("'utld_' || CAST(b AS VARCHAR)")} % 5
        |      WHEN 0 THEN 'com' WHEN 1 THEN 'org' WHEN 2 THEN 'net' WHEN 3 THEN 'io' ELSE 'co.uk' END AS tld,
-       |    CASE ${hSql("usub_", "CAST(ukey AS VARCHAR)")} % 4
+       |    CASE ${Portable.hash60Sql("'usub_' || CAST(ukey AS VARCHAR)")} % 4
        |      WHEN 0 THEN 'www.' WHEN 1 THEN '' WHEN 2 THEN 'cdn.' ELSE 'api.' END AS sub,
-       |    CASE WHEN ${hSql("usch_", "CAST(ukey AS VARCHAR)")} % 10 < 8 THEN 'https' ELSE 'http' END AS scheme
+       |    CASE WHEN ${Portable.hash60Sql("'usch_' || CAST(ukey AS VARCHAR)")} % 10 < 8 THEN 'https' ELSE 'http' END AS scheme
        |  FROM ub ),
        |urls AS (
        |  SELECT doc_id, text, lang, source, n_chars,
@@ -191,7 +188,7 @@ object UrlCuration {
   val domainCapSql: String =
     s"""WITH $urlSqlCte,
        |pri AS (SELECT doc_id, n_chars, registered_domain,
-       |               ${hSql("ucap_", "CAST(doc_id AS VARCHAR)")} AS pri FROM pd),
+       |               ${Portable.hash60Sql("'ucap_' || CAST(doc_id AS VARCHAR)")} AS pri FROM pd),
        |rn AS (SELECT *, row_number() OVER (PARTITION BY registered_domain ORDER BY pri, doc_id) AS rn FROM pri),
        |kept AS (SELECT registered_domain, count(*) AS n_kept, sum(n_chars) AS kc FROM rn WHERE rn <= $DomainCap GROUP BY 1),
        |tot AS (SELECT registered_domain, count(*) AS n_docs FROM pri GROUP BY 1)
@@ -281,7 +278,7 @@ object UrlCuration {
   private val noisySqlCte: String =
     s"""noisy AS (
        |  SELECT doc_id, n_chars,
-       |    CASE ${hSql("unoise_", "CAST(doc_id AS VARCHAR)")} % 6
+       |    CASE ${Portable.hash60Sql("'unoise_' || CAST(doc_id AS VARCHAR)")} % 6
        |      WHEN 0 THEN url
        |      WHEN 1 THEN url || '?utm_source=feed&utm_medium=rss'
        |      WHEN 2 THEN url || '#sec-' || substr(md5('ufrag_' || CAST(doc_id AS VARCHAR)), 1, 4)

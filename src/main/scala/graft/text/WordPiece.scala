@@ -260,7 +260,7 @@ object WordPiece {
        |${encodeSql("", "wv")}""".stripMargin
 
   val wordpieceEncodeHeldoutSql: String = {
-    val h = TextAnalysis.splitHashSql
+    val h = TextAnalysis.splitHashSql("doc_id")
     s"""WITH RECURSIVE ${formCtes(s" WHERE $h < 80", "tr")},
        |${vocabCtes("tr")},
        |${formCtes(s" WHERE $h >= 80 AND $h < 90", "ev")},

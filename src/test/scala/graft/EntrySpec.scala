@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** The driver contract surface itself: entry() returns rows, every
   * declared query has a builder, and every oracle key has a query. */
 class EntrySpec extends SparkSpec {
@@ -20,6 +22,31 @@ class EntrySpec extends SparkSpec {
     val oracleTotal = SparkEntry.modules.map(_._2.size).sum
     assert(SparkEntry.oracleSql.size === oracleTotal,
       "duplicate oracle names collapsed in the merged map")
+  }
+
+  test("the benchmark's recorded oracle digests match the oracle SQL") {
+    // sparkbench's check reuses a recorded DuckDB digest only while the
+    // oracle's SQL hashes to the recorded sql_sha256; any edit to that
+    // text turns the benchmark check into a live DuckDB run.
+    val path = java.nio.file.Paths.get("sparkbench/expected/graph_ann_iterative.json")
+    val queries = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(path.toFile).get("queries")
+    val recorded = queries.fieldNames.asScala.map(q =>
+      q -> queries.get(q).get("sql_sha256").asText).toMap
+    assert(recorded.nonEmpty, s"no recorded queries in $path")
+    def sha256(s: String): String =
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val changed = recorded.toSeq.sorted.collect {
+      case (q, want) if !SparkEntry.oracleSql.get(q).map(sha256).contains(want) => q
+    }
+    assert(changed.isEmpty, s"oracle SQL differs from the recorded digest: $changed")
+  }
+
+  test("oracle SQL carries no Scala interpolation text") {
+    // a SQL literal built from `${…}` helpers must be an s-interpolator
+    val raw = SparkEntry.oracleSql.collect { case (q, sql) if sql.contains("${") => q }
+    assert(raw.isEmpty, s"uninterpolated oracle text: $raw")
   }
 
   test("every query has an oracle (no silently-unverified entries)") {

@@ -70,4 +70,23 @@ class SourceGuardSpec extends AnyFunSuite {
     val found = cosine ++ pack
     assert(found.isEmpty, found.mkString("\n"))
   }
+
+  test("the oracles spell no portable primitive: hash60, cosine, quantize and dot live in Portable") {
+    val twins = Seq(
+      "hash60" -> """'0x'\s*\|\|""",
+      "cosine" -> """sqrt\(CAST\([^()]* AS DOUBLE\)\)\s*\*\s*sqrt\(CAST\(""",
+      "quantize" -> """x -> CAST\(floor\(CAST\(x AS DOUBLE\)\s*\*\s*10000""",
+      "dot" -> """i -> [\w.$]+\[i\] \* [\w.$]+\[i\]""")
+    // the only two allowed: the two-line cosines of NnDescent's build
+    // and beam scoring, whose text sparkbench's recorded oracle digests
+    // pin (EntrySpec); each site carries that reason
+    val pinned = "/ (sqrt(CAST(a.nsq AS DOUBLE)) * sqrt(CAST(b.nsq AS DOUBLE))) AS cosine"
+    val found = twins.flatMap { case (rule, re) =>
+      hits(re, "functions/Portable.scala", "src/main").map(h => s"$rule: $h")
+    }
+    val (allowed, rest) = found.partition(h =>
+      h.contains("sim/NnDescent.scala:") && h.endsWith(pinned))
+    assert(rest.isEmpty, rest.mkString("\n"))
+    assert(allowed.size === 2, allowed.mkString("\n"))
+  }
 }
