@@ -23,10 +23,12 @@ import graft.model.{AriaConfig, EpochStats}
   *   Collect          = filter aborted + renumber by rank in the abort set
   *
   * The CAS-min races of the reference (metadatahelper.cuh:36-90) are a
-  * commutative min-monoid — exactly Spark's partial+final hash aggregation,
-  * so reservations shuffle once on `key` with map-side combine. At cluster
-  * scale each phase is a single shuffle stage; the phase barriers of the
-  * reference are Spark's stage boundaries for free.
+  * commutative min-monoid — exactly Spark's partial+final hash aggregation.
+  * A reference-size drain runs on one partition ([[runFrom]]), so every
+  * phase's clustering is already satisfied and each epoch is ONE stage
+  * with no shuffle. At decade scale the reservations shuffle once on `key`
+  * with map-side combine, and each phase is a single shuffle stage; the
+  * phase barriers of the reference are Spark's stage boundaries for free.
   *
   * Semantics preserved (SURVEY.md §2.5): min-Tid wins reservations; hazards
   * only against strictly smaller Tids; Tid 0 = unreserved sentinel; every op
@@ -59,9 +61,10 @@ object Aria {
     * strictly smaller Tid. WAR: any write op sees a read reservation from a
     * strictly smaller Tid. WAW: any write op sees a write reservation from
     * a strictly smaller Tid. (TrancM_func.cuh:126-164.)
-    * A shuffled hash join: [[reserve]] already partitions the
-    * reservations on the key, so only the ops shuffle, and no broadcast
-    * job runs before the epoch's abort-set collect. */
+    * A shuffled hash join, so no broadcast job runs before the epoch's
+    * abort-set collect. On a one-partition drain neither side shuffles;
+    * at decade scale [[reserve]] already partitions the reservations on
+    * the key, so only the ops shuffle. */
   def analyze(ops: DataFrame, reservations: DataFrame,
               keyCols: Seq[String] = Seq("key")): DataFrame = {
     val j = ops.join(reservations.hint("shuffle_hash"), keyCols)
@@ -114,9 +117,8 @@ object Aria {
     // value each winning op and left-join-merge it into the table.
     // Writes to absent keys drop here (the left join keeps only table
     // keys), matching the reference's skip of ops on missing keys.
-    val valued = (0 until 10).foldLeft(winners) { (df, i) =>
-      df.withColumn(s"nf$i", Workload.writePayload(seed, i))
-    }.select(keyCols.map(col) ++ (0 until 10).map(i => col(s"nf$i")): _*)
+    val valued = winners.select(keyCols.map(col) ++
+      (0 until 10).map(i => Workload.writePayload(seed, i).as(s"nf$i")): _*)
     table.join(valued, keyCols, "left").select(
       keyCols.map(col) ++ (0 until 10).map(i =>
         coalesce(col(s"nf$i"), col(s"f$i")).as(s"f$i")): _*)
@@ -125,8 +127,8 @@ object Aria {
   /** One epoch's write set, the input of [[install]]: the update ops of
     * every txn not in `abortedTids`, as keyCols ++ (epoch, tid, opIdx).
     * A map-only filter over the epoch's ops — the abort set is already
-    * on the driver, so no join with the decisions re-runs the reserve
-    * and analyze shuffles. The set is matched by [[abortRank]], so every
+    * on the driver, so no join with the decisions re-runs reserve and
+    * analyze. The set is matched by [[abortRank]], so every
     * epoch runs the same generated code. With no aborts (the serial
     * fallback epoch) every update op is a committed write. */
   def committedWrites(ops: DataFrame, abortedTids: Array[Int],
@@ -280,18 +282,29 @@ object Aria {
     // batches, keep AQE on and partitions high.
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    // ... but the clamp must SCALE WITH THE TABLE: at reference size two
-    // tasks cover the batch, while a decade-scale table split two ways
-    // puts tens of millions of rows in one shuffle task and thrashes the
-    // heap (the 10,000× drain attempt died on spill space before this
-    // sized up). One task per ~10M table keys keeps the epoch tiny for
-    // the reference config and data-proportional at scale.
-    val scaledParts = math.max(2L,
+    // ... but the clamp must SCALE WITH THE TABLE: a decade-scale table
+    // split a few ways puts tens of millions of rows in one shuffle task
+    // and thrashes the heap (the 10,000× drain attempt died on spill
+    // space before this sized up). One task per ~10M table keys keeps the
+    // drain data-proportional at scale.
+    //
+    // Below KeysPerShuffleTask table keys that is ONE partition, and the
+    // drain's batch is coalesced to it ([[drainWrites]]). CoalesceExec(1)
+    // reports SinglePartition, which satisfies every clustering an epoch
+    // asks for ([[reserve]]'s grouping, [[analyze]]'s join and per-tid
+    // verdicts), so no exchange is planned and the abort-set collect runs
+    // as one stage of one task. The bound that makes one task safe: an
+    // epoch holds at most nTxns × maxOps ops (150 × 30 in the reference),
+    // and the presence semi-join, when the keyspace exceeds the table,
+    // reads fewer than KeysPerShuffleTask table keys; decade-scale configs
+    // grow the batch with the table and keep the shuffled plan.
+    val scaledParts = math.max(1L,
       math.min(prevParts.toLong, cfg.tableKeys.toLong / KeysPerShuffleTask + 1L))
     spark.conf.set("spark.sql.shuffle.partitions", scaledParts.toString)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val (writes, stats) = drainWrites(cfg, table0, ops0, startEpoch, remaining0, keyCols)
+      val (writes, stats) = drainWrites(cfg, table0, ops0, startEpoch, remaining0, keyCols,
+        onePartition = scaledParts == 1L)
       val table =
         if (writes.isEmpty) table0
         else install(table0, writes.reduce(_ unionByName _), cfg.seed, keyCols)
@@ -303,10 +316,12 @@ object Aria {
   }
 
   /** The epoch loop of [[runFrom]]: every epoch's committed write set
-    * (the fallback epoch's included) and the stats trajectory. */
+    * (the fallback epoch's included) and the stats trajectory.
+    * `onePartition`: run the caller's batch coalesced to one partition;
+    * every retry batch keeps SinglePartition through its checkpoint. */
   private def drainWrites(cfg: AriaConfig, table0: DataFrame, ops0: DataFrame,
-                          startEpoch: Int, remaining0: Long,
-                          keyCols: Seq[String]): (Seq[DataFrame], Seq[EpochStats]) = {
+                          startEpoch: Int, remaining0: Long, keyCols: Seq[String],
+                          onePartition: Boolean): (Seq[DataFrame], Seq[EpochStats]) = {
     var ops = ops0
     // A retry batch the loop checkpointed ITSELF is a provably droppable
     // checkpoint root; the caller's generation-0 batch may be anything
@@ -327,7 +342,10 @@ object Aria {
     var epoch = startEpoch
     var remaining = remaining0
     while (remaining > 0 && epoch < cfg.maxEpochs) {
-      val r = runEpoch(table0, ops, epoch, remaining, cfg, keyCols)
+      // `ops` stays the caller's frame, so dropOps probes and frees it,
+      // not the coalesce on top of it
+      val in = if (onePartition && !loopOwned) ops.coalesce(1) else ops
+      val r = runEpoch(table0, in, epoch, remaining, cfg, keyCols)
       keepWrites(r.writes)
       // reference-size batches: the lazy checkpoint folds
       // materialization into the next epoch's collect job

@@ -24,9 +24,8 @@ object Workload {
   /** The KV table as a DataFrame: key INT, f0..f9 STRING. */
   def kvTable(spark: SparkSession, nKeys: Int, seed: Long): DataFrame = {
     val base = spark.range(1, nKeys.toLong + 1).select(col("id").cast("int").as("key"))
-    (0 until 10).foldLeft(base) { (df, i) =>
-      df.withColumn(s"f$i", Prng.payloadField(lit(seed), lit("load"), col("key"), lit(i)))
-    }
+    base.select(col("key") +: (0 until 10).map(i =>
+      Prng.payloadField(lit(seed), lit("load"), col("key"), lit(i)).as(s"f$i")): _*)
   }
 
   /** Exploded operation table: tid, epoch, opIdx, key, isUpdate.
@@ -62,10 +61,8 @@ object Workload {
     val base = spark.range(nTables.toLong * nKeys)
       .select((col("id") / nKeys).cast("int").as("tbl"),
         (pmod(col("id"), lit(nKeys.toLong)) + 1).cast("int").as("key"))
-    (0 until 10).foldLeft(base) { (df, i) =>
-      df.withColumn(s"f$i",
-        Prng.payloadField(lit(seed), lit("load"), col("tbl"), col("key"), lit(i)))
-    }
+    base.select(col("tbl") +: col("key") +: (0 until 10).map(i =>
+      Prng.payloadField(lit(seed), lit("load"), col("tbl"), col("key"), lit(i)).as(s"f$i")): _*)
   }
 
   /** Multi-table op batch: [[txnOps]] plus a deterministic per-op table

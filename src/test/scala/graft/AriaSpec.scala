@@ -260,14 +260,42 @@ class AriaSpec extends SparkSpec {
   }
 
   test("determinism: same seed, different partitioning → identical final table") {
+    // runFrom drains a reference-size batch on one partition whatever the
+    // session's shuffle partitions, so the same epochs are driven here
+    // through runEpoch outside it, on 7 partitions: the exchange plan a
+    // table of 10M keys or more takes
     val c = cfg.copy(nTxns = 30, maxEpochs = 8)
-    val t1 = collectTable(Aria.run(spark, c).table)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    val one = Aria.run(spark, c)
+    val table0 = Workload.kvTable(spark, c.tableKeys, c.seed)
+    val confs = Seq("spark.sql.shuffle.partitions" -> "7", "spark.sql.adaptive.enabled" -> "false")
+    val prev = confs.map { case (k, _) => k -> spark.conf.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      val t2 = collectTable(Aria.run(spark, c).table)
-      assert(t1 === t2)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      var ops = Workload.txnOps(spark, c.nTxns, c.maxOps, c.writePct, c.keysMax, c.seed)
+        .repartition(7)
+      val verdicts = Aria.analyze(ops, Aria.reserve(ops)).queryExecution.executedPlan
+      val exchanges = verdicts.collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+          e.outputPartitioning.numPartitions
+      }
+      assert(exchanges.nonEmpty && exchanges.forall(_ == 7),
+        s"the 7-partition epoch must shuffle on 7 partitions: $exchanges")
+      val writes = Seq.newBuilder[org.apache.spark.sql.DataFrame]
+      val stats = Seq.newBuilder[graft.model.EpochStats]
+      var remaining = c.nTxns.toLong
+      var epoch = 0
+      while (remaining > 0 && epoch < c.maxEpochs) {
+        val r = Aria.runEpoch(table0, ops, epoch, remaining, c)
+        writes += r.writes
+        stats += r.stats
+        ops = r.retryOps.localCheckpoint(eager = false)
+        remaining = r.stats.aborted
+        epoch += 1
+      }
+      assert(stats.result() === one.stats)
+      val seven = Aria.install(table0, writes.result().reduce(_ unionByName _), c.seed)
+      assert(collectTable(seven) === collectTable(one.table))
+    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   test("contention collapse: 20k-txn/20k-key starvation drains via the deterministic fallback") {
@@ -347,6 +375,38 @@ class AriaSpec extends SparkSpec {
     val epochs = run.stats.length
     assert(epochs >= 3, s"fixture must drain in 3+ epochs: ${run.stats}")
     assert(jobs <= epochs + 3, s"$jobs jobs for $epochs epochs")
+  }
+
+  test("a reference-size epoch runs as one stage and writes no shuffle bytes") {
+    // the drain's one partition satisfies reserve's grouping, analyze's
+    // join and the per-tid verdicts, so the abort-set collect plans no
+    // exchange
+    val (run, jobs) = jobShapesIn(Aria.run(spark, cfg))
+    assert(run.stats.length >= 3, s"fixture must drain in 3+ epochs: ${run.stats}")
+    assert(jobs.size === run.stats.length, s"one job per epoch: $jobs")
+    assert(jobs.forall(_ == SparkSpec.JobShape(stages = 1, shuffleWriteBytes = 0L)),
+      s"per-epoch jobs: $jobs")
+  }
+
+  test("eager hygiene frees the caller's generation-0 checkpoint") {
+    // the one-partition drain coalesces the caller's batch; the probe must
+    // still test and free the caller's frame, not the coalesce on top
+    val c = cfg.copy(forceEagerHygiene = true)
+    val ops0 = Workload.txnOps(spark, c.nTxns, c.maxOps, c.writePct, c.keysMax, c.seed)
+      .localCheckpoint(eager = true)
+    val rddId = ops0.queryExecution.analyzed match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+    val sc = spark.sparkContext
+    def live: Boolean = {
+      org.apache.spark.sql.GraftBridge.drainListeners(sc)
+      sc.getRDDStorageInfo.exists(_.id == rddId)
+    }
+    assert(live, "the caller's eager checkpoint holds no blocks before the drain")
+    val run = Aria.runFrom(spark, c, Workload.kvTable(spark, c.tableKeys, c.seed), ops0,
+      startEpoch = 0, remaining0 = c.nTxns.toLong)
+    assert(run.stats.length >= 2, s"fixture must run a second epoch: ${run.stats}")
+    assert(!live, "the caller's generation-0 checkpoint still holds blocks after the drain")
   }
 
   test("the final table prunes: a (key, f0) read computes at most two md5s and scans no f1") {

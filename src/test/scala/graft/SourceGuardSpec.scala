@@ -62,6 +62,19 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(found.isEmpty, found.mkString("\n"))
   }
 
+  test("the Aria drain and the generator add columns in one select: no withColumn fold") {
+    // each withColumn re-analyzes the growing plan on the driver; the
+    // pattern runs from `foldLeft(z)` into the fold's body, across lines
+    val fold = """foldLeft\([^)]*\)\s*[({][^{}]*?\.withColumn\(""".r
+    val found = for {
+      p <- sources
+      if p.startsWith("src/main/scala/graft/aria") || p.startsWith("src/main/scala/graft/gen")
+      text = new String(Files.readAllBytes(p), "UTF-8")
+      m <- fold.findAllMatchIn(text)
+    } yield s"$p:${text.take(m.start).count(_ == '\n') + 1}: ${m.matched.linesIterator.next()}"
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
   test("the ANN family has one portable cosine and one centroid pack") {
     val cosine = hits("""sqrt\(col\("n[^"]*"\)\.cast\("double"\)\) \* sqrt\(""",
       "functions/Portable.scala")
