@@ -75,10 +75,7 @@ object AriaQueries {
     * the identical value from the unrolled drain oracle. */
   def finalTableSummary(spark: SparkSession, dir: String): DataFrame = {
     val run = cachedRun(spark, reorder = false)
-    run.table
-      .select(graft.functions.Portable.hash60(
-        concat_ws("_", col("key"), col("f0"), col("f4"), col("f9"))).as("h"))
-      .agg(count(lit(1)).as("n_rows"), expr("bit_xor(h)").as("table_checksum"))
+    checksum(run.table, Seq("key", "f0", "f4", "f9"))
   }
 
   /** One epoch's verdicts (hazard flags + decision) on the epoch-0 batch
@@ -184,8 +181,6 @@ object AriaQueries {
     head ++ epochs :+ s"stats_$mode AS (${statRows.mkString("\nUNION ALL\n")})"
   }
 
-  /** The single-table epoch-0 batch restricted to present keys — the
-    * default ops_0 source of [[drainChainSql]]. */
   /** Every epoch's committed writes of a [[drainChainSql]] chain, as
     * (keys…, epoch, tid, opIdx) rows; `cond(e)` may restrict epoch e. */
   private def committedSql(mode: String, keys: Seq[String] = Seq("key"),
@@ -209,10 +204,21 @@ object AriaQueries {
     Seq(0, 4, 9).map(i => s"         ${payloadSql(seed, loadKey, i)} AS f$i").mkString(",\n")
 
   /** Order-free table checksum: bit_xor of the md5-portable hash60 of
-    * `cols` joined by '_' (Spark: Portable.hash60(concat_ws("_", …))). */
+    * `cols` joined by '_'. Spark twin: [[checksum]]. */
   private def checksumSql(cols: Seq[String]): String =
     s"bit_xor(${Portable.hash60Sql(cols.mkString(" || '_' || "))}) AS table_checksum"
 
+  /** Spark twin of [[checksumSql]]: n_rows and table_checksum of
+    * `table`'s `cols` per `by` group (no `by`: one row). */
+  private def checksum(table: DataFrame, cols: Seq[String],
+                       by: Seq[String] = Nil): DataFrame =
+    table
+      .select(by.map(col) :+ Portable.hash60(concat_ws("_", cols.map(col): _*)).as("h"): _*)
+      .groupBy(by.map(col): _*)
+      .agg(count(lit(1)).as("n_rows"), expr("bit_xor(h)").as("table_checksum"))
+
+  /** The single-table epoch-0 batch restricted to present keys — the
+    * default ops_0 source of [[drainChainSql]]. */
   private def defaultOpsSrc: String =
     """  SELECT tid, epoch, opIdx, key, isUpdate
       |  FROM read_parquet('__ARIA_DIR__/aria_epoch0_ops/*.parquet')
@@ -285,11 +291,7 @@ object AriaQueries {
     * result. Runs in a child session (Aria.run tunes session confs). */
   def fallbackDrain(spark: SparkSession, dir: String): DataFrame = {
     val run = Aria.run(spark.newSession(), fbCfg)
-    val sum = run.table
-      .select(graft.functions.Portable.hash60(
-        concat_ws("_", col("key"), col("f0"), col("f4"), col("f9"))).as("h"))
-      .agg(count(lit(1)).as("n_rows"), expr("bit_xor(h)").as("table_checksum"))
-      .head()
+    val sum = checksum(run.table, Seq("key", "f0", "f4", "f9")).head()
     spark.createDataFrame(run.stats)
       .withColumn("n_rows", lit(sum.getLong(0)))
       .withColumn("table_checksum", lit(sum.getLong(1)))
@@ -389,11 +391,7 @@ object AriaQueries {
     * length — the whole multi-table machine behind three columns. */
   def multiTableSummary(spark: SparkSession, dir: String): DataFrame = {
     val (table, stats) = runMulti(spark)
-    table
-      .select(col("tbl"), graft.functions.Portable.hash60(
-        concat_ws("_", col("tbl"), col("key"), col("f0"), col("f4"), col("f9"))).as("h"))
-      .groupBy("tbl")
-      .agg(count(lit(1)).as("n_rows"), expr("bit_xor(h)").as("table_checksum"))
+    checksum(table, Seq("tbl", "key", "f0", "f4", "f9"), Seq("tbl"))
       .withColumn("epochs_to_drain", lit(stats.length.toLong))
       .orderBy("tbl")
   }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Cross-engine-portable deterministic primitives.
@@ -20,6 +21,8 @@ import org.apache.spark.sql.functions._
   *    downstream arithmetic (dot products, norms) is integer-exact and
   *    the final float division/sqrt of identical inputs is identical
   *    (IEEE ops are correctly rounded).
+  *  - `topK`: per-group ranking — best first, ties to the smaller id,
+  *    keep rank ≤ k ([[rankSql]]), so both engines pick the same rows.
   *
   * All of this stays inside whole-stage codegen (built-ins only, no UDFs).
   */
@@ -60,8 +63,13 @@ object Portable {
   def dotSql(a: String, b: String, dims: Int = 64): String =
     s"CAST(list_sum(list_transform(generate_series(1, $dims), i -> $a[i] * $b[i])) AS BIGINT)"
 
-  /** Exact integer squared norm of a quantized array. */
+  /** Exact integer squared norm of a quantized array. DuckDB twin:
+    * [[normSqSql]]. */
   def normSqQ(a: Column): Column = dotQ(a, a)
+
+  /** DuckDB twin of [[normSqQ]] over the BIGINT list expression `arr`. */
+  def normSqSql(arr: String): String =
+    s"CAST(list_sum(list_transform($arr, x -> x*x)) AS BIGINT)"
 
   /** Cosine from an exact dot product and the two exact squared norms —
     * exact-identical doubles in both engines (integer inputs, then
@@ -81,4 +89,22 @@ object Portable {
     import org.apache.spark.sql.GraftBridge
     GraftBridge.column(NfcNormalize(GraftBridge.expression(c)))
   }
+
+  /** The per-group top-k rule: appends `rank`, a BIGINT row_number over
+    * `by`, ordered by `best` (which carries the direction, e.g.
+    * `desc("cosine")` or `col("dist")`) then `id` ascending, and keeps
+    * `rank <= k`. The filter sits directly over the window, so a literal
+    * `k` plans as WindowGroupLimit (k rows per group per map task before
+    * the shuffle); a column `k` (a per-row beam width) filters after the
+    * full window. DuckDB twin: [[rankSql]]. */
+  def topK(df: DataFrame, by: Seq[String], best: Column, id: String,
+           k: Column): DataFrame =
+    df.withColumn("rank", row_number().over(
+        Window.partitionBy(by.map(col): _*).orderBy(best, col(id))).cast("long"))
+      .filter(col("rank") <= k)
+
+  /** DuckDB twin of [[topK]]'s window over the SQL expressions `by`
+    * (partition list), `best` (with its direction) and `id`. */
+  def rankSql(by: String, best: String, id: String): String =
+    s"row_number() OVER (PARTITION BY $by ORDER BY $best, $id)"
 }

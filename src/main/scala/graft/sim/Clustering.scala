@@ -1,7 +1,6 @@
 package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Tables.t
 import graft.functions.Portable
@@ -157,12 +156,8 @@ object Clustering {
   def clusterBalancedSample(spark: SparkSession, dir: String,
                             perCluster: Int = 3): DataFrame = {
     val (corpus, cent) = train(spark, dir)
-    assign(corpus, cent)
-      .select(col("cid").as("cluster_id"), col("vec_id"), col("dist"),
-        row_number().over(
-          Window.partitionBy("cid").orderBy(col("dist"), col("vec_id")))
-          .cast("long").as("rank"))
-      .filter(col("rank") <= perCluster)
+    Portable.topK(assign(corpus, cent), Seq("cid"), col("dist"), "vec_id", lit(perCluster))
+      .select(col("cid").as("cluster_id"), col("vec_id"), col("dist"), col("rank"))
       .orderBy("cluster_id", "rank")
   }
 
@@ -279,7 +274,7 @@ object Clustering {
     s"""WITH $kmeansCtes,
        |delta AS (SELECT vec_id, qv, nsq FROM qn
        |          WHERE ${graft.text.TextAnalysis.splitHashSql("vec_id")} >= 90),
-       |adelta AS (${assignSql("delta", s"cent$iters")})
+       |adelta AS (${assignSql("delta", s"cent$iters", dims)})
        |SELECT cid AS cluster_id, count(*) AS delta_n,
        |       CAST(sum(dist) AS BIGINT) AS delta_inertia
        |FROM adelta GROUP BY cid ORDER BY cluster_id""".stripMargin
@@ -306,11 +301,8 @@ object Clustering {
       .filter(col("query_id") =!= col("cand_id"))
       .withColumn("cosine",
         Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")))
-      .select(col("query_id"), col("cand_id"), col("cosine"),
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id")))
-          .cast("long").as("rank"))
-      .filter(col("rank") <= k)
+      .transform(Portable.topK(_, Seq("query_id"), desc("cosine"), "cand_id", lit(k)))
+      .select("query_id", "cand_id", "cosine", "rank")
       .orderBy("query_id", "rank")
   }
 
@@ -342,11 +334,8 @@ object Clustering {
       .filter(col("query_id") =!= col("cand_id"))
       .select(col("budget"), col("query_id"), col("cand_id"),
         Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")).as("cosine"))
-      .select(col("budget"), col("query_id"), col("cand_id"),
-        row_number().over(
-          Window.partitionBy("budget", "query_id")
-            .orderBy(desc("cosine"), col("cand_id"))).as("rank"))
-      .filter(col("rank") <= k)
+      .transform(Portable.topK(_, Seq("budget", "query_id"), desc("cosine"), "cand_id",
+        lit(k)))
     ExactPanels.recall(ExactPanels.cosine(spark, dir, k).crossJoin(broadcast(budgetF)),
       top, Seq("budget", "query_id", "cand_id"), Seq("budget"))
   }
@@ -358,8 +347,8 @@ object Clustering {
     s"""WITH $kmeansCtes,
        |probes AS (
        |  SELECT vec_id AS query_id, cid, rn - 1 AS pos FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-       |    FROM (SELECT qn.vec_id, c.cid, ${distSql("qn", "c")} AS dist
+       |    SELECT *, ${Portable.rankSql("vec_id", "dist", "cid")} AS rn
+       |    FROM (SELECT qn.vec_id, c.cid, ${distSql("qn", "c", dims)} AS dist
        |          FROM qn CROSS JOIN cent$iters c
        |          WHERE qn.vec_id < 8)
        |  ) WHERE rn <= $maxP),
@@ -373,8 +362,7 @@ object Clustering {
        |top AS (
        |  SELECT budget, query_id, cand_id FROM (
        |    SELECT budget, query_id, cand_id,
-       |           row_number() OVER (PARTITION BY budget, query_id
-       |             ORDER BY cosine DESC, cand_id) AS rank
+       |           ${Portable.rankSql("budget, query_id", "cosine DESC", "cand_id")} AS rank
        |    FROM cand) WHERE rank <= $k),
        |exact AS (${ExactPanels.cosineSql(k)})
        |SELECT b.budget, count(*) AS n_exact,
@@ -391,30 +379,48 @@ object Clustering {
   // DuckDB oracle — the unrolled training replay
   // ---------------------------------------------------------------------
 
-  /** dist² of row alias `v` against centroid alias `c` (exact BIGINT). */
-  private def distSql(v: String, c: String): String =
-    s"""$v.nsq - 2*${Portable.dotSql(s"$v.qv", s"$c.c")}
-       |    + CAST(list_sum(list_transform($c.c, x -> x*x)) AS BIGINT)""".stripMargin
+  // The k-means kernel every trained quantizer's oracle replays (this
+  // family's full-dimension Lloyd's, Pq's per-subspace ones, and the
+  // IVF probes): `w` is the vector width.
+
+  /** dist² of row alias `v` (columns qv, nsq) against centroid alias `c`
+    * (column c), `w` dimensions wide (exact BIGINT). */
+  private[sim] def distSql(v: String, c: String, w: Int): String =
+    s"""$v.nsq - 2*${Portable.dotSql(s"$v.qv", s"$c.c", w)}
+       |    + ${Portable.normSqSql(s"$c.c")}""".stripMargin
 
   /** Assignment CTE body: every row of `src` to its nearest centroid in
     * `cent`, ties to the lowest cid. */
-  private def assignSql(src: String, cent: String): String =
+  private[sim] def assignSql(src: String, cent: String, w: Int): String =
     s"""SELECT vec_id, qv, nsq, cid, dist FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
+       |  SELECT *, ${Portable.rankSql("vec_id", "dist", "cid")} AS rn
        |  FROM (SELECT $src.vec_id, $src.qv, $src.nsq, $cent.cid,
-       |               ${distSql(src, cent)} AS dist
+       |               ${distSql(src, cent, w)} AS dist
        |        FROM $src CROSS JOIN $cent)
        |) WHERE rn = 1""".stripMargin
 
   /** Centroid recompute CTE body from assignment `a`: exact integer
-    * floor-division means, reassembled per cluster in dim order. */
-  private def recomputeSql(a: String): String =
+    * floor-division means of `w`-wide vectors, reassembled per cluster
+    * in dim order. */
+  private[sim] def recomputeSql(a: String, w: Int): String =
     s"""SELECT cid, list(v ORDER BY i) AS c FROM (
        |  SELECT cid, i,
        |         CAST((sum(qv[i]) - ((sum(qv[i]) % count(*)) + count(*)) % count(*)) / count(*) AS BIGINT) AS v
-       |  FROM $a CROSS JOIN (SELECT unnest(generate_series(1, $dims)) AS i) t
+       |  FROM $a CROSS JOIN (SELECT unnest(generate_series(1, $w)) AS i) t
        |  GROUP BY cid, i)
        |GROUP BY cid""".stripMargin
+
+  /** `probes` CTE over `qn` and the trained centroids: each panel
+    * query's (vec_id < 8) `nprobe` nearest cells as (query_id, cid) —
+    * the probe list of the composed IVF arms. */
+  private[sim] def probesSql(nprobe: Int): String =
+    s"""probes AS (
+       |  SELECT vec_id AS query_id, cid FROM (
+       |    SELECT *, ${Portable.rankSql("vec_id", "dist", "cid")} AS rn
+       |    FROM (SELECT qn.vec_id, c.cid, ${distSql("qn", "c", dims)} AS dist
+       |          FROM qn CROSS JOIN cent$iters c
+       |          WHERE qn.vec_id < 8)
+       |  ) WHERE rn <= $nprobe)""".stripMargin
 
   /** The full unrolled training chain: cent0, a1, cent1, …, cent$iters,
     * fin (final assignment of `qn` against cent$iters). */
@@ -427,12 +433,12 @@ object Clustering {
     * quantized corpus CTEs and must not redefine them. */
   private[graft] def kmeansCtesNoQuantize: String = {
     val rounds = (1 to iters).map { k =>
-      s"""a$k AS (${assignSql("qn", s"cent${k - 1}")}),
-         |cent$k AS (${recomputeSql(s"a$k")})""".stripMargin
+      s"""a$k AS (${assignSql("qn", s"cent${k - 1}", dims)}),
+         |cent$k AS (${recomputeSql(s"a$k", dims)})""".stripMargin
     }.mkString(",\n")
     s"""cent0 AS (SELECT vec_id AS cid, qv AS c FROM qn WHERE vec_id < $K),
        |$rounds,
-       |fin AS (${assignSql("qn", s"cent$iters")})""".stripMargin
+       |fin AS (${assignSql("qn", s"cent$iters", dims)})""".stripMargin
   }
 
   /** Number of Lloyd's rounds — the final centroid CTE is
@@ -453,7 +459,7 @@ object Clustering {
     s"""WITH $kmeansCtes
        |SELECT cid AS cluster_id, vec_id, dist, rank FROM (
        |  SELECT cid, vec_id, dist,
-       |         row_number() OVER (PARTITION BY cid ORDER BY dist, vec_id) AS rank
+       |         ${Portable.rankSql("cid", "dist", "vec_id")} AS rank
        |  FROM fin)
        |WHERE rank <= $perCluster ORDER BY cluster_id, rank""".stripMargin
 
@@ -461,9 +467,9 @@ object Clustering {
     s"""WITH $kmeansCtes,
        |probes AS (
        |  SELECT vec_id AS query_id, qv AS qa, nsq AS na, cid FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
+       |    SELECT *, ${Portable.rankSql("vec_id", "dist", "cid")} AS rn
        |    FROM (SELECT qn.vec_id, qn.qv, qn.nsq, c.cid,
-       |                 ${distSql("qn", "c")} AS dist
+       |                 ${distSql("qn", "c", dims)} AS dist
        |          FROM qn CROSS JOIN cent$iters c
        |          WHERE qn.vec_id < 8)
        |  ) WHERE rn <= $nprobe),
@@ -476,7 +482,7 @@ object Clustering {
        |),
        |final_rank AS (
        |  SELECT query_id, cand_id, cosine,
-       |         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
+       |         ${Portable.rankSql("query_id", "cosine DESC", "cand_id")} AS rank
        |  FROM scored
        |)
        |SELECT query_id, cand_id, cosine, rank FROM final_rank
@@ -496,9 +502,9 @@ object Clustering {
        |           i -> qv[i] + CASE WHEN i = 1 THEN 1 ELSE 0 END) AS qv
        |  FROM qn, plant_base pb WHERE qn.vec_id < 8),
        |qall AS (
-       |  SELECT vec_id, qv, CAST(list_sum(list_transform(qv, x -> x*x)) AS BIGINT) AS nsq
+       |  SELECT vec_id, qv, ${Portable.normSqSql("qv")} AS nsq
        |  FROM (SELECT vec_id, qv FROM qn UNION ALL SELECT vec_id, qv FROM planted)),
-       |afin AS (${assignSql("qall", s"cent$iters")}),
+       |afin AS (${assignSql("qall", s"cent$iters", dims)}),
        |smat AS (SELECT $planeSignsSql AS m),
        |proj AS (
        |  SELECT vec_id, ps.p AS p,

@@ -50,8 +50,7 @@ private[graft] object ExactPanels {
   private def panelSql(order: String, k: Int): String =
     s"""SELECT query_id, cand_id FROM (
        |    SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
-       |           row_number() OVER (PARTITION BY a.vec_id ORDER BY
-       |             $order, b.vec_id) AS rank
+       |           ${Portable.rankSql("a.vec_id", order, "b.vec_id")} AS rank
        |    FROM qn a JOIN qn b ON a.vec_id <> b.vec_id
        |    WHERE a.vec_id < 8) WHERE rank <= $k""".stripMargin
 

@@ -1,7 +1,6 @@
 package graft.sim
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Portable
 
@@ -53,10 +52,7 @@ object Mmr {
     corpus.join(broadcast(queries), col("query_id") =!= col("cand_id"))
       .withColumn("rel",
         Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")))
-      .select(col("query_id"), col("cand_id"), col("rel"),
-        row_number().over(Window.partitionBy("query_id")
-          .orderBy(desc("rel"), col("cand_id"))).as("rn"))
-      .filter(col("rn") <= nCand)
+      .transform(Portable.topK(_, Seq("query_id"), desc("rel"), "cand_id", lit(nCand)))
       .select("query_id", "cand_id", "rel")
   }
 
@@ -80,11 +76,7 @@ object Mmr {
       .select(col("query_id"), col("pa"), col("pb"),
         Portable.cosine(Portable.dotQ(col("qx"), col("qy")), col("nx"), col("ny")).as("sim"))
       .localCheckpoint(false) // consumed once per greedy round
-    var selected = cands
-      .select(col("query_id"), col("cand_id"), col("rel"),
-        row_number().over(Window.partitionBy("query_id")
-          .orderBy(desc("rel"), col("cand_id"))).as("rn"))
-      .filter(col("rn") === 1)
+    var selected = Portable.topK(cands, Seq("query_id"), desc("rel"), "cand_id", lit(1))
       .select(col("query_id"), col("cand_id"), col("rel"),
         lit(1L).as("mmr_rank"))
     for (s <- 2 to nSelect) {
@@ -101,10 +93,7 @@ object Mmr {
           col("maxsim")), Seq("query_id", "cand_id"))
         .withColumn("score",
           lit(0.7) * col("rel") - lit(0.3) * col("maxsim"))
-        .select(col("query_id"), col("cand_id"), col("rel"),
-          row_number().over(Window.partitionBy("query_id")
-            .orderBy(desc("score"), col("cand_id"))).as("rn"))
-        .filter(col("rn") === 1)
+        .transform(Portable.topK(_, Seq("query_id"), desc("score"), "cand_id", lit(1)))
         .select(col("query_id"), col("cand_id"), col("rel"),
           lit(s.toLong).as("mmr_rank"))
       selected = selected.unionAll(picked).localCheckpoint(false)
@@ -113,6 +102,7 @@ object Mmr {
   }
 
   val mmrRerankSql: String = {
+    val score = "CAST(0.7 AS DOUBLE) * c.rel - CAST(0.3 AS DOUBLE) * m.maxsim"
     val rounds = (2 to nSelect).map { s =>
       s"""ms$s AS (
          |  SELECT p.query_id, p.pa AS cand_id, max(p.sim) AS maxsim
@@ -123,9 +113,7 @@ object Mmr {
          |pick$s AS (
          |  SELECT query_id, cand_id, rel, mmr_rank FROM (
          |    SELECT c.query_id, c.cand_id, c.rel, CAST($s AS BIGINT) AS mmr_rank,
-         |           row_number() OVER (PARTITION BY c.query_id
-         |             ORDER BY CAST(0.7 AS DOUBLE) * c.rel - CAST(0.3 AS DOUBLE) * m.maxsim DESC,
-         |                      c.cand_id) AS rn
+         |           ${Portable.rankSql("c.query_id", s"$score DESC", "c.cand_id")} AS rn
          |    FROM cand c JOIN ms$s m ON m.query_id = c.query_id AND m.cand_id = c.cand_id)
          |  WHERE rn = 1),
          |sel$s AS (SELECT * FROM sel${s - 1} UNION ALL SELECT * FROM pick$s)"""
@@ -141,7 +129,7 @@ object Mmr {
        |cand AS (
        |  SELECT query_id, cand_id, rel FROM (
        |    SELECT query_id, cand_id, rel,
-       |           row_number() OVER (PARTITION BY query_id ORDER BY rel DESC, cand_id) AS rn
+       |           ${Portable.rankSql("query_id", "rel DESC", "cand_id")} AS rn
        |    FROM scored) WHERE rn <= $nCand
        |),
        |pv AS (
@@ -156,7 +144,7 @@ object Mmr {
        |sel1 AS (
        |  SELECT query_id, cand_id, rel, CAST(1 AS BIGINT) AS mmr_rank FROM (
        |    SELECT query_id, cand_id, rel,
-       |           row_number() OVER (PARTITION BY query_id ORDER BY rel DESC, cand_id) AS rn
+       |           ${Portable.rankSql("query_id", "rel DESC", "cand_id")} AS rn
        |    FROM cand) WHERE rn = 1),
        |$rounds
        |SELECT query_id, cand_id, rel, mmr_rank FROM sel$nSelect

@@ -1,7 +1,6 @@
 package graft.sim
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Portable
 import graft.text.TextAnalysis.splitHashSql
@@ -83,10 +82,7 @@ object NnDescent {
   }
 
   private def keepBest(scored: DataFrame): DataFrame =
-    scored
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("src").orderBy(desc("cosine"), col("dst"))))
-      .filter(col("rn") <= degree).drop("rn")
+    Portable.topK(scored, Seq("src"), desc("cosine"), "dst", lit(degree)).drop("rank")
 
   /** One NN-Descent round over graph (src, dst, cosine).
     *
@@ -180,6 +176,11 @@ object NnDescent {
     * per (budget, query) over every [[curveBeams]] width, memoized: the
     * curve, top-k and recall read it. Operators are keyed per (beam,
     * query_id), ties break by cand_id: each width equals a lone search. */
+  /** The best `beam` candidates of each (beam, query_id). */
+  private def beamTop(scored: DataFrame): DataFrame =
+    Portable.topK(scored, Seq("beam", "query_id"), desc("cosine"), "cand_id", col("beam"))
+      .drop("rank")
+
   private def beams(spark: SparkSession, dir: String): DataFrame =
       graft.Memo(spark, ("nnd.beams", graft.Memo.input(dir))) {
     val (qn, g, und) = built(spark, dir)
@@ -189,9 +190,7 @@ object NnDescent {
     var bb = g.filter(col("src") < 8)
       .select(explode(array(curveBeams.map(lit): _*)).as("beam"),
         col("src").as("query_id"), col("dst").as("cand_id"), col("cosine"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("beam", "query_id").orderBy(desc("cosine"), col("cand_id"))))
-      .filter(col("rn") <= col("beam")).drop("rn")
+      .transform(beamTop)
     for (_ <- 1 to beamRounds) {
       val expand = bb.select(col("beam"), col("query_id"), col("cand_id"))
         .join(hop, "cand_id")
@@ -204,11 +203,7 @@ object NnDescent {
         .join(broadcast(panel), "query_id")
         .select(col("beam"), col("query_id"), col("cand_id"),
           Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")).as("cosine"))
-      bb = scored
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("beam", "query_id").orderBy(desc("cosine"), col("cand_id"))))
-        .filter(col("rn") <= col("beam")).drop("rn")
-        .localCheckpoint(false)
+      bb = beamTop(scored).localCheckpoint(false)
     }
     bb
   }
@@ -217,12 +212,9 @@ object NnDescent {
     * `beamWidth` for the fixed query panel — same output shape as
     * [[Similarity.cosineTopK]] so recall joins on (query_id, cand_id). */
   def nnDescentTopK(spark: SparkSession, dir: String, k: Int = topK): DataFrame =
-    beams(spark, dir).filter(col("beam") === beamWidth.toLong)
-      .select(col("query_id"), col("cand_id"), col("cosine"),
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id")))
-          .cast("long").as("rank"))
-      .filter(col("rank") <= k)
+    Portable.topK(beams(spark, dir).filter(col("beam") === beamWidth.toLong),
+        Seq("query_id"), desc("cosine"), "cand_id", lit(k))
+      .select("query_id", "cand_id", "cosine", "rank")
       .orderBy("query_id", "rank")
 
   /** Recall@k of the graph path against the exact brute-force top-k —
@@ -238,10 +230,8 @@ object NnDescent {
     * by width 5 — the report that PROVES the narrow beam is safe,
     * which is the tuning decision a serving deployment makes. */
   def beamCurve(spark: SparkSession, dir: String, k: Int = topK): DataFrame = {
-    val top = beams(spark, dir)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("beam", "query_id").orderBy(desc("cosine"), col("cand_id"))))
-      .filter(col("rank") <= k)
+    val top = Portable.topK(beams(spark, dir), Seq("beam", "query_id"), desc("cosine"),
+      "cand_id", lit(k))
     val budgets = spark.range(1)
       .select(explode(array(curveBeams.map(lit): _*)).as("beam"))
     ExactPanels.recall(ExactPanels.cosine(spark, dir, k).crossJoin(broadcast(budgets)),
@@ -257,6 +247,11 @@ object NnDescent {
 
   private def splitH(c: org.apache.spark.sql.Column) =
     graft.text.TextAnalysis.splitHash(c)
+
+  /** The best `beamWidth` candidates of each insert query. */
+  private def insertTop(scored: DataFrame): DataFrame =
+    Portable.topK(scored, Seq("query_id"), desc("cosine"), "cand_id", lit(beamWidth))
+      .drop("rank")
 
   /** INSERT path — the HNSW-style maintenance step a serving system
     * runs as new vectors arrive: each DELTA vector (the canonical
@@ -294,9 +289,7 @@ object NnDescent {
     var bb = dq.crossJoin(broadcast(ent))
       .select(col("query_id"), col("cand_id"),
         Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")).as("cosine"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id"))))
-      .filter(col("rn") <= beamWidth).drop("rn")
+      .transform(insertTop)
     for (_ <- 1 to insertRounds) {
       val expand = bb.select(col("query_id"), col("cand_id"))
         .join(hop, "cand_id")
@@ -308,22 +301,14 @@ object NnDescent {
         .join(dq, "query_id")
         .select(col("query_id"), col("cand_id"),
           Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")).as("cosine"))
-      bb = scored
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id"))))
-        .filter(col("rn") <= beamWidth).drop("rn")
-        .localCheckpoint(false)
+      bb = insertTop(scored).localCheckpoint(false)
     }
     bb
   }
 
   def nnDescentInsert(spark: SparkSession, dir: String, k: Int = topK): DataFrame =
-    insertBeams(spark, dir)
-      .select(col("query_id"), col("cand_id"), col("cosine"),
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id")))
-          .cast("long").as("rank"))
-      .filter(col("rank") <= k)
+    Portable.topK(insertBeams(spark, dir), Seq("query_id"), desc("cosine"), "cand_id", lit(k))
+      .select("query_id", "cand_id", "cosine", "rank")
       .orderBy("query_id", "rank")
 
   /** Measurement-panel size for the insert recall gate: the exact side
@@ -349,11 +334,7 @@ object NnDescent {
     val exact = base.crossJoin(broadcast(dq))
       .withColumn("cosine",
         Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")))
-      .select(col("query_id"), col("cand_id"),
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id")))
-          .as("rank"))
-      .filter(col("rank") <= k)
+      .transform(Portable.topK(_, Seq("query_id"), desc("cosine"), "cand_id", lit(k)))
       .select("query_id", "cand_id")
     val approx = nnDescentInsert(spark, dir, k)
     ExactPanels.recall(exact, approx)
@@ -378,7 +359,7 @@ object NnDescent {
       s"""$out AS MATERIALIZED (
          |  SELECT src, dst, cosine FROM (
          |    SELECT src, dst, cosine,
-         |           row_number() OVER (PARTITION BY src ORDER BY cosine DESC, dst) AS rn
+         |           ${Portable.rankSql("src", "cosine DESC", "dst")} AS rn
          |    FROM $scored) WHERE rn <= $degree)""".stripMargin
     val init =
       s"""nn AS MATERIALIZED (SELECT count(*) AS n FROM qn),
@@ -434,7 +415,7 @@ object NnDescent {
          |cb0 AS MATERIALIZED (
          |  SELECT b.beam, t.query_id, t.cand_id, t.cosine
          |  FROM (SELECT src AS query_id, dst AS cand_id, cosine,
-         |               row_number() OVER (PARTITION BY src ORDER BY cosine DESC, dst) AS rn
+         |               ${Portable.rankSql("src", "cosine DESC", "dst")} AS rn
          |        FROM g$buildRounds WHERE src < 8) t
          |  JOIN bud b ON t.rn <= b.beam)""".stripMargin
     val rounds = (1 to beamRounds).map { tt =>
@@ -448,7 +429,7 @@ object NnDescent {
          |cb$tt AS MATERIALIZED (
          |  SELECT beam, query_id, cand_id, cosine FROM (
          |    SELECT beam, query_id, cand_id, cosine,
-         |           row_number() OVER (PARTITION BY beam, query_id ORDER BY cosine DESC, cand_id) AS rn
+         |           ${Portable.rankSql("beam, query_id", "cosine DESC", "cand_id")} AS rn
          |    FROM cs$tt) WHERE rn <= beam)""".stripMargin
     }.mkString(",\n")
     s"$b0,\n$rounds"
@@ -477,7 +458,7 @@ object NnDescent {
          |  SELECT query_id, cand_id, cosine FROM (
          |    SELECT d.query_id, e.vec_id AS cand_id,
          |           $deCos AS cosine,
-         |           row_number() OVER (PARTITION BY d.query_id ORDER BY $deCos DESC, e.vec_id) AS rn
+         |           ${Portable.rankSql("d.query_id", s"$deCos DESC", "e.vec_id")} AS rn
          |    FROM dq d CROSS JOIN ent e) WHERE rn <= $beamWidth)""".stripMargin
     val rounds = (1 to insertRounds).map { tt =>
       s"""ie$tt AS MATERIALIZED (
@@ -489,7 +470,7 @@ object NnDescent {
          |ib$tt AS MATERIALIZED (
          |  SELECT query_id, cand_id, cosine FROM (
          |    SELECT query_id, cand_id, cosine,
-         |           row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rn
+         |           ${Portable.rankSql("query_id", "cosine DESC", "cand_id")} AS rn
          |    FROM is$tt) WHERE rn <= $beamWidth)""".stripMargin
     }.mkString(",\n")
     s"$head,\n$rounds"
@@ -501,7 +482,7 @@ object NnDescent {
        |$insertSql
        |SELECT query_id, cand_id, cosine, rank FROM (
        |  SELECT query_id, cand_id, cosine,
-       |         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
+       |         ${Portable.rankSql("query_id", "cosine DESC", "cand_id")} AS rank
        |  FROM ib$insertRounds) WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
 
   def nnDescentInsertRecallSql(k: Int = topK): String = {
@@ -511,7 +492,7 @@ object NnDescent {
        |approx AS (
        |  SELECT query_id, cand_id FROM (
        |    SELECT query_id, cand_id,
-       |           row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
+       |           ${Portable.rankSql("query_id", "cosine DESC", "cand_id")} AS rank
        |    FROM ib$insertRounds) WHERE rank <= $k),
        |pnl AS (
        |  SELECT vec_id FROM qn WHERE ${splitHashSql("vec_id")} >= 90
@@ -519,9 +500,7 @@ object NnDescent {
        |exact AS (
        |  SELECT query_id, cand_id FROM (
        |    SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
-       |           row_number() OVER (PARTITION BY a.vec_id ORDER BY
-       |             ${Similarity.abCosineSql} DESC,
-       |             b.vec_id) AS rank
+       |           ${Portable.rankSql("a.vec_id", s"${Similarity.abCosineSql} DESC", "b.vec_id")} AS rank
        |    FROM qn a JOIN qn b
        |      ON a.vec_id IN (SELECT vec_id FROM pnl) AND ${splitHashSql("b.vec_id")} < 90)
        |  WHERE rank <= $k)
@@ -539,7 +518,7 @@ object NnDescent {
        |${beamSql(Seq(beamWidth.toLong))}
        |SELECT query_id, cand_id, cosine, rank FROM (
        |  SELECT query_id, cand_id, cosine,
-       |         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
+       |         ${Portable.rankSql("query_id", "cosine DESC", "cand_id")} AS rank
        |  FROM cb$beamRounds) WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
 
   def nnDescentRecallSql(k: Int = topK): String =
@@ -554,7 +533,7 @@ object NnDescent {
        |ctop AS MATERIALIZED (
        |  SELECT beam, query_id, cand_id FROM (
        |    SELECT beam, query_id, cand_id,
-       |           row_number() OVER (PARTITION BY beam, query_id ORDER BY cosine DESC, cand_id) AS rank
+       |           ${Portable.rankSql("beam, query_id", "cosine DESC", "cand_id")} AS rank
        |    FROM cb$beamRounds) WHERE rank <= $k),
        |exact AS MATERIALIZED (
        |  SELECT query_id, cand_id FROM (

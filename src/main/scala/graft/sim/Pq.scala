@@ -1,7 +1,6 @@
 package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Portable
 
@@ -209,11 +208,7 @@ object Pq {
       .join(broadcast(queries), col("query_id") =!= col("cand_id"))
       .withColumn("dist",
         col("na") - lit(2L) * Portable.dotQ(col("qa"), col("qb")) + col("nb"))
-      .select(col("query_id"), col("cand_id"),
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(col("dist"), col("cand_id")))
-          .cast("long").as("rank"))
-      .filter(col("rank") <= k)
+      .transform(Portable.topK(_, Seq("query_id"), col("dist"), "cand_id", lit(k)))
       .select("query_id", "cand_id")
   }
 
@@ -256,11 +251,8 @@ object Pq {
       .filter(col("query_id") =!= col("vec_id"))
       .withColumn("adist", (0 until M).map(m =>
         element_at(col(s"t$m"), col(s"code$m") + 1)).reduce(_ + _))
-      .select(col("query_id"), col("vec_id").as("cand_id"), col("adist"),
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(col("adist"), col("vec_id")))
-          .cast("long").as("rank"))
-      .filter(col("rank") <= k)
+      .transform(Portable.topK(_, Seq("query_id"), col("adist"), "vec_id", lit(k)))
+      .select(col("query_id"), col("vec_id").as("cand_id"), col("adist"), col("rank"))
       .orderBy("query_id", "rank")
   }
 
@@ -365,11 +357,8 @@ object Pq {
       .withColumn("adist", (0 until M).map(m =>
         element_at(col(s"t$m"), col(s"code$m") + 1)).reduce(_ + _))
     scored
-      .select(col("query_id"), col("vec_id").as("cand_id"), col("adist"),
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(col("adist"), col("vec_id")))
-          .cast("long").as("rank"))
-      .filter(col("rank") <= k)
+      .transform(Portable.topK(_, Seq("query_id"), col("adist"), "vec_id", lit(k)))
+      .select(col("query_id"), col("vec_id").as("cand_id"), col("adist"), col("rank"))
       .orderBy("query_id", "rank")
   }
 
@@ -421,11 +410,8 @@ object Pq {
       .filter(col("query_id") =!= col("vec_id"))
       .withColumn("adist", (0 until M).map(m =>
         element_at(col(s"t$m"), col(s"code$m") + 1)).reduce(_ + _))
-      .select(col("query_id"), col("vec_id").as("cand_id"), col("adist"),
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(col("adist"), col("vec_id")))
-          .cast("long").as("rank"))
-      .filter(col("rank") <= k)
+      .transform(Portable.topK(_, Seq("query_id"), col("adist"), "vec_id", lit(k)))
+      .select(col("query_id"), col("vec_id").as("cand_id"), col("adist"), col("rank"))
       .orderBy("query_id", "rank")
   }
 
@@ -440,27 +426,7 @@ object Pq {
   // DuckDB oracle — the unrolled per-subspace training replay
   // ---------------------------------------------------------------------
 
-  /** dist² of row alias `v` (cols qv, nsq) vs centroid alias `c` in a
-    * `w`-dim space. */
-  private def distSql(v: String, c: String, w: Int): String =
-    s"""$v.nsq - 2*${Portable.dotSql(s"$v.qv", s"$c.c", w)}
-       |    + CAST(list_sum(list_transform($c.c, x -> x*x)) AS BIGINT)""".stripMargin
-
-  private def assignSubSql(src: String, cent: String): String =
-    s"""SELECT vec_id, qv, nsq, cid FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-       |  FROM (SELECT $src.vec_id, $src.qv, $src.nsq, $cent.cid,
-       |               ${distSql(src, cent, sd)} AS dist
-       |        FROM $src CROSS JOIN $cent)
-       |) WHERE rn = 1""".stripMargin
-
-  private def recomputeSubSql(a: String): String =
-    s"""SELECT cid, list(v ORDER BY i) AS c FROM (
-       |  SELECT cid, i,
-       |         CAST((sum(qv[i]) - ((sum(qv[i]) % count(*)) + count(*)) % count(*)) / count(*) AS BIGINT) AS v
-       |  FROM $a CROSS JOIN (SELECT unnest(generate_series(1, $sd)) AS i) t
-       |  GROUP BY cid, i)
-       |GROUP BY cid""".stripMargin
+  import Clustering.{assignSql, distSql, recomputeSql}
 
   /** All subspace CTEs: slices, unrolled training, packed positions,
     * encoded codes, and the panel's ADC tables, in long (m, pos) form. */
@@ -474,7 +440,7 @@ object Pq {
        |  GROUP BY 1, 2),
        |pq_ranked AS (
        |  SELECT query_id, cand_id, adist,
-       |         row_number() OVER (PARTITION BY query_id ORDER BY adist, cand_id) AS rank
+       |         ${Portable.rankSql("query_id", "adist", "cand_id")} AS rank
        |  FROM scored)""".stripMargin
 
   /** PQ model CTEs trained on `src` (vec_id, qv): per-subspace slices,
@@ -484,13 +450,12 @@ object Pq {
   private def pqModelCtesFrom(src: String, sfx: String): String = {
     val perM = (0 until M).map { m =>
       val rounds = (1 to iters).map { r =>
-        s"""a${r}_$sfx$m AS (${assignSubSql(s"qn$sfx$m", s"cent${r - 1}_$sfx$m")}),
-           |cent${r}_$sfx$m AS (${recomputeSubSql(s"a${r}_$sfx$m")})""".stripMargin
+        s"""a${r}_$sfx$m AS (${assignSql(s"qn$sfx$m", s"cent${r - 1}_$sfx$m", sd)}),
+           |cent${r}_$sfx$m AS (${recomputeSql(s"a${r}_$sfx$m", sd)})""".stripMargin
       }.mkString(",\n")
       s"""qn$sfx$m AS (
          |  SELECT vec_id, list_slice(qv, ${m * sd + 1}, ${(m + 1) * sd}) AS qv,
-         |         CAST(list_sum(list_transform(list_slice(qv, ${m * sd + 1}, ${(m + 1) * sd}),
-         |           x -> x*x)) AS BIGINT) AS nsq
+         |         ${Portable.normSqSql(s"list_slice(qv, ${m * sd + 1}, ${(m + 1) * sd})")} AS nsq
          |  FROM $src),
          |cent0_$sfx$m AS (SELECT vec_id AS cid, qv AS c FROM qn$sfx$m WHERE vec_id < $Ks),
          |$rounds,
@@ -500,7 +465,7 @@ object Pq {
          |codes$sfx$m AS (
          |  SELECT vec_id, pos, dist FROM (
          |    SELECT s.vec_id, s.pos, s.dist,
-         |           row_number() OVER (PARTITION BY s.vec_id ORDER BY s.dist, s.pos) AS rn
+         |           ${Portable.rankSql("s.vec_id", "s.dist", "s.pos")} AS rn
          |    FROM (SELECT qn$sfx$m.vec_id, p.pos,
          |                 ${distSql(s"qn$sfx$m", "p", sd)} AS dist
          |          FROM qn$sfx$m CROSS JOIN pos$sfx$m p) s
@@ -549,13 +514,7 @@ object Pq {
     s"""${Similarity.quantizedSql},
        |${Clustering.kmeansCtesNoQuantize},
        |$pqModelCtes,
-       |probes AS (
-       |  SELECT vec_id AS query_id, cid FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-       |    FROM (SELECT qn.vec_id, c.cid, ${distSql("qn", "c", dims)} AS dist
-       |          FROM qn CROSS JOIN cent${Clustering.trainRounds} c
-       |          WHERE qn.vec_id < 8)
-       |  ) WHERE rn <= $nprobe),
+       |${Clustering.probesSql(nprobe)},
        |scored_ivfpq AS (
        |  SELECT p.query_id, f.vec_id AS cand_id, CAST(sum(t.dist) AS BIGINT) AS adist
        |  FROM probes p
@@ -566,7 +525,7 @@ object Pq {
        |  GROUP BY 1, 2),
        |ivfpq_ranked AS (
        |  SELECT query_id, cand_id, adist,
-       |         row_number() OVER (PARTITION BY query_id ORDER BY adist, cand_id) AS rank
+       |         ${Portable.rankSql("query_id", "adist", "cand_id")} AS rank
        |  FROM scored_ivfpq)""".stripMargin
 
   /** The OPQ-permutation chain: exact integer variance ranks, the
@@ -606,7 +565,7 @@ object Pq {
        |  GROUP BY 1, 2),
        |opq_ranked AS (
        |  SELECT query_id, cand_id, adist,
-       |         row_number() OVER (PARTITION BY query_id ORDER BY adist, cand_id) AS rank
+       |         ${Portable.rankSql("query_id", "adist", "cand_id")} AS rank
        |  FROM scored_o)""".stripMargin
   }
 
@@ -631,8 +590,7 @@ object Pq {
     val rtm = (0 until M).map { m =>
       s"""qres$m AS (
          |  SELECT query_id, cid, list_slice(qv, ${m * sd + 1}, ${(m + 1) * sd}) AS qv,
-         |         CAST(list_sum(list_transform(list_slice(qv, ${m * sd + 1}, ${(m + 1) * sd}),
-         |           x -> x*x)) AS BIGINT) AS nsq
+         |         ${Portable.normSqSql(s"list_slice(qv, ${m * sd + 1}, ${(m + 1) * sd})")} AS nsq
          |  FROM qresid),
          |rt$m AS (
          |  SELECT qq.query_id, qq.cid, p.pos,
@@ -649,13 +607,7 @@ object Pq {
        |         list_transform(generate_series(1, $dims), i -> f.qv[i] - c.c[i]) AS qv
        |  FROM fin f JOIN cent$r c ON c.cid = f.cid),
        |${pqModelCtesFrom("resid", "r")},
-       |probes AS (
-       |  SELECT vec_id AS query_id, cid FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-       |    FROM (SELECT qn.vec_id, c.cid, ${distSql("qn", "c", dims)} AS dist
-       |          FROM qn CROSS JOIN cent$r c
-       |          WHERE qn.vec_id < 8)
-       |  ) WHERE rn <= $nprobe),
+       |${Clustering.probesSql(nprobe)},
        |qresid AS (
        |  SELECT p.query_id, p.cid,
        |         list_transform(generate_series(1, $dims), i -> qn.qv[i] - c.c[i]) AS qv
@@ -673,7 +625,7 @@ object Pq {
        |  GROUP BY 1, 2),
        |adc_ranked AS (
        |  SELECT query_id, cand_id, adist,
-       |         row_number() OVER (PARTITION BY query_id ORDER BY adist, cand_id) AS rank
+       |         ${Portable.rankSql("query_id", "adist", "cand_id")} AS rank
        |  FROM scored_adc)""".stripMargin
   }
 

@@ -1,7 +1,6 @@
 package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Tables.t
 import graft.functions.Portable
@@ -44,7 +43,9 @@ object Similarity {
     quantizedFrom(t(spark, dir, "embeddings")
       .repartition(spark.sparkContext.defaultParallelism, col("vec_id")))
 
-  private[sim] val quantizedSql: String =
+  /** DuckDB twin of [[quantized]]: CTEs `q` (vec_id, qv) and `qn`
+    * (vec_id, qv, nsq) over the `embeddings` table. */
+  private[graft] val quantizedSql: String =
     s"""q AS (
       |  SELECT vec_id,
       |         ${Portable.quantizeSql("embedding")} AS qv
@@ -52,7 +53,7 @@ object Similarity {
       |),
       |qn AS (
       |  SELECT vec_id, qv,
-      |         CAST(list_sum(list_transform(qv, x -> x*x)) AS BIGINT) AS nsq
+      |         ${Portable.normSqSql("qv")} AS nsq
       |  FROM q
       |)""".stripMargin
 
@@ -76,12 +77,8 @@ object Similarity {
     val scored = corpus.join(broadcast(queries), col("query_id") =!= col("cand_id"))
       .withColumn("cosine",
         Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")))
-    scored
-      .select(col("query_id"), col("cand_id"), col("cosine"),
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id")))
-          .cast("long").as("rank"))
-      .filter(col("rank") <= k)
+    Portable.topK(scored, Seq("query_id"), desc("cosine"), "cand_id", lit(k))
+      .select("query_id", "cand_id", "cosine", "rank")
       .orderBy("query_id", "rank")
   }
 
@@ -95,7 +92,7 @@ object Similarity {
        |),
        |ranked AS (
        |  SELECT query_id, cand_id, cosine,
-       |         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
+       |         ${Portable.rankSql("query_id", "cosine DESC", "cand_id")} AS rank
        |  FROM scored
        |)
        |SELECT query_id, cand_id, cosine, rank FROM ranked
@@ -170,11 +167,8 @@ object Similarity {
       .filter(col("query_id") =!= col("cand_id"))
       .withColumn("cosine",
         Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")))
-      .select(col("query_id"), col("cand_id"), col("cosine"),
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id")))
-          .cast("long").as("rank"))
-      .filter(col("rank") <= k)
+      .transform(Portable.topK(_, Seq("query_id"), desc("cosine"), "cand_id", lit(k)))
+      .select("query_id", "cand_id", "cosine", "rank")
       .orderBy("query_id", "rank")
   }
 
@@ -189,7 +183,7 @@ object Similarity {
        |),
        |ranked AS (
        |  SELECT query_id, cand_id, cosine,
-       |         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
+       |         ${Portable.rankSql("query_id", "cosine DESC", "cand_id")} AS rank
        |  FROM scored
        |)
        |SELECT query_id, cand_id, cosine, rank FROM ranked
@@ -315,7 +309,7 @@ object Similarity {
        |),
        |plantedn AS (
        |  SELECT vec_id, qv,
-       |         CAST(list_sum(list_transform(qv, x -> x*x)) AS BIGINT) AS nsq
+       |         ${Portable.normSqSql("qv")} AS nsq
        |  FROM planted
        |),
        |corpus AS (
@@ -394,7 +388,7 @@ object Similarity {
        |),
        |plantedn AS (
        |  SELECT vec_id, qv,
-       |         CAST(list_sum(list_transform(qv, x -> x*x)) AS BIGINT) AS nsq
+       |         ${Portable.normSqSql("qv")} AS nsq
        |  FROM planted
        |),
        |corpus AS (
@@ -424,30 +418,26 @@ object Similarity {
     val qn = quantized(spark, dir).localCheckpoint(false)
     val cents = qn.filter(col("vec_id") < nCells)
       .select(col("vec_id").as("cid"), col("q").as("qc"), col("nsq").as("nc"))
-    // nearest cell per vector (cosine desc, cid asc tie-break)
-    val assign = qn.crossJoin(broadcast(cents))
-      .withColumn("ccos",
-        Portable.cosine(Portable.dotQ(col("q"), col("qc")), col("nsq"), col("nc")))
-      .select(col("vec_id"), col("q"), col("nsq"), col("cid"), col("ccos"),
-        row_number().over(
-          Window.partitionBy("vec_id").orderBy(desc("ccos"), col("cid"))).as("crn"))
-    val cells = assign.filter(col("crn") === 1)
+    // the n nearest cells of each vector (cosine desc, cid asc tie-break)
+    def nearest(vecs: DataFrame, n: Int): DataFrame =
+      Portable.topK(vecs.crossJoin(broadcast(cents))
+        .withColumn("ccos",
+          Portable.cosine(Portable.dotQ(col("q"), col("qc")), col("nsq"), col("nc"))),
+        Seq("vec_id"), desc("ccos"), "cid", lit(n))
+    val cells = nearest(qn, 1)
       .select(col("vec_id").as("cand_id"), col("q").as("qb"), col("nsq").as("nb"),
         col("cid"))
       .localCheckpoint(false)
     // query side: nprobe nearest cells
-    val probes = assign.filter(col("vec_id") < 8 && col("crn") <= nprobe)
+    val probes = nearest(qn.filter(col("vec_id") < 8), nprobe)
       .select(col("vec_id").as("query_id"), col("q").as("qa"), col("nsq").as("na"),
         col("cid"))
     probes.join(cells, Seq("cid"))
       .filter(col("query_id") =!= col("cand_id"))
       .withColumn("cosine",
         Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")))
-      .select(col("query_id"), col("cand_id"), col("cosine"),
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id")))
-          .cast("long").as("rank"))
-      .filter(col("rank") <= k)
+      .transform(Portable.topK(_, Seq("query_id"), desc("cosine"), "cand_id", lit(k)))
+      .select("query_id", "cand_id", "cosine", "rank")
       .orderBy("query_id", "rank")
   }
 
@@ -461,7 +451,7 @@ object Similarity {
        |),
        |ranked_assign AS (
        |  SELECT vec_id, qv, nsq, cid, ccos,
-       |         row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) AS crn
+       |         ${Portable.rankSql("vec_id", "ccos DESC", "cid")} AS crn
        |  FROM assign
        |),
        |cells AS (SELECT vec_id AS cand_id, qv AS qb, nsq AS nb, cid
@@ -476,7 +466,7 @@ object Similarity {
        |),
        |final_rank AS (
        |  SELECT query_id, cand_id, cosine,
-       |         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
+       |         ${Portable.rankSql("query_id", "cosine DESC", "cand_id")} AS rank
        |  FROM scored
        |)
        |SELECT query_id, cand_id, cosine, rank FROM final_rank
@@ -543,11 +533,7 @@ object Similarity {
     val approx = corpus.join(broadcast(queries), col("query_id") =!= col("cand_id"))
       .withColumn("cosine",
         Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")))
-      .select(col("query_id"), col("cand_id"),
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id")))
-          .cast("long").as("rank"))
-      .filter(col("rank") <= k)
+      .transform(Portable.topK(_, Seq("query_id"), desc("cosine"), "cand_id", lit(k)))
     ExactPanels.recall(exact, approx)
   }
 
@@ -556,15 +542,13 @@ object Similarity {
     s"""WITH $quantizedSql,
        |pq AS (
        |  SELECT vec_id, list_slice(qv, 1, $prefixDims) AS pq,
-       |         CAST(list_sum(list_transform(list_slice(qv, 1, $prefixDims), x -> x*x)) AS BIGINT) AS pnsq
+       |         ${Portable.normSqSql(s"list_slice(qv, 1, $prefixDims)")} AS pnsq
        |  FROM qn
        |),
        |approx AS (
        |  SELECT query_id, cand_id FROM (
        |    SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
-       |           row_number() OVER (PARTITION BY a.vec_id ORDER BY
-       |             $pcos DESC,
-       |             b.vec_id) AS rank
+       |           ${Portable.rankSql("a.vec_id", s"$pcos DESC", "b.vec_id")} AS rank
        |    FROM pq a JOIN pq b ON a.vec_id <> b.vec_id
        |    WHERE a.vec_id < 8)
        |  WHERE rank <= $k
@@ -597,36 +581,27 @@ object Similarity {
     corpus.join(broadcast(queries), col("cand_label") =!= col("query_label"))
       .withColumn("cosine",
         Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")))
+      .transform(Portable.topK(_, Seq("query_id"), desc("cosine"), "cand_id", lit(k)))
       .select(col("query_id"), col("query_label").cast("long").as("query_label"),
         col("cand_id"), col("cand_label").cast("long").as("cand_label"), col("cosine"),
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id")))
-          .cast("long").as("rank"))
-      .filter(col("rank") <= k)
+        col("rank"))
       .orderBy("query_id", "rank")
   }
 
   def hardNegativesSql(k: Int = 10): String =
-    s"""WITH q AS (
-       |  SELECT vec_id, label,
-       |         ${Portable.quantizeSql("embedding")} AS qv
-       |  FROM embeddings
-       |),
-       |qn AS (
-       |  SELECT vec_id, label, qv,
-       |         CAST(list_sum(list_transform(qv, x -> x*x)) AS BIGINT) AS nsq
-       |  FROM q
-       |),
+    s"""WITH $quantizedSql,
        |scored AS (
-       |  SELECT a.vec_id AS query_id, a.label::BIGINT AS query_label,
-       |         b.vec_id AS cand_id, b.label::BIGINT AS cand_label,
+       |  SELECT a.vec_id AS query_id, la.label::BIGINT AS query_label,
+       |         b.vec_id AS cand_id, lb.label::BIGINT AS cand_label,
        |         $abCosineSql AS cosine
-       |  FROM qn a JOIN qn b ON a.label <> b.label
+       |  FROM qn a JOIN embeddings la ON la.vec_id = a.vec_id
+       |  JOIN embeddings lb ON lb.label <> la.label
+       |  JOIN qn b ON b.vec_id = lb.vec_id
        |  WHERE a.vec_id < 8
        |),
        |ranked AS (
        |  SELECT query_id, query_label, cand_id, cand_label, cosine,
-       |         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
+       |         ${Portable.rankSql("query_id", "cosine DESC", "cand_id")} AS rank
        |  FROM scored
        |)
        |SELECT query_id, query_label, cand_id, cand_label, cosine, rank FROM ranked
@@ -670,22 +645,16 @@ object Similarity {
       .withColumn("hamming",
         (bit_count(col("w0").bitwiseXOR(col("p0"))) +
           bit_count(col("w1").bitwiseXOR(col("p1")))).cast("long"))
-      .select(col("query_id"), col("vec_id").as("cand_id"), col("hamming"),
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(col("hamming"), col("vec_id")))
-          .as("rn"))
-      .filter(col("rn") <= bqShortlist)
+      .transform(Portable.topK(_, Seq("query_id"), col("hamming"), "vec_id", lit(bqShortlist)))
+      .select(col("query_id"), col("vec_id").as("cand_id"), col("hamming"))
     // asymmetric rerank: ONLY the shortlist pays a full-vector fetch
     val qa = qn0.select(col("vec_id").as("query_id"), col("q").as("qa"), col("nsq").as("na"))
     val qb = qn0.select(col("vec_id").as("cand_id"), col("q").as("qb"), col("nsq").as("nb"))
     short.join(qb, "cand_id").join(broadcast(qa), "query_id")
       .withColumn("cosine",
         Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")))
-      .select(col("query_id"), col("cand_id"), col("hamming"), col("cosine"),
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id")))
-          .cast("long").as("rank"))
-      .filter(col("rank") <= k)
+      .transform(Portable.topK(_, Seq("query_id"), desc("cosine"), "cand_id", lit(k)))
+      .select("query_id", "cand_id", "hamming", "cosine", "rank")
       .orderBy("query_id", "rank")
   }
 
@@ -715,7 +684,7 @@ object Similarity {
        |  FROM codes c JOIN codes p ON p.vec_id < 8 AND p.vec_id <> c.vec_id),
        |short AS (
        |  SELECT query_id, cand_id, hamming FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY hamming, cand_id) AS rn
+       |    SELECT *, ${Portable.rankSql("query_id", "hamming", "cand_id")} AS rn
        |    FROM ham) WHERE rn <= $bqShortlist),
        |rerank AS (
        |  SELECT s.query_id, s.cand_id, s.hamming,
@@ -724,7 +693,7 @@ object Similarity {
        |  JOIN qn b ON b.vec_id = s.cand_id)
        |SELECT query_id, cand_id, hamming, cosine, rank FROM (
        |  SELECT query_id, cand_id, hamming, cosine,
-       |         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
+       |         ${Portable.rankSql("query_id", "cosine DESC", "cand_id")} AS rank
        |  FROM rerank)
        |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
 
@@ -737,7 +706,7 @@ object Similarity {
        |  FROM codes c JOIN codes p ON p.vec_id < 8 AND p.vec_id <> c.vec_id),
        |short AS (
        |  SELECT query_id, cand_id, hamming FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY hamming, cand_id) AS rn
+       |    SELECT *, ${Portable.rankSql("query_id", "hamming", "cand_id")} AS rn
        |    FROM ham) WHERE rn <= $bqShortlist),
        |rerank AS (
        |  SELECT s.query_id, s.cand_id,
@@ -747,7 +716,7 @@ object Similarity {
        |approx AS (
        |  SELECT query_id, cand_id FROM (
        |    SELECT query_id, cand_id,
-       |           row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
+       |           ${Portable.rankSql("query_id", "cosine DESC", "cand_id")} AS rank
        |    FROM rerank) WHERE rank <= $k),
        |exact AS (${ExactPanels.cosineSql(k)})
        |${ExactPanels.recallSql}""".stripMargin
@@ -780,22 +749,16 @@ object Similarity {
       .withColumn("hamming",
         (bit_count(col("w0").bitwiseXOR(col("p0"))) +
           bit_count(col("w1").bitwiseXOR(col("p1")))).cast("long"))
-      .select(col("query_id"), col("vec_id").as("cand_id"), col("hamming"),
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(col("hamming"), col("vec_id")))
-          .as("rn"))
-      .filter(col("rn") <= bqShortlist)
+      .transform(Portable.topK(_, Seq("query_id"), col("hamming"), "vec_id", lit(bqShortlist)))
+      .select(col("query_id"), col("vec_id").as("cand_id"), col("hamming"))
     val qa = corpus.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("q").as("qa"), col("nsq").as("na"))
     val qb = corpus.select(col("vec_id").as("cand_id"), col("q").as("qb"), col("nsq").as("nb"))
     short.join(qb, "cand_id").join(broadcast(qa), "query_id")
       .withColumn("cosine",
         Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")))
-      .select(col("query_id"), col("cand_id"), col("hamming"), col("cosine"),
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id")))
-          .cast("long").as("rank"))
-      .filter(col("rank") <= k)
+      .transform(Portable.topK(_, Seq("query_id"), desc("cosine"), "cand_id", lit(k)))
+      .select("query_id", "cand_id", "hamming", "cosine", "rank")
       .orderBy("query_id", "rank")
   }
 
@@ -806,21 +769,11 @@ object Similarity {
     ExactPanels.recall(ExactPanels.cosine(spark, dir, k),
       ivfBqTopK(spark, dir, k))
 
-  private def ivfBqCtes(nprobe: Int): String = {
-    val r = Clustering.trainRounds
-    val centDist =
-      s"""qn.nsq - 2*${Portable.dotSql("qn.qv", "c.c")}
-         |    + CAST(list_sum(list_transform(c.c, x -> x*x)) AS BIGINT)""".stripMargin
+  private def ivfBqCtes(nprobe: Int): String =
     s"""$quantizedSql,
        |${Clustering.kmeansCtesNoQuantize},
        |$bqCodesSql,
-       |probes AS (
-       |  SELECT vec_id AS query_id, cid FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-       |    FROM (SELECT qn.vec_id, c.cid, $centDist AS dist
-       |          FROM qn CROSS JOIN cent$r c
-       |          WHERE qn.vec_id < 8)
-       |  ) WHERE rn <= $nprobe),
+       |${Clustering.probesSql(nprobe)},
        |panel AS (
        |  SELECT p.query_id, p.cid, c.w0 AS p0, c.w1 AS p1
        |  FROM probes p JOIN codes c ON c.vec_id = p.query_id),
@@ -833,7 +786,7 @@ object Similarity {
        |  FROM celled ce JOIN panel pa ON pa.cid = ce.cid AND ce.vec_id <> pa.query_id),
        |short AS (
        |  SELECT query_id, cand_id, hamming FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY hamming, cand_id) AS rn
+       |    SELECT *, ${Portable.rankSql("query_id", "hamming", "cand_id")} AS rn
        |    FROM ham) WHERE rn <= $bqShortlist),
        |rerank AS (
        |  SELECT s.query_id, s.cand_id, s.hamming,
@@ -842,9 +795,8 @@ object Similarity {
        |  JOIN qn b ON b.vec_id = s.cand_id),
        |ivfbq_ranked AS (
        |  SELECT query_id, cand_id, hamming, cosine,
-       |         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
+       |         ${Portable.rankSql("query_id", "cosine DESC", "cand_id")} AS rank
        |  FROM rerank)""".stripMargin
-  }
 
   def ivfBqTopKSql(k: Int = 5, nprobe: Int = 2): String =
     s"""WITH ${ivfBqCtes(nprobe)}
@@ -894,11 +846,7 @@ object Similarity {
         .select(col("query_id"), col("cand_id"),
           Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")).as("cosine"))
         .distinct() // candidates reachable via several probes collapse
-        .select(col("query_id"), col("cand_id"),
-          row_number().over(
-            Window.partitionBy("query_id").orderBy(desc("cosine"), col("cand_id")))
-            .as("rank"))
-        .filter(col("rank") <= k)
+        .transform(Portable.topK(_, Seq("query_id"), desc("cosine"), "cand_id", lit(k)))
         .select(col("query_id"), col("cand_id"), lit(1L).as(hit))
     val panelBase = side.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("q").as("qa"),
@@ -943,15 +891,13 @@ object Similarity {
        |multitop AS (
        |  SELECT query_id, cand_id FROM (
        |    SELECT query_id, cand_id,
-       |           row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
+       |           ${Portable.rankSql("query_id", "cosine DESC", "cand_id")} AS rank
        |    FROM multi) WHERE rank <= $k
        |),
        |singletop AS (
        |  SELECT query_id, cand_id FROM (
        |    SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
-       |           row_number() OVER (PARTITION BY a.vec_id ORDER BY
-       |             $abCosineSql DESC,
-       |             b.vec_id) AS rank
+       |           ${Portable.rankSql("a.vec_id", s"$abCosineSql DESC", "b.vec_id")} AS rank
        |    FROM side a JOIN side b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
        |    WHERE a.vec_id < 8) WHERE rank <= $k
        |),
@@ -1007,11 +953,8 @@ object Similarity {
       .select(col("budget"), col("query_id"), col("cand_id"),
         Portable.cosine(Portable.dotQ(col("qa"), col("qb")), col("na"), col("nb")).as("cosine"))
       .distinct() // candidates reachable via several probes collapse
-      .select(col("budget"), col("query_id"), col("cand_id"),
-        row_number().over(
-          Window.partitionBy("budget", "query_id")
-            .orderBy(desc("cosine"), col("cand_id"))).as("rank"))
-      .filter(col("rank") <= k)
+      .transform(Portable.topK(_, Seq("budget", "query_id"), desc("cosine"), "cand_id",
+        lit(k)))
     val exact = ExactPanels.cosine(spark, dir, k)
     val budgets = Seq(0, 1, 2).map(b =>
         struct(lit(b).as("budget"), lit(nProbes(b).toLong).as("n_probes")))
@@ -1053,8 +996,7 @@ object Similarity {
        |top AS (
        |  SELECT budget, query_id, cand_id FROM (
        |    SELECT budget, query_id, cand_id,
-       |           row_number() OVER (PARTITION BY budget, query_id
-       |             ORDER BY cosine DESC, cand_id) AS rank
+       |           ${Portable.rankSql("budget, query_id", "cosine DESC", "cand_id")} AS rank
        |    FROM cand) WHERE rank <= $k),
        |exact AS (${ExactPanels.cosineSql(k)})
        |SELECT b.budget, b.n_probes, count(*) AS n_exact,

@@ -406,14 +406,7 @@ object Retrieval {
        |lex AS (
        |  SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS lex_rank
        |  FROM lexbase),
-       |q AS (
-       |  SELECT vec_id,
-       |         ${Portable.quantizeSql("embedding")} AS qv
-       |  FROM embeddings),
-       |qn AS (
-       |  SELECT vec_id, qv,
-       |         CAST(list_sum(list_transform(qv, x -> x*x)) AS BIGINT) AS nsq
-       |  FROM q),
+       |${graft.sim.Similarity.quantizedSql},
        |q0 AS (SELECT qv, nsq FROM qn WHERE vec_id = 0),
        |vscore AS (
        |  SELECT b.vec_id AS doc_id,

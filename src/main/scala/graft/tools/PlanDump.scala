@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.GraftBridge
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.execution.{ExplainMode, ExplainUtils, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable.ArrayBuffer
 
@@ -11,10 +10,11 @@ import scala.collection.mutable.ArrayBuffer
   * evidence for optimization rounds and the plan-equality check of a
   * refactor. Usage:
   *   sbt "runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>"
-  * Writes <outDir>/<query>_<suffix>.txt: every plan the session executed
-  * while the query's frame was built (the eager checkpoints and collects
-  * of loops and memo builds, in run order, each headed by its action
-  * name), then the frame's own `.explain("formatted")`. An executed plan
+  * Writes <outDir>/<query>_<suffix>.txt: every plan the SparkContext
+  * executed while the query's frame was built (the eager checkpoints
+  * and collects of loops and memo builds, in run order, each headed by
+  * its action name), in any session — the Aria drains run in
+  * `newSession()` children — then the frame's own `.explain("formatted")`. An executed plan
   * is written as AQE planned it before it ran: its final form depends on
   * which query stages finish first, so it differs between runs of the
   * same code. Memos are evicted before each query, so each file carries
@@ -53,19 +53,26 @@ object PlanDump {
     sb.toString
   }
 
+  /** `body`'s result and the (action, plan) of every SQL execution that
+    * succeeded while it ran, in run order — in `spark` and in every
+    * other session of its SparkContext. */
+  private[graft] def executedDuring[T](spark: SparkSession)(body: => T)
+      : (T, Seq[(String, QueryExecution)]) = {
+    val sc = spark.sparkContext
+    val executed = ArrayBuffer.empty[(String, QueryExecution)]
+    GraftBridge.drainListeners(sc) // earlier executions' events land first
+    val l = GraftBridge.onSqlExecutionEnd(sc)((f, qe) =>
+      executed.synchronized(executed += f -> qe))
+    try {
+      val r = body
+      GraftBridge.drainListeners(sc)
+      (r, executed.synchronized(executed.toList))
+    } finally sc.removeSparkListener(l)
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, names) = args
     val spark = graft.Session.local("graft-plandump")
-    val executed = ArrayBuffer.empty[(String, QueryExecution)]
-    spark.listenerManager.register(new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        executed.synchronized(executed += funcName -> qe)
-      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    })
-    def drained(): Seq[(String, QueryExecution)] = {
-      GraftBridge.drainListeners(spark.sparkContext)
-      executed.synchronized { val r = executed.toList; executed.clear(); r }
-    }
     Files.createDirectories(Paths.get(outDir))
     for (n <- names.split(",").map(_.trim).filter(_.nonEmpty)) {
       graft.SparkEntry.queries.get(n) match {
@@ -73,9 +80,7 @@ object PlanDump {
         case Some(fn) =>
           try {
             graft.Memo.evictAll(spark)
-            drained()
-            val df = fn(spark, sfDir)
-            val runs = drained()
+            val (df, runs) = executedDuring(spark)(fn(spark, sfDir))
             val txt = (runs.zipWithIndex.map { case ((f, qe), i) =>
               s"== executed ${i + 1}: $f ==\n${initialPlan(qe)}"
             } :+ s"== final ==\n${df.queryExecution.explainString(formatted)}")

@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * conversion for registering custom codegen expressions (Spark 4 split
   * Column off the catalyst tree; the blessed converters live in
   * `org.apache.spark.sql.classic.ExpressionUtils`, package-private),
-  * plus the function-registry, plan, checkpoint-block and listener-bus
-  * calls below.
+  * plus the function-registry, plan, checkpoint-block, listener-bus and
+  * SQL-execution-listener calls below.
   */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -28,10 +28,37 @@ object GraftBridge {
   def drainListeners(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
+  /** Register `f(action, qe)` for every SQL execution that succeeds in
+    * ANY session of `sc` — a session's `QueryExecutionListener` hears
+    * only its own session, so it misses work run in `newSession()`
+    * children. Delivered on the listener bus (see [[drainListeners]]);
+    * the returned listener is for `sc.removeSparkListener`. */
+  def onSqlExecutionEnd(sc: org.apache.spark.SparkContext)
+      (f: (String, execution.QueryExecution) => Unit): org.apache.spark.scheduler.SparkListener = {
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(event: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        event match {
+          case e: execution.ui.SparkListenerSQLExecutionEnd
+              if e.qe != null && e.executionName.isDefined && e.executionFailure.isEmpty =>
+            f(e.executionName.get, e.qe)
+          case _ =>
+        }
+    }
+    sc.addSparkListener(l)
+    l
+  }
+
   /** DataFrame from a catalyst LogicalPlan (custom operator nodes). */
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Whether [[dropCheckpointBlocks]] would accept this frame — true
+    * iff the plan root is a checkpoint `LogicalRDD`. A resumed drain's
+    * first-generation frames may be parquet reads (no blocks to free);
+    * callers use this to skip the drop instead of catching. */
+  def isCheckpointRoot(df: Dataset[_]): Boolean =
+    df.queryExecution.analyzed.isInstanceOf[execution.LogicalRDD]
 
   /** Drop the block storage behind a `localCheckpoint`ed Dataset.
     *
@@ -48,13 +75,6 @@ object GraftBridge {
     * frame is refused: traversing its whole tree would unpersist every
     * checkpoint it references — including blocks shared with other
     * still-live consumers, unrecoverably. */
-  /** Whether [[dropCheckpointBlocks]] would accept this frame — true
-    * iff the plan root is a checkpoint `LogicalRDD`. A resumed drain's
-    * first-generation frames may be parquet reads (no blocks to free);
-    * callers use this to skip the drop instead of catching. */
-  def isCheckpointRoot(df: Dataset[_]): Boolean =
-    df.queryExecution.analyzed.isInstanceOf[execution.LogicalRDD]
-
   def dropCheckpointBlocks(df: Dataset[_]): Unit =
     df.queryExecution.analyzed match {
       case r: execution.LogicalRDD => r.rdd.unpersist(blocking = false)

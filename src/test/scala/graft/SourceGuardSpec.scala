@@ -89,7 +89,8 @@ class SourceGuardSpec extends AnyFunSuite {
       "hash60" -> """'0x'\s*\|\|""",
       "cosine" -> """sqrt\(CAST\([^()]* AS DOUBLE\)\)\s*\*\s*sqrt\(CAST\(""",
       "quantize" -> """x -> CAST\(floor\(CAST\(x AS DOUBLE\)\s*\*\s*10000""",
-      "dot" -> """i -> [\w.$]+\[i\] \* [\w.$]+\[i\]""")
+      "dot" -> """i -> [\w.$]+\[i\] \* [\w.$]+\[i\]""",
+      "normSq" -> """x -> x\s*\*\s*x\b""")
     // the only two allowed: the two-line cosines of NnDescent's build
     // and beam scoring, whose text sparkbench's recorded oracle digests
     // pin (EntrySpec); each site carries that reason
@@ -101,5 +102,32 @@ class SourceGuardSpec extends AnyFunSuite {
       h.contains("sim/NnDescent.scala:") && h.endsWith(pinned))
     assert(rest.isEmpty, rest.mkString("\n"))
     assert(allowed.size === 2, allowed.mkString("\n"))
+  }
+
+  test("the ANN family ranks through Portable.topK/rankSql: no other row_number under graft/sim") {
+    // (file, line text) -> why the site stays inline; each matches once
+    val allowed = Seq(
+      ("sim/Embeddings.scala", "row_number().over(wAdj)") ->
+        "walk adjacency index: numbers every edge, keeps all",
+      ("sim/Embeddings.scala", "CAST(row_number() OVER (PARTITION BY src ORDER BY dst)") ->
+        "DuckDB twin of the walk adjacency index",
+      ("sim/Pq.scala", "row_number() OVER (ORDER BY cid) - 1 AS pos") ->
+        "centroid position in its codebook, keeps all",
+      ("sim/Pq.scala", "row_number() OVER (ORDER BY v DESC, dim) - 1 AS r") ->
+        "OPQ variance rank of every dimension, keeps all",
+      ("sim/NnDescent.scala", "row_number() OVER (PARTITION BY g.dst ORDER BY g.src) AS rn") ->
+        "build text pinned by recorded oracle digests; ranks by id alone",
+      ("sim/NnDescent.scala", "SELECT src, dst, row_number() OVER (PARTITION BY src ORDER BY") ->
+        "build text pinned by recorded oracle digests; two-line hash order",
+      ("sim/NnDescent.scala", "row_number() OVER (PARTITION BY a.vec_id ORDER BY") ->
+        "beam-curve exact panel pinned by recorded oracle digests; two-line order")
+    val found = hits("""row_number\s*\(""", "functions/Portable.scala",
+      "src/main/scala/graft/sim")
+    def isSite(h: String, site: (String, String)): Boolean =
+      h.contains(s"${site._1}:") && h.contains(site._2)
+    val rest = found.filterNot(h => allowed.exists { case (site, _) => isSite(h, site) })
+    assert(rest.isEmpty, rest.mkString("\n"))
+    for ((site, why) <- allowed)
+      assert(found.count(isSite(_, site)) === 1, s"$site ($why)")
   }
 }
